@@ -29,17 +29,23 @@ query path shards heavy groups by doc ownership), each a doc-sorted
 run, so no single reducer/group sees a whole stopword list. Salt
 assignment is ``codec.doc_salt`` (numpy-reproducible); salt runs
 spread across buckets via xxhash64(term_id, salt).
+
+The delta refresh (streaming/compressed.py) runs the same stage rules
+— term_table, doc_norms, quantize_norm_dl, write_postings,
+write_lineage, check_doc_ids — so a raw build and a one-batch refresh
+into an empty index write identical blocks and termdicts.
 """
 
 from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass
+from concurrent.futures import ThreadPoolExecutor, wait
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -57,7 +63,6 @@ from neural_cherche_spark.index.build import (
     collection_stats,
     doc_lengths,
     term_frequencies,
-    term_stats,
 )
 
 POSTINGS_SCHEMA = StructType(
@@ -105,13 +110,7 @@ POSTINGS_RAW_SCHEMA = StructType(
     ]
 )
 
-
-@dataclass
-class BuildReport:
-    n_docs: int
-    n_terms: int
-    n_postings: int
-    wall_s: dict
+POSTINGS_SCHEMAS = {"weights": POSTINGS_SCHEMA, "raw": POSTINGS_RAW_SCHEMA}
 
 
 def _zip_with_index(
@@ -136,7 +135,11 @@ def _zip_with_index(
     back by key requires ``order_col`` to be UNIQUE; pass
     ``check_unique=True`` for user-supplied keys (one narrow agg over
     the checkpointed keys), leave False where uniqueness holds by
-    construction (groupBy outputs)."""
+    construction (groupBy outputs).
+
+    ``counter`` receives ``n`` (the row count) and ``keys`` (the
+    checkpointed key frame — release it with :func:`_unpin` once the
+    ids have been written)."""
     spark = df.sparkSession
     # partition count only shapes the range split; dense ids are the
     # GLOBAL sort rank, independent of the boundaries — the conf value
@@ -181,6 +184,7 @@ def _zip_with_index(
         # total row count falls out of the offset collect — callers
         # (termdict n_terms) need it and must not run a second count job
         counter["n"] = acc
+        counter["keys"] = keys
     off_df = spark.createDataFrame(offsets, "__pid int, __off long")
     ids = (
         keys.join(F.broadcast(off_df), "__pid")
@@ -194,6 +198,15 @@ def _zip_with_index(
     if len(df.columns) == 1:
         return ids
     return df.join(ids, order_col)
+
+
+def _unpin(keys: DataFrame | None) -> None:
+    """Drop the executor blocks a ``localCheckpoint`` pinned (``keys``
+    from :func:`_zip_with_index`'s ``counter``): the DataFrame API has
+    no unpersist for them, so they would otherwise live until a JVM GC
+    collects the plan."""
+    if keys is not None:
+        keys._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 # search_distributed packs (query_id, doc_id) into one int64; ids must
@@ -266,6 +279,26 @@ def encode_layout(spark, n_terms: int, n_buckets: int, est_dl: float):
     return col, n_tasks
 
 
+def check_doc_ids(row) -> None:
+    """Validate a doc-id summary row ``(n, lo, hi[, nd])``: ids must fit
+    the 41-bit packing bound and, when the stream's registry pass
+    supplies ``nd`` (distinct count), be unique across batches."""
+    r = row.asDict()
+    if not r["n"]:
+        return
+    if r["lo"] < 0 or r["hi"] > MAX_DOC_ID:
+        raise ValueError(
+            f"doc ids must be in [0, 2^41): got range [{r['lo']}, "
+            f"{r['hi']}] — remap ids (build_index assigns dense ids itself "
+            "with id_col=None)"
+        )
+    if r.get("nd") is not None and r["nd"] != r["n"]:
+        raise ValueError(
+            f"duplicate doc_ids across batches: {r['n']} rows, {r['nd']} "
+            "distinct — each batch must carry new ids"
+        )
+
+
 def _fingerprint(docs: DataFrame, id_col: str, text_col: str, cfg_sig: str) -> str:
     """Order-independent input fingerprint: count + sum of per-row
     CONTENT hashes (id AND text — a corpus whose text changed but ids
@@ -283,102 +316,326 @@ def _fingerprint(docs: DataFrame, id_col: str, text_col: str, cfg_sig: str) -> s
         F.min(id_col).alias("lo"),
         F.max(id_col).alias("hi"),
     ).collect()[0]
-    if row["n"] and (row["lo"] < 0 or row["hi"] > MAX_DOC_ID):
-        raise ValueError(
-            f"doc ids must be in [0, 2^41): got range "
-            f"[{row['lo']}, {row['hi']}] — remap ids or pass id_col=None "
-            f"for deterministic dense assignment"
-        )
+    check_doc_ids(row)
     return f"{row['n']}:{row['h']}:{cfg_sig}"
 
 
-def _encode_group_fn(block_size: int):
+# ---- stage rules shared by build_index and the delta refresh ------------
+
+
+def corpus_stats(dl: DataFrame) -> tuple[int, float]:
+    """(n_docs, avgdl) over (doc_id, dl) rows; an empty corpus has no
+    avgdl (and no index), so it fails here, before any stage writes."""
+    row = collection_stats(dl).collect()[0]
+    if not row["n_docs"]:
+        raise ValueError(
+            "empty corpus: no document has any n-gram — nothing to index"
+        )
+    return int(row["n_docs"]), float(row["avgdl"])
+
+
+def bm25_w1(cfg: BM25Config, avgdl: float) -> Column:
+    """BM25 tf saturation over ``tf``/``dl`` columns — the Spark twin of
+    codec.bm25_w1 (same evaluation tree, so raw-mode query scores agree
+    with stored weights to f64 rounding)."""
+    return (
+        F.col("tf")
+        * (cfg.k1 + 1.0)
+        / (
+            F.col("tf")
+            + cfg.k1 * (1.0 - cfg.b + cfg.b * F.col("dl") / F.lit(avgdl))
+        )
+        + F.lit(cfg.epsilon)
+    )
+
+
+def term_table(
+    src: DataFrame,
+    n_docs: int,
+    avgdl: float,
+    cfg: BM25Config,
+    weighting: str,
+    salt_every: int,
+) -> DataFrame:
+    """(term, tf_total, df, idf, term_norm, n_salts) over (doc_id, term,
+    tf) rows — bm25 also needs each row's ``dl``.
+
+    bm25: ONE pass computes tf_total, df AND the norm base: w1 does not
+    depend on idf, and norm = sqrt(Σ(w1·idf)²) = |idf|·sqrt(Σw1²), so
+    Σw1² is aggregated alongside tf_total — no second corpus pass, and
+    the weights stage needs only a broadcast join against this small
+    table (SURVEY §4.4, window-free). tfidf: smoothed idf
+    ln((1+N)/(1+df)) + 1 (always > 0); normalization is per DOC
+    (doc_norms / the weights stage), term_norm ≡ 1.0.
+
+    ``n_salts``: POWER OF TWO, capped — every term's salt count must
+    divide the per-query split factor so the block-max path can shard
+    heavy query groups into disjoint doc subsets (query/bmw.py subgroup
+    split). Cap 1024: beyond that a single salt run still holds
+    ≥ salt_every postings and the heavy query is routed to the bulk
+    decode-score path anyway (search_auto)."""
+    aggs = [F.sum("tf").alias("tf_total"), F.count(F.lit(1)).alias("df")]
+    if weighting == "bm25":
+        ts = src.withColumn("w1", bm25_w1(cfg, avgdl)).groupBy("term").agg(
+            *aggs, F.sum(F.col("w1") * F.col("w1")).alias("sw1sq")
+        )
+        idf = F.log(
+            (F.lit(n_docs) - F.col("tf_total") + 0.5)
+            / (F.col("tf_total") + 0.5)
+            + 1.0
+        )
+        norm = F.when(F.col("idf") == 0, F.lit(1.0)).otherwise(
+            F.abs(F.col("idf")) * F.sqrt(F.col("sw1sq"))
+        )
+    else:
+        ts = src.groupBy("term").agg(*aggs)
+        idf = F.log((1.0 + F.lit(n_docs)) / (1.0 + F.col("df"))) + 1.0
+        norm = F.lit(1.0)
+    n_salts = F.least(
+        F.lit(1024),
+        F.pow(
+            F.lit(2.0),
+            F.ceil(
+                F.log2(
+                    F.greatest(
+                        F.lit(1.0),
+                        F.ceil(F.col("df") / F.lit(salt_every)),
+                    )
+                )
+            ),
+        ).cast("int"),
+    )
+    return (
+        ts.withColumn("idf", idf)
+        .withColumn("term_norm", norm)
+        .withColumn("n_salts", n_salts)
+        .drop("sw1sq")
+    )
+
+
+def doc_norms(src: DataFrame, termdict: DataFrame) -> DataFrame:
+    """(doc_id, dnorm) per-doc L2 norm ‖d‖ = sqrt(Σ_t (tf·idf_t)²) over
+    (doc_id, term, tf) rows: raw tfidf blocks store tf, queries score
+    unnormalized and divide by ‖d‖ via a doc-keyed join of the
+    candidate set. One term-keyed join + one doc-keyed agg; norms are
+    per-doc SCALARS, so a refresh rewrites O(n_docs) bytes."""
+    return (
+        src.join(termdict.select("term", "idf"), "term")
+        .withColumn("wr", F.col("tf") * F.col("idf"))
+        .groupBy("doc_id")
+        .agg(F.sqrt(F.sum(F.col("wr") * F.col("wr"))).alias("dnorm"))
+    )
+
+
+def quantize_norm_dl(src: DataFrame, docnorm: DataFrame) -> DataFrame:
+    """Replace ``dl`` by the floor-quantized docnorm ρq
+    (codec.DNORM_SCALE): the dl slot of a tfidf raw block carries the
+    encode-time norm — the cosine never reads dl, and block
+    min_dl/max_dl become sound per-block norm bounds for the block-max
+    query path."""
+    return (
+        src.drop("dl")
+        .join(docnorm, "doc_id")
+        .withColumn(
+            "dl",
+            F.greatest(
+                F.lit(1),
+                F.floor(F.col("dnorm") * F.lit(float(DNORM_SCALE))),
+            ).cast("long"),
+        )
+    )
+
+
+def weights_from_tf(
+    tf: DataFrame,
+    dl: DataFrame,
+    termdict: DataFrame,
+    avgdl: float,
+    cfg: BM25Config,
+) -> DataFrame:
+    """(term_id, doc_id, w, n_salts) normalized BM25 weights.
+
+    Same math as index.build.bm25_weights (SURVEY §2.9 steps 1-5) but
+    idf AND the per-term L2 norm come from the termdict (term_table),
+    so this plan touches the full posting set exactly once: tf ⋈ dl
+    (doc-keyed) ⋈ broadcast(termdict) → project. No term-keyed shuffle
+    of postings."""
+    td = termdict.select("term", "term_id", "idf", "term_norm", "n_salts")
+    return (
+        tf.join(dl, "doc_id")
+        .join(F.broadcast(td), "term")
+        # float32 before the encode shuffle — identical stored values
+        # (the codec's .astype(np.float32) was the rounding point
+        # anyway; IEEE round-to-nearest either side), half the weight
+        # bytes through the exchange
+        .withColumn(
+            "w",
+            (
+                bm25_w1(cfg, avgdl) * F.col("idf") / F.col("term_norm")
+            ).cast("float"),
+        )
+        .select("term_id", "doc_id", "w", "n_salts")
+    )
+
+
+def tfidf_weights_from_tf(tf: DataFrame, termdict: DataFrame) -> DataFrame:
+    """(term_id, doc_id, w, n_salts) L2-per-DOC-normalized smoothed
+    tf-idf weights (reference ``retrieve.TfIdf`` semantics,
+    index/build.py::tfidf_weights) against a termdict whose ``idf``
+    holds ln((1+N)/(1+df)) + 1.
+
+    Plan: tf ⋈ broadcast(termdict) → per-doc norm via groupBy(doc_id)
+    + join (one doc-keyed shuffle; window-free). All weights are
+    non-negative, so the block-max query path prunes at full strength
+    on a tfidf-weighted index."""
+    td = termdict.select("term", "term_id", "idf", "n_salts")
+    w_raw = tf.join(F.broadcast(td), "term").withColumn(
+        "w_raw", F.col("tf") * F.col("idf")
+    )
+    doc_norm = w_raw.groupBy("doc_id").agg(
+        F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw"))).alias("doc_norm")
+    )
+    return (
+        w_raw.join(doc_norm, "doc_id")
+        # float32 BEFORE the encode shuffle (see weights_from_tf)
+        .withColumn(
+            "w", (F.col("w_raw") / F.col("doc_norm")).cast("float")
+        )
+        .select("term_id", "doc_id", "w", "n_salts")
+    )
+
+
+def _encode_group_fn(block_size: int, storage: str):
     """applyInPandas fn: encode one (bucket, shard) group's (term_id,
     salt) runs — the group key guarantees whole runs and one bucket
     per group, so block output is bit-identical at any layout."""
+    schema = POSTINGS_SCHEMAS[storage]
+    int32 = {f.name for f in schema.fields if isinstance(f.dataType, IntegerType)}
+    block_cols = schema.fieldNames()[1:-1]  # between bucket and enc_ms
 
     def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        from neural_cherche_spark.index.codec import encode_partition_bulk
+        from neural_cherche_spark.index.codec import (
+            encode_partition_bulk,
+            encode_partition_bulk_raw,
+        )
 
         t0 = time.perf_counter()
         pdf = pdf.sort_values(["term_id", "salt", "doc_id"], kind="mergesort")
         bucket = int(pdf["bucket"].iloc[0])
-        enc = encode_partition_bulk(
-            pdf["term_id"].to_numpy(),
-            pdf["salt"].to_numpy(),
-            pdf["doc_id"].to_numpy(),
-            pdf["w"].to_numpy().astype(np.float32),
-            block_size,
-        )
-        ms = (time.perf_counter() - t0) * 1000.0
-        return pd.DataFrame(
-            {
-                "bucket": np.full(len(enc["n"]), bucket, dtype=np.int32),
-                "term_id": enc["term_id"],
-                "salt": enc["salt"].astype(np.int32),
-                "block_id": enc["block_id"].astype(np.int32),
-                "n": enc["n"].astype(np.int32),
-                "first_doc": enc["first_doc"],
-                "last_doc": enc["last_doc"],
-                "max_w": enc["max_w"],
-                "min_w": enc["min_w"],
-                "n_bytes": enc["n_bytes"],
-                "docs": enc["docs"],
-                "ws": enc["ws"],
-                "enc_ms": np.full(len(enc["n"]), ms),
-            }
-        )
-
-    return encode
-
-
-def _encode_group_raw_fn(block_size: int):
-    """RAW-storage twin of :func:`_encode_group_fn`."""
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        from neural_cherche_spark.index.codec import encode_partition_bulk_raw
-
-        t0 = time.perf_counter()
-        pdf = pdf.sort_values(["term_id", "salt", "doc_id"], kind="mergesort")
-        bucket = int(pdf["bucket"].iloc[0])
-        enc = encode_partition_bulk_raw(
-            pdf["term_id"].to_numpy(),
-            pdf["salt"].to_numpy(),
-            pdf["doc_id"].to_numpy(),
-            pdf["tf"].to_numpy(),
-            pdf["dl"].to_numpy(),
-            pdf["n_salts"].to_numpy(),
-            block_size,
-        )
+        keys = [pdf[c].to_numpy() for c in ("term_id", "salt", "doc_id")]
+        if storage == "raw":
+            enc = encode_partition_bulk_raw(
+                *keys,
+                pdf["tf"].to_numpy(),
+                pdf["dl"].to_numpy(),
+                pdf["n_salts"].to_numpy(),
+                block_size,
+            )
+        else:
+            enc = encode_partition_bulk(
+                *keys, pdf["w"].to_numpy().astype(np.float32), block_size
+            )
         ms = (time.perf_counter() - t0) * 1000.0
         nb = len(enc["n"])
-        return pd.DataFrame(
-            {
-                "bucket": np.full(nb, bucket, dtype=np.int32),
-                "term_id": enc["term_id"],
-                "salt": enc["salt"].astype(np.int32),
-                "n_salts": enc["n_salts"].astype(np.int32),
-                "block_id": enc["block_id"].astype(np.int32),
-                "n": enc["n"].astype(np.int32),
-                "first_doc": enc["first_doc"],
-                "last_doc": enc["last_doc"],
-                "max_tf": enc["max_tf"],
-                "min_tf": enc["min_tf"],
-                "min_dl": enc["min_dl"],
-                "max_dl": enc["max_dl"],
-                "n_bytes": enc["n_bytes"],
-                "docs": enc["docs"],
-                "tfs": enc["tfs"],
-                "dls": enc["dls"],
-                "enc_ms": np.full(nb, ms),
-            }
-        )
+        out = {"bucket": np.full(nb, bucket, dtype=np.int32)}
+        for c in block_cols:
+            out[c] = enc[c].astype(np.int32) if c in int32 else enc[c]
+        out["enc_ms"] = np.full(nb, ms)
+        return pd.DataFrame(out)
 
     return encode
+
+
+def write_postings(
+    src: DataFrame,
+    termdict: DataFrame,
+    n_terms: int,
+    n_buckets: int,
+    est_dl: float,
+    block_size: int,
+    storage: str,
+    target: str,
+) -> None:
+    """Salt, bucket, encode and write one postings table.
+
+    ``src`` rows: raw storage — (doc_id, term, tf, dl), joined here to
+    the termdict's (term_id, n_salts); weights storage — (term_id,
+    doc_id, w, n_salts) from weights_from_tf / tfidf_weights_from_tf
+    (``termdict`` unused). ``est_dl`` (token occurrences) sizes the
+    encode stage (encode_layout)."""
+    if storage == "raw":
+        src = src.join(
+            F.broadcast(termdict.select("term", "term_id", "n_salts")), "term"
+        ).select("term_id", "doc_id", "tf", "dl", "n_salts")
+        payload = ("doc_id", "tf", "dl", "n_salts")
+    else:
+        payload = ("doc_id", "w")
+    salted = (
+        src.withColumn(
+            # numpy-reproducible salt (codec.doc_salt): the query side
+            # re-derives doc→subgroup ownership in Python, so xxhash64
+            # (JVM-only) can't be the salt function here
+            "salt",
+            F.when(
+                F.col("n_salts") > 1,
+                F.pmod(
+                    F.col("doc_id")
+                    + F.shiftright("doc_id", 7)
+                    + F.shiftright("doc_id", 15),
+                    F.col("n_salts"),
+                ).cast("int"),
+            ).otherwise(F.lit(0)),
+        )
+        .withColumn(
+            "bucket",
+            F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_buckets)).cast("int"),
+        )
+        .select("bucket", "term_id", "salt", *payload)
+    )
+    shard_col, n_parts = encode_layout(
+        src.sparkSession, n_terms, n_buckets, est_dl
+    )
+    (
+        salted.withColumn("__shard", shard_col)
+        .repartition(n_parts, "bucket", "__shard")
+        .groupBy("bucket", "__shard")
+        .applyInPandas(
+            _encode_group_fn(block_size, storage), POSTINGS_SCHEMAS[storage]
+        )
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        # small row groups so the term_id min/max statistics can prune
+        # READS: with the 128 MB default each bucket file is ONE row
+        # group and every term-pruned scan (Spark and the pyarrow
+        # serving tier) decompresses whole bucket files — measured: the
+        # serving tier read the entire index per query
+        .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES))
+        .parquet(target)
+    )
+
+
+def write_lineage(postings: DataFrame, fingerprint: str, target: str) -> int:
+    """Write the per-bucket metrics table of one postings table and
+    return its posting total. Column-pruned: n_bytes was computed at
+    encode time, so this scan never touches the (dominant) binary
+    block columns, and the total rides the write as an Observation —
+    no read-back aggregation job."""
+    obs = Observation()
+    (
+        postings.groupBy("bucket")
+        .agg(
+            F.countDistinct("term_id").alias("n_terms"),
+            F.count(F.lit(1)).alias("n_blocks"),
+            F.sum("n").alias("n_postings"),
+            F.sum("n_bytes").alias("bytes"),
+            F.max("enc_ms").alias("enc_ms"),
+            F.lit(fingerprint).alias("input_fingerprint"),
+        )
+        .observe(obs, F.sum("n_postings").alias("np"))
+        .write.mode("overwrite")
+        .parquet(target)
+    )
+    return int(obs.get["np"] or 0)
 
 
 def build_index(
@@ -430,12 +687,13 @@ def build_index(
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     # ---- docmap ---------------------------------------------------------
+    url_ids: dict = {}
     if id_col is None:
         # ids assigned from a NARROW (url-only) checkpoint; text joins
         # back by url — url uniqueness is enforced (it is the doc key)
         docs_keyed = _zip_with_index(
             docs.select(url_col, text_col), url_col, "doc_id",
-            check_unique=True,
+            check_unique=True, counter=url_ids,
         )
         key_out = url_col
     else:
@@ -458,58 +716,59 @@ def build_index(
     # §2.6 — one corpus-scan's wall saved), resolved before any stage
     # needs the value. An id-range error still aborts before the
     # manifest commit.
-    from concurrent.futures import ThreadPoolExecutor
-
-    _pool = ThreadPoolExecutor(max_workers=2)
-    fp_future = None
-    if manifest is None:
-        fp_future = _pool.submit(
-            _fingerprint, docs_keyed, "doc_id", text_col, cfg_sig
-        )
-        fingerprint = None
-    else:
-        fingerprint = _fingerprint(docs_keyed, "doc_id", text_col, cfg_sig)
-
-    # ---- tf: tokenize exactly ONCE, materialize, derive the rest --------
-    # Without this stage every downstream aggregation (dl, stats,
-    # termdict, weights) re-runs the tokenizer over the whole corpus —
-    # at 100 TB that is 4+ extra full-corpus passes.
-    t0 = time.perf_counter()
-    if not cat.stage_done(manifest, "tf", fingerprint):
-        term_frequencies(
-            docs_keyed, text_col, "doc_id", cfg.n_min, cfg.n_max
-        ).write.mode("overwrite").parquet(cat.path("tf"))
-    walls["tf"] = time.perf_counter() - t0
-    tf = spark.read.parquet(cat.path("tf"))
-
+    pool = ThreadPoolExecutor(max_workers=2)
     pending = []
-    if not cat.stage_done(manifest, "docmap", fingerprint):
-        # nothing downstream of the build reads docmap (dl derives
-        # from the materialized tf) — the write runs as a concurrent
-        # job back-filling executors during termdict/postings (guide
-        # §2.6); _finish_build joins it before the manifest commit.
-        # Collection stats come from a narrow agg over tf instead.
-        def _write_docmap():
-            t0 = time.perf_counter()
-            (
-                docs_keyed.select("doc_id", key_out)
-                .join(doc_lengths(tf), "doc_id", "left")
-                .na.fill({"dl": 0})
-                .write.mode("overwrite")
-                .parquet(cat.path("docmap"))
+    try:
+        fp_future = None
+        if manifest is None:
+            fp_future = pool.submit(
+                _fingerprint, docs_keyed, "doc_id", text_col, cfg_sig
             )
-            walls["docmap"] = time.perf_counter() - t0
+            fingerprint = None
+        else:
+            fingerprint = _fingerprint(docs_keyed, "doc_id", text_col, cfg_sig)
 
-        pending.append(_pool.submit(_write_docmap))
-    # no further submissions: releases the worker threads as they finish
-    _pool.shutdown(wait=False)
-    if fingerprint is None:
-        fingerprint = fp_future.result()
-    return _finish_build(
-        spark, cat, tf, fingerprint, cfg, n_buckets, block_size,
-        salt_every, manifest, walls, index_dir, weighting, storage,
-        pending=pending,
-    )
+        # ---- tf: tokenize exactly ONCE, materialize, derive the rest ----
+        # Without this stage every downstream aggregation (dl, stats,
+        # termdict, weights) re-runs the tokenizer over the whole corpus
+        # — at 100 TB that is 4+ extra full-corpus passes.
+        t0 = time.perf_counter()
+        if not cat.stage_done(manifest, "tf", fingerprint):
+            term_frequencies(
+                docs_keyed, text_col, "doc_id", cfg.n_min, cfg.n_max
+            ).write.mode("overwrite").parquet(cat.path("tf"))
+        walls["tf"] = time.perf_counter() - t0
+        tf = spark.read.parquet(cat.path("tf"))
+
+        if not cat.stage_done(manifest, "docmap", fingerprint):
+            # nothing downstream of the build reads docmap (dl derives
+            # from the materialized tf) — the write runs as a concurrent
+            # job back-filling executors during termdict/postings;
+            # _finish_build joins it before the manifest commit.
+            # Collection stats come from a narrow agg over tf instead.
+            def _write_docmap():
+                t0 = time.perf_counter()
+                (
+                    docs_keyed.select("doc_id", key_out)
+                    .join(doc_lengths(tf), "doc_id", "left")
+                    .na.fill({"dl": 0})
+                    .write.mode("overwrite")
+                    .parquet(cat.path("docmap"))
+                )
+                walls["docmap"] = time.perf_counter() - t0
+
+            pending.append(pool.submit(_write_docmap))
+        if fingerprint is None:
+            fingerprint = fp_future.result()
+        return _finish_build(
+            spark, cat, tf, fingerprint, cfg, n_buckets, block_size,
+            salt_every, manifest, walls, index_dir, weighting, storage,
+            pending=pending,
+        )
+    finally:
+        # on failure too, no job of this build outlives the call
+        pool.shutdown(wait=True, cancel_futures=True)
+        _unpin(url_ids.get("keys"))
 
 
 def _finish_build(
@@ -526,19 +785,16 @@ def _finish_build(
     index_dir: str,
     weighting: str = "bm25",
     storage: str = "weights",
-    stats: tuple[int, float] | None = None,
     pending: list | None = None,
 ) -> "BM25Index":
     """Stages downstream of the materialized tf table — shared by
-    ``build_index`` and the incremental/streaming materializer
-    (streaming/compressed.py), so a stream-accumulated tf produces the
-    IDENTICAL index artifact as a from-scratch build.
+    ``build_index`` and the stream's full (storage="weights")
+    materialize (streaming/compressed.py), so a stream-accumulated tf
+    produces the IDENTICAL index artifact as a from-scratch build.
 
     ``pending``: concurrent caller-side jobs (e.g. the docmap write,
     guide §2.6) joined — and their failures re-raised — before the
     manifest commit."""
-    from neural_cherche_spark.index.builder_weights import weights_from_tf
-
     # doc lengths from the materialized tf, persisted: identical rows
     # to the old docmap dl>0 projection (docs with no n-grams don't
     # count toward n_docs/avgdl — matches the exact path + oracle),
@@ -546,299 +802,121 @@ def _finish_build(
     # the agg over tf runs ONCE for its three consumers (stats,
     # termdict w1, postings weights) instead of once each — n_docs
     # scalar rows, bounded at any corpus.
-    from pyspark import StorageLevel
-
     dl = doc_lengths(tf).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # ---- stats + termdict ----------------------------------------------
-    t0 = time.perf_counter()
-    if cat.stage_done(manifest, "termdict", fingerprint) and cat.stage_done(
-        manifest, "postings", fingerprint
-    ):
-        # fully-resumed statistics: manifest values are authoritative
-        # for this fingerprint — skip the stats job
-        n_docs, avgdl = int(manifest.n_docs), float(manifest.avgdl)
-    elif stats is not None:
-        # observed on the docmap write by the caller — no stats job
-        n_docs, avgdl = stats
-    else:
-        stats_row = collection_stats(dl).collect()[0]
-        n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"])
-    # POWER OF TWO, capped: every term's salt count must divide the
-    # per-query split factor so the block-max path can shard heavy
-    # query groups into disjoint doc subsets (query/bmw.py subgroup
-    # split). Cap 1024: beyond that a single salt run still holds
-    # ≥ salt_every postings and the heavy query is routed to the bulk
-    # decode-score path anyway (search_auto).
-    n_salts_col = F.least(
-        F.lit(1024),
-        F.pow(
-            F.lit(2.0),
-            F.ceil(
-                F.log2(
-                    F.greatest(
-                        F.lit(1.0),
-                        F.ceil(F.col("df") / F.lit(salt_every)),
-                    )
-                )
-            ),
-        ).cast("int"),
-    )
-    if not cat.stage_done(manifest, "termdict", fingerprint):
-        if weighting == "bm25":
-            # ONE pass over tf computes tf_total, df AND the norm base:
-            # w1 (the tf component) does not depend on idf, and
-            # norm = sqrt(Σ(w1·idf)²) = |idf|·sqrt(Σw1²), so Σw1² can be
-            # aggregated alongside tf_total — no second full-corpus
-            # pass, and the weights stage later needs only a broadcast
-            # join against this small table (SURVEY §4.4, window-free).
-            w1 = tf.join(dl, "doc_id").withColumn(
-                "w1",
-                F.col("tf")
-                * (cfg.k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + cfg.k1
-                    * (1.0 - cfg.b + cfg.b * F.col("dl") / F.lit(avgdl))
-                )
-                + F.lit(cfg.epsilon),
-            )
-            ts = (
-                w1.groupBy("term")
-                .agg(
-                    F.sum("tf").alias("tf_total"),
-                    F.count(F.lit(1)).alias("df"),
-                    F.sum(F.col("w1") * F.col("w1")).alias("sw1sq"),
-                )
-                .withColumn(
-                    "idf",
-                    F.log(
-                        (F.lit(n_docs) - F.col("tf_total") + 0.5)
-                        / (F.col("tf_total") + 0.5)
-                        + 1.0
-                    ),
-                )
-                .withColumn(
-                    "term_norm",
-                    F.when(
-                        F.col("idf") == 0, F.lit(1.0)
-                    ).otherwise(F.abs(F.col("idf")) * F.sqrt(F.col("sw1sq"))),
-                )
-                .withColumn("n_salts", n_salts_col)
-                .drop("sw1sq")
-            )
-        else:
-            # tfidf: smoothed idf ln((1+N)/(1+df)) + 1 (always > 0);
-            # normalization is per DOC, done in the weights stage —
-            # term_norm kept at 1.0 for schema compatibility
-            ts = (
-                tf.groupBy("term")
-                .agg(
-                    F.sum("tf").alias("tf_total"),
-                    F.count(F.lit(1)).alias("df"),
-                )
-                .withColumn(
-                    "idf",
-                    F.log(
-                        (1.0 + F.lit(n_docs)) / (1.0 + F.col("df"))
-                    )
-                    + 1.0,
-                )
-                .withColumn("term_norm", F.lit(1.0))
-                .withColumn("n_salts", n_salts_col)
-            )
-        # persist the aggregated term table: _zip_with_index materializes
-        # it once for the key checkpoint and the payload join re-derives
-        # it at the write — without the persist the full term agg over
-        # tf ran TWICE per build (plan audit; ~2× the termdict stage on
-        # the 100k corpus). n_terms-sized rows — bounded at any corpus.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import StorageLevel
-
-        ts = ts.persist(StorageLevel.MEMORY_AND_DISK)
-        tcount: dict = {}
-        termdict = _zip_with_index(ts, "term", "term_id", counter=tcount)
-        # the downstream stages need only the termdict CONTENT (cheap
-        # to re-derive from the persisted agg + checkpointed ids) and
-        # n_terms (already known from the id-assignment offsets) — the
-        # parquet write itself runs as a concurrent job back-filling
-        # executors during docnorm/postings (guide §2.6), joined
-        # before the manifest commit. ts stays persisted until the
-        # postings stage has consumed it (released with dl below).
-        _td_pool = ThreadPoolExecutor(max_workers=1)
-
-        def _write_termdict():
-            termdict.write.mode("overwrite").parquet(cat.path("termdict"))
-
-        pending = list(pending or ()) + [_td_pool.submit(_write_termdict)]
-        _td_pool.shutdown(wait=False)
-        shared_ts = ts
-        n_terms = int(tcount["n"])
-    else:
-        # stage resumed for the same fingerprint: the manifest's total
-        # is authoritative — no count job over the termdict
-        n_terms = int(manifest.n_terms)
-        shared_ts = None
-        termdict = spark.read.parquet(cat.path("termdict"))
-    walls["termdict"] = time.perf_counter() - t0
-
-    # ---- docnorm (tfidf + raw only) -------------------------------------
-    # per-doc L2 norm ‖d‖ = sqrt(Σ_t (tf·idf_t)²): raw tfidf blocks
-    # store tf, queries score unnormalized and divide by ‖d‖ via a
-    # doc-keyed join of the candidate set against this table. One
-    # term-keyed join + one doc-keyed agg over tf — recomputed whole
-    # on every refresh because idf moves (norms are per-doc SCALARS:
-    # the rewrite is O(n_docs) bytes, postings stay untouched).
-    # Computed BEFORE the postings stage: the tfidf raw encode stamps
-    # each posting with the floor-quantized norm (codec.DNORM_SCALE)
-    # so block metadata carries sound per-block norm bounds.
-    docnorm_path = ""
-    if storage == "raw" and weighting == "tfidf":
+    pending = list(pending or ())
+    ts = None
+    tcount: dict = {}
+    td_pool = ThreadPoolExecutor(max_workers=1)
+    try:
+        # ---- stats + termdict -------------------------------------------
         t0 = time.perf_counter()
-        docnorm_path = "docnorm"
-        if not cat.stage_done(manifest, "docnorm", fingerprint):
-            (
-                tf.join(termdict.select("term", "idf"), "term")
-                .withColumn("wr", F.col("tf") * F.col("idf"))
-                .groupBy("doc_id")
-                .agg(F.sqrt(F.sum(F.col("wr") * F.col("wr"))).alias("dnorm"))
-                .write.mode("overwrite")
-                .parquet(cat.path("docnorm"))
+        if cat.stage_done(manifest, "termdict", fingerprint) and cat.stage_done(
+            manifest, "postings", fingerprint
+        ):
+            # fully-resumed statistics: manifest values are authoritative
+            # for this fingerprint — skip the stats job
+            n_docs, avgdl = int(manifest.n_docs), float(manifest.avgdl)
+        else:
+            n_docs, avgdl = corpus_stats(dl)
+        if not cat.stage_done(manifest, "termdict", fingerprint):
+            # persist the aggregated term table: _zip_with_index
+            # materializes it once for the key checkpoint and the
+            # payload join re-derives it at the write — without the
+            # persist the full term agg over tf ran TWICE per build
+            # (plan audit; ~2× the termdict stage on the 100k corpus).
+            # n_terms-sized rows — bounded at any corpus.
+            src = tf.join(dl, "doc_id") if weighting == "bm25" else tf
+            ts = term_table(
+                src, n_docs, avgdl, cfg, weighting, salt_every
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            termdict = _zip_with_index(ts, "term", "term_id", counter=tcount)
+            # the downstream stages need only the termdict CONTENT
+            # (cheap to re-derive from the persisted agg + checkpointed
+            # ids) and n_terms (already known from the id-assignment
+            # offsets) — the parquet write itself runs as a concurrent
+            # job back-filling executors during docnorm/postings, joined
+            # before the manifest commit. ts stays
+            # persisted until the postings stage has consumed it.
+            pending.append(
+                td_pool.submit(
+                    termdict.write.mode("overwrite").parquet,
+                    cat.path("termdict"),
+                )
             )
-        walls["docnorm"] = time.perf_counter() - t0
+            n_terms = int(tcount["n"])
+        else:
+            # stage resumed for the same fingerprint: the manifest's
+            # total is authoritative — no count job over the termdict
+            n_terms = int(manifest.n_terms)
+            termdict = spark.read.parquet(cat.path("termdict"))
+        walls["termdict"] = time.perf_counter() - t0
 
-    # ---- postings -------------------------------------------------------
-    t0 = time.perf_counter()
-    if not cat.stage_done(manifest, "postings", fingerprint):
+        # ---- docnorm (tfidf + raw only) ---------------------------------
+        # recomputed whole on every refresh because idf moves. Computed
+        # BEFORE the postings stage: the tfidf raw encode stamps each
+        # posting with the quantized norm (quantize_norm_dl).
+        docnorm_path = ""
+        if storage == "raw" and weighting == "tfidf":
+            t0 = time.perf_counter()
+            docnorm_path = "docnorm"
+            if not cat.stage_done(manifest, "docnorm", fingerprint):
+                doc_norms(tf, termdict).write.mode("overwrite").parquet(
+                    cat.path("docnorm")
+                )
+            walls["docnorm"] = time.perf_counter() - t0
+
+        # ---- postings ---------------------------------------------------
+        t0 = time.perf_counter()
         if storage == "raw":
             # raw layout: per-posting (tf, dl); weights computed at
             # query time. Written as segment 0 of a segmented index —
             # the same layout CompressedIndexStream appends deltas to.
-            # tfidf: the dl slot carries the quantized encode-time
-            # docnorm ρq (cosine never reads dl; see codec.DNORM_SCALE)
-            if weighting == "tfidf":
-                dn = spark.read.parquet(cat.path("docnorm"))
-                w = tf.join(dn, "doc_id").withColumn(
-                    "dl",
-                    F.greatest(
-                        F.lit(1),
-                        F.floor(F.col("dnorm") * F.lit(float(DNORM_SCALE))),
-                    ).cast("long"),
-                )
-            else:
-                w = tf.join(dl, "doc_id")
-            w = (
-                w.join(
-                    F.broadcast(
-                        termdict.select("term", "term_id", "n_salts")
-                    ),
-                    "term",
-                )
-                .select("term_id", "doc_id", "tf", "dl", "n_salts")
-            )
-            payload = ("doc_id", "tf", "dl", "n_salts")
-            encode_fn, schema = (
-                _encode_group_raw_fn(block_size),
-                POSTINGS_RAW_SCHEMA,
-            )
             target = os.path.join(cat.path("postings"), "seg=0")
-        elif weighting == "bm25":
-            w = weights_from_tf(tf, dl, termdict, n_docs, avgdl, cfg)
-            payload = ("doc_id", "w")
-            encode_fn, schema = _encode_group_fn(block_size), POSTINGS_SCHEMA
-            target = cat.path("postings")
+            lineage_target = os.path.join(cat.path("lineage"), "seg=0")
         else:
-            from neural_cherche_spark.index.builder_weights import (
-                tfidf_weights_from_tf,
-            )
-
-            w = tfidf_weights_from_tf(tf, termdict)
-            payload = ("doc_id", "w")
-            encode_fn, schema = _encode_group_fn(block_size), POSTINGS_SCHEMA
             target = cat.path("postings")
-        salted = (
-            w.withColumn(
-                # numpy-reproducible salt (codec.doc_salt): the query
-                # side re-derives doc→subgroup ownership in Python, so
-                # xxhash64 (JVM-only) can't be the salt function here
-                "salt",
-                F.when(
-                    F.col("n_salts") > 1,
-                    F.pmod(
-                        F.col("doc_id")
-                        + F.shiftright("doc_id", 7)
-                        + F.shiftright("doc_id", 15),
-                        F.col("n_salts"),
-                    ).cast("int"),
-                ).otherwise(F.lit(0)),
+            lineage_target = cat.path("lineage")
+        if not cat.stage_done(manifest, "postings", fingerprint):
+            if storage == "raw" and weighting == "tfidf":
+                src = quantize_norm_dl(
+                    tf, spark.read.parquet(cat.path("docnorm"))
+                )
+            elif storage == "raw":
+                src = tf.join(dl, "doc_id")
+            elif weighting == "bm25":
+                src = weights_from_tf(tf, dl, termdict, avgdl, cfg)
+            else:
+                src = tfidf_weights_from_tf(tf, termdict)
+            write_postings(
+                src, termdict, n_terms, n_buckets, n_docs * avgdl,
+                block_size, storage, target,
             )
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_buckets)).cast("int"),
+        walls["postings"] = time.perf_counter() - t0
+
+        # ---- lineage (per-bucket metrics table) -------------------------
+        t0 = time.perf_counter()
+        if not cat.stage_done(manifest, "lineage", fingerprint):
+            n_postings = write_lineage(
+                spark.read.parquet(cat.path("postings")),
+                fingerprint,
+                lineage_target,
             )
-            .select("bucket", "term_id", "salt", *payload)
-        )
-        shard_col, n_parts = encode_layout(
-            spark, n_terms, n_buckets, n_docs * avgdl
-        )
-        (
-            salted.withColumn("__shard", shard_col)
-            .repartition(n_parts, "bucket", "__shard")
-            .groupBy("bucket", "__shard")
-            .applyInPandas(encode_fn, schema)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            # small row groups so the term_id min/max statistics can
-            # prune READS: with the 128 MB default each bucket file is
-            # ONE row group and every term-pruned scan (Spark and the
-            # pyarrow serving tier) decompresses whole bucket files —
-            # measured: the serving tier read the entire index per
-            # query (guide §6: make PushedFilters actually skip data)
-            .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES))
-            .parquet(target)
-        )
-    walls["postings"] = time.perf_counter() - t0
-    postings = spark.read.parquet(cat.path("postings"))
-
-    # ---- lineage (per-bucket metrics table) ------------------------------
-    # column-pruned aggregation: n_bytes was computed at encode time, so
-    # this scan never touches the (dominant) binary docs/ws columns —
-    # at 100 TB the metrics pass reads a few % of the index, not all of it
-    t0 = time.perf_counter()
-    if not cat.stage_done(manifest, "lineage", fingerprint):
-        from pyspark.sql import Observation
-
-        lobs = Observation("lineage_totals")
-        lineage_df = postings.groupBy("bucket").agg(
-            F.countDistinct("term_id").alias("n_terms"),
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.sum("n").alias("n_postings"),
-            F.sum("n_bytes").alias("bytes"),
-            F.max("enc_ms").alias("enc_ms"),
-            F.lit(fingerprint).alias("input_fingerprint"),
-        ).observe(lobs, F.sum("n_postings").alias("np"))
-        lineage_target = (
-            os.path.join(cat.path("lineage"), "seg=0")
-            if storage == "raw"
-            else cat.path("lineage")
-        )
-        lineage_df.write.mode("overwrite").parquet(lineage_target)
-        # manifest total rides the lineage write as an Observation — no
-        # read-back aggregation job (and still never touches the binary
-        # posting columns)
-        n_postings = int(lobs.get["np"] or 0)
-    else:
-        # fully resumed build: the manifest total is authoritative
-        n_postings = int(manifest.n_postings)
-    walls["lineage"] = time.perf_counter() - t0
-    for f in pending or ():
-        # concurrent jobs (docmap + termdict writes) must land — and
-        # their failures surface — before the manifest commit
-        f.result()
-    dl.unpersist()
-    if shared_ts is not None:
-        shared_ts.unpersist()
+        else:
+            # fully resumed build: the manifest total is authoritative
+            n_postings = int(manifest.n_postings)
+        walls["lineage"] = time.perf_counter() - t0
+        for f in pending:
+            # concurrent jobs (docmap + termdict writes) must land — and
+            # their failures surface — before the manifest commit
+            f.result()
+    finally:
+        # on failure too, no write of this build outlives the call
+        wait(pending)
+        td_pool.shutdown(wait=False)
+        dl.unpersist()
+        if ts is not None:
+            ts.unpersist()
+        _unpin(tcount.get("keys"))
     m = Manifest(
         cfg={
             "k1": cfg.k1, "b": cfg.b, "epsilon": cfg.epsilon,
@@ -850,7 +928,7 @@ def _finish_build(
         n_docs=n_docs,
         avgdl=avgdl,
         n_terms=n_terms,
-        n_postings=int(n_postings),
+        n_postings=n_postings,
         n_buckets=n_buckets,
         stages={
             s: {"done": True, "wall_s": round(walls.get(s, 0.0), 3)}
@@ -858,7 +936,7 @@ def _finish_build(
             + (("docnorm",) if docnorm_path else ())
         },
         segments=(
-            [{"seg": 0, "n_postings": int(n_postings)}]
+            [{"seg": 0, "n_postings": n_postings}]
             if storage == "raw"
             else []
         ),

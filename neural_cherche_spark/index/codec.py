@@ -150,7 +150,6 @@ def encode_partition_bulk(
     doc_ids: np.ndarray,
     weights: np.ndarray,
     block_size: int = BLOCK_SIZE,
-    bucket: np.ndarray | None = None,
 ) -> dict[str, list | np.ndarray]:
     """Encode ALL (term_id, salt) runs of one sorted partition in one
     vectorized pass — O(1) numpy calls per partition instead of per
@@ -160,19 +159,9 @@ def encode_partition_bulk(
     Inputs must be sorted by (tid, salt, doc_id), doc_ids strictly
     ascending within each run. Output block format is identical to
     :func:`encode_blocks` (property-tested equivalent).
-
-    ``bucket``: optional per-posting passthrough (constant within a
-    run — it is a function of (term_id, salt)); when given, the result
-    carries per-block ``bucket`` so one encode call can cover a
-    partition holding MANY buckets (the mapInPandas encode stage).
     """
     n = doc_ids.size
     if n == 0:
-        if bucket is not None:
-            return dict(
-                encode_partition_bulk(tid, salt, doc_ids, weights, block_size),
-                bucket=np.empty(0, dtype=np.int64),
-            )
         return {
             "term_id": np.empty(0, dtype=np.int64),
             "salt": np.empty(0, dtype=np.int64),
@@ -217,13 +206,7 @@ def encode_partition_bulk(
     ]
     ws_bin = [weights[s:e].tobytes() for s, e in zip(block_starts, block_ends)]
 
-    out_bucket = (
-        {}
-        if bucket is None
-        else {"bucket": np.asarray(bucket, dtype=np.int64)[block_starts]}
-    )
     return {
-        **out_bucket,
         "term_id": tid[block_starts],
         "salt": salt[block_starts],
         "block_id": (pos_in_run[block_starts] // block_size).astype(np.int64),
@@ -250,7 +233,6 @@ def encode_partition_bulk_raw(
     dls: np.ndarray,
     n_salts: np.ndarray,
     block_size: int = BLOCK_SIZE,
-    bucket: np.ndarray | None = None,
 ) -> dict[str, list | np.ndarray]:
     """RAW-storage twin of :func:`encode_partition_bulk`: blocks store
     per-posting ``(tf, dl)`` varints instead of a precomputed float32
@@ -273,13 +255,6 @@ def encode_partition_bulk_raw(
     """
     n = doc_ids.size
     if n == 0:
-        if bucket is not None:
-            return dict(
-                encode_partition_bulk_raw(
-                    tid, salt, doc_ids, tfs, dls, n_salts, block_size
-                ),
-                bucket=np.empty(0, dtype=np.int64),
-            )
         return {
             "term_id": np.empty(0, dtype=np.int64),
             "salt": np.empty(0, dtype=np.int64),
@@ -330,13 +305,7 @@ def encode_partition_bulk_raw(
     np.cumsum(t_sz, out=t_off[1:])
     np.cumsum(l_sz, out=l_off[1:])
 
-    out_bucket = (
-        {}
-        if bucket is None
-        else {"bucket": np.asarray(bucket, dtype=np.int64)[block_starts]}
-    )
     return {
-        **out_bucket,
         "term_id": tid[block_starts],
         "salt": salt[block_starts],
         "n_salts": n_salts[block_starts],
@@ -441,7 +410,7 @@ def bm25_w1(
 ) -> np.ndarray:
     """Query-time BM25 tf-saturation for RAW blocks — the numpy twin of
     the builder's weight expression. MUST stay the same evaluation tree
-    as index/builder_weights.py so raw-mode scores agree with
+    as index/builder.py::bm25_w1 so raw-mode scores agree with
     weights-mode/oracle scores to f64 rounding."""
     tf = tf.astype(np.float64)
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl)) + epsilon

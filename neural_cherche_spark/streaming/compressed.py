@@ -82,6 +82,26 @@ class CompressedIndexStream:
             json.dump(m, f)
         os.replace(tmp, self._p("meta.json"))
 
+    def _check_doc_ids(self) -> None:
+        """Mirror build_index's id validation (ADVICE r2) over the
+        accumulated doc registry — one column-pruned pass: out-of-range
+        ids corrupt the packed (query_id<<41)|doc_id combine and
+        doc_salt subgrouping; a doc_id re-added across batches
+        double-counts silently."""
+        from neural_cherche_spark.index.builder import check_doc_ids
+
+        check_doc_ids(
+            self.spark.read.schema(DOCS_BATCH_SCHEMA)
+            .parquet(self._p("docs"))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct("doc_id").alias("nd"),
+                F.min("doc_id").alias("lo"),
+                F.max("doc_id").alias("hi"),
+            )
+            .collect()[0]
+        )
+
     def add_batch(
         self, docs: DataFrame, epoch_id: int | None = None
     ) -> "CompressedIndexStream":
@@ -110,7 +130,6 @@ class CompressedIndexStream:
             F.col(self.text_col).alias("text"),
         )
         from pyspark import StorageLevel
-        from pyspark.sql import Observation
 
         from neural_cherche_spark.index.build import doc_lengths
 
@@ -154,12 +173,14 @@ class CompressedIndexStream:
 
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(_w_tf), pool.submit(_w_docs)]
-            for f in futs:
-                f.result()
+        try:
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                futs = [pool.submit(_w_tf), pool.submit(_w_docs)]
+                for f in futs:
+                    f.result()
+        finally:
+            tf_b.unpersist()
         srow = obs.get
-        tf_b.unpersist()
 
         applied = meta.setdefault("applied_epochs", {})
         if epoch_id is not None:
@@ -362,34 +383,7 @@ class CompressedIndexStream:
             ).alias("h"),
         ).collect()[0]
         fingerprint = f"tf:{row['n']}:{row['h']}:{cfg_sig}"
-        # mirror build_index._fingerprint's id validation (ADVICE r2):
-        # out-of-range ids corrupt the packed (query_id<<41)|doc_id
-        # combine and doc_salt subgrouping; a doc_id re-added across
-        # batches double-counts silently. One column-pruned pass over
-        # the (narrow) doc registry.
-        from neural_cherche_spark.index.builder import MAX_DOC_ID
-
-        drow = (
-            spark.read.schema(DOCS_BATCH_SCHEMA).parquet(self._p("docs"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct("doc_id").alias("nd"),
-                F.min("doc_id").alias("lo"),
-                F.max("doc_id").alias("hi"),
-            )
-            .collect()[0]
-        )
-        if drow["n"]:
-            if drow["lo"] < 0 or drow["hi"] > MAX_DOC_ID:
-                raise ValueError(
-                    f"doc ids must be in [0, 2^41): got range "
-                    f"[{drow['lo']}, {drow['hi']}] across accumulated batches"
-                )
-            if drow["nd"] != drow["n"]:
-                raise ValueError(
-                    f"duplicate doc_ids across batches: {drow['n']} rows, "
-                    f"{drow['nd']} distinct — each batch must carry new ids"
-                )
+        self._check_doc_ids()
         manifest = cat.load_manifest() if resume else None
         walls: dict[str, float] = {}
 
@@ -464,17 +458,22 @@ class CompressedIndexStream:
         :meth:`materialize`. Crash-safe: all segment writes are
         overwrite-idempotent for the same batch set, the new termdict
         snapshot goes to a fresh revision dir, and the manifest save is
-        the atomic commit point."""
+        the atomic commit point. The stage rules (term stats, docnorm,
+        encode, lineage) are index.builder's — this method decides only
+        what each stage covers."""
         import shutil
         import time
 
         from neural_cherche_spark.catalog import IndexCatalog, Manifest
         from neural_cherche_spark.index.builder import (
-            MAX_DOC_ID,
-            POSTINGS_RAW_SCHEMA,
             BM25Index,
-            _encode_group_raw_fn,
+            _unpin,
             _zip_with_index,
+            doc_norms,
+            quantize_norm_dl,
+            term_table,
+            write_lineage,
+            write_postings,
         )
 
         spark, cfg = self.spark, self.cfg
@@ -549,563 +548,387 @@ class CompressedIndexStream:
         # id validation over the (narrow) doc registry — one pass.
         # Runs as a CONCURRENT job (guide §2.6: overlap independent
         # jobs): nothing below depends on it, and the refresh commits
-        # nothing until the manifest save — `check_validation()` is
+        # nothing until the manifest save — `validation.result()` is
         # called (and re-raised from) before that commit point, so an
         # invalid id set still never produces a committed manifest.
         def _validate():
             t0 = time.perf_counter()
-            drow = (
-                spark.read.schema(DOCS_BATCH_SCHEMA)
-                .parquet(self._p("docs"))
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.countDistinct("doc_id").alias("nd"),
-                    F.min("doc_id").alias("lo"),
-                    F.max("doc_id").alias("hi"),
-                )
-                .collect()[0]
-            )
+            self._check_doc_ids()
             walls["validate"] = time.perf_counter() - t0
-            if drow["n"]:
-                if drow["lo"] < 0 or drow["hi"] > MAX_DOC_ID:
-                    raise ValueError(
-                        f"doc ids must be in [0, 2^41): got range "
-                        f"[{drow['lo']}, {drow['hi']}] across accumulated "
-                        "batches"
-                    )
-                if drow["nd"] != drow["n"]:
-                    raise ValueError(
-                        f"duplicate doc_ids across batches: {drow['n']} "
-                        f"rows, {drow['nd']} distinct — each batch must "
-                        "carry new ids"
-                    )
 
         from concurrent.futures import ThreadPoolExecutor
 
         pool = ThreadPoolExecutor(max_workers=3)
-        validation = pool.submit(_validate)
-
-        # exact global stats, additively (batch ledger): no corpus pass
-        ledger = meta.get("batches", {})
-        if len(ledger) != n_batches:
-            raise ValueError(
-                "state predates the dl-carrying batch format — rebuild the "
-                "stream state or use storage='weights'"
-            )
-        del_ledger = meta.get("deletes", {})
-        n_docs = sum(v["n_docs"] for v in ledger.values()) - sum(
-            v["n_docs"] for v in del_ledger.values()
-        )
-        sum_dl = sum(v["sum_dl"] for v in ledger.values()) - sum(
-            v["sum_dl"] for v in del_ledger.values()
-        )
-        avgdl = sum_dl / n_docs if n_docs else 0.0
-        # tombstones: deleted docs' tf rows are excluded from every
-        # statistic below (exact), while their postings stay untouched
-        # bytes in old segments — the query paths mask them
-        tomb = None
-        if n_del_batches:
-            tomb = (
-                spark.read.schema("doc_id bigint, dl bigint")
-                .parquet(self._p("deletes"))
-                .select("doc_id")
-            )
-
-        # ---- termdict: per-term stats over the accumulated tf --------------
-        # the one O(corpus) pass a refresh keeps: idf and term_norm are
-        # global statistics and avgdl moved. It is a map-side-combined
-        # agg over the already-tokenized tf (n_terms-sized shuffle) —
-        # postings are never read, re-shuffled, or re-encoded.
-        t0 = time.perf_counter()
-        tf_acc = spark.read.schema(TF_BATCH_SCHEMA).parquet(self._p("tf"))
-        tf_new = spark.read.schema(TF_BATCH_SCHEMA).parquet(
-            *[self._p(f"tf/batch={b}") for b in new_batches]
-        )
-        # freeze_stats: the per-term agg runs over the NEW batches only
-        # — existing terms keep their previous idf/term_norm verbatim
-        # (the reference add()'s stale-stats trade, opt-in); the refresh
-        # touches no byte and no row proportional to the corpus.
-        frozen = bool(freeze_stats and prev_ok)
-        stats_src = tf_new if frozen else tf_acc
-        if tomb is not None:
-            stats_src = stats_src.join(tomb, "doc_id", "left_anti")
-        n_salts_col = F.least(
-            F.lit(1024),
-            F.pow(
-                F.lit(2.0),
-                F.ceil(
-                    F.log2(
-                        F.greatest(
-                            F.lit(1.0),
-                            F.ceil(F.col("df") / F.lit(salt_every)),
-                        )
-                    )
-                ),
-            ).cast("int"),
-        )
-        if weighting == "bm25":
-            w1 = stats_src.withColumn(
-                "w1",
-                F.col("tf")
-                * (cfg.k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + cfg.k1
-                    * (1.0 - cfg.b + cfg.b * F.col("dl") / F.lit(avgdl))
-                )
-                + F.lit(cfg.epsilon),
-            )
-            ts = (
-                w1.groupBy("term")
-                .agg(
-                    F.sum("tf").alias("tf_total"),
-                    F.count(F.lit(1)).alias("df"),
-                    F.sum(F.col("w1") * F.col("w1")).alias("sw1sq"),
-                )
-                .withColumn(
-                    "idf",
-                    F.log(
-                        (F.lit(n_docs) - F.col("tf_total") + 0.5)
-                        / (F.col("tf_total") + 0.5)
-                        + 1.0
-                    ),
-                )
-                .withColumn(
-                    "term_norm",
-                    F.when(F.col("idf") == 0, F.lit(1.0)).otherwise(
-                        F.abs(F.col("idf")) * F.sqrt(F.col("sw1sq"))
-                    ),
-                )
-                .withColumn("n_salts", n_salts_col)
-                .drop("sw1sq")
-            )
-        else:
-            # tfidf: smoothed idf ln((1+N)/(1+df)) + 1; per-DOC norms
-            # handled in the docnorm stage below (term_norm ≡ 1.0 —
-            # same convention as build_index's tfidf termdict)
-            ts = (
-                stats_src.groupBy("term")
-                .agg(
-                    F.sum("tf").alias("tf_total"),
-                    F.count(F.lit(1)).alias("df"),
-                )
-                .withColumn(
-                    "idf",
-                    F.log((1.0 + F.lit(n_docs)) / (1.0 + F.col("df")))
-                    + 1.0,
-                )
-                .withColumn("term_norm", F.lit(1.0))
-                .withColumn("n_salts", n_salts_col)
-            )
-        # STABLE term ids: existing terms keep theirs (old segments
-        # reference them on disk); new terms extend the id space.
-        # The shared subtree (the term agg over the FULL accumulated tf
-        # — the one O(corpus) pass a refresh keeps) is persisted: the
-        # id-assignment checkpoint and the termdict write would
-        # otherwise each re-run it (plan audit — the agg ran 2-3× per
-        # refresh). n_terms-sized rows, bounded at any corpus.
-        from pyspark import StorageLevel
-
         persisted = None
-        if prev_ok:
-            old_td = spark.read.parquet(cat.path(manifest.termdict_path))
-            if frozen:
-                persisted = ts = ts.persist(StorageLevel.MEMORY_AND_DISK)
-                # old rows verbatim; only genuinely-new terms appended
-                fresh = ts.join(
-                    old_td.select("term"), "term", "left_anti"
-                )
-            else:
-                joined = ts.join(
-                    old_td.select("term", "term_id"), "term", "left"
-                )
-                persisted = joined = joined.persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                known = joined.filter(F.col("term_id").isNotNull())
-                fresh = joined.filter(
-                    F.col("term_id").isNull()
-                ).drop("term_id")
-            # a routine delta batch usually introduces NO new vocabulary:
-            # probing the persisted subtree costs one cheap job (it
-            # materializes the cache the id-assignment would have
-            # needed anyway) and skips _zip_with_index's checkpoint +
-            # offset-collect jobs entirely when empty — the refresh
-            # wall is job-count-bound at small batch sizes
-            base = old_td if frozen else known
-            if not fresh.select("term").take(1):
-                termdict = base
-                n_fresh = 0
-            else:
-                fcount: dict = {}
-                new_ids = _zip_with_index(
-                    fresh.select("term"), "term", "__nid", counter=fcount
-                )
-                fresh_ids = fresh.join(new_ids, "term").withColumn(
-                    "term_id",
-                    F.col("__nid") + F.lit(int(manifest.n_terms)),
-                ).drop("__nid")
-                termdict = base.unionByName(
-                    fresh_ids.select(*base.columns)
-                )
-                n_fresh = int(fcount["n"])
-            # n_terms without reading the written table back: frozen
-            # keeps every old row verbatim; non-frozen counts the
-            # surviving old terms over the cached subtree (narrow job)
-            n_terms = n_fresh + (
-                int(manifest.n_terms) if frozen else known.count()
-            )
-            rev = int(manifest.termdict_path.split("_r")[-1]) + 1 if (
-                "_r" in manifest.termdict_path
-            ) else 1
-        else:
-            persisted = ts = ts.persist(StorageLevel.MEMORY_AND_DISK)
-            tcount: dict = {}
-            termdict = _zip_with_index(
-                ts, "term", "term_id", counter=tcount
-            )
-            n_terms = int(tcount["n"])
-            rev = 0
-        termdict_path = "termdict" if rev == 0 else f"termdict_r{rev}"
-        # downstream stages need only the termdict CONTENT (cheap to
-        # re-derive from the persisted subtree) and n_terms (known
-        # above) — the parquet write runs as a concurrent job
-        # overlapping docnorm/postings (guide §2.6), joined at the
-        # pool barrier before the manifest commit
-        termdict_df = termdict
+        ids: dict = {}  # _zip_with_index counter: n + the pinned keys
+        try:
+            validation = pool.submit(_validate)
 
-        def _write_termdict():
-            termdict_df.write.mode("overwrite").parquet(
-                cat.path(termdict_path)
+            # exact global stats, additively (batch ledger): no corpus pass
+            ledger = meta.get("batches", {})
+            if len(ledger) != n_batches:
+                raise ValueError(
+                    "state predates the dl-carrying batch format — rebuild "
+                    "the stream state or use storage='weights'"
+                )
+            del_ledger = meta.get("deletes", {})
+            n_docs = sum(v["n_docs"] for v in ledger.values()) - sum(
+                v["n_docs"] for v in del_ledger.values()
             )
+            sum_dl = sum(v["sum_dl"] for v in ledger.values()) - sum(
+                v["sum_dl"] for v in del_ledger.values()
+            )
+            avgdl = sum_dl / n_docs if n_docs else 0.0
+            # tombstones: deleted docs' tf rows are excluded from every
+            # statistic below (exact), while their postings stay
+            # untouched bytes in old segments — the query paths mask them
+            tomb = None
+            if n_del_batches:
+                tomb = (
+                    spark.read.schema("doc_id bigint, dl bigint")
+                    .parquet(self._p("deletes"))
+                    .select("doc_id")
+                )
 
-        termdict_write = pool.submit(_write_termdict)
-        walls["termdict"] = time.perf_counter() - t0
-
-        # ---- docnorm (tfidf only): per-doc L2 norms, full rewrite ----------
-        # idf moved ⇒ every doc's norm moved, so this table is
-        # recomputed whole each refresh — but it is O(n_docs) SCALARS
-        # derived from the accumulated tf (one term-keyed join + one
-        # doc-keyed agg); the postings segments stay untouched bytes.
-        # Same revision-dir discipline as the termdict.
-        docnorm_path = ""
-        if weighting == "tfidf":
+            # ---- termdict: per-term stats over the accumulated tf -------
+            # the one O(corpus) pass a refresh keeps: idf and term_norm
+            # are global statistics and avgdl moved. It is a map-side-
+            # combined agg over the already-tokenized tf (n_terms-sized
+            # shuffle) — postings are never read, re-shuffled, or
+            # re-encoded.
             t0 = time.perf_counter()
-            docnorm_path = "docnorm" if rev == 0 else f"docnorm_r{rev}"
-            norm_src = tf_new if frozen else tf_acc
+            tf_acc = spark.read.schema(TF_BATCH_SCHEMA).parquet(self._p("tf"))
+            tf_new = spark.read.schema(TF_BATCH_SCHEMA).parquet(
+                *[self._p(f"tf/batch={b}") for b in new_batches]
+            )
+            # freeze_stats: the per-term agg runs over the NEW batches
+            # only — existing terms keep their previous idf/term_norm
+            # verbatim (the reference add()'s stale-stats trade, opt-in);
+            # the refresh touches no byte and no row proportional to the
+            # corpus.
+            frozen = bool(freeze_stats and prev_ok)
+            stats_src = tf_new if frozen else tf_acc
             if tomb is not None:
-                norm_src = norm_src.join(tomb, "doc_id", "left_anti")
-            new_norms = (
-                norm_src
-                .join(termdict.select("term", "idf"), "term")
-                .withColumn("wr", F.col("tf") * F.col("idf"))
-                .groupBy("doc_id")
-                .agg(F.sqrt(F.sum(F.col("wr") * F.col("wr"))).alias("dnorm"))
-            )
-            if frozen:
-                # frozen: old docs keep their previous norms verbatim
-                # (stale idf trade); new docs' norms are computed from
-                # the new batches only — doc sets are disjoint
-                prev_dn = getattr(manifest, "docnorm_path", "") or ""
-                if not prev_dn:
-                    raise ValueError(
-                        "freeze_stats refresh needs a prior docnorm "
-                        "table (index was not built with tfidf raw)"
+                stats_src = stats_src.join(tomb, "doc_id", "left_anti")
+            ts = term_table(stats_src, n_docs, avgdl, cfg, weighting, salt_every)
+            # STABLE term ids: existing terms keep theirs (old segments
+            # reference them on disk); new terms extend the id space.
+            # The shared subtree (the term agg over the FULL accumulated
+            # tf — the one O(corpus) pass a refresh keeps) is persisted:
+            # the id-assignment checkpoint and the termdict write would
+            # otherwise each re-run it (plan audit — the agg ran 2-3× per
+            # refresh). n_terms-sized rows, bounded at any corpus.
+            from pyspark import StorageLevel
+
+            if prev_ok:
+                old_td = spark.read.parquet(cat.path(manifest.termdict_path))
+                if frozen:
+                    persisted = ts = ts.persist(StorageLevel.MEMORY_AND_DISK)
+                    # old rows verbatim; only genuinely-new terms appended
+                    fresh = ts.join(
+                        old_td.select("term"), "term", "left_anti"
                     )
-                new_norms = spark.read.parquet(
-                    cat.path(prev_dn)
-                ).unionByName(new_norms)
-            new_norms.write.mode("overwrite").parquet(
-                cat.path(docnorm_path)
-            )
-            walls["docnorm"] = time.perf_counter() - t0
-
-        # ---- dnorm drift factors (tfidf only) ------------------------------
-        # Old segments' blocks were quantized against an OLDER docnorm
-        # revision; block-max bounds stay sound by scaling with the
-        # global min/max of dnorm_new/dnorm_prev over surviving docs
-        # (one O(n_docs) scalar-join job, only on non-frozen tfidf
-        # refreshes — frozen refreshes keep old norms verbatim, ratio
-        # exactly 1). Factors COMPOUND per refresh: product of per-step
-        # mins lower-bounds the true ratio (sound, monotonically
-        # looser; compact() re-quantizes and resets to [1, 1]).
-        dnorm_gammas: dict = {}
-        if weighting == "tfidf":
-            prev_g = (
-                dict(getattr(manifest, "dnorm_gammas", {}) or {})
-                if prev_ok
-                else {}
-            )
-            step_lo = step_hi = 1.0
-            prev_dn_path = (
-                getattr(manifest, "docnorm_path", "") or "" if prev_ok else ""
-            )
-            if prev_ok and not frozen and prev_dn_path and prev_g:
-                r = (
-                    spark.read.parquet(cat.path(docnorm_path))
-                    .withColumnRenamed("dnorm", "dn_new")
-                    .join(
-                        spark.read.parquet(cat.path(prev_dn_path))
-                        .withColumnRenamed("dnorm", "dn_old"),
-                        "doc_id",
+                else:
+                    joined = ts.join(
+                        old_td.select("term", "term_id"), "term", "left"
                     )
-                    .agg(
-                        F.min(F.col("dn_new") / F.col("dn_old")).alias("lo"),
-                        F.max(F.col("dn_new") / F.col("dn_old")).alias("hi"),
+                    persisted = joined = joined.persist(
+                        StorageLevel.MEMORY_AND_DISK
                     )
-                    .collect()[0]
-                )
-                # empty join (no doc survived) ⇒ old segments are fully
-                # tombstoned; any factor is vacuously sound
-                step_lo = float(r["lo"]) if r["lo"] is not None else 1.0
-                step_hi = float(r["hi"]) if r["hi"] is not None else 1.0
-            for s in manifest.segments if prev_ok else []:
-                key = str(int(s["seg"]))
-                if key in prev_g:
-                    dnorm_gammas[key] = [
-                        float(prev_g[key][0]) * step_lo,
-                        float(prev_g[key][1]) * step_hi,
-                    ]
-                # segments without an entry (pre-quantization layout:
-                # their dls stream holds dl, not ρq) stay uncovered —
-                # the query router keeps the index on the bulk path
-
-        # ---- new segment: encode ONLY the new batches ----------------------
-        t0 = time.perf_counter()
-        seg_id = (
-            max(s["seg"] for s in manifest.segments) + 1 if prev_ok else 0
-        )
-        # an all-empty new-batch set (replayed/empty micro-batches) has
-        # nothing to encode: record the batches as covered and skip the
-        # segment writes — an empty parquet dir has no data files and
-        # would poison later whole-dir reads. Emptiness is decided
-        # AFTER the tombstone anti-join (ADVICE r4): a batch whose
-        # every doc was deleted before this refresh also encodes to
-        # nothing, and its "segment" write would be a data-file-less
-        # parquet dir that crashes the lineage read.
-        seg_has_postings = (
-            sum(ledger[str(b)]["n_docs"] for b in new_batches) > 0
-        )
-        if seg_has_postings and tomb is not None:
-            live = (
-                spark.read.schema(DOCS_BATCH_SCHEMA)
-                .parquet(*[self._p(f"docs/batch={b}") for b in new_batches])
-                .filter(F.col("dl") > 0)
-                .join(tomb, "doc_id", "left_anti")
-                .limit(1)
-                .count()
-            )
-            seg_has_postings = live > 0
-        # docmap segment write: independent of the postings encode
-        # (reads only the new batches' doc registry) — run it as a
-        # concurrent job so it back-fills executors during the encode
-        # stage's tail (guide §2.6)
-        docmap_write = None
-        if seg_has_postings:
-
-            def _write_docmap():
-                docsrc = (
-                    spark.read.schema(DOCS_BATCH_SCHEMA)
-                    .parquet(
-                        *[self._p(f"docs/batch={b}") for b in new_batches]
+                    known = joined.filter(F.col("term_id").isNotNull())
+                    fresh = joined.filter(
+                        F.col("term_id").isNull()
+                    ).drop("term_id")
+                # a routine delta batch usually introduces NO new
+                # vocabulary: probing the persisted subtree costs one
+                # cheap job (it materializes the cache the id-assignment
+                # would have needed anyway) and skips _zip_with_index's
+                # checkpoint + offset-collect jobs entirely when empty —
+                # the refresh wall is job-count-bound at small batch sizes
+                base = old_td if frozen else known
+                if not fresh.select("term").take(1):
+                    termdict = base
+                    n_fresh = 0
+                else:
+                    new_ids = _zip_with_index(
+                        fresh.select("term"), "term", "__nid", counter=ids
                     )
-                    .select("doc_id", "url", "dl")
+                    fresh_ids = fresh.join(new_ids, "term").withColumn(
+                        "term_id",
+                        F.col("__nid") + F.lit(int(manifest.n_terms)),
+                    ).drop("__nid")
+                    termdict = base.unionByName(
+                        fresh_ids.select(*base.columns)
+                    )
+                    n_fresh = int(ids["n"])
+                # n_terms without reading the written table back: frozen
+                # keeps every old row verbatim; non-frozen counts the
+                # surviving old terms over the cached subtree (narrow job)
+                n_terms = n_fresh + (
+                    int(manifest.n_terms) if frozen else known.count()
                 )
-                if tomb is not None:
-                    # tombstoned docs never reach a NEW docmap segment
-                    # (ADVICE r4): on full re-encode (prev_ok=False /
-                    # compact) this is the physical docmap GC; on delta
-                    # refresh it keeps added-then-deleted docs out
-                    docsrc = docsrc.join(tomb, "doc_id", "left_anti")
-                docsrc.write.mode("overwrite").parquet(
-                    os.path.join(cat.path("docmap"), f"seg={seg_id}")
+                rev = int(manifest.termdict_path.split("_r")[-1]) + 1 if (
+                    "_r" in manifest.termdict_path
+                ) else 1
+            else:
+                persisted = ts = ts.persist(StorageLevel.MEMORY_AND_DISK)
+                termdict = _zip_with_index(
+                    ts, "term", "term_id", counter=ids
                 )
+                n_terms = int(ids["n"])
+                rev = 0
+            termdict_path = "termdict" if rev == 0 else f"termdict_r{rev}"
+            # downstream stages need only the termdict CONTENT (cheap to
+            # re-derive from the persisted subtree) and n_terms (known
+            # above) — the parquet write runs as a concurrent job
+            # overlapping docnorm/postings, joined before the manifest
+            # commit
+            termdict_write = pool.submit(
+                termdict.write.mode("overwrite").parquet,
+                cat.path(termdict_path),
+            )
+            walls["termdict"] = time.perf_counter() - t0
 
-            docmap_write = pool.submit(_write_docmap)
-
-        enc_src = tf_new
-        if tomb is not None:
-            # docs added-then-deleted before this refresh never reach a
-            # segment; docs deleted from OLD segments stay as masked
-            # tombstones until compact()
-            enc_src = enc_src.join(tomb, "doc_id", "left_anti")
-        if weighting == "tfidf":
-            # the dl slot of a tfidf raw block carries the quantized
-            # encode-time docnorm ρq (codec.DNORM_SCALE) — the cosine
-            # never reads dl, and block min_dl/max_dl become sound
-            # per-block norm bounds for the block-max query path
-            from neural_cherche_spark.index.codec import DNORM_SCALE
-
-            enc_src = (
-                enc_src.drop("dl")
-                .join(
-                    spark.read.parquet(cat.path(docnorm_path)), "doc_id"
-                )
-                .withColumn(
-                    "dl",
-                    F.greatest(
-                        F.lit(1),
-                        F.floor(F.col("dnorm") * F.lit(float(DNORM_SCALE))),
-                    ).cast("long"),
-                )
-            )
-        w = (
-            enc_src.join(
-                F.broadcast(
-                    termdict.select("term", "term_id", "n_salts")
-                ),
-                "term",
-            )
-            .select("term_id", "doc_id", "tf", "dl", "n_salts")
-        )
-        salted = (
-            w.withColumn(
-                "salt",
-                F.when(
-                    F.col("n_salts") > 1,
-                    F.pmod(
-                        F.col("doc_id")
-                        + F.shiftright("doc_id", 7)
-                        + F.shiftright("doc_id", 15),
-                        F.col("n_salts"),
-                    ).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            .withColumn(
-                "bucket",
-                F.pmod(
-                    F.xxhash64("term_id", "salt"), F.lit(n_buckets)
-                ).cast("int"),
-            )
-            .select(
-                "bucket", "term_id", "salt", "doc_id", "tf", "dl", "n_salts"
-            )
-        )
-        if seg_has_postings:
-            # balanced, volume-adaptive encode (index.builder
-            # encode_layout + whole-partition mapInPandas); the task
-            # count follows the NEW batches' ledger volume, so a small
-            # delta refresh runs few tasks and a bulk backfill fans out
-            from neural_cherche_spark.index.builder import (
-                POSTINGS_ROW_GROUP_BYTES,
-                encode_layout,
-            )
-
-            est_dl = sum(
-                ledger[str(b)]["sum_dl"] for b in new_batches
-            )
-            shard_col, n_parts = encode_layout(
-                spark, n_terms, n_buckets, est_dl
-            )
-            (
-                salted.withColumn("__shard", shard_col)
-                .repartition(n_parts, "bucket", "__shard")
-                .groupBy("bucket", "__shard")
-                .applyInPandas(
-                    _encode_group_raw_fn(block_size), POSTINGS_RAW_SCHEMA
-                )
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                # term-stat row-group pruning (see builder.py)
-                .option(
-                    "parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES)
-                )
-                .parquet(os.path.join(cat.path("postings"), f"seg={seg_id}"))
-            )
-        walls["postings"] = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        seg_n_postings = 0
-        if seg_has_postings:
-            seg_postings = spark.read.parquet(
-                os.path.join(cat.path("postings"), f"seg={seg_id}")
-            )
-            # segment posting total rides the lineage write as an
-            # Observation — no separate read-back aggregation job
-            lobs = Observation(f"lineage_seg{seg_id}")
-            (
-                seg_postings.groupBy("bucket")
-                .agg(
-                    F.countDistinct("term_id").alias("n_terms"),
-                    F.count(F.lit(1)).alias("n_blocks"),
-                    F.sum("n").alias("n_postings"),
-                    F.sum("n_bytes").alias("bytes"),
-                    F.max("enc_ms").alias("enc_ms"),
-                    F.lit(f"batches={new_batches}").alias("input_fingerprint"),
-                )
-                .observe(lobs, F.sum("n_postings").alias("np"))
-                .write.mode("overwrite")
-                .parquet(os.path.join(cat.path("lineage"), f"seg={seg_id}"))
-            )
-            seg_n_postings = int(lobs.get["np"] or 0)
-        if docmap_write is not None:
-            docmap_write.result()
-        walls["lineage"] = time.perf_counter() - t0
-
-        # a segment entry is appended ONLY when its seg dir was written
-        # (ADVICE r4: a postings-less entry breaks the snapshot
-        # validator — and every later snapshot — with FileNotFoundError
-        # on the phantom seg dir). Batches that produced no postings
-        # (empty, or fully tombstoned pre-refresh) are recorded as
-        # covered at the manifest level instead.
-        segments = list(manifest.segments) if prev_ok else []
-        covered = list(
-            getattr(manifest, "covered_batches", []) or []
-        ) if prev_ok else []
-        if seg_has_postings:
-            segments = segments + [
-                {
-                    "seg": seg_id,
-                    "batches": new_batches,
-                    "n_postings": seg_n_postings,
-                }
-            ]
+            # ---- docnorm (tfidf only): per-doc L2 norms, full rewrite ---
+            # idf moved ⇒ every doc's norm moved, so this table is
+            # recomputed whole each refresh — O(n_docs) SCALARS; the
+            # postings segments stay untouched bytes. Same revision-dir
+            # discipline as the termdict.
+            docnorm_path = ""
             if weighting == "tfidf":
-                # quantized against THIS refresh's docnorm: exact
-                dnorm_gammas[str(seg_id)] = [1.0, 1.0]
-        else:
-            covered = covered + list(new_batches)
+                t0 = time.perf_counter()
+                docnorm_path = "docnorm" if rev == 0 else f"docnorm_r{rev}"
+                norm_src = tf_new if frozen else tf_acc
+                if tomb is not None:
+                    norm_src = norm_src.join(tomb, "doc_id", "left_anti")
+                new_norms = doc_norms(norm_src, termdict)
+                if frozen:
+                    # frozen: old docs keep their previous norms verbatim
+                    # (stale idf trade); new docs' norms are computed from
+                    # the new batches only — doc sets are disjoint
+                    prev_dn = getattr(manifest, "docnorm_path", "") or ""
+                    if not prev_dn:
+                        raise ValueError(
+                            "freeze_stats refresh needs a prior docnorm "
+                            "table (index was not built with tfidf raw)"
+                        )
+                    new_norms = spark.read.parquet(
+                        cat.path(prev_dn)
+                    ).unionByName(new_norms)
+                new_norms.write.mode("overwrite").parquet(
+                    cat.path(docnorm_path)
+                )
+                walls["docnorm"] = time.perf_counter() - t0
 
-        # ---- tombstones: deleted ids whose postings sit in RETAINED
-        # segments. A full re-encode (no prior segments kept) already
-        # excluded them physically, so it publishes no tombstones —
-        # that is also what makes compact() the delete GC.
-        tombstones_path = ""
-        if prev_ok and tomb is not None:
-            rev_t = rev  # same revision counter as the termdict
-            tombstones_path = (
-                "tombstones" if rev_t == 0 else f"tombstones_r{rev_t}"
+            # ---- dnorm drift factors (tfidf only) -----------------------
+            # Old segments' blocks were quantized against an OLDER
+            # docnorm revision; block-max bounds stay sound by scaling
+            # with the global min/max of dnorm_new/dnorm_prev over
+            # surviving docs (one O(n_docs) scalar-join job, only on
+            # non-frozen tfidf refreshes — frozen refreshes keep old
+            # norms verbatim, ratio exactly 1). Factors COMPOUND per
+            # refresh: product of per-step mins lower-bounds the true
+            # ratio (sound, monotonically looser; compact() re-quantizes
+            # and resets to [1, 1]).
+            dnorm_gammas: dict = {}
+            if weighting == "tfidf":
+                prev_g = (
+                    dict(getattr(manifest, "dnorm_gammas", {}) or {})
+                    if prev_ok
+                    else {}
+                )
+                step_lo = step_hi = 1.0
+                prev_dn_path = (
+                    getattr(manifest, "docnorm_path", "") or ""
+                    if prev_ok
+                    else ""
+                )
+                if prev_ok and not frozen and prev_dn_path and prev_g:
+                    r = (
+                        spark.read.parquet(cat.path(docnorm_path))
+                        .withColumnRenamed("dnorm", "dn_new")
+                        .join(
+                            spark.read.parquet(cat.path(prev_dn_path))
+                            .withColumnRenamed("dnorm", "dn_old"),
+                            "doc_id",
+                        )
+                        .agg(
+                            F.min(F.col("dn_new") / F.col("dn_old")).alias("lo"),
+                            F.max(F.col("dn_new") / F.col("dn_old")).alias("hi"),
+                        )
+                        .collect()[0]
+                    )
+                    # empty join (no doc survived) ⇒ old segments are
+                    # fully tombstoned; any factor is vacuously sound
+                    step_lo = float(r["lo"]) if r["lo"] is not None else 1.0
+                    step_hi = float(r["hi"]) if r["hi"] is not None else 1.0
+                for s in manifest.segments if prev_ok else []:
+                    key = str(int(s["seg"]))
+                    if key in prev_g:
+                        dnorm_gammas[key] = [
+                            float(prev_g[key][0]) * step_lo,
+                            float(prev_g[key][1]) * step_hi,
+                        ]
+                    # segments without an entry (pre-quantization layout:
+                    # their dls stream holds dl, not ρq) stay uncovered —
+                    # the query router keeps the index on the bulk path
+
+            # ---- new segment: encode ONLY the new batches ---------------
+            t0 = time.perf_counter()
+            seg_id = (
+                max(s["seg"] for s in manifest.segments) + 1 if prev_ok else 0
             )
-            # published PARTITIONED BY the segment holding each deleted
-            # doc's postings (index/tombmask.py): decode tasks lazily
-            # load only the delete sets of segments they touch — the
-            # driver never materializes an id array at query time. The
-            # docmap scan is the doc→seg source (tombstoned docs never
-            # reach NEW docmap segments, so every maskable id maps to a
-            # retained seg); ids with no docmap row (deleted before
-            # ever materialized) have no postings to mask and park
-            # under seg=-1, which no postings row references.
-            seg_src = spark.read.parquet(cat.path("docmap")).select(
-                "doc_id", "seg"
+            # an all-empty new-batch set (replayed/empty micro-batches)
+            # has nothing to encode: record the batches as covered and
+            # skip the segment writes — an empty parquet dir has no data
+            # files and would poison later whole-dir reads. Emptiness is
+            # decided AFTER the tombstone anti-join (ADVICE r4): a batch
+            # whose every doc was deleted before this refresh also
+            # encodes to nothing, and its "segment" write would be a
+            # data-file-less parquet dir that crashes the lineage read.
+            seg_has_postings = (
+                sum(ledger[str(b)]["n_docs"] for b in new_batches) > 0
             )
-            (
-                tomb.join(seg_src, "doc_id", "left")
-                .na.fill({"seg": -1})
-                .repartition("seg")
-                .write.partitionBy("seg")
-                .mode("overwrite")
-                .parquet(cat.path(tombstones_path))
-            )
-        # commit gate: the concurrent validation job must have passed
-        # before the manifest (the atomic commit point) is written —
-        # .result() re-raises its ValueError here, leaving only
-        # uncommitted (idempotent, overwrite-safe) segment dirs behind,
-        # exactly as a pre-commit crash would
-        validation.result()
-        termdict_write.result()
-        if persisted is not None:
-            persisted.unpersist()
-        pool.shutdown(wait=True)
+            if seg_has_postings and tomb is not None:
+                live = (
+                    spark.read.schema(DOCS_BATCH_SCHEMA)
+                    .parquet(*[self._p(f"docs/batch={b}") for b in new_batches])
+                    .filter(F.col("dl") > 0)
+                    .join(tomb, "doc_id", "left_anti")
+                    .limit(1)
+                    .count()
+                )
+                seg_has_postings = live > 0
+            if seg_has_postings:
+                # docmap segment write: independent of the postings
+                # encode (reads only the new batches' doc registry) — run
+                # it as a concurrent job so it back-fills executors
+                # during the encode stage's tail
+                def _write_docmap():
+                    docsrc = (
+                        spark.read.schema(DOCS_BATCH_SCHEMA)
+                        .parquet(
+                            *[self._p(f"docs/batch={b}") for b in new_batches]
+                        )
+                        .select("doc_id", "url", "dl")
+                    )
+                    if tomb is not None:
+                        # tombstoned docs never reach a NEW docmap
+                        # segment (ADVICE r4): on full re-encode
+                        # (prev_ok=False / compact) this is the physical
+                        # docmap GC; on delta refresh it keeps
+                        # added-then-deleted docs out
+                        docsrc = docsrc.join(tomb, "doc_id", "left_anti")
+                    docsrc.write.mode("overwrite").parquet(
+                        os.path.join(cat.path("docmap"), f"seg={seg_id}")
+                    )
+
+                docmap_write = pool.submit(_write_docmap)
+
+                enc_src = tf_new
+                if tomb is not None:
+                    # docs added-then-deleted before this refresh never
+                    # reach a segment; docs deleted from OLD segments
+                    # stay as masked tombstones until compact()
+                    enc_src = enc_src.join(tomb, "doc_id", "left_anti")
+                if weighting == "tfidf":
+                    enc_src = quantize_norm_dl(
+                        enc_src, spark.read.parquet(cat.path(docnorm_path))
+                    )
+                # the encode task count follows the NEW batches' ledger
+                # volume, so a small delta refresh runs few tasks and a
+                # bulk backfill fans out
+                write_postings(
+                    enc_src, termdict, n_terms, n_buckets,
+                    sum(ledger[str(b)]["sum_dl"] for b in new_batches),
+                    block_size, "raw",
+                    os.path.join(cat.path("postings"), f"seg={seg_id}"),
+                )
+            walls["postings"] = time.perf_counter() - t0
+
+            t0 = time.perf_counter()
+            seg_n_postings = 0
+            if seg_has_postings:
+                seg_n_postings = write_lineage(
+                    spark.read.parquet(
+                        os.path.join(cat.path("postings"), f"seg={seg_id}")
+                    ),
+                    f"batches={new_batches}",
+                    os.path.join(cat.path("lineage"), f"seg={seg_id}"),
+                )
+                docmap_write.result()
+            walls["lineage"] = time.perf_counter() - t0
+
+            # a segment entry is appended ONLY when its seg dir was
+            # written (ADVICE r4: a postings-less entry breaks the
+            # snapshot validator — and every later snapshot — with
+            # FileNotFoundError on the phantom seg dir). Batches that
+            # produced no postings (empty, or fully tombstoned
+            # pre-refresh) are recorded as covered at the manifest level
+            # instead.
+            segments = list(manifest.segments) if prev_ok else []
+            covered = list(
+                getattr(manifest, "covered_batches", []) or []
+            ) if prev_ok else []
+            if seg_has_postings:
+                segments = segments + [
+                    {
+                        "seg": seg_id,
+                        "batches": new_batches,
+                        "n_postings": seg_n_postings,
+                    }
+                ]
+                if weighting == "tfidf":
+                    # quantized against THIS refresh's docnorm: exact
+                    dnorm_gammas[str(seg_id)] = [1.0, 1.0]
+            else:
+                covered = covered + list(new_batches)
+
+            # ---- tombstones: deleted ids whose postings sit in RETAINED
+            # segments. A full re-encode (no prior segments kept) already
+            # excluded them physically, so it publishes no tombstones —
+            # that is also what makes compact() the delete GC.
+            tombstones_path = ""
+            if prev_ok and tomb is not None:
+                # same revision counter as the termdict
+                tombstones_path = (
+                    "tombstones" if rev == 0 else f"tombstones_r{rev}"
+                )
+                # published PARTITIONED BY the segment holding each
+                # deleted doc's postings (index/tombmask.py): decode
+                # tasks lazily load only the delete sets of segments they
+                # touch — no id array is ever collected at query time.
+                # The docmap scan is the doc→seg source
+                # (tombstoned docs never reach NEW docmap segments, so
+                # every maskable id maps to a retained seg); ids with no
+                # docmap row (deleted before ever materialized) have no
+                # postings to mask and park under seg=-1, which no
+                # postings row references.
+                seg_src = spark.read.parquet(cat.path("docmap")).select(
+                    "doc_id", "seg"
+                )
+                (
+                    tomb.join(seg_src, "doc_id", "left")
+                    .na.fill({"seg": -1})
+                    .repartition("seg")
+                    .write.partitionBy("seg")
+                    .mode("overwrite")
+                    .parquet(cat.path(tombstones_path))
+                )
+            # commit gate: the concurrent validation job must have passed
+            # before the manifest (the atomic commit point) is written —
+            # .result() re-raises its ValueError here, leaving only
+            # uncommitted (idempotent, overwrite-safe) segment dirs
+            # behind, exactly as a pre-commit crash would
+            validation.result()
+            termdict_write.result()
+        finally:
+            # on failure too, no job of this refresh outlives the call
+            # and no persist outlives its jobs
+            pool.shutdown(wait=True, cancel_futures=True)
+            if persisted is not None:
+                persisted.unpersist()
+            _unpin(ids.get("keys"))
         m = Manifest(
             cfg=cfg_dict,
             input_fingerprint=f"batches:{n_batches}",

@@ -63,3 +63,34 @@ def assert_rank_identical(got: list[tuple], expected: list[tuple], rtol=2e-6):
                 f"score for {d}: {s} != {expected[i][1]}"
             )
         i = j + 1
+
+
+
+def _artifact_rows(index) -> tuple[list, list]:
+    blocks = index.postings.drop("enc_ms")
+    blocks = blocks.select(*sorted(blocks.columns)).orderBy(
+        "term_id", "salt", "block_id"
+    )
+    termdict = index.termdict
+    termdict = termdict.select(*sorted(termdict.columns)).orderBy("term")
+    return blocks.collect(), termdict.collect()
+
+
+def assert_same_artifacts(got, want) -> None:
+    """Two indexes built from the same corpus must hold the same
+    postings block rows (without the timing column ``enc_ms``), byte
+    for byte, and the same termdict. ``term_norm`` is an f64 sum whose
+    order follows the tf table's file layout, so termdict floats
+    compare to 1e-12 relative; every other value compares exactly."""
+    import math
+
+    got_blocks, got_td = _artifact_rows(got)
+    want_blocks, want_td = _artifact_rows(want)
+    assert got_blocks == want_blocks
+    assert len(got_td) == len(want_td)
+    for g, w in zip(got_td, want_td):
+        for k, v in w.asDict().items():
+            if isinstance(v, float):
+                assert math.isclose(g[k], v, rel_tol=1e-12), (g, w)
+            else:
+                assert g[k] == v, (g, w)

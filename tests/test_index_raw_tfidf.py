@@ -15,7 +15,7 @@ from neural_cherche_spark.index import tfidf_weights
 from neural_cherche_spark.index.builder import build_index
 from neural_cherche_spark.query.exact import query_term_counts
 from neural_cherche_spark.streaming import CompressedIndexStream
-from tests.conftest import assert_rank_identical
+from tests.conftest import assert_rank_identical, assert_same_artifacts
 
 
 @pytest.fixture(scope="module")
@@ -112,11 +112,13 @@ def test_tfidf_raw_serving_matches_exact(raw_index, queries, exact_topk):
 
 
 def test_tfidf_delta_matches_fresh_raw(
-    spark, corpus, queries, exact_topk, tmp_path
+    spark, corpus, queries, exact_topk, raw_index, tmp_path
 ):
     """Two-batch delta materialize (tfidf): appends seg=1, rewrites the
     docnorm revision, and must equal BOTH the fresh raw build and the
-    exact cosine (global idf/norms stay exact across refreshes)."""
+    exact cosine (global idf/norms stay exact across refreshes). A
+    one-batch refresh into an empty index writes the fresh raw build's
+    block rows (ρq-quantized dl slot included) and termdict."""
     stream = CompressedIndexStream(spark, str(tmp_path / "state"))
     stream.add_batch(corpus.filter(F.col("doc_id") < 150), epoch_id=0)
     stream.materialize(
@@ -134,3 +136,12 @@ def test_tfidf_delta_matches_fresh_raw(
     assert set(got) == set(exact_topk)
     for qid in exact_topk:
         assert_rank_identical(got[qid], exact_topk[qid], rtol=1e-9)
+
+    one = CompressedIndexStream(spark, str(tmp_path / "state_one"))
+    one.add_batch(corpus, epoch_id=0)
+    one_idx = one.materialize(
+        str(tmp_path / "one"), n_buckets=8, salt_every=50,
+        storage="raw", weighting="tfidf",
+    )
+    assert_same_artifacts(one_idx, raw_index)
+    one_idx.close()

@@ -169,3 +169,27 @@ def test_duplicate_doc_ids_across_batches_raise(spark, tmp_path):
     stream.add_batch(docs.filter(F.col("doc_id") < 10), epoch_id=1)  # re-added
     with pytest.raises(ValueError, match="duplicate doc_ids"):
         stream.materialize(str(tmp_path / "idx"), n_buckets=4)
+
+
+def test_raw_refresh_releases_persists_on_failure(spark, tmp_path):
+    """Every persist and id checkpoint of a raw refresh ends with the
+    call — after a refresh and after one whose concurrent id validation
+    fails at the commit gate."""
+    docs = synth_webtext(spark, 40, seed=5).withColumn(
+        "doc_id", F.monotonically_increasing_id()
+    )
+
+    def pinned() -> set:
+        # ids of persisted RDDs (earlier ones may drop out on a JVM GC,
+        # so the check is that no NEW one survives the call)
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    stream = CompressedIndexStream(spark, str(tmp_path / "state"))
+    stream.add_batch(docs.filter(F.col("doc_id") < 20), epoch_id=0)
+    before = pinned()
+    stream.materialize(str(tmp_path / "ok"), n_buckets=4, storage="raw")
+    assert pinned() <= before
+    stream.add_batch(docs.filter(F.col("doc_id") < 10), epoch_id=1)  # re-added
+    with pytest.raises(ValueError, match="duplicate doc_ids"):
+        stream.materialize(str(tmp_path / "idx"), n_buckets=4, storage="raw")
+    assert pinned() <= before

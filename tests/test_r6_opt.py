@@ -6,9 +6,6 @@ results; these tests pin the equivalences directly:
 * ``term_frequencies`` — in-row sort+run-length counting must produce
   exactly the rows of the former ``explode → groupBy(doc, term)``
   plan (including whitespace/NULL/short-word edge docs).
-* ``encode_partition_bulk(..., bucket=...)`` — the multi-bucket
-  mapInPandas encode path relies on the per-block bucket passthrough
-  being the run's bucket.
 * the vectorized ``_run_suffix_bounds_signed`` — larger randomized
   sweep against the brute-force spec than test_bmw_bounds carries
   (the rewrite replaced a per-block Python loop).
@@ -21,10 +18,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from neural_cherche_spark.index.build import term_frequencies
-from neural_cherche_spark.index.codec import (
-    encode_partition_bulk,
-    encode_partition_bulk_raw,
-)
 from neural_cherche_spark.query.bmw import (
     _run_suffix_bounds,
     _run_suffix_bounds_signed,
@@ -59,49 +52,6 @@ def test_term_frequencies_matches_explode_groupby(spark):
         for r in new.filter("doc_id = 2").collect()
     }
     assert got[(2, "aaa")] == 6 and got[(2, "aaaa")] == 3 and got[(2, "bbb")] == 1
-
-
-def test_encode_bulk_bucket_passthrough():
-    rng = np.random.RandomState(7)
-    rows = []
-    for tid in range(5):
-        for salt in range(2):
-            docs = np.sort(rng.choice(10_000, size=rng.randint(1, 300), replace=False))
-            for d in docs:
-                rows.append((tid, salt, int(d), (tid * 31 + salt * 7) % 16))
-    rows.sort()
-    tid = np.array([r[0] for r in rows], dtype=np.int64)
-    salt = np.array([r[1] for r in rows], dtype=np.int64)
-    d = np.array([r[2] for r in rows], dtype=np.int64)
-    bkt = np.array([r[3] for r in rows], dtype=np.int64)
-    w = rng.rand(len(rows)).astype(np.float32)
-
-    enc = encode_partition_bulk(tid, salt, d, w, 128, bucket=bkt)
-    # per-block bucket equals the (deterministic) run bucket
-    want = (enc["term_id"] * 31 + enc["salt"] * 7) % 16
-    np.testing.assert_array_equal(enc["bucket"], want)
-    # and the blocks themselves are unchanged vs the no-bucket call
-    plain = encode_partition_bulk(tid, salt, d, w, 128)
-    for k in ("term_id", "salt", "block_id", "n", "first_doc", "last_doc"):
-        np.testing.assert_array_equal(enc[k], plain[k])
-    assert enc["docs"] == plain["docs"] and enc["ws"] == plain["ws"]
-
-    enc_r = encode_partition_bulk_raw(
-        tid, salt, d,
-        np.ones_like(d), np.full_like(d, 9), np.full_like(d, 2),
-        128, bucket=bkt,
-    )
-    np.testing.assert_array_equal(
-        enc_r["bucket"], (enc_r["term_id"] * 31 + enc_r["salt"] * 7) % 16
-    )
-
-    # empty input keeps the bucket key
-    e = encode_partition_bulk(
-        np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
-        np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32),
-        128, bucket=np.empty(0, dtype=np.int64),
-    )
-    assert e["bucket"].size == 0
 
 
 def test_lsh_band_keys_column_matches_tuple_form(spark):

@@ -72,3 +72,28 @@ def test_out_of_range_ids_fail_loudly(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id long, url string, text string")
     with pytest.raises(ValueError, match="2\\^41"):
         build_index(spark, docs, str(tmp_path / "idx"), id_col="doc_id", n_buckets=2)
+
+
+@pytest.mark.parametrize("storage", ["weights", "raw"])
+def test_empty_corpus_build_fails_before_manifest(spark, tmp_path, storage):
+    """A corpus with no indexable document has no avgdl: the build must
+    name the empty corpus (not die on a NULL statistic) and commit no
+    manifest."""
+    d = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="empty corpus"):
+        build_index(
+            spark, _corpus(spark, []), d, id_col="doc_id", n_buckets=2,
+            storage=storage,
+        )
+    assert not os.path.exists(os.path.join(d, "manifest.json"))
+
+
+def test_empty_corpus_weights_materialize_fails(spark, tmp_path):
+    from neural_cherche_spark.streaming import CompressedIndexStream
+
+    stream = CompressedIndexStream(spark, str(tmp_path / "state"))
+    stream.add_batch(_corpus(spark, ["", "  "]), epoch_id=0)  # no n-grams
+    d = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="empty corpus"):
+        stream.materialize(d, n_buckets=2)
+    assert not os.path.exists(os.path.join(d, "manifest.json"))
