@@ -228,18 +228,21 @@ def _entry_index(spark: SparkSession, sf_dir: str):
     )
 
 
-def _q_bm25_topk_compressed(mode: str):
-    """CORRECTNESS gate for the compressed-index query paths: build →
-    search_{bmw,distributed} → same oracle SQL as bm25_topk (at 4 dp).
-    Rank is recomputed on the ROUNDED score so both engines rank on
-    the same grid."""
+def _q_bm25_topk_compressed(strategy: str):
+    """CORRECTNESS gate for the compressed-index query strategies:
+    build → query.bmw.search_{bmw,distributed} → same oracle SQL as
+    bm25_topk (at 4 dp). Rank is recomputed on the ROUNDED score so
+    both engines rank on the same grid."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql import Window
 
+        from neural_cherche_spark.query import bmw
+
         idx = _entry_index(spark, sf_dir)
+        search = getattr(bmw, f"search_{strategy}")
         res = (
-            idx.search(_queries_df(spark), k=TOP_K, mode=mode)
+            search(idx, _queries_df(spark), k=TOP_K)
             .select(
                 "query_id",
                 "doc_id",
@@ -264,13 +267,20 @@ def _q_bm25_topk_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded memory at 10^7+-term vocabularies) and search_serving
     answers with one Spark job per call — results must match the same
     exact oracle as the batch compressed gates (QUERY_SET ids are the
-    list positions, so query_id lines up with the oracle's)."""
+    list positions, so query_id lines up with the oracle's). Scored by
+    search_bmw over the serving match rows, as search_serving does for
+    selective queries."""
+    from neural_cherche_spark.query.bmw import search_bmw, serving_match_rows
+
     idx = _entry_index(spark, sf_dir)
     texts = [q for _, q in QUERY_SET]
     try:
         idx.prepare_serving(queries=texts)
         return _rank_on_grid(
-            idx.search_serving(texts, k=TOP_K, mode="bmw"), _COMPRESSED_DP
+            search_bmw(
+                idx, None, TOP_K, _rows=serving_match_rows(idx, texts)
+            ),
+            _COMPRESSED_DP,
         )
     finally:
         idx._serving = None
@@ -327,6 +337,7 @@ def _q_bm25_topk_raw_bmw(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     from neural_cherche_spark.index.builder import build_index
+    from neural_cherche_spark.query.bmw import search_bmw
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     idx = build_index(
@@ -339,7 +350,7 @@ def _q_bm25_topk_raw_bmw(spark: SparkSession, sf_dir: str) -> DataFrame:
         storage="raw",
     )
     return _rank_on_grid(
-        idx.search(_queries_df(spark), k=TOP_K, mode="bmw"), _COMPRESSED_DP
+        search_bmw(idx, _queries_df(spark), k=TOP_K), _COMPRESSED_DP
     )
 
 
@@ -357,6 +368,7 @@ def _q_bm25_topk_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-fingerprinted internally). Stat signatures are not enough —
     mtime has 1 s granularity, so a same-size regeneration within one
     second would silently reuse stale state."""
+    from neural_cherche_spark.query.bmw import search_bmw
     from neural_cherche_spark.streaming import CompressedIndexStream
 
     tag = _content_tag(sf_dir)
@@ -373,7 +385,7 @@ def _q_bm25_topk_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert len(idx.manifest.segments) == 2, "delta gate must span 2 segments"
     return _rank_on_grid(
-        idx.search(_queries_df(spark), k=TOP_K, mode="bmw"), _COMPRESSED_DP
+        search_bmw(idx, _queries_df(spark), k=TOP_K), _COMPRESSED_DP
     )
 
 
@@ -435,6 +447,7 @@ def _q_bm25_topk_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize (tombstone masking over untouched segments, ledger-
     exact stats), block-max search — must match the exact oracle over
     the REMAINING documents only."""
+    from neural_cherche_spark.query.bmw import search_bmw
     from neural_cherche_spark.streaming import CompressedIndexStream
 
     tag = _content_tag(sf_dir)
@@ -455,7 +468,7 @@ def _q_bm25_topk_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert idx.manifest.tombstones_path, "delete gate must carry tombstones"
     return _rank_on_grid(
-        idx.search(_queries_df(spark), k=TOP_K, mode="bmw"), _COMPRESSED_DP
+        search_bmw(idx, _queries_df(spark), k=TOP_K), _COMPRESSED_DP
     )
 
 
@@ -468,6 +481,7 @@ def _q_tfidf_topk_bmw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from neural_cherche_spark.index.builder import build_index
+    from neural_cherche_spark.query.bmw import search_bmw
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     idx = build_index(
@@ -480,7 +494,7 @@ def _q_tfidf_topk_bmw(spark: SparkSession, sf_dir: str) -> DataFrame:
         weighting="tfidf",
     )
     res = (
-        idx.search(_queries_df(spark), k=TOP_K, mode="bmw")
+        search_bmw(idx, _queries_df(spark), k=TOP_K)
         .select(
             "query_id",
             "doc_id",
@@ -500,13 +514,13 @@ def _q_tfidf_topk_raw_bmw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CORRECTNESS gate for the tfidf RAW storage block-max path
     (round-5): blocks carry per-posting tf + quantized encode-time
     docnorms, per-segment γ drift factors keep the bounds sound, and
-    mode='bmw' prunes instead of silently bulking — must match the
+    search_bmw prunes instead of silently bulking — must match the
     full-corpus exact TfIdf cosine oracle on the 6-dp grid (raw
     scores are f64 end-to-end)."""
     import hashlib
 
     from neural_cherche_spark.index.builder import build_index
-    from neural_cherche_spark.query.bmw import _tfidf_raw_gammas
+    from neural_cherche_spark.query.bmw import _tfidf_raw_gammas, search_bmw
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     idx = build_index(
@@ -523,7 +537,7 @@ def _q_tfidf_topk_raw_bmw(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tfidf raw gate must take the block-max path (γ coverage)"
     )
     return _rank_on_grid(
-        idx.search(_queries_df(spark), k=TOP_K, mode="bmw"), 6
+        search_bmw(idx, _queries_df(spark), k=TOP_K), 6
     )
 
 

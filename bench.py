@@ -49,6 +49,16 @@ import sys
 import time
 
 
+def _serve_bmw(index, texts: list[str], k: int = 10):
+    """``search_serving``'s Spark-free match rows, scored by the
+    block-max strategy (what the serving keys have always timed)."""
+    from neural_cherche_spark.query import bmw
+
+    return bmw.search_bmw(
+        index, None, k, _rows=bmw.serving_match_rows(index, texts)
+    )
+
+
 def _median(xs: list[float]) -> float:
     return statistics.median(xs)
 
@@ -64,7 +74,7 @@ def _run_pass(spark, docs, queries, work, cpus, entry_mod) -> dict[str, float]:
 
     from neural_cherche_spark.index import bm25_weights
     from neural_cherche_spark.index.builder import build_index
-    from neural_cherche_spark.query import retrieve_exact
+    from neural_cherche_spark.query import bmw, retrieve_exact
     from neural_cherche_spark.streaming import CompressedIndexStream
     from neural_cherche_spark.text.ngrams import ngram_terms_column
 
@@ -105,10 +115,10 @@ def _run_pass(spark, docs, queries, work, cpus, entry_mod) -> dict[str, float]:
     ).cache()
     load_queries.count()
     # one untimed warmup: first-call JIT/codegen/broadcast setup
-    index.search(load_queries, k=10, mode="bmw").collect()
+    bmw.search_bmw(index, load_queries, k=10).collect()
     for mode in ("bmw", "distributed", "auto"):
         t0 = time.perf_counter()
-        index.search(load_queries, k=10, mode=mode).collect()
+        getattr(bmw, f"search_{mode}")(index, load_queries, k=10).collect()
         t[f"query_{mode}"] = time.perf_counter() - t0
 
     # serving path: 1000 short queries in ONE batched call through the
@@ -125,9 +135,9 @@ def _run_pass(spark, docs, queries, work, cpus, entry_mod) -> dict[str, float]:
         .collect()
     ]
     index.prepare_serving()
-    index.search_serving(serving_queries[:8], k=10).collect()  # warmup
+    _serve_bmw(index, serving_queries[:8]).collect()  # warmup
     t0 = time.perf_counter()
-    index.search_serving(serving_queries, k=10).collect()
+    _serve_bmw(index, serving_queries).collect()
     t["query_serving"] = time.perf_counter() - t0
     index.close()
 
@@ -149,9 +159,9 @@ def _run_pass(spark, docs, queries, work, cpus, entry_mod) -> dict[str, float]:
     t["delta_refresh"] = time.perf_counter() - t0
 
     # query the segmented raw index (query-time weights, f64)
-    ridx.search(load_queries, k=10, mode="bmw").collect()  # warmup
+    bmw.search_bmw(ridx, load_queries, k=10).collect()  # warmup
     t0 = time.perf_counter()
-    ridx.search(load_queries, k=10, mode="bmw").collect()
+    bmw.search_bmw(ridx, load_queries, k=10).collect()
     t["query_bmw_raw"] = time.perf_counter() - t0
 
     load_queries.unpersist()
@@ -165,6 +175,7 @@ def _run_large(spark, work, cpus, n_docs_large, rounds) -> dict:
 
     from neural_cherche_spark.data import synth_queries, synth_webtext
     from neural_cherche_spark.index.builder import build_index
+    from neural_cherche_spark.query import bmw
 
     corpus_path = f"{work}/bench_large_corpus.parquet"
     docs = synth_webtext(spark, n_docs_large, seed=4).select("url", "text")
@@ -191,16 +202,16 @@ def _run_large(spark, work, cpus, n_docs_large, rounds) -> dict:
             spark, docs, idx_dir, id_col=None, n_buckets=cpus, resume=False
         )
         builds.append(time.perf_counter() - t0)
-        index.search(queries, k=10, mode="bmw").collect()  # warmup
+        bmw.search_bmw(index, queries, k=10).collect()  # warmup
         t0 = time.perf_counter()
-        index.search(queries, k=10, mode="bmw").collect()
+        bmw.search_bmw(index, queries, k=10).collect()
         qwalls.append(time.perf_counter() - t0)
         index.prepare_serving()
-        index.search_serving(serve_texts[:4], k=10).collect()  # warmup
+        _serve_bmw(index, serve_texts[:4]).collect()  # warmup
         lat = []
         for qt in serve_texts:
             t0 = time.perf_counter()
-            index.search_serving([qt], k=10).collect()
+            _serve_bmw(index, [qt]).collect()
             lat.append((time.perf_counter() - t0) * 1e3)
         lat.sort()
         p50s.append(lat[len(lat) // 2])

@@ -24,6 +24,16 @@ import sys
 import time
 
 
+def _serve_bmw(index, texts: list[str], k: int = 10):
+    """``search_serving``'s Spark-free match rows, scored by the
+    block-max strategy (what the serving keys have always timed)."""
+    from neural_cherche_spark.query import bmw
+
+    return bmw.search_bmw(
+        index, None, k, _rows=bmw.serving_match_rows(index, texts)
+    )
+
+
 def _spark():
     from neural_cherche_spark.session import get_spark
 
@@ -84,7 +94,7 @@ def cmd_plans(tag: str) -> None:
 
     from neural_cherche_spark.index import bm25_weights
     from neural_cherche_spark.index.builder import build_index
-    from neural_cherche_spark.query import retrieve_exact
+    from neural_cherche_spark.query import bmw, retrieve_exact
     from neural_cherche_spark.text.ngrams import ngram_terms_column
 
     def cap(name, df):
@@ -115,13 +125,14 @@ def cmd_plans(tag: str) -> None:
     # common-word load batch now prunes WHOLE (its plan is a local
     # empty relation — captured separately as *_pruned for evidence).
     for mode in ("bmw", "distributed", "auto"):
-        cap(f"query_{mode}", index.search(queries, k=10, mode=mode))
-    cap("query_bmw_pruned", index.search(load_queries, k=10, mode="bmw"))
+        search = getattr(bmw, f"search_{mode}")
+        cap(f"query_{mode}", search(index, queries, k=10))
+    cap("query_bmw_pruned", bmw.search_bmw(index, load_queries, k=10))
     import __spark_entry__ as entry_mod
 
     serving_queries = [q for _, q in entry_mod.QUERY_SET]
     index.prepare_serving()
-    cap("query_serving", index.search_serving(serving_queries, k=10))
+    cap("query_serving", _serve_bmw(index, serving_queries))
     index.close()
 
     from neural_cherche_spark.streaming import CompressedIndexStream
@@ -134,7 +145,7 @@ def cmd_plans(tag: str) -> None:
     stream.materialize(delta_dir, n_buckets=cpus, storage="raw")
     stream.add_batch(docs.filter(F.col("doc_id") % 8 == 0), epoch_id=1)
     ridx = stream.materialize(delta_dir, n_buckets=cpus, storage="raw")
-    cap("query_bmw_raw", ridx.search(queries, k=10, mode="bmw"))
+    cap("query_bmw_raw", bmw.search_bmw(ridx, queries, k=10))
     spark.stop()
 
 
@@ -149,7 +160,7 @@ def cmd_phases() -> None:
 
     from neural_cherche_spark.index import bm25_weights
     from neural_cherche_spark.index.builder import build_index
-    from neural_cherche_spark.query import retrieve_exact
+    from neural_cherche_spark.query import bmw, retrieve_exact
     from neural_cherche_spark.streaming import CompressedIndexStream
     from neural_cherche_spark.text.ngrams import ngram_terms_column
 
@@ -192,12 +203,14 @@ def cmd_phases() -> None:
         ),
         flush=True,
     )
-    index.search(load_queries, k=10, mode="bmw").collect()  # warmup
+    bmw.search_bmw(index, load_queries, k=10).collect()  # warmup
     for mode in ("bmw", "distributed", "auto"):
         _timed(
             spark,
             f"query_{mode}",
-            lambda m=mode: index.search(load_queries, k=10, mode=m).collect(),
+            lambda s=getattr(bmw, f"search_{mode}"): s(
+                index, load_queries, k=10
+            ).collect(),
         )
     serving_queries = [
         r["q"]
@@ -208,11 +221,11 @@ def cmd_phases() -> None:
         .collect()
     ]
     index.prepare_serving()
-    index.search_serving(serving_queries[:8], k=10).collect()
+    _serve_bmw(index, serving_queries[:8]).collect()
     _timed(
         spark,
         "query_serving(1000)",
-        lambda: index.search_serving(serving_queries, k=10).collect(),
+        lambda: _serve_bmw(index, serving_queries).collect(),
     )
     index.close()
 
@@ -247,11 +260,11 @@ def cmd_phases() -> None:
 
     ridx = refresh()
     refresh()
-    ridx.search(load_queries, k=10, mode="bmw").collect()
+    bmw.search_bmw(ridx, load_queries, k=10).collect()
     _timed(
         spark,
         "query_bmw_raw",
-        lambda: ridx.search(load_queries, k=10, mode="bmw").collect(),
+        lambda: bmw.search_bmw(ridx, load_queries, k=10).collect(),
     )
     spark.stop()
 
@@ -265,6 +278,7 @@ def cmd_serving() -> None:
 
     from neural_cherche_spark.data import synth_queries, synth_webtext
     from neural_cherche_spark.index.builder import build_index
+    from neural_cherche_spark.query import bmw
     from neural_cherche_spark.serve import LocalSearcher
 
     corpus_path = f"{work}/large_corpus.parquet"
@@ -293,16 +307,16 @@ def cmd_serving() -> None:
         from neural_cherche_spark.index.builder import BM25Index
 
         index = BM25Index(spark, idx_dir)
-    index.search(queries, k=10, mode="bmw").collect()
+    bmw.search_bmw(index, queries, k=10).collect()
     t0 = time.perf_counter()
-    index.search(queries, k=10, mode="bmw").collect()
+    bmw.search_bmw(index, queries, k=10).collect()
     print(json.dumps({"large_query_bmw_sec": round(time.perf_counter() - t0, 3)}))
     index.prepare_serving()
-    index.search_serving(serve_texts[:4], k=10).collect()
+    _serve_bmw(index, serve_texts[:4]).collect()
     lat = []
     for qt in serve_texts:
         t0 = time.perf_counter()
-        index.search_serving([qt], k=10).collect()
+        _serve_bmw(index, [qt]).collect()
         lat.append((time.perf_counter() - t0) * 1e3)
     lat.sort()
     print(json.dumps({

@@ -40,13 +40,23 @@ from neural_cherche_spark.text.ngrams import term_tf_pairs_column, tokenize_term
 
 @dataclass(frozen=True)
 class BM25Config:
-    """Defaults match the reference (bm25.py:118-143, README.md:109-118)."""
+    """Defaults match the reference (bm25.py:118-143, README.md:109-118).
+
+    ``k1 ≥ 0`` and ``0 ≤ b ≤ 1`` are required: every block-max bound
+    and the idf-sign whole-query prune assume the tf-saturation
+    w1 − ε is nonnegative, which holds exactly on that domain."""
 
     k1: float = 1.5
     b: float = 0.75
     epsilon: float = 0.0
     n_min: int = 3
     n_max: int = 5
+
+    def __post_init__(self) -> None:
+        if not self.k1 >= 0.0:
+            raise ValueError(f"BM25Config.k1 must be >= 0, got {self.k1}")
+        if not 0.0 <= self.b <= 1.0:
+            raise ValueError(f"BM25Config.b must be in [0, 1], got {self.b}")
 
 
 def term_frequencies(

@@ -1103,10 +1103,12 @@ class BM25Index:
             self.spark.read.parquet(self.cat.path("lineage"))
         )
 
-    def search(self, queries: DataFrame, k: int = 10, mode: str = "bmw") -> DataFrame:
-        from neural_cherche_spark.query.bmw import search_index
+    def search(self, queries: DataFrame, k: int = 10) -> DataFrame:
+        """Exact top-k per (query_id, query) row → (query_id, doc_id,
+        score, rank), routed per query by ``query.bmw.search_auto``."""
+        from neural_cherche_spark.query.bmw import search_auto
 
-        return search_index(self, queries, k=k, mode=mode)
+        return search_auto(self, queries, k)
 
     def prepare_serving(
         self, queries: list[str] | None = None
@@ -1131,9 +1133,9 @@ class BM25Index:
         workload. Re-calling prepare_serving() extends nothing; it
         replaces the map (prepare with the union if the workload
         grows)."""
+        from neural_cherche_spark.query.bmw import bucket_set
         from neural_cherche_spark.text.ngrams import char_wb_ngrams
 
-        n_buckets = self.manifest.n_buckets
         td = self.termdict.select(
             "term", "term_id", "df", "idf", "term_norm", "n_salts"
         )
@@ -1150,16 +1152,9 @@ class BM25Index:
                 [(g,) for g in sorted(prepared)], "term string"
             )
             td = td.join(F.broadcast(grams_df), "term")
-        rows = (
-            td.withColumn(
-                "buckets",
-                F.expr(
-                    "array_distinct(transform(sequence(0, n_salts - 1), "
-                    f"s -> cast(pmod(xxhash64(term_id, cast(s as int)), {n_buckets}) as int)))"
-                ),
-            )
-            .collect()
-        )
+        rows = td.withColumn(
+            "buckets", bucket_set(self.manifest.n_buckets)
+        ).collect()
         self._serving_prepared = prepared
         self._serving = {
             r["term"]: {
@@ -1174,27 +1169,16 @@ class BM25Index:
         }
         return self
 
-    def search_serving(
-        self, queries: list[str], k: int = 10, mode: str = "bmw"
-    ) -> DataFrame:
+    def search_serving(self, queries: list[str], k: int = 10) -> DataFrame:
         """Search from plain query strings via the driver-side serving
         map (see :meth:`prepare_serving`): exactly one Spark job per
-        call — the pruned postings scan/score itself."""
-        from neural_cherche_spark.query.bmw import (
-            search_auto,
-            search_bmw,
-            search_distributed,
-            serving_match_rows,
-        )
+        call — the pruned postings scan/score itself. Same router as
+        :meth:`search`; ``query_id`` is the position in ``queries``."""
+        from neural_cherche_spark.query import bmw
 
-        rows = serving_match_rows(self, queries)
-        if mode == "bmw":
-            return search_bmw(self, None, k, _rows=rows)
-        if mode == "distributed":
-            return search_distributed(self, None, k, _rows=rows)
-        if mode == "auto":
-            return search_auto(self, None, k, _rows=rows)
-        raise ValueError(f"unknown mode {mode!r}")
+        return bmw.search_auto(
+            self, None, k, _rows=bmw.serving_match_rows(self, queries)
+        )
 
     def close(self) -> None:
         """Release executor-cached state (the termdict cache) and the

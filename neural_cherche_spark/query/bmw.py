@@ -1,18 +1,23 @@
 """Query answering over the compressed postings index.
 
-Two physical strategies, both rank-identical to the exact join+agg
-path (tests pin this):
+One router, :func:`search_auto` (what ``BM25Index.search`` and
+``search_serving`` call), picks per query between two internal
+strategies by matched-postings volume (Σ df, from the one match
+collect). Both are rank-identical to the exact join+agg path (tests
+pin this):
 
-``mode="distributed"`` — decode-and-score, fully distributed:
+:func:`search_distributed` — decode-and-score, fully distributed (heavy
+queries, and indexes whose layout the block-max split cannot serve):
     postings (bucket-pruned, term-filtered scan)
-      ⋈ BROADCAST(query terms)                 — no shuffle of postings
-      → mapInPandas: decode blocks, partial (query_id, doc_id, score)
-        pre-aggregated per Arrow batch          — Python only here
+      → decode blocks once, fan out to every matching query through a
+        broadcast {term_id: (qids, qtfs[, s_t])} map, partial
+        (query_id, doc_id) sums                — Python only here
       → groupBy(query_id, doc_id).sum → top-k   — one small shuffle
     No per-group materialization: safe for arbitrarily long posting
     lists (the group-OOM-free path at 10^12 docs).
 
-``mode="bmw"`` — block-max pruned, per-query (sub)group:
+:func:`search_bmw` — block-max pruned, per-query (sub)group (selective
+queries; heavy ones ride along as bulk groups in the same stage):
     same pruned scan ⋈ broadcast(query terms)
       → groupBy(query_id, subgroup).applyInPandas(block-max top-k)
     Heavy queries shard into max(n_salts) doc-disjoint subgroups
@@ -29,11 +34,15 @@ path (tests pin this):
     two-phase pruning (a Python pointer-chasing DAAT loop would be
     slower than numpy phase-scoring at batch sizes).
 
+The group scorer (:func:`_bmw_group_fn`) is also the Spark-free
+serving tier's scorer (``serve.LocalSearcher``): both hand it the same
+block columns, and it derives raw-storage block bounds itself.
+
 Bucket pruning: the builder spreads (term_id, salt) over parquet
 ``bucket=`` partitions by xxhash64; the query side recomputes the
-exact bucket set for its terms IN SPARK (same hash), so the parquet
-scan prunes directories and row-groups (PushedFilters on bucket +
-term_id).
+exact bucket set for its terms IN SPARK (same hash,
+:func:`bucket_set`), so the parquet scan prunes directories and
+row-groups (PushedFilters on bucket + term_id).
 """
 
 from __future__ import annotations
@@ -89,7 +98,7 @@ def _drop_nonpositive_queries(index, rows: list) -> list:
     query whose EVERY matched term has idf ≤ 0 can only reach final
     scores ≤ 0, and the engine's positive-score filter (T2, reference
     tfidf.py:210-217) drops those rows — so the query's result set is
-    empty under any physical mode. Removing it HERE skips its share of
+    empty under either strategy. Removing it HERE skips its share of
     the postings scan, the block-row duplication in the broadcast
     join, the shuffle, and its (query, grp) groups — the group scorer
     only reached the same conclusion after all of that was paid
@@ -121,11 +130,22 @@ def _drop_nonpositive_queries(index, rows: list) -> list:
     return out
 
 
+def bucket_set(n_buckets: int):
+    """Read-side ``buckets`` column: the exact parquet ``bucket=`` set
+    of a (term_id, n_salts) row, by the same xxhash64 as the
+    write-side assignment in ``write_postings``, so partition pruning
+    is exact."""
+    return F.expr(
+        "array_distinct(transform(sequence(0, n_salts - 1), "
+        f"s -> cast(pmod(xxhash64(term_id, cast(s as int)), {n_buckets}) as int)))"
+    )
+
+
 def _matched_terms(index, queries: DataFrame) -> list:
     """ONE driver round-trip per search call: for each matched term —
     its df, salt count, exact bucket set (same xxhash64 as the builder,
     so parquet partition pruning is exact), and the (query_id, qtf)
-    fan-out list. Every search mode derives its broadcast map, scan
+    fan-out list. Every strategy derives its broadcast map, scan
     pruning, routing volumes, and subgroup split from this single
     collect (round-1 VERDICT "what's wrong" #4: 3 collects/call).
 
@@ -135,18 +155,11 @@ def _matched_terms(index, queries: DataFrame) -> list:
     entries carry qtf·idf/‖q‖ instead of raw qtf — the downstream
     scorers are weighting-agnostic.
     """
-    n_buckets = index.manifest.n_buckets
     rows = (
         _query_terms(index, queries)
         .groupBy("term_id", "n_salts", "df", "idf", "term_norm")
         .agg(F.collect_list(F.struct("query_id", "qtf")).alias("qs"))
-        .withColumn(
-            "buckets",
-            F.expr(
-                "array_distinct(transform(sequence(0, n_salts - 1), "
-                f"s -> cast(pmod(xxhash64(term_id, cast(s as int)), {n_buckets}) as int)))"
-            ),
-        )
+        .withColumn("buckets", bucket_set(index.manifest.n_buckets))
         .collect()
     )
     rows = _drop_nonpositive_queries(index, rows)
@@ -252,33 +265,6 @@ def _postings_for(index, rows: list) -> DataFrame:
     )
 
 
-def _pruned_postings(index, qterms: DataFrame) -> DataFrame:
-    """Bucket- and term-pruned postings scan (DataFrame-input variant,
-    kept for plan audits; search paths use the single-collect
-    :func:`_matched_terms` + :func:`_postings_for`)."""
-    n_buckets = index.manifest.n_buckets
-    pairs = (
-        qterms.select("term_id", "n_salts")
-        .distinct()
-        .select(
-            "term_id",
-            F.explode(F.expr("sequence(0, n_salts - 1)")).alias("salt"),
-        )
-        .select(
-            "term_id",
-            F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_buckets))
-            .cast("int")
-            .alias("bucket"),
-        )
-        .collect()
-    )
-    buckets = sorted({r["bucket"] for r in pairs})
-    term_ids = sorted({r["term_id"] for r in pairs})
-    return index.postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
-    )
-
-
 def _qt_df(spark, rows: list, cols: tuple, schema: str) -> DataFrame:
     """Driver→JVM transfer of the per-call query-term table through the
     Arrow path: ``createDataFrame`` over a list of tuples serializes
@@ -293,6 +279,71 @@ def _qt_df(spark, rows: list, cols: tuple, schema: str) -> DataFrame:
 def _empty_result(spark) -> DataFrame:
     return spark.createDataFrame(
         [], "query_id long, doc_id long, score double, rank int"
+    )
+
+
+def _raw_cfg(manifest) -> tuple | None:
+    """(k1, b, ε, avgdl, weighting) for a RAW-storage index — what the
+    scorers need to weight raw blocks from CURRENT stats — or None for
+    weights storage (the stored weights are final)."""
+    cfg = manifest.cfg
+    if cfg.get("storage", "weights") != "raw":
+        return None
+    return (
+        float(cfg["k1"]), float(cfg["b"]), float(cfg["epsilon"]),
+        float(manifest.avgdl), cfg.get("weighting", "bm25"),
+    )
+
+
+def _s_t(r) -> float:
+    """Query-time per-term scale of raw blocks: bm25 idf/term_norm;
+    tfidf has term_norm ≡ 1.0, so this is idf — the doc-side weight
+    before the per-doc norm division applied after aggregation."""
+    return float(r["idf"]) / float(r["term_norm"])
+
+
+def _qmap(rows: list, raw: bool) -> dict:
+    """``{term_id: (qids[], qtfs[][, s_t])}`` — the bulk path's
+    per-term query fan-out, broadcast to the decode tasks."""
+    return {
+        int(r["term_id"]): (
+            np.array([int(q["query_id"]) for q in r["qs"]], dtype=np.int64),
+            np.array([float(q["qtf"]) for q in r["qs"]], dtype=np.float64),
+        )
+        + ((_s_t(r),) if raw else ())
+        for r in rows
+    }
+
+
+def _rank_topk(
+    index, scored: DataFrame, k: int, aggregate: bool, tfidf_raw: bool
+) -> DataFrame:
+    """Final (query_id, doc_id, score, rank) from scorer emissions.
+
+    ``aggregate``: emissions are partial sums (bulk fan-out) or
+    unnormalized tfidf candidates — sum them per (query, doc), divide
+    tfidf raw by the CURRENT per-doc norm (a doc-keyed join against the
+    aggregated, query-bounded candidate set, never the postings: the
+    cosine factors out of the per-term sum), drop scores ≤ 0 and cut
+    each partition to k per query before the rank window."""
+    if aggregate:
+        scored = scored.groupBy("query_id", "doc_id").agg(
+            F.sum("score").alias("score")
+        )
+        if tfidf_raw:
+            scored = (
+                scored.join(index.docnorm, "doc_id")
+                .withColumn("score", F.col("score") / F.col("dnorm"))
+                .select("query_id", "doc_id", "score")
+            )
+        scored = scored.filter(F.col("score") > 0).mapInPandas(
+            _local_topk_fn(k), _SCORE_SCHEMA
+        )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("doc_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
 
 
@@ -554,38 +605,16 @@ def search_distributed(
     rows = _matched_terms(index, queries) if _rows is None else _rows
     if not rows:
         return _empty_result(index.spark)
-    cfgm = index.manifest.cfg
-    raw = cfgm.get("storage", "weights") == "raw"
-    tfidf_raw = raw and cfgm.get("weighting", "bm25") == "tfidf"
-    if raw:
-        raw_cfg = (
-            float(cfgm["k1"]), float(cfgm["b"]),
-            float(cfgm["epsilon"]), float(index.manifest.avgdl),
-            cfgm.get("weighting", "bm25"),
-        )
-        qmap = {
-            int(r["term_id"]): (
-                np.array([int(q["query_id"]) for q in r["qs"]], dtype=np.int64),
-                np.array([float(q["qtf"]) for q in r["qs"]], dtype=np.float64),
-                # bm25: s_t = idf/term_norm; tfidf: term_norm ≡ 1.0 so
-                # this is idf — the doc-side weight before the per-doc
-                # norm division applied after aggregation
-                float(r["idf"]) / float(r["term_norm"]),
-            )
-            for r in rows
-        }
+    raw_cfg = _raw_cfg(index.manifest)
+    raw = raw_cfg is not None
+    tfidf_raw = raw and raw_cfg[4] == "tfidf"
+    qmap = _qmap(rows, raw)
+    cols = (
         # seg rides along for per-segment tombstone loads (tombmask.py)
-        cols = ("term_id", "n", "first_doc", "docs", "tfs", "dls", "seg")
-    else:
-        raw_cfg = None
-        qmap = {
-            int(r["term_id"]): (
-                np.array([int(q["query_id"]) for q in r["qs"]], dtype=np.int64),
-                np.array([float(q["qtf"]) for q in r["qs"]], dtype=np.float64),
-            )
-            for r in rows
-        }
-        cols = ("term_id", "n", "first_doc", "docs", "ws")
+        ("term_id", "n", "first_doc", "docs", "tfs", "dls", "seg")
+        if raw
+        else ("term_id", "n", "first_doc", "docs", "ws")
+    )
     sc = index.spark.sparkContext
     qmap_bc = sc.broadcast(qmap)
     # coalesce (no shuffle) to a VOLUME-driven task count — tasks
@@ -653,29 +682,7 @@ def search_distributed(
             .groupBy("query_id", "grp")
             .applyInPandas(fn, _SCORE_SCHEMA)
         )
-    scored = partial.groupBy("query_id", "doc_id").agg(
-        F.sum("score").alias("score")
-    )
-    if tfidf_raw:
-        # cosine normalization factors out of the per-term sum:
-        # score = (Σ_t qw·tf·idf) / ‖d‖ — so the per-doc norm joins
-        # against the (already aggregated, query-bounded) CANDIDATE
-        # set, never against the postings. Doc-keyed equi-join; the
-        # docnorm side is (doc_id, dnorm) scalars.
-        scored = (
-            scored.join(index.docnorm, "doc_id")
-            .withColumn("score", F.col("score") / F.col("dnorm"))
-            .select("query_id", "doc_id", "score")
-        )
-    scored = scored.filter(F.col("score") > 0).mapInPandas(
-        _local_topk_fn(k), _SCORE_SCHEMA
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(index, partial, k, aggregate=True, tfidf_raw=tfidf_raw)
 
 
 # ---------------------------------------------------------------------------
@@ -798,14 +805,75 @@ def _assemble_decoded(idx, ns, dec_cols, decode_uncached):
     return tuple(out)
 
 
+def _raw_block_bounds(pdf: pd.DataFrame, raw_cfg: tuple, gammas: dict | None):
+    """Per-block score bounds of RAW blocks, from the block's tf/dl
+    extrema and the query-time scale ``s_t`` (the ``max_w``/``min_w``
+    a weights block stores) → (max_w, min_w, glo, ghi).
+
+    bm25: w1 = codec.bm25_w1 is monotone (tf ↑, dl ↓), so the block's
+    w1 lies in [w1(min_tf, max_dl), w1(max_tf, min_dl)], widened
+    outward by 1e-9 relative + 1e-12 absolute. With k1 ≥ 0 and
+    0 ≤ b ≤ 1 (BM25Config enforces both) w1 ≥ ε holds exactly in f64,
+    so the low end floors at ε.
+
+    tfidf: the dls stream holds the quantized encode-time docnorm ρq
+    (codec.DNORM_SCALE); for a live doc of segment s,
+    ρq·γ_lo(s)/S ≤ ‖d‖_now ≤ (ρq+1)·γ_hi(s)/S, with γ from ``gammas``
+    ({seg: (γ_lo, γ_hi)}, :func:`_tfidf_raw_gammas`) widened by 1∓1e-9
+    against f64 noise in the refresh-time drift job. The NORMALIZED
+    block bound is s_t·max_tf·S/(min_ρq·γ_lo); every contribution is
+    nonnegative (idf > 0, query weights ≥ 0), so min_w ≡ 0. glo/ghi are
+    the per-block ρq → norm factors (γ/S), None for bm25."""
+    from neural_cherche_spark.index.codec import DNORM_SCALE, bm25_w1
+
+    k1, b, eps, avgdl, weighting = raw_cfg
+    s_t = pdf["s_t"].to_numpy(dtype=np.float64)
+    max_tf = pdf["max_tf"].to_numpy(dtype=np.float64)
+    min_dl = pdf["min_dl"].to_numpy(dtype=np.float64)
+    if weighting == "tfidf":
+        segs, inv = np.unique(
+            pdf["seg"].to_numpy(dtype=np.int64), return_inverse=True
+        )
+        g = np.array([gammas[int(s)] for s in segs], dtype=np.float64)
+        glo = g[inv, 0] * (1.0 - 1e-9)
+        ghi = g[inv, 1] * (1.0 + 1e-9)
+        max_w = s_t * max_tf * float(DNORM_SCALE) / (min_dl * glo)
+        return max_w, np.zeros_like(max_w), glo / DNORM_SCALE, ghi / DNORM_SCALE
+    hi = bm25_w1(max_tf, min_dl, k1, b, avgdl, eps)
+    lo = bm25_w1(
+        pdf["min_tf"].to_numpy(dtype=np.float64),
+        pdf["max_dl"].to_numpy(dtype=np.float64),
+        k1, b, avgdl, eps,
+    )
+    w1_hi = np.where(hi >= 0, hi * (1.0 + 1e-9), hi * (1.0 - 1e-9)) + 1e-12
+    w1_lo = np.maximum(
+        eps, np.where(lo >= 0, lo * (1.0 - 1e-9), lo * (1.0 + 1e-9)) - 1e-12
+    )
+    pos = s_t >= 0
+    return (
+        np.where(pos, s_t * w1_hi, s_t * w1_lo),
+        np.where(pos, s_t * w1_lo, s_t * w1_hi),
+        None,
+        None,
+    )
+
+
 def _bmw_group_fn(
     k: int,
     raw_cfg: tuple | None = None,
     _stats: dict | None = None,
     tomb_src: str | None = None,
     bulk_qmap_bc=None,
+    gammas: dict | None = None,
 ):
     """One (query_id, subgroup) group: block-max pruned exact top-k.
+
+    Frames carry the blocks' stored columns plus the query side (qtf;
+    ``s_t`` for raw storage; ``grp``/``n_groups`` when the Spark path
+    splits a query into subgroups — absent means one group). Weights
+    blocks bring their stored ``max_w``/``min_w``; raw blocks bring
+    tf/dl extrema and the bounds come from :func:`_raw_block_bounds`
+    (tfidf raw needs ``gammas``).
 
     When ``bulk_qmap_bc`` is set (single-scan unified auto path),
     groups keyed by the sentinel ``query_id == -1`` carry the HEAVY
@@ -849,11 +917,18 @@ def _bmw_group_fn(
             if out is None:
                 return pd.DataFrame(columns=["query_id", "doc_id", "score"])
             return out
-        grp = int(pdf["grp"].iloc[0])
-        n_groups = int(pdf["n_groups"].iloc[0])
+        n_groups = (
+            int(pdf["n_groups"].iloc[0]) if "n_groups" in pdf.columns else 1
+        )
+        grp = int(pdf["grp"].iloc[0]) if n_groups > 1 else 0
         qtf = pdf["qtf"].to_numpy(dtype=np.float64)
-        ub_pos = np.maximum(qtf * pdf["max_w"].to_numpy(dtype=np.float64), 0.0)
-        neg = np.minimum(qtf * pdf["min_w"].to_numpy(dtype=np.float64), 0.0)
+        if raw_cfg is not None:
+            max_w, min_w, glo, ghi = _raw_block_bounds(pdf, raw_cfg, gammas)
+        else:
+            max_w = pdf["max_w"].to_numpy(dtype=np.float64)
+            min_w = pdf["min_w"].to_numpy(dtype=np.float64)
+        ub_pos = np.maximum(qtf * max_w, 0.0)
+        neg = np.minimum(qtf * min_w, 0.0)
         first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
         last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
 
@@ -875,16 +950,6 @@ def _bmw_group_fn(
             tfs_col = pdf["tfs"].to_numpy()
             dls_col = pdf["dls"].to_numpy()
             s_t = pdf["s_t"].to_numpy(dtype=np.float64)
-            if tfidf:
-                from neural_cherche_spark.index.codec import DNORM_SCALE
-
-                # per-block drift-scaled norm factors: the dls stream
-                # holds the quantized encode-time docnorm ρq, so for a
-                # live doc d, ρq·glo ≤ ‖d‖_now ≤ (ρq+1)·ghi (search_bmw
-                # applied the f64 margins to the γ factors; the
-                # quantization scale divides out here)
-                glo = pdf["glo"].to_numpy(dtype=np.float64) / DNORM_SCALE
-                ghi = pdf["ghi"].to_numpy(dtype=np.float64) / DNORM_SCALE
         else:
             ws_col = pdf["ws"].to_numpy()
         # serving hot-term cache: frames from serve.LocalSearcher may
@@ -1237,7 +1302,8 @@ def search_bmw(
         raise ValueError(
             "index predates the codec.doc_salt layout (manifest version "
             f"{index.manifest.version}): the subgroup split would drop "
-            "salted-term docs — rebuild the index or use mode='distributed'"
+            "salted-term docs — rebuild the index, or search it through "
+            "BM25Index.search, which routes it to the bulk path"
         )
     if subgroup_cap < 1:
         raise ValueError(f"subgroup_cap must be >= 1, got {subgroup_cap}")
@@ -1245,10 +1311,9 @@ def search_bmw(
     # n_salts > n_groups — both must be powers of two. n_salts is by
     # construction; round the cap down to one (ADVICE r2).
     subgroup_cap = 1 << (subgroup_cap.bit_length() - 1)
-    tfidf_raw = (
-        index.manifest.cfg.get("storage", "weights") == "raw"
-        and index.manifest.cfg.get("weighting", "bm25") == "tfidf"
-    )
+    raw_cfg = _raw_cfg(index.manifest)
+    raw = raw_cfg is not None
+    tfidf_raw = raw and raw_cfg[4] == "tfidf"
     gammas = _tfidf_raw_gammas(index) if tfidf_raw else None
     if tfidf_raw and gammas is None:
         # pre-quantization segments: their dls stream holds dl, not the
@@ -1291,26 +1356,20 @@ def search_bmw(
         m_bulk = max(
             1, min((vol_h + _PAIRS_PER_TASK - 1) // _PAIRS_PER_TASK, 512)
         )
-    raw = index.manifest.cfg.get("storage", "weights") == "raw"
     if raw:
         # raw blocks: n_salts comes from the postings ROW (segments of
         # a delta-grown index may use different — monotonically grown —
         # per-term salt layouts); the termdict value used for
         # n_groups_by_q above is their maximum. qt carries the
-        # query-time per-term scale s_t = idf/term_norm.
-        cfgm = index.manifest.cfg
-        raw_cfg = (
-            float(cfgm["k1"]), float(cfgm["b"]),
-            float(cfgm["epsilon"]), float(index.manifest.avgdl),
-            cfgm.get("weighting", "bm25"),
-        )
+        # query-time per-term scale s_t; the scorer derives the block
+        # bounds from the tf/dl extrema.
         qt_rows = [
             (
                 int(r["term_id"]),
                 int(q["query_id"]),
                 float(q["qtf"]),
                 n_groups_by_q[int(q["query_id"])],
-                float(r["idf"]) / float(r["term_norm"]),
+                _s_t(r),
             )
             for r in rows
             for q in r["qs"]
@@ -1327,104 +1386,12 @@ def search_bmw(
             ("term_id", "query_id", "qtf", "n_groups", "s_t"),
             "term_id long, query_id long, qtf double, n_groups int, s_t double",
         )
-        k1, b, eps, avgdl = raw_cfg[:4]
-
-        def w1(tf_col, dl_col):
-            # SAME evaluation tree as codec.bm25_w1 (monotone in tf ↑,
-            # dl ↓); the 1e-9 relative margin absorbs any cross-runtime
-            # ulp noise so the bounds stay sound without bit-matching
-            return (
-                tf_col * (k1 + 1.0)
-                / (tf_col + k1 * (1.0 - b + b * dl_col / avgdl))
-                + eps
-            )
-
-        if tfidf_raw:
-            # tfidf raw: the dls stream holds quantized encode-time
-            # docnorms ρq (codec.DNORM_SCALE); for any LIVE doc d in a
-            # block, ‖d‖_now ≥ γ_lo·min_ρq/S — so the NORMALIZED block
-            # bound is s_t·max_tf·S/(min_ρq·γ_lo). All contributions
-            # are nonnegative (idf > 0, query weights ≥ 0): min_w ≡ 0.
-            # The γ margins (1∓1e-9) absorb f64 division noise from
-            # the refresh-time drift-factor job.
-            from neural_cherche_spark.index.codec import DNORM_SCALE
-
-            gmap_lo = F.create_map(
-                *[
-                    F.lit(v)
-                    for s, (lo, hi) in gammas.items()
-                    for v in (s, lo * (1.0 - 1e-9))
-                ]
-            )
-            gmap_hi = F.create_map(
-                *[
-                    F.lit(v)
-                    for s, (lo, hi) in gammas.items()
-                    for v in (s, hi * (1.0 + 1e-9))
-                ]
-            )
-            joined = (
-                _postings_for(index, rows + (heavy or []))
-                .join(F.broadcast(qt), "term_id")
-                .withColumn(
-                    "glo", F.element_at(gmap_lo, F.col("seg").cast("int"))
-                )
-                .withColumn(
-                    "ghi", F.element_at(gmap_hi, F.col("seg").cast("int"))
-                )
-                .withColumn(
-                    "max_w",
-                    F.col("s_t")
-                    * F.col("max_tf").cast("double")
-                    * F.lit(float(DNORM_SCALE))
-                    / (F.col("min_dl").cast("double") * F.col("glo")),
-                )
-                .withColumn("min_w", F.lit(0.0))
-            )
-            group_cols = [
-                "query_id", "grp", "n_groups", "term_id", "salt", "n",
-                "qtf", "s_t", "max_w", "min_w", "glo", "ghi",
-                "first_doc", "last_doc", "docs", "tfs", "dls", "seg",
-            ]
-        else:
-            w1_hi = (
-                w1(
-                    F.col("max_tf").cast("double"),
-                    F.col("min_dl").cast("double"),
-                )
-                * (1.0 + 1e-9) + 1e-12
-            )
-            w1_lo = F.greatest(
-                F.lit(0.0),
-                w1(
-                    F.col("min_tf").cast("double"),
-                    F.col("max_dl").cast("double"),
-                )
-                * (1.0 - 1e-9) - 1e-12,
-            )
-            joined = (
-                _postings_for(index, rows + (heavy or []))
-                .join(F.broadcast(qt), "term_id")
-                .withColumn(
-                    "max_w",
-                    F.when(
-                        F.col("s_t") >= 0, F.col("s_t") * w1_hi
-                    ).otherwise(F.col("s_t") * w1_lo),
-                )
-                .withColumn(
-                    "min_w",
-                    F.when(
-                        F.col("s_t") >= 0, F.col("s_t") * w1_lo
-                    ).otherwise(F.col("s_t") * w1_hi),
-                )
-            )
-            group_cols = [
-                "query_id", "grp", "n_groups", "term_id", "salt", "n",
-                "qtf", "s_t", "max_w", "min_w", "first_doc", "last_doc",
-                "docs", "tfs", "dls", "seg",
-            ]
+        group_cols = [
+            "query_id", "grp", "n_groups", "term_id", "salt", "n",
+            "qtf", "s_t", "max_tf", "min_tf", "min_dl", "max_dl",
+            "first_doc", "last_doc", "docs", "tfs", "dls", "seg",
+        ]
     else:
-        raw_cfg = None
         qt_rows = [
             (
                 int(r["term_id"]),
@@ -1446,14 +1413,14 @@ def search_bmw(
             ("term_id", "n_salts", "query_id", "qtf", "n_groups"),
             "term_id long, n_salts int, query_id long, qtf double, n_groups int",
         )
-        joined = _postings_for(index, rows + (heavy or [])).join(
-            F.broadcast(qt), "term_id"
-        )
         group_cols = [
             "query_id", "grp", "n_groups", "term_id", "salt", "n",
             "qtf", "max_w", "min_w", "first_doc", "last_doc",
             "docs", "ws",
         ]
+    joined = _postings_for(index, rows + (heavy or [])).join(
+        F.broadcast(qt), "term_id"
+    )
     bulk_case = (
         # sentinel rows: volume-sized bulk groups keyed by DOC REGION
         # (first_doc >> 8), not by (term, salt, block) hash — all
@@ -1479,34 +1446,9 @@ def search_bmw(
             )
         ),
     )
-    bulk_qmap_bc = None
-    if heavy:
-        if raw:
-            hmap = {
-                int(r["term_id"]): (
-                    np.array(
-                        [int(q["query_id"]) for q in r["qs"]], dtype=np.int64
-                    ),
-                    np.array(
-                        [float(q["qtf"]) for q in r["qs"]], dtype=np.float64
-                    ),
-                    float(r["idf"]) / float(r["term_norm"]),
-                )
-                for r in heavy
-            }
-        else:
-            hmap = {
-                int(r["term_id"]): (
-                    np.array(
-                        [int(q["query_id"]) for q in r["qs"]], dtype=np.int64
-                    ),
-                    np.array(
-                        [float(q["qtf"]) for q in r["qs"]], dtype=np.float64
-                    ),
-                )
-                for r in heavy
-            }
-        bulk_qmap_bc = index.spark.sparkContext.broadcast(hmap)
+    bulk_qmap_bc = (
+        index.spark.sparkContext.broadcast(_qmap(heavy, raw)) if heavy else None
+    )
     scored = (
         expanded.select(*group_cols)
         .groupBy("query_id", "grp")
@@ -1520,44 +1462,19 @@ def search_bmw(
                     else None
                 ),
                 bulk_qmap_bc=bulk_qmap_bc,
+                gammas=gammas,
             ),
             _SCORE_SCHEMA,
         )
     )
-    if tfidf_raw:
-        # group emissions are UNNORMALIZED candidate supersets (each
-        # group keeps every doc whose upper bound reaches its certified
-        # k-th lower bound); the exact cosine divides by the CURRENT
-        # per-doc norm here — a doc-keyed join against the (already
-        # aggregated, query-bounded) candidate set, never the postings.
-        # The groupBy-sum restores exactness for heavy bulk partials
-        # and is a cheap no-op reduction for the doc-disjoint
-        # selective subgroups.
-        scored = (
-            scored.groupBy("query_id", "doc_id")
-            .agg(F.sum("score").alias("score"))
-            .join(index.docnorm, "doc_id")
-            .withColumn("score", F.col("score") / F.col("dnorm"))
-            .select("query_id", "doc_id", "score")
-            .filter(F.col("score") > 0)
-            .mapInPandas(_local_topk_fn(k), _SCORE_SCHEMA)
-        )
-    elif heavy:
-        # restore exactness for the bulk partials; a no-op for the
-        # selective rows ((query, doc) unique across disjoint
-        # subgroups). Heavy queries' full candidate sets would
-        # otherwise flood the rank window — cut map-side first.
-        scored = (
-            scored.groupBy("query_id", "doc_id")
-            .agg(F.sum("score").alias("score"))
-            .filter(F.col("score") > 0)
-            .mapInPandas(_local_topk_fn(k), _SCORE_SCHEMA)
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    # tfidf raw groups emit UNNORMALIZED candidate supersets (each keeps
+    # every doc whose upper bound reaches its certified k-th lower
+    # bound), and heavy bulk groups emit partial sums: both need the
+    # per-(query, doc) sum — a no-op for the selective rows, whose
+    # (query, doc) keys are unique across doc-disjoint subgroups
+    return _rank_topk(
+        index, scored, k, aggregate=tfidf_raw or bool(heavy),
+        tfidf_raw=tfidf_raw,
     )
 
 
@@ -1568,7 +1485,9 @@ def search_auto(
     heavy_postings_threshold: int = 500_000,
     _rows: list | None = None,
 ) -> DataFrame:
-    """Route each query to the mode that fits its cost profile.
+    """The query router: ``BM25Index.search`` and ``search_serving``
+    land here, and it sends each query to the strategy that fits its
+    cost profile.
 
     Selective queries (small total matched-postings volume, from the
     termdict df statistics) go to the per-query block-max path; heavy
@@ -1581,7 +1500,9 @@ def search_auto(
     # carved out in the driver — the sub-searches run zero extra
     # pre-jobs (round-1 VERDICT "what's wrong" #4).
     if not getattr(index, "salt_layout_ok", True):
-        return search_distributed(index, queries, k)
+        # pre-doc_salt layout: the subgroup split is unsound here; the
+        # decode-everything path is salt-agnostic and exact
+        return search_distributed(index, queries, k, _rows=_rows)
     if (
         index.manifest.cfg.get("storage", "weights") == "raw"
         and index.manifest.cfg.get("weighting", "bm25") == "tfidf"
@@ -1589,7 +1510,7 @@ def search_auto(
     ):
         # tfidf+raw with pre-quantization segments has one sound path
         # (see search_bmw routing): no point splitting the batch just
-        # to union two identical modes
+        # to union two identical strategies
         return search_distributed(index, queries, k, _rows=_rows)
     rows = _matched_terms(index, queries) if _rows is None else _rows
     if not rows:
@@ -1629,17 +1550,3 @@ def search_auto(
     return search_bmw(
         index, queries, k, _rows=side(False), _heavy_rows=side(True)
     )
-
-
-def search_index(index, queries: DataFrame, k: int = 10, mode: str = "bmw") -> DataFrame:
-    if mode == "bmw":
-        if not getattr(index, "salt_layout_ok", True):
-            # pre-doc_salt layout: the subgroup path is unsound here;
-            # the decode-everything path is salt-agnostic and exact
-            return search_distributed(index, queries, k)
-        return search_bmw(index, queries, k)
-    if mode == "distributed":
-        return search_distributed(index, queries, k)
-    if mode == "auto":
-        return search_auto(index, queries, k)
-    raise ValueError(f"unknown mode {mode!r}")

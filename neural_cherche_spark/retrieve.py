@@ -143,7 +143,6 @@ class BM25:
                 idx.search(
                     queries_embeddings,
                     k=k if k is not None else max(self._n_docs, 1),
-                    mode="auto",
                 )
                 .join(
                     idx.docmap.select(

@@ -20,10 +20,11 @@ cluster in the loop —
   the bucket directories, parquet row-group ``term_id`` min/max stats
   prune within them (the builder writes each bucket sorted by term);
 * scoring: the SAME ``_bmw_group_fn`` scorer the cluster path runs
-  inside ``applyInPandas`` — identical block-max pruning, subgroup
-  sharding, tie-breaks — fed the identical columns from the pyarrow
-  read. Parity with ``search_serving`` is therefore structural, and
-  pinned end-to-end by ``tests/test_serve_local.py``.
+  inside ``applyInPandas`` — identical block bounds, block-max pruning
+  and tie-breaks — fed the identical block columns from the pyarrow
+  read, one group per query. Parity with ``search_serving`` is
+  therefore structural, and pinned end-to-end by
+  ``tests/test_serve_local.py``.
 
 Scope: weights-storage indexes (bm25 and tfidf — the stored weights
 are final either way) and RAW-storage bm25 indexes including pending
@@ -55,13 +56,14 @@ class LocalSearcher:
         serving: dict,
         manifest,
         prepared: set | None = None,
-        subgroup_cap: int = 1,
         tomb_src: str | None = None,
         cache_bytes: int = 128 << 20,
     ) -> None:
         import collections
 
         import pyarrow.dataset as ds
+
+        from neural_cherche_spark.query.bmw import _raw_cfg
 
         self.manifest = manifest
         self._serving = serving
@@ -79,25 +81,7 @@ class LocalSearcher:
         self._cache_cap = int(cache_bytes)
         self.cache_misses = 0  # dataset reads (introspection/tests)
         self.storage = manifest.cfg.get("storage", "weights")
-        if self.storage == "raw":
-            cfg = manifest.cfg
-            self._raw_cfg = (
-                float(cfg["k1"]), float(cfg["b"]),
-                float(cfg["epsilon"]), float(manifest.avgdl),
-                cfg.get("weighting", "bm25"),
-            )
-        else:
-            self._raw_cfg = None
-        # same power-of-two rounding as search_bmw (doc-disjointness
-        # needs n_groups | n_salts whenever n_salts > n_groups).
-        # DEFAULT 1 here (not the cluster's 32): subgroups exist to
-        # parallelize one query across executors, but this tier scores
-        # groups SEQUENTIALLY in-process — a split >1 only buys
-        # replicated decode of every low-salt term plus a doc_salt
-        # ownership mask over every posting (profiled at ~2x the
-        # single-group score cost). Results are identical either way
-        # (each subgroup is exact over a disjoint doc shard).
-        self.subgroup_cap = 1 << (max(1, subgroup_cap).bit_length() - 1)
+        self._raw_cfg = _raw_cfg(manifest)
         # dataset handle opened once: file listing + partition
         # discovery are per-searcher, not per-query
         self._ds = ds.dataset(postings_dir, format="parquet", partitioning="hive")
@@ -115,7 +99,6 @@ class LocalSearcher:
         cls,
         index,
         queries: list[str] | None = None,
-        subgroup_cap: int = 1,
         cache_bytes: int = 128 << 20,
     ) -> "LocalSearcher":
         """Open a searcher over a ``BM25Index`` handle's artifact.
@@ -143,7 +126,6 @@ class LocalSearcher:
             index._serving,
             index.manifest,
             prepared=index._serving_prepared,
-            subgroup_cap=subgroup_cap,
             tomb_src=index._tomb_src() if hasattr(index, "_tomb_src") else None,
             cache_bytes=cache_bytes,
         )
@@ -178,8 +160,8 @@ class LocalSearcher:
                     )
                 for t, sub in fresh.groupby("term_id", sort=False):
                     nb = int(payload[sub.index].sum()) + 512
-                    # hit counter 0: decoded arrays attach on the
-                    # third access (see _decoded)
+                    # this scan is the term's first access; decoded
+                    # arrays attach on its fourth (see _decoded)
                     self._cache[int(t)] = (sub, nb, 0)
                     self._cache_bytes += nb
                 while self._cache_bytes > self._cache_cap and self._cache:
@@ -195,11 +177,12 @@ class LocalSearcher:
 
     def _decoded(self, t: int) -> pd.DataFrame:
         """Cached rows of term ``t``, with pre-decoded posting arrays
-        attached on the THIRD access (two repeat hits mark the term
-        hot; decoding lazily keeps cold and lukewarm accesses exactly
-        as cheap as before — a benchmark whose terms repeat only once
-        pays nothing — and never pre-decodes blocks a rarely-seen
-        term's queries may skip).
+        attached on the term's FOURTH access — the scan that cached it
+        is the first, so the third cache hit decodes (two repeat hits
+        mark the term hot; decoding lazily keeps cold and lukewarm
+        accesses exactly as cheap as before — a benchmark whose terms
+        repeat only once pays nothing — and never pre-decodes blocks a
+        rarely-seen term's queries may skip).
 
         The decoded payload rides the cached frame as object columns
         (``__dd`` + ``__dw`` | ``__dtf``/``__ddl``) — one numpy array
@@ -301,9 +284,8 @@ class LocalSearcher:
         )
         if self.storage == "raw":
             cols = [
-                "term_id", "salt", "n_salts", "n", "first_doc",
-                "last_doc", "max_tf", "min_tf", "min_dl", "max_dl",
-                "docs", "tfs", "dls",
+                "term_id", "salt", "n", "first_doc", "last_doc",
+                "max_tf", "min_tf", "min_dl", "max_dl", "docs", "tfs", "dls",
             ]
         else:
             cols = [
@@ -341,10 +323,13 @@ class LocalSearcher:
         """Top-k per query → ``[[{"doc_id", "score", "rank"}, ...], ...]``
         (a single string returns the inner list directly).
 
-        One pyarrow read covers the batch's term union; scoring runs
-        the cluster scorer per (query, subgroup) in-process."""
+        One pyarrow read covers the batch's term union; each query is
+        then scored in-process as ONE group of the cluster scorer (the
+        Spark path's per-query subgroup split only buys parallelism
+        across executors)."""
         from neural_cherche_spark.query.bmw import (
             _bmw_group_fn,
+            _s_t,
             serving_match_rows,
         )
 
@@ -357,36 +342,28 @@ class LocalSearcher:
             score_group = _bmw_group_fn(
                 k, self._raw_cfg, tomb_src=self._tomb_src
             )
-            # per-query term info: (qtf, n_salts, s_t) keyed by term_id
-            per_q: list[dict[int, tuple[float, int, float]]] = [
+            # per-query term info: (qtf, s_t) keyed by term_id — s_t,
+            # the raw blocks' query-time scale, is unused for weights
+            per_q: list[dict[int, tuple[float, float]]] = [
                 {} for _ in qlist
             ]
             for r in rows:
-                # query-time per-term scale, raw storage only (weights
-                # bake idf·term_norm into the stored w at build time)
-                s_t = (
-                    float(r["idf"]) / float(r["term_norm"])
-                    if self.storage == "raw"
-                    else 0.0
-                )
+                s_t = _s_t(r) if self._raw_cfg is not None else 0.0
                 for q in r["qs"]:
                     per_q[int(q["query_id"])][int(r["term_id"])] = (
                         float(q["qtf"]),
-                        int(r["n_salts"]),
                         s_t,
                     )
             for qid, terms in enumerate(per_q):
-                if not terms:
-                    continue
-                res = self._score_one(pdf, terms, k, score_group)
-                out[qid] = res
+                if terms:
+                    out[qid] = self._score_one(pdf, terms, k, score_group)
         return out[0] if single else out
 
     # ------------------------------------------------------------------
     def _score_one(
         self,
         pdf: pd.DataFrame,
-        terms: dict[int, tuple[float, int, float]],
+        terms: dict[int, tuple[float, float]],
         k: int,
         score_group,
     ) -> list:
@@ -394,93 +371,24 @@ class LocalSearcher:
         if len(sub) == 0:
             return []
         tid = sub["term_id"].to_numpy(dtype=np.int64)
-        tmap_q = {t: v[0] for t, v in terms.items()}
-        qtf = np.array([tmap_q[t] for t in tid], dtype=np.float64)
-        n_groups = min(
-            max(int(v[1]) for v in terms.values()), self.subgroup_cap
-        )
-        raw = self.storage == "raw"
-        if raw:
-            # raw blocks: the salt layout of a delta-grown index can
-            # differ per segment — n_salts comes from the postings ROW
-            # (same rule as search_bmw's raw branch)
-            n_salts = sub["n_salts"].to_numpy(dtype=np.int64)
-        else:
-            tmap_s = {t: v[1] for t, v in terms.items()}
-            n_salts = np.array([tmap_s[t] for t in tid], dtype=np.int64)
-        # grp expansion — the local twin of search_bmw's CASE expr:
-        # low-salt blocks replicate across their residue class, finer-
-        # salted blocks map to exactly one subgroup
-        salt = sub["salt"].to_numpy(dtype=np.int64)
-        reps = np.where(n_salts <= n_groups, n_groups // n_salts, 1)
-        if int(reps.max(initial=1)) == 1:
-            # no block replication (always the case at subgroup_cap=1):
-            # skip the expansion copy entirely
-            idx = np.arange(len(sub))
-            base = sub.reset_index(drop=True).copy()
-            base["qtf"] = qtf
-            grp = np.where(n_salts <= n_groups, salt, salt % n_groups)
-        else:
-            # vectorized within-rep counter (the per-row np.arange list
-            # comprehension here was ~0.5 s over a 48-query profile)
-            cum = np.cumsum(reps)
-            idx = np.repeat(np.arange(len(sub)), reps)
-            m = np.arange(int(cum[-1])) - np.repeat(cum - reps, reps)
-            grp = np.where(
-                n_salts[idx] <= n_groups,
-                salt[idx] + m * n_salts[idx],
-                salt[idx] % n_groups,
+        group = sub.reset_index(drop=True)
+        group["query_id"] = 0
+        group["qtf"] = np.array([terms[t][0] for t in tid], dtype=np.float64)
+        if self._raw_cfg is not None:
+            group["s_t"] = np.array(
+                [terms[t][1] for t in tid], dtype=np.float64
             )
-            base = sub.iloc[idx].reset_index(drop=True).copy()
-            base["qtf"] = qtf[idx]
-        base["grp"] = grp
-        base["n_groups"] = n_groups
-        base["query_id"] = 0
-        if raw:
-            # block score bounds from tf/dl extrema — the numpy twin of
-            # search_bmw's w1_hi/w1_lo columns, same f64 margins
-            from neural_cherche_spark.index.codec import bm25_w1
-
-            k1, b, eps, avgdl = self._raw_cfg[:4]
-            tmap_st = {t: v[2] for t, v in terms.items()}
-            s_t = np.array([tmap_st[t] for t in tid], dtype=np.float64)[idx]
-            w1_hi = (
-                bm25_w1(
-                    sub["max_tf"].to_numpy(dtype=np.float64)[idx],
-                    sub["min_dl"].to_numpy(dtype=np.float64)[idx],
-                    k1, b, avgdl, eps,
-                )
-                * (1.0 + 1e-9) + 1e-12
-            )
-            w1_lo = np.maximum(
-                0.0,
-                bm25_w1(
-                    sub["min_tf"].to_numpy(dtype=np.float64)[idx],
-                    sub["max_dl"].to_numpy(dtype=np.float64)[idx],
-                    k1, b, avgdl, eps,
-                )
-                * (1.0 - 1e-9) - 1e-12,
-            )
-            pos = s_t >= 0
-            base["s_t"] = s_t
-            base["max_w"] = np.where(pos, s_t * w1_hi, s_t * w1_lo)
-            base["min_w"] = np.where(pos, s_t * w1_lo, s_t * w1_hi)
-        parts = []
-        for _, g in base.groupby("grp", sort=False):
-            r = score_group(g.reset_index(drop=True))
-            if len(r):
-                parts.append(r)
-        if not parts:
+        res = score_group(group)
+        if not len(res):
             return []
-        allr = pd.concat(parts, ignore_index=True)
         # final rank: same tie-break as the cluster window
         order = np.lexsort(
-            (allr["doc_id"].to_numpy(), -allr["score"].to_numpy())
+            (res["doc_id"].to_numpy(), -res["score"].to_numpy())
         )[:k]
         return [
             {
-                "doc_id": int(allr["doc_id"].iloc[i]),
-                "score": float(allr["score"].iloc[i]),
+                "doc_id": int(res["doc_id"].iloc[i]),
+                "score": float(res["score"].iloc[i]),
                 "rank": rank + 1,
             }
             for rank, i in enumerate(order)

@@ -37,6 +37,11 @@ def inner(cpus: int, n_docs: int, n_queries: int, out_json: str) -> None:
     from neural_cherche_spark.session import get_spark
     from neural_cherche_spark.data import synth_queries
     from neural_cherche_spark.index.builder import build_index
+    from neural_cherche_spark.query.bmw import (
+        search_auto,
+        search_bmw,
+        search_distributed,
+    )
     from neural_cherche_spark.text.ngrams import ngram_terms_column
 
     # shuffle partitions FIXED across parallelism levels: the logical
@@ -109,7 +114,7 @@ def inner(cpus: int, n_docs: int, n_queries: int, out_json: str) -> None:
     # shared host shows ±40% spread on sub-60 s walls, and first-call
     # JIT/Python-worker startup otherwise lands inside one level's
     # measurement but not the other's
-    index.search(sel_queries.limit(8), k=10, mode="auto").collect()
+    search_auto(index, sel_queries.limit(8), k=10).collect()
 
     def best_of_2(fn) -> float:
         walls = []
@@ -120,13 +125,13 @@ def inner(cpus: int, n_docs: int, n_queries: int, out_json: str) -> None:
         return min(walls)
 
     timings["distributed"] = best_of_2(
-        lambda: index.search(queries, k=10, mode="distributed").collect()
+        lambda: search_distributed(index, queries, k=10).collect()
     )
     timings["auto"] = best_of_2(
-        lambda: index.search(queries, k=10, mode="auto").collect()
+        lambda: search_auto(index, queries, k=10).collect()
     )
     timings["bmw"] = best_of_2(
-        lambda: index.search(sel_queries, k=10, mode="bmw").collect()
+        lambda: search_bmw(index, sel_queries, k=10).collect()
     )
 
     out = {

@@ -29,6 +29,7 @@ WORK = "/dev/shm/bench_scale"
 def inner(cpus: int, idx_dir: str, n_queries: int, out_json: str) -> None:
     sys.path.insert(0, REPO)
     from neural_cherche_spark.index.builder import BM25Index
+    from neural_cherche_spark.query import bmw
     from neural_cherche_spark.session import get_spark
     from neural_cherche_spark.data import synth_queries
 
@@ -46,14 +47,14 @@ def inner(cpus: int, idx_dir: str, n_queries: int, out_json: str) -> None:
     index = BM25Index(spark, idx_dir)
     queries = synth_queries(spark, n_queries, seed=123).cache()
     queries.count()
-    index.search(queries.limit(8), k=10, mode="auto").collect()  # warmup
+    bmw.search_auto(index, queries.limit(8), k=10).collect()  # warmup
 
     timings = {}
     for mode in ("auto", "distributed"):
         walls = []
         for _ in range(2):
             t0 = time.perf_counter()
-            index.search(queries, k=10, mode=mode).collect()
+            getattr(bmw, f"search_{mode}")(index, queries, k=10).collect()
             walls.append(time.perf_counter() - t0)
         timings[mode] = min(walls)
 

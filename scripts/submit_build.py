@@ -40,6 +40,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from neural_cherche_spark.index.builder import build_index
+    from neural_cherche_spark.query import bmw
 
     docs = spark.read.parquet(args.input)
     n = docs.count()
@@ -66,7 +67,7 @@ def main() -> None:
         [(i, r["w"]) for i, r in enumerate(rare)], "query_id long, query string"
     )
     t0 = time.perf_counter()
-    n_res = index.search(queries, k=args.k, mode=args.mode).count()
+    n_res = getattr(bmw, f"search_{args.mode}")(index, queries, k=args.k).count()
     query_s = time.perf_counter() - t0
 
     print(

@@ -2,7 +2,20 @@ from __future__ import annotations
 
 import pytest
 
+from neural_cherche_spark.query.bmw import (
+    search_auto,
+    search_bmw,
+    search_distributed,
+)
 from neural_cherche_spark.session import get_spark
+
+# The query router and its two strategies, keyed by the names that
+# strategy-parameterized tests use as their ids.
+STRATEGIES = {
+    "auto": search_auto,
+    "bmw": search_bmw,
+    "distributed": search_distributed,
+}
 
 
 @pytest.fixture(scope="session")

@@ -1,6 +1,6 @@
 """Compressed-index build + BMW/distributed query paths.
 
-Rank-identity contract: every query mode over the compressed float32
+Rank-identity contract: every query strategy over the compressed float32
 index must produce the same ranking (tie-sets) as the exact
 double-precision join+agg path, and the same as the numpy reference
 oracle.
@@ -18,7 +18,7 @@ from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index import bm25_weights
 from neural_cherche_spark.index.builder import build_index, BM25Index
 from neural_cherche_spark.query import retrieve_exact
-from tests.conftest import assert_rank_identical
+from tests.conftest import STRATEGIES, assert_rank_identical
 
 
 @pytest.fixture(scope="module")
@@ -72,9 +72,9 @@ def test_auto_mode_routes_and_stays_exact(index, queries, exact_topk):
         assert_rank_identical(got[qid], exact_topk[qid], rtol=2e-3)
 
 
-@pytest.mark.parametrize("mode", ["distributed", "bmw"])
-def test_index_search_rank_identical_to_exact(index, queries, exact_topk, mode):
-    got = _collect_topk(index.search(queries, k=10, mode=mode))
+@pytest.mark.parametrize("strategy", ["distributed", "bmw"])
+def test_index_search_rank_identical_to_exact(index, queries, exact_topk, strategy):
+    got = _collect_topk(STRATEGIES[strategy](index, queries, k=10))
     assert set(got) == set(exact_topk)
     for qid in exact_topk:
         # float32 stored weights vs double exact path → 1e-3 score slack;

@@ -1,5 +1,5 @@
 """Raw-storage index (per-posting tf+dl, query-time weights): every
-query mode must be rank-identical to the exact double-precision
+query strategy must be rank-identical to the exact double-precision
 DataFrame path — and score-identical to ~f64 rounding, since raw mode
 never stores f32 weights."""
 
@@ -12,7 +12,7 @@ from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index import bm25_weights
 from neural_cherche_spark.index.builder import build_index
 from neural_cherche_spark.query import retrieve_exact
-from tests.conftest import assert_rank_identical
+from tests.conftest import STRATEGIES, assert_rank_identical
 
 
 @pytest.fixture(scope="module")
@@ -54,9 +54,9 @@ def _collect_topk(df):
     return out
 
 
-@pytest.mark.parametrize("mode", ["distributed", "bmw", "auto"])
-def test_raw_search_matches_exact_f64(raw_index, queries, exact_topk, mode):
-    got = _collect_topk(raw_index.search(queries, k=10, mode=mode))
+@pytest.mark.parametrize("strategy", ["distributed", "bmw", "auto"])
+def test_raw_search_matches_exact_f64(raw_index, queries, exact_topk, strategy):
+    got = _collect_topk(STRATEGIES[strategy](raw_index, queries, k=10))
     assert set(got) == set(exact_topk)
     for qid in exact_topk:
         # both sides are f64 end-to-end; only agg-order ulps remain
@@ -91,7 +91,7 @@ def test_raw_serving_path_matches_exact(spark, raw_index, queries, exact_topk):
         for r in sorted(queries.collect(), key=lambda r: r["query_id"])
     ]
     raw_index.prepare_serving()
-    got = _collect_topk(raw_index.search_serving(qtexts, k=10, mode="bmw"))
+    got = _collect_topk(raw_index.search_serving(qtexts, k=10))
     assert set(got) == set(exact_topk)
     for qid in exact_topk:
         assert_rank_identical(got[qid], exact_topk[qid], rtol=1e-9)
@@ -148,9 +148,7 @@ def test_prepare_serving_vocab_filtered(raw_index, queries, exact_topk):
     try:
         # capped memory: ≤ the workload's grams, not the corpus vocab
         assert len(raw_index._serving) <= len(grams) < full_vocab
-        got = _collect_topk(
-            raw_index.search_serving(qtexts, k=10, mode="bmw")
-        )
+        got = _collect_topk(raw_index.search_serving(qtexts, k=10))
         assert set(got) == set(exact_topk)
         for qid in exact_topk:
             assert_rank_identical(got[qid], exact_topk[qid], rtol=1e-9)
@@ -159,3 +157,51 @@ def test_prepare_serving_vocab_filtered(raw_index, queries, exact_topk):
     finally:
         raw_index._serving = None
         raw_index._serving_prepared = None
+
+
+@pytest.mark.parametrize(
+    "kw", [{"k1": -0.1}, {"b": -0.01}, {"b": 1.5}, {"k1": float("nan")}]
+)
+def test_bm25_config_rejects_out_of_domain(kw):
+    """Block bounds and the idf-sign whole-query prune assume w1 - ε ≥ 0,
+    which needs k1 ≥ 0 and 0 ≤ b ≤ 1."""
+    from neural_cherche_spark.index import BM25Config
+
+    with pytest.raises(ValueError, match="BM25Config"):
+        BM25Config(**kw)
+    BM25Config(k1=0.0, b=0.0)
+    BM25Config(b=1.0)
+
+
+def test_raw_negative_epsilon_matches_reference(spark, tmp_path):
+    """ε < 0 makes some w1 negative: the raw block bounds (low end
+    floored at ε, not 0) must stay sound, so the block-max path and
+    the Spark-free searcher both return the reference top-k."""
+    from neural_cherche_spark.index import BM25Config
+    from neural_cherche_spark.local import ReferenceBM25
+    from neural_cherche_spark.query.bmw import search_bmw
+    from neural_cherche_spark.serve import LocalSearcher
+
+    docs = synth_webtext(spark, 200, seed=11).select("url", "text")
+    rows = sorted(docs.collect(), key=lambda r: r["url"])
+    pdocs = [(i, r["text"]) for i, r in enumerate(rows)]
+    qdf = synth_queries(spark, 20, seed=3)
+    qtexts = [r["query"] for r in qdf.orderBy("query_id").collect()]
+    oracle = ReferenceBM25(epsilon=-0.5)
+    oracle.add([i for i, _ in pdocs], [t for _, t in pdocs])
+    expected = [
+        [(d["key"], d["similarity"]) for d in row]
+        for row in oracle(qtexts, k=10)
+    ]
+    idx = build_index(
+        spark, spark.createDataFrame(pdocs, "doc_id long, text string"),
+        str(tmp_path / "raw"), id_col="doc_id", n_buckets=8,
+        salt_every=50, storage="raw", cfg=BM25Config(epsilon=-0.5),
+    )
+    got_bmw = _collect_topk(search_bmw(idx, qdf, k=10))
+    local = LocalSearcher.from_index(idx).search(qtexts, k=10)
+    # rtol 1e-3: the reference is float32 (see test_exact_pipeline)
+    for qid, want in enumerate(expected):
+        assert_rank_identical(got_bmw.get(qid, []), want, rtol=1e-3)
+        got_local = [(d["doc_id"], d["score"]) for d in local[qid]]
+        assert_rank_identical(got_local, want, rtol=1e-3)

@@ -15,7 +15,7 @@ from neural_cherche_spark.index import tfidf_weights
 from neural_cherche_spark.index.builder import build_index
 from neural_cherche_spark.query.exact import query_term_counts
 from neural_cherche_spark.streaming import CompressedIndexStream
-from tests.conftest import assert_rank_identical, assert_same_artifacts
+from tests.conftest import STRATEGIES, assert_rank_identical, assert_same_artifacts
 
 
 @pytest.fixture(scope="module")
@@ -81,11 +81,11 @@ def _collect_topk(df):
     return out
 
 
-@pytest.mark.parametrize("mode", ["distributed", "bmw", "auto"])
-def test_tfidf_raw_matches_exact(raw_index, queries, exact_topk, mode):
+@pytest.mark.parametrize("strategy", ["distributed", "bmw", "auto"])
+def test_tfidf_raw_matches_exact(raw_index, queries, exact_topk, strategy):
     # bmw/auto route to the bulk path (per-block norm minima go stale
-    # every refresh) — all three modes must agree with exact cosine
-    got = _collect_topk(raw_index.search(queries, k=10, mode=mode))
+    # every refresh) — all three strategies must agree with exact cosine
+    got = _collect_topk(STRATEGIES[strategy](raw_index, queries, k=10))
     assert set(got) == set(exact_topk)
     for qid in exact_topk:
         assert_rank_identical(got[qid], exact_topk[qid], rtol=1e-9)
@@ -104,7 +104,7 @@ def test_tfidf_raw_serving_matches_exact(raw_index, queries, exact_topk):
         for r in sorted(queries.collect(), key=lambda r: r["query_id"])
     ]
     raw_index.prepare_serving()
-    got = _collect_topk(raw_index.search_serving(qtexts, k=10, mode="bmw"))
+    got = _collect_topk(raw_index.search_serving(qtexts, k=10))
     assert set(got) == set(exact_topk)
     for qid in exact_topk:
         assert_rank_identical(got[qid], exact_topk[qid], rtol=1e-9)

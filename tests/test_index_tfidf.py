@@ -1,4 +1,4 @@
-"""TfIdf-weighted compressed index: every query mode must be
+"""TfIdf-weighted compressed index: every query strategy must be
 rank-identical to the exact DataFrame TfIdf path (reference
 retrieve.TfIdf cosine semantics), and pruning must actually run
 (tfidf weights are all non-negative)."""
@@ -12,7 +12,7 @@ from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index import tfidf_weights
 from neural_cherche_spark.index.builder import build_index
 from neural_cherche_spark.query.exact import query_term_counts, top_k
-from tests.conftest import assert_rank_identical
+from tests.conftest import STRATEGIES, assert_rank_identical
 
 
 @pytest.fixture(scope="module")
@@ -65,10 +65,10 @@ def exact_topk(spark, corpus, queries):
     return out
 
 
-@pytest.mark.parametrize("mode", ["bmw", "distributed", "auto"])
-def test_tfidf_index_rank_identical_to_exact(index, queries, exact_topk, mode):
+@pytest.mark.parametrize("strategy", ["bmw", "distributed", "auto"])
+def test_tfidf_index_rank_identical_to_exact(index, queries, exact_topk, strategy):
     got: dict[int, list] = {}
-    res = index.search(queries, k=10, mode=mode)
+    res = STRATEGIES[strategy](index, queries, k=10)
     for r in sorted(res.collect(), key=lambda r: (r["query_id"], r["rank"])):
         got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     assert set(got) == set(exact_topk)

@@ -49,15 +49,14 @@ def test_postings_scan_prunes_buckets_and_terms(spark, corpus, tmp_path):
     """Query-side postings scan must push term_id filters into parquet
     and prune bucket partition directories."""
     from neural_cherche_spark.index.builder import build_index
-    from neural_cherche_spark.query.bmw import _pruned_postings, _query_terms
+    from neural_cherche_spark.query.bmw import _matched_terms, _postings_for
 
     idx = build_index(
         spark, corpus, str(tmp_path / "idx"), id_col="doc_id",
         n_buckets=8, salt_every=50,
     )
     queries = synth_queries(spark, 3, seed=4)
-    qterms = _query_terms(idx, queries)
-    scan = _pruned_postings(idx, qterms)
+    scan = _postings_for(idx, _matched_terms(idx, queries))
     plan = _plan(scan)
     assert "PushedFilters: [" in plan and "term_id" in plan
     assert "PartitionFilters" in plan and "bucket" in plan
@@ -202,13 +201,14 @@ def test_tfidf_raw_search_joins_candidates_not_postings(spark, corpus, tmp_path)
     must show the norm join above the score aggregation, with exactly
     one Python (decode) stage below it."""
     from neural_cherche_spark.index.builder import build_index
+    from neural_cherche_spark.query.bmw import search_bmw
 
     idx = build_index(
         spark, corpus, str(tmp_path / "idx"), id_col="doc_id",
         n_buckets=8, salt_every=50, weighting="tfidf", storage="raw",
     )
     queries = synth_queries(spark, 3, seed=4)
-    res = idx.search(queries, k=5, mode="bmw")  # routes to bulk path
+    res = search_bmw(idx, queries, k=5)
     plan = _plan(res)
     # exactly one Python stage: the block decode mapInPandas
     assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") <= 1

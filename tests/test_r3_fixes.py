@@ -12,8 +12,9 @@ from pyspark.sql import functions as F
 
 from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index.builder import BM25Index, build_index
-from neural_cherche_spark.query.bmw import search_bmw, search_index
+from neural_cherche_spark.query.bmw import search_bmw, serving_match_rows
 from neural_cherche_spark.streaming import CompressedIndexStream
+from tests.conftest import STRATEGIES
 
 
 @pytest.fixture(scope="module")
@@ -38,7 +39,17 @@ def _res(df):
 def test_v1_manifest_routes_bmw_to_distributed(spark, built):
     idx, d = built
     queries = synth_queries(spark, 5, seed=7)
-    want = _res(search_index(idx, queries, k=10, mode="distributed"))
+    want = _res(STRATEGIES["distributed"](idx, queries, k=10))
+    qtexts = [
+        r["query"] for r in sorted(queries.collect(), key=lambda r: r["query_id"])
+    ]
+    idx.prepare_serving()
+    want_serving = _res(
+        STRATEGIES["distributed"](
+            idx, None, k=10, _rows=serving_match_rows(idx, qtexts)
+        )
+    )
+    idx._serving = None
 
     mp = os.path.join(d, "manifest.json")
     with open(mp) as f:
@@ -49,12 +60,15 @@ def test_v1_manifest_routes_bmw_to_distributed(spark, built):
     try:
         old = BM25Index(spark, d)
         assert not old.salt_layout_ok
-        # direct bmw call refuses; search_index / auto fall back to the
-        # salt-agnostic distributed path with identical results
+        # direct bmw call refuses; the router falls back to the
+        # salt-agnostic distributed path with identical results — for
+        # DataFrame queries and for the serving path's match rows
         with pytest.raises(ValueError, match="doc_salt"):
             search_bmw(old, queries, k=10)
-        assert _res(search_index(old, queries, k=10, mode="bmw")) == want
-        assert _res(search_index(old, queries, k=10, mode="auto")) == want
+        assert _res(old.search(queries, k=10)) == want
+        assert _res(STRATEGIES["auto"](old, queries, k=10)) == want
+        old.prepare_serving()
+        assert _res(old.search_serving(qtexts, k=10)) == want_serving
         old.close()
     finally:
         m["version"] = 2
@@ -98,7 +112,9 @@ def test_sparse_embed_keeps_empty_intersection_candidates(spark):
 def test_serving_path_matches_and_runs_fewer_jobs(spark, built):
     """prepare_serving + search_serving: identical results to the
     DataFrame path, with strictly fewer Spark jobs per call (the match
-    rows are built driver-side — no qterms⋈termdict job)."""
+    rows are built in Python — no qterms⋈termdict job). Checked for
+    the router (search vs search_serving) and for each strategy fed
+    the serving match rows."""
     idx, _ = built
     qrows = synth_queries(spark, 6, seed=7).collect()
     qtexts = [r["query"] for r in sorted(qrows, key=lambda r: r["query_id"])]
@@ -108,16 +124,29 @@ def test_serving_path_matches_and_runs_fewer_jobs(spark, built):
     sc = spark.sparkContext
 
     idx.prepare_serving()
-    for mode in ("bmw", "distributed", "auto"):
-        sc.setJobGroup(f"df-{mode}", "df path")
-        want = _res(search_index(idx, qdf, k=10, mode=mode))
-        sc.setJobGroup(f"serve-{mode}", "serving path")
-        got = _res(idx.search_serving(qtexts, k=10, mode=mode))
+    paths = {
+        "router": (
+            lambda: idx.search(qdf, k=10),
+            lambda: idx.search_serving(qtexts, k=10),
+        )
+    }
+    for name, fn in STRATEGIES.items():
+        paths[name] = (
+            lambda fn=fn: fn(idx, qdf, k=10),
+            lambda fn=fn: fn(
+                idx, None, k=10, _rows=serving_match_rows(idx, qtexts)
+            ),
+        )
+    for name, (df_path, serve_path) in paths.items():
+        sc.setJobGroup(f"df-{name}", "df path")
+        want = _res(df_path())
+        sc.setJobGroup(f"serve-{name}", "serving path")
+        got = _res(serve_path())
         sc.setJobGroup("", "")
-        assert got == want, mode
-        n_df = len(sc.statusTracker().getJobIdsForGroup(f"df-{mode}"))
-        n_serve = len(sc.statusTracker().getJobIdsForGroup(f"serve-{mode}"))
-        assert n_serve < n_df, (mode, n_serve, n_df)
+        assert got == want, name
+        n_df = len(sc.statusTracker().getJobIdsForGroup(f"df-{name}"))
+        n_serve = len(sc.statusTracker().getJobIdsForGroup(f"serve-{name}"))
+        assert n_serve < n_df, (name, n_serve, n_df)
     idx._serving = None
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index.builder import BM25Index, build_index
 from neural_cherche_spark.streaming import CompressedIndexStream
+from tests.conftest import STRATEGIES
 
 import pytest
 
@@ -35,10 +36,10 @@ def queries(spark):
     return synth_queries(spark, 8, seed=5)
 
 
-def _topk(index, queries, mode="bmw", k=10):
+def _topk(index, queries, strategy="bmw", k=10):
     return {
         (r["query_id"], r["doc_id"], r["rank"], round(r["score"], 9))
-        for r in index.search(queries, k=k, mode=mode).collect()
+        for r in STRATEGIES[strategy](index, queries, k=k).collect()
     }
 
 
@@ -96,8 +97,8 @@ def test_fully_tombstoned_new_batch_refresh(spark, corpus, queries, tmp_path):
         n_buckets=8, salt_every=50, storage="raw",
     )
     assert idx.manifest.n_docs == fresh.manifest.n_docs
-    for mode in ("bmw", "distributed"):
-        assert _topk(idx, queries, mode) == _topk(fresh, queries, mode), mode
+    for strategy in ("bmw", "distributed"):
+        assert _topk(idx, queries, strategy) == _topk(fresh, queries, strategy), strategy
 
 
 def test_docmap_excludes_tombstoned(spark, corpus, queries, tmp_path):

@@ -16,6 +16,7 @@ import pytest
 
 from neural_cherche_spark.index.build import BM25Config
 from neural_cherche_spark.index.builder import build_index
+from tests.conftest import STRATEGIES
 
 
 def _corpus(spark, texts: list[str]):
@@ -41,7 +42,10 @@ def test_text_change_invalidates_resume(spark, tmp_path):
 
     # the rebuilt index must reflect the NEW corpus
     q = spark.createDataFrame([(0, "polar")], "query_id long, query string")
-    hits = {r["doc_id"] for r in idx2.search(q, k=5, mode="distributed").collect()}
+    hits = {
+        r["doc_id"]
+        for r in STRATEGIES["distributed"](idx2, q, k=5).collect()
+    }
     assert hits == {2}
 
 

@@ -24,8 +24,8 @@ def corpus(spark):
 @pytest.fixture(scope="module")
 def index(spark, corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("srv") / "bm25")
-    # tiny salt_every so head grams are salted and the subgroup
-    # machinery actually engages in the local scorer
+    # tiny salt_every so head grams are salted: the local scorer sees
+    # multi-run terms, as the cluster path does
     return build_index(
         spark, corpus, d, id_col="doc_id", n_buckets=8, salt_every=50
     )
@@ -159,6 +159,20 @@ def test_hot_term_cache(index, qtexts):
     # a different query with disjoint grams scans again
     srv.search(qtexts[1], k=5)
     assert srv.cache_misses >= misses_after_first
+
+    # a cached term's pre-decoded arrays (``__dd``) attach on its
+    # FOURTH access: the scan that caches it is the first, and the
+    # third cache hit decodes; answers never change along the way
+    srv = LocalSearcher.from_index(index)
+    assert srv.search(qtexts[0], k=5) == first
+    terms = list(srv._cache)
+    assert terms
+    for access in (2, 3, 4):
+        decoded = ["__dd" in srv._cache[t][0].columns for t in terms]
+        assert not any(decoded), access
+        assert srv.search(qtexts[0], k=5) == first
+    assert all("__dd" in srv._cache[t][0].columns for t in terms)
+    assert srv.cache_misses == 1
 
 
 def test_cache_disabled_and_eviction(index, qtexts):

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from neural_cherche_spark.index.builder import BM25Index
 from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.streaming import CompressedIndexStream
+from tests.conftest import STRATEGIES
 
 
 @pytest.fixture(scope="module")
@@ -34,17 +35,17 @@ def queries(spark):
     return synth_queries(spark, 10, seed=3)
 
 
-def _topk(index, queries, mode="bmw"):
+def _topk(index, queries, strategy="bmw"):
     return {
         (r["query_id"], r["doc_id"], r["rank"], round(r["score"], 9))
-        for r in index.search(queries, k=10, mode=mode).collect()
+        for r in STRATEGIES[strategy](index, queries, k=10).collect()
     }
 
 
 def test_orphan_segment_is_invisible(spark, corpus, queries, tmp_path):
     """Simulated crash: a seg dir present on disk but absent from the
     manifest (refresh died before its manifest save) must not affect
-    results in any mode — reads follow the committed segment list."""
+    results under any strategy — reads follow the committed segment list."""
     stream = CompressedIndexStream(spark, str(tmp_path / "state"))
     idx_dir = str(tmp_path / "idx")
     stream.add_batch(corpus, epoch_id=0)

@@ -1,6 +1,6 @@
 """Incremental compressed-index maintenance (streaming/compressed.py):
 a stream of batches followed by materialize() must produce an index
-whose every query mode returns the SAME results as a from-scratch
+whose every query strategy returns the SAME results as a from-scratch
 build_index over the union corpus (round-1 VERDICT next-steps #9)."""
 
 from __future__ import annotations
@@ -14,6 +14,7 @@ from neural_cherche_spark.streaming import (
     CompressedIndexStream,
     stream_build_compressed,
 )
+from tests.conftest import STRATEGIES
 
 
 @pytest.fixture(scope="module")
@@ -24,10 +25,10 @@ def corpus(spark):
     return spark.createDataFrame(pdocs, "doc_id long, url string, text string")
 
 
-def _results(index, queries, mode):
+def _results(index, queries, strategy):
     return {
         (r["query_id"], r["doc_id"], round(r["score"], 6), r["rank"])
-        for r in index.search(queries, k=10, mode=mode).collect()
+        for r in STRATEGIES[strategy](index, queries, k=10).collect()
     }
 
 
@@ -53,8 +54,10 @@ def test_materialized_stream_matches_fresh_build(spark, corpus, tmp_path):
     assert inc.manifest.n_terms == fresh.manifest.n_terms
 
     queries = synth_queries(spark, 10, seed=21)
-    for mode in ("bmw", "distributed"):
-        assert _results(inc, queries, mode) == _results(fresh, queries, mode)
+    for strategy in ("bmw", "distributed"):
+        assert _results(inc, queries, strategy) == _results(
+            fresh, queries, strategy
+        )
 
 
 def test_materialize_resume_skips_when_state_unchanged(spark, corpus, tmp_path):
@@ -95,9 +98,9 @@ def test_stream_wire_accumulates_batches(spark, corpus, tmp_path):
     assert idx.manifest.n_docs == 60
 
 
-def _topk_lists(index, queries, mode):
+def _topk_lists(index, queries, strategy):
     out: dict[int, list] = {}
-    rows = index.search(queries, k=10, mode=mode).collect()
+    rows = STRATEGIES[strategy](index, queries, k=10).collect()
     for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
         out.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     return out
@@ -152,9 +155,9 @@ def test_delta_materialize_appends_segments_and_matches_fresh_raw(
     one_idx.close()
 
     queries = synth_queries(spark, 10, seed=21)
-    for mode in ("bmw", "distributed"):
-        got = _topk_lists(idx, queries, mode)
-        want = _topk_lists(fresh, queries, mode)
+    for strategy in ("bmw", "distributed"):
+        got = _topk_lists(idx, queries, strategy)
+        want = _topk_lists(fresh, queries, strategy)
         assert set(got) == set(want)
         for qid in want:
             assert_rank_identical(got[qid], want[qid], rtol=1e-9)

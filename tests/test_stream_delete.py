@@ -1,7 +1,7 @@
 """Document DELETE support (round-4, beyond-reference — the reference
 CSR accumulator only grows): delete_batch → exact ledger subtraction +
 tombstone masking over immutable segments; compact() is the physical
-GC. Every mode must equal a fresh build over the remaining docs."""
+GC. Every strategy must equal a fresh build over the remaining docs."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index.builder import build_index
 from neural_cherche_spark.streaming import CompressedIndexStream
+from tests.conftest import STRATEGIES
 
 
 @pytest.fixture(scope="module")
@@ -29,10 +30,10 @@ def queries(spark):
 DELETED = [i for i in range(300) if i % 7 == 3]
 
 
-def _topk(index, queries, mode="bmw", k=10):
+def _topk(index, queries, strategy="bmw", k=10):
     return {
         (r["query_id"], r["doc_id"], r["rank"], round(r["score"], 9))
-        for r in index.search(queries, k=k, mode=mode).collect()
+        for r in STRATEGIES[strategy](index, queries, k=k).collect()
     }
 
 
@@ -61,8 +62,10 @@ def test_delete_masks_exactly_like_fresh_build(
     # ledger, idf/term_norm exclude deleted docs' tf
     assert idx.manifest.n_docs == fresh.manifest.n_docs
     assert abs(idx.manifest.avgdl - fresh.manifest.avgdl) < 1e-9
-    for mode in ("bmw", "distributed", "auto"):
-        assert _topk(idx, queries, mode) == _topk(fresh, queries, mode), mode
+    for strategy in ("bmw", "distributed", "auto"):
+        assert _topk(idx, queries, strategy) == _topk(
+            fresh, queries, strategy
+        ), strategy
 
     # deleted docs never surface even at k = corpus size
     got_ids = {

@@ -2,7 +2,7 @@
 #2): blocks carry per-posting tf and the FLOOR-QUANTIZED encode-time
 docnorm ρq in the dls stream (codec.DNORM_SCALE); per-segment γ drift
 factors in the manifest keep the normalized bounds sound across
-refreshes, so ``mode="bmw"`` prunes on tfidf raw indexes instead of
+refreshes, so ``search_bmw`` prunes on tfidf raw indexes instead of
 silently routing to the bulk path.
 
 Two layers:
@@ -24,16 +24,22 @@ from neural_cherche_spark.index.codec import (
     DNORM_SCALE,
     encode_partition_bulk_raw,
 )
-from neural_cherche_spark.query.bmw import _bmw_group_fn, _tfidf_raw_gammas
+from neural_cherche_spark.query.bmw import (
+    _bmw_group_fn,
+    _tfidf_raw_gammas,
+    search_bmw,
+)
 
 K = 5
 # k1/b/eps/avgdl are unused by the tfidf scorer branch
 TFIDF_RAW_CFG = (1.5, 0.75, 0.0, 10.0, "tfidf")
+# one segment with no norm drift: γ = (1, 1)
+GAMMAS = {0: (1.0, 1.0)}
 
 
 def _tfidf_block_frame(term_id, s_t, qtf, docs_t, tfs_t, rq_t, block_size=8):
-    """One term's raw blocks with the Spark-side bound columns the
-    tfidf branch of search_bmw computes (γ = 1 with the f64 margins)."""
+    """One term's raw blocks as search_bmw hands them to the scorer:
+    the stored block columns plus the query side (qtf, s_t)."""
     n = docs_t.size
     enc = encode_partition_bulk_raw(
         np.full(n, term_id, dtype=np.int64),
@@ -44,7 +50,6 @@ def _tfidf_block_frame(term_id, s_t, qtf, docs_t, tfs_t, rq_t, block_size=8):
         np.ones(n, dtype=np.int64),
         block_size=block_size,
     )
-    glo, ghi = 1.0 - 1e-9, 1.0 + 1e-9
     return pd.DataFrame(
         {
             "term_id": enc["term_id"],
@@ -52,13 +57,11 @@ def _tfidf_block_frame(term_id, s_t, qtf, docs_t, tfs_t, rq_t, block_size=8):
             "n": enc["n"],
             "qtf": qtf,
             "s_t": s_t,
-            "max_w": s_t
-            * enc["max_tf"].astype(np.float64)
-            * DNORM_SCALE
-            / (enc["min_dl"].astype(np.float64) * glo),
-            "min_w": 0.0,
-            "glo": glo,
-            "ghi": ghi,
+            "max_tf": enc["max_tf"],
+            "min_tf": enc["min_tf"],
+            "min_dl": enc["min_dl"],
+            "max_dl": enc["max_dl"],
+            "seg": 0,
             "first_doc": enc["first_doc"],
             "last_doc": enc["last_doc"],
             "docs": enc["docs"],
@@ -121,7 +124,7 @@ def test_tfidf_group_fn_matches_brute_force(seed):
     pdf["query_id"] = 7
     pdf["grp"] = 0
     pdf["n_groups"] = 1
-    out = _bmw_group_fn(K, TFIDF_RAW_CFG)(pdf)
+    out = _bmw_group_fn(K, TFIDF_RAW_CFG, gammas=GAMMAS)(pdf)
     assert _finalize([out], dnorm) == _brute_topk(truth), f"seed={seed}"
 
 
@@ -153,7 +156,7 @@ def test_tfidf_group_fn_skips_blocks_on_skew():
     pdf["n_groups"] = 1
     n_blocks = len(pdf)
     stats: dict = {}
-    out = _bmw_group_fn(K, TFIDF_RAW_CFG, _stats=stats)(pdf)
+    out = _bmw_group_fn(K, TFIDF_RAW_CFG, _stats=stats, gammas=GAMMAS)(pdf)
     assert _finalize([out], dnorm) == _brute_topk(truth)
     assert stats["decoded"] < 0.25 * n_blocks, (stats, n_blocks)
 
@@ -226,14 +229,14 @@ def test_missing_gamma_routes_to_bulk(spark, corpus, tmp_path):
 
     stream, idx = _stream_two_batches(spark, corpus, tmp_path)
     assert _tfidf_raw_gammas(idx) is not None
-    baseline = idx.search(synth_queries(spark, 5, seed=3), k=10, mode="bmw")
+    baseline = search_bmw(idx, synth_queries(spark, 5, seed=3), k=10)
     base_rows = sorted(
         (r["query_id"], r["rank"], r["doc_id"]) for r in baseline.collect()
     )
     # strip seg 1's entry → router must refuse block-max
     del idx.manifest.dnorm_gammas["1"]
     assert _tfidf_raw_gammas(idx) is None
-    fallback = idx.search(synth_queries(spark, 5, seed=3), k=10, mode="bmw")
+    fallback = search_bmw(idx, synth_queries(spark, 5, seed=3), k=10)
     fb_rows = sorted(
         (r["query_id"], r["rank"], r["doc_id"]) for r in fallback.collect()
     )

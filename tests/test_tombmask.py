@@ -21,6 +21,7 @@ from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index import tombmask
 from neural_cherche_spark.index.builder import build_index
 from neural_cherche_spark.streaming import CompressedIndexStream
+from tests.conftest import STRATEGIES
 
 
 # ---------------------------------------------------------------------------
@@ -114,14 +115,14 @@ def test_seg_partitioned_publish_and_lazy_load(spark, corpus, tmp_path):
     e = next(iter(tombmask._CACHE.values()))
     assert e["segs"] == {} and e["all"] is None
 
-    # end-to-end: every mode still hides the deleted docs
+    # end-to-end: every strategy still hides the deleted docs
     queries = synth_queries(spark, 6, seed=5)
-    for mode in ("bmw", "distributed"):
+    for strategy in ("bmw", "distributed"):
         got = {
             r["doc_id"]
-            for r in idx.search(queries, k=240, mode=mode).collect()
+            for r in STRATEGIES[strategy](idx, queries, k=240).collect()
         }
-        assert not (got & set(deleted)), mode
+        assert not (got & set(deleted)), strategy
 
 
 # ---------------------------------------------------------------------------
