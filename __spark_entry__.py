@@ -222,8 +222,8 @@ def _entry_index(spark: SparkSession, sf_dir: str):
         id_col="doc_id",
         n_buckets=8,
         # low salt_every so head grams ARE salted at sf0.01 — the
-        # correctness gate then covers the salted runs + the BMW
-        # subgroup split, not just the trivial single-salt layout
+        # correctness gate then covers multi-run (term, salt) block
+        # bounds, not just the trivial single-salt layout
         salt_every=50,
     )
 

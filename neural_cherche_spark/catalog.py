@@ -27,16 +27,13 @@ from dataclasses import asdict, dataclass, field
 
 # On-disk layout versions:
 #   1 — round-1 salt layout (xxhash64(doc_id) % n_salts, free-form
-#       n_salts). The block-max subgroup path CANNOT be used on v1
-#       indexes: it re-derives doc→subgroup ownership with the v2 salt
-#       function and would silently drop salted-term docs.
+#       n_salts). The query side never re-derives a doc's salt, so v1
+#       indexes are searched like any other.
 #   2 — codec.doc_salt salt function, power-of-two n_salts.
 #   3 — v2 plus segmented postings (postings/seg=*/bucket=*) and the
 #       optional "raw" storage mode (per-posting tf+dl, query-time
 #       weights) for O(new-batch) incremental refresh.
 MANIFEST_VERSION = 3
-# earliest version whose salt layout matches codec.doc_salt
-SALT_LAYOUT_VERSION = 2
 
 
 @dataclass

@@ -23,9 +23,8 @@ Pipeline (stage names = resumable checkpoints in manifest.json):
             encode ms) — the "metrics table" of the north_rule.
 
 Skew: a zipfian head gram's posting list is split across
-``n_salts = next_pow2(ceil(df / salt_every))`` sub-lists (power of two
-so every term's salt count divides a query's split factor — the BMW
-query path shards heavy groups by doc ownership), each a doc-sorted
+``n_salts = next_pow2(ceil(df / salt_every))`` sub-lists (power of
+two, the on-disk layout since manifest version 2), each a doc-sorted
 run, so no single reducer/group sees a whole stopword list. Salt
 assignment is ``codec.doc_salt`` (numpy-reproducible); salt runs
 spread across buckets via xxhash64(term_id, salt).
@@ -209,9 +208,10 @@ def _unpin(keys: DataFrame | None) -> None:
         keys._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-# search_distributed packs (query_id, doc_id) into one int64; ids must
-# fit 41 bits (the 10^12-doc design bound) — validated at build time so
-# arbitrary user id columns fail loudly instead of silently colliding.
+# the query's bulk groups pack (query_id, doc_id) into one int64; ids
+# must fit 41 bits (the 10^12-doc design bound) — validated at build
+# time so arbitrary user id columns fail loudly instead of silently
+# colliding.
 MAX_DOC_ID = (1 << 41) - 1
 
 # parquet row-group size for postings tables: bucket files are sorted
@@ -368,12 +368,10 @@ def term_table(
     ln((1+N)/(1+df)) + 1 (always > 0); normalization is per DOC
     (doc_norms / the weights stage), term_norm ≡ 1.0.
 
-    ``n_salts``: POWER OF TWO, capped — every term's salt count must
-    divide the per-query split factor so the block-max path can shard
-    heavy query groups into disjoint doc subsets (query/bmw.py subgroup
-    split). Cap 1024: beyond that a single salt run still holds
-    ≥ salt_every postings and the heavy query is routed to the bulk
-    decode-score path anyway (search_auto)."""
+    ``n_salts``: POWER OF TWO (the on-disk layout since manifest
+    version 2), capped at 1024: beyond that a single salt run still
+    holds ≥ salt_every postings and the heavy query is routed to the
+    bulk groups anyway (search_auto)."""
     aggs = [F.sum("tf").alias("tf_total"), F.count(F.lit(1)).alias("df")]
     if weighting == "bm25":
         ts = src.withColumn("w1", bm25_w1(cfg, avgdl)).groupBy("term").agg(
@@ -572,9 +570,8 @@ def write_postings(
         payload = ("doc_id", "w")
     salted = (
         src.withColumn(
-            # numpy-reproducible salt (codec.doc_salt): the query side
-            # re-derives doc→subgroup ownership in Python, so xxhash64
-            # (JVM-only) can't be the salt function here
+            # numpy-reproducible salt (codec.doc_salt, the layout since
+            # manifest version 2)
             "salt",
             F.when(
                 F.col("n_salts") > 1,
@@ -966,8 +963,6 @@ class BM25Index:
         rebuild) is queryable; referenced dirs are validated so an
         expired snapshot fails loudly instead of reading rewritten
         data."""
-        from neural_cherche_spark.catalog import SALT_LAYOUT_VERSION
-
         self.spark = spark
         self.cat = IndexCatalog(index_dir)
         self.manifest = self.cat.load_manifest(snapshot=snapshot)
@@ -1003,13 +998,6 @@ class BM25Index:
                     f"operation replaced {missing}; only snapshots "
                     "since the last compact/rebuild are queryable"
                 )
-        # pre-v2 indexes used a different salt function (and free-form
-        # n_salts); the block-max subgroup path would silently drop
-        # salted-term docs on them — search routes them to the
-        # salt-agnostic distributed path instead (ADVICE r2).
-        self.salt_layout_ok = (
-            int(getattr(self.manifest, "version", 1)) >= SALT_LAYOUT_VERSION
-        )
         self._termdict: DataFrame | None = None
         self._serving: dict | None = None
         self._serving_prepared: set | None = None

@@ -34,12 +34,10 @@ DNORM_SCALE = 256
 
 
 def doc_salt(doc_ids: np.ndarray, n_salts: int) -> np.ndarray:
-    """Salt/subgroup assignment of a doc id — the numpy twin of the
-    builder's Spark-side expression (index/builder.py salt column).
-    Both sides MUST agree bit-for-bit: the build partitions each head
-    term's posting list by this function, and the block-max query path
-    re-derives ownership to split heavy per-query groups into disjoint
-    doc subsets (query/bmw.py).
+    """Salt assignment of a doc id — the numpy twin of the builder's
+    Spark-side expression (index/builder.py salt column), which
+    partitions each head term's posting list by this function. The two
+    agree bit-for-bit (tests build salted blocks with this twin).
 
     Mixing in two shifted copies breaks low-bit stride patterns in
     user-supplied ids (all-even ids etc.); ids are < 2^41 so the sum

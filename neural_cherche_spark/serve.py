@@ -115,10 +115,6 @@ class LocalSearcher:
                 "tfidf+raw needs the post-aggregation docnorm join — "
                 "use index.search_serving()"
             )
-        if not getattr(index, "salt_layout_ok", True):
-            raise ValueError(
-                "index predates the codec.doc_salt layout — rebuild it"
-            )
         if index._serving is None:
             index.prepare_serving(queries)
         return cls(
@@ -324,9 +320,8 @@ class LocalSearcher:
         (a single string returns the inner list directly).
 
         One pyarrow read covers the batch's term union; each query is
-        then scored in-process as ONE group of the cluster scorer (the
-        Spark path's per-query subgroup split only buys parallelism
-        across executors)."""
+        then scored in-process as ONE group of the cluster scorer, as
+        the Spark path scores each selective query."""
         from neural_cherche_spark.query.bmw import (
             _bmw_group_fn,
             _s_t,

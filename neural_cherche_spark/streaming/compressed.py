@@ -85,8 +85,8 @@ class CompressedIndexStream:
     def _check_doc_ids(self) -> None:
         """Mirror build_index's id validation (ADVICE r2) over the
         accumulated doc registry — one column-pruned pass: out-of-range
-        ids corrupt the packed (query_id<<41)|doc_id combine and
-        doc_salt subgrouping; a doc_id re-added across batches
+        ids corrupt the packed (query_id<<41)|doc_id combine of the
+        query's bulk groups; a doc_id re-added across batches
         double-counts silently."""
         from neural_cherche_spark.index.builder import check_doc_ids
 

@@ -1,6 +1,7 @@
 """Property test: the block-max group scorer (with sign-split pruning,
-candidate range-skip, and salt subgrouping) must reproduce brute-force
-top-k exactly on randomized posting sets.
+candidate range-skip, and salted (term, salt) runs) must reproduce
+brute-force top-k exactly on randomized posting sets, one group per
+query.
 
 No Spark — `_bmw_group_fn` is called directly on the pandas frames
 applyInPandas would hand it. Weights are dyadic rationals (k/64) and
@@ -24,7 +25,7 @@ from neural_cherche_spark.query.bmw import _bmw_group_fn
 K = 5
 
 
-def _build_group(rng, n_docs, n_terms, n_groups):
+def _build_group(rng, n_docs, n_terms):
     """Synthesize one query's salted posting blocks + the brute-force
     per-doc scores. Per-term sign mimics idf (whole run shares it)
     but a few terms get mixed-sign blocks to stress the bounds."""
@@ -32,7 +33,7 @@ def _build_group(rng, n_docs, n_terms, n_groups):
     truth = np.zeros(n_docs, dtype=np.float64)
     frames = []
     for t in range(n_terms):
-        s_t = int(rng.choice([1, 2, 4][: int(np.log2(n_groups)) + 1]))
+        s_t = int(rng.choice([1, 2, 4]))
         qtf = float(rng.integers(1, 4))
         df = int(rng.integers(1, n_docs + 1))
         docs_t = np.sort(rng.choice(all_docs, size=df, replace=False))
@@ -67,7 +68,6 @@ def _build_group(rng, n_docs, n_terms, n_groups):
                         "last_doc": enc["last_doc"],
                         "docs": enc["docs"],
                         "ws": enc["ws"],
-                        "n_salts": int(s_t),
                     }
                 )
             )
@@ -83,37 +83,11 @@ def _brute_topk(truth, k=K):
 @pytest.mark.parametrize("seed", range(12))
 def test_bmw_group_matches_bruteforce(seed):
     rng = np.random.default_rng(seed)
-    n_groups = int(rng.choice([1, 2, 4]))
     pdf, truth = _build_group(
-        rng, n_docs=int(rng.integers(40, 300)), n_terms=int(rng.integers(1, 9)),
-        n_groups=n_groups,
+        rng, n_docs=int(rng.integers(40, 300)), n_terms=int(rng.integers(1, 9))
     )
-    fn = _bmw_group_fn(K)
-    parts = []
-    for grp in range(n_groups):
-        gpdf = pdf.copy()
-        # block → subgroup mapping as search_bmw's explode produces it
-        keep, grps = [], []
-        for i in range(len(gpdf)):
-            s_t = int(gpdf["n_salts"].iloc[i])
-            j = int(gpdf["salt"].iloc[i])
-            if s_t <= n_groups:
-                ok = grp % s_t == j
-            else:  # capped mapping (not generated here, but keep exact)
-                ok = j % n_groups == grp
-            if ok:
-                keep.append(i)
-                grps.append(grp)
-        if not keep:
-            continue
-        sub = gpdf.iloc[keep].copy()
-        sub["query_id"] = 7
-        sub["grp"] = grp
-        sub["n_groups"] = n_groups
-        parts.append(fn(sub))
-    got = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        columns=["query_id", "doc_id", "score"]
-    )
+    pdf["query_id"] = 7
+    got = _bmw_group_fn(K)(pdf)
     got = got.sort_values(["score", "doc_id"], ascending=[False, True])
     got_topk = [
         (int(r.doc_id), float(r.score)) for r in got.head(K).itertuples()
@@ -162,8 +136,6 @@ def test_adaptive_chunks_prune_skewed_groups():
     }))
     pdf = pd.concat(frames, ignore_index=True)
     pdf["query_id"] = 1
-    pdf["grp"] = 0
-    pdf["n_groups"] = 1
     n_blocks = len(pdf)
 
     stats: dict = {}

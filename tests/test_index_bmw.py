@@ -82,21 +82,6 @@ def test_index_search_rank_identical_to_exact(index, queries, exact_topk, strate
         assert_rank_identical(got[qid], exact_topk[qid], rtol=2e-3)
 
 
-def test_bmw_subgroup_cap_stays_exact(index, queries, exact_topk):
-    """subgroup_cap below the index's max n_salts forces the
-    single-subgroup mapping (salt mod cap) for finely-salted terms —
-    results must stay rank-identical to the exact path."""
-    from neural_cherche_spark.query.bmw import search_bmw
-
-    assert (
-        index.postings.select(F.max("salt")).collect()[0][0] >= 2
-    ), "fixture must contain multi-salt terms to exercise the cap"
-    got = _collect_topk(search_bmw(index, queries, k=10, subgroup_cap=2))
-    assert set(got) == set(exact_topk)
-    for qid in exact_topk:
-        assert_rank_identical(got[qid], exact_topk[qid], rtol=2e-3)
-
-
 def test_salting_actually_splits_head_terms(index):
     salted = index.postings.filter(F.col("salt") > 0).count()
     assert salted > 0, "no salted postings — head-term skew path untested"

@@ -74,13 +74,18 @@ def test_raw_layout_is_segmented_and_salted(raw_index):
     ]
 
 
-def test_raw_subgroup_cap_stays_exact(raw_index, queries, exact_topk):
-    from neural_cherche_spark.query.bmw import search_bmw
-
-    got = _collect_topk(search_bmw(raw_index, queries, k=10, subgroup_cap=2))
-    assert set(got) == set(exact_topk)
-    for qid in exact_topk:
-        assert_rank_identical(got[qid], exact_topk[qid], rtol=1e-9)
+@pytest.mark.parametrize("strategy", ["distributed", "bmw", "auto"])
+def test_raw_small_batch_stays_exact(
+    raw_index, queries, exact_topk, strategy
+):
+    """Exact on a 3-query batch, fewer queries than shuffle
+    partitions."""
+    small = queries.filter(F.col("query_id") < 3)
+    got = _collect_topk(STRATEGIES[strategy](raw_index, small, k=10))
+    want = {q: v for q, v in exact_topk.items() if q < 3}
+    assert set(got) == set(want)
+    for qid in want:
+        assert_rank_identical(got[qid], want[qid], rtol=1e-9)
 
 
 def test_raw_serving_path_matches_exact(spark, raw_index, queries, exact_topk):

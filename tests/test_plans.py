@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index import bm25_weights
 from neural_cherche_spark.query import retrieve_exact
+from tests.conftest import STRATEGIES
 
 
 def _plan(df) -> str:
@@ -63,9 +64,9 @@ def test_postings_scan_prunes_buckets_and_terms(spark, corpus, tmp_path):
 
 
 def test_bmw_search_plan_broadcasts_and_prunes(spark, corpus, tmp_path):
-    """The full search_bmw plan (with subgroup explode) must still
-    broadcast the query side and push bucket/term pruning into the
-    postings scan — the only shuffle is the matched-blocks regroup."""
+    """The full search_bmw plan must broadcast the query side and push
+    bucket/term pruning into the postings scan — the only shuffle is
+    the matched-blocks regroup."""
     from neural_cherche_spark.index.builder import build_index
     from neural_cherche_spark.query.bmw import search_bmw
 
@@ -113,21 +114,32 @@ def test_raw_search_plan_broadcasts_and_prunes(spark, corpus, tmp_path):
     assert "BatchEvalPython" not in plan
 
 
-def test_raw_distributed_plan_single_python_stage(spark, corpus, tmp_path):
+@pytest.fixture(scope="module")
+def plan_indexes(spark, corpus, tmp_path_factory):
     from neural_cherche_spark.index.builder import build_index
-    from neural_cherche_spark.query.bmw import search_distributed
 
-    idx = build_index(
-        spark, corpus, str(tmp_path / "idx"), id_col="doc_id",
-        n_buckets=8, salt_every=50, storage="raw",
-    )
+    d = tmp_path_factory.mktemp("plan_idx")
+    return {
+        storage: build_index(
+            spark, corpus, str(d / storage), id_col="doc_id",
+            n_buckets=8, salt_every=50, storage=storage,
+        )
+        for storage in ("weights", "raw")
+    }
+
+
+@pytest.mark.parametrize("storage", ["weights", "raw"])
+@pytest.mark.parametrize("strategy", sorted(STRATEGIES))
+def test_search_plan_shape(spark, plan_indexes, strategy, storage):
+    """Every preset runs the ONE search plan: one pruned postings scan,
+    one grouped scorer stage, no Generate (no per-query explode), and
+    no MapInPandas but the post-aggregation local top-k cut."""
     queries = synth_queries(spark, 3, seed=4)
-    plan = _plan(search_distributed(idx, queries, k=5))
-    # Arrow-batched Python only: the decode stage plus the post-agg
-    # partition-local top-k cut (round-5) — and exactly ONE scan, so
-    # the decode still reads the postings once
-    assert plan.count("MapInPandas") == 2
+    plan = _plan(STRATEGIES[strategy](plan_indexes[storage], queries, k=5))
     assert plan.count("Scan parquet") == 1
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "Generate" not in plan
+    assert plan.count("MapInPandas") <= 1
     assert "BatchEvalPython" not in plan
     assert "PushedFilters: [" in plan and "term_id" in plan
 
@@ -210,9 +222,10 @@ def test_tfidf_raw_search_joins_candidates_not_postings(spark, corpus, tmp_path)
     queries = synth_queries(spark, 3, seed=4)
     res = search_bmw(idx, queries, k=5)
     plan = _plan(res)
-    # exactly one Python stage: the block decode mapInPandas
+    # the grouped scorer, then the post-aggregation local top-k cut
     assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") <= 1
-    assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "MapInPandas" in plan
     # the docnorm join sits ABOVE the aggregation in the plan text
     # (executed plans print top-down: join line appears before the
     # final HashAggregate over (query_id, doc_id))

@@ -1,18 +1,20 @@
-"""Round-3 hardening (ADVICE r2): manifest salt-layout versioning,
-subgroup_cap power-of-two validation, SparseEmbed empty-intersection
-candidates, duplicate-id detection in the incremental compressed path."""
+"""Round-3 hardening (ADVICE r2): version-1 salt-layout indexes,
+SparseEmbed empty-intersection candidates, duplicate-id detection in
+the incremental compressed path."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index.builder import BM25Index, build_index
-from neural_cherche_spark.query.bmw import search_bmw, serving_match_rows
+from neural_cherche_spark.query.bmw import serving_match_rows
+from neural_cherche_spark.serve import LocalSearcher
 from neural_cherche_spark.streaming import CompressedIndexStream
 from tests.conftest import STRATEGIES
 
@@ -36,55 +38,41 @@ def _res(df):
     }
 
 
-def test_v1_manifest_routes_bmw_to_distributed(spark, built):
+def test_v1_manifest_routes_bmw_to_distributed(spark, built, tmp_path):
+    """A version-1 manifest (round-1 salt function) is searched like any
+    other index: the query side never re-derives a doc's salt, so every
+    preset, the router, the serving path and ``LocalSearcher`` return
+    the same rows and scores as on the version-2 original."""
     idx, d = built
     queries = synth_queries(spark, 5, seed=7)
-    want = _res(STRATEGIES["distributed"](idx, queries, k=10))
     qtexts = [
         r["query"] for r in sorted(queries.collect(), key=lambda r: r["query_id"])
     ]
-    idx.prepare_serving()
-    want_serving = _res(
-        STRATEGIES["distributed"](
-            idx, None, k=10, _rows=serving_match_rows(idx, qtexts)
-        )
-    )
-    idx._serving = None
+    want = _res(idx.search(queries, k=10))
+    assert want
 
-    mp = os.path.join(d, "manifest.json")
+    v1 = str(tmp_path / "v1")
+    shutil.copytree(d, v1)
+    mp = os.path.join(v1, "manifest.json")
     with open(mp) as f:
         m = json.load(f)
     m["version"] = 1
     with open(mp, "w") as f:
         json.dump(m, f)
-    try:
-        old = BM25Index(spark, d)
-        assert not old.salt_layout_ok
-        # direct bmw call refuses; the router falls back to the
-        # salt-agnostic distributed path with identical results — for
-        # DataFrame queries and for the serving path's match rows
-        with pytest.raises(ValueError, match="doc_salt"):
-            search_bmw(old, queries, k=10)
-        assert _res(old.search(queries, k=10)) == want
-        assert _res(STRATEGIES["auto"](old, queries, k=10)) == want
-        old.prepare_serving()
-        assert _res(old.search_serving(qtexts, k=10)) == want_serving
-        old.close()
-    finally:
-        m["version"] = 2
-        with open(mp, "w") as f:
-            json.dump(m, f)
-
-
-def test_subgroup_cap_validation(spark, built):
-    idx, _ = built
-    queries = synth_queries(spark, 5, seed=7)
-    want = _res(search_bmw(idx, queries, k=10, subgroup_cap=16))
-    # non-power-of-two caps round DOWN to a power of two (24 → 16):
-    # results stay exact because every pow2 split is doc-disjoint
-    assert _res(search_bmw(idx, queries, k=10, subgroup_cap=24)) == want
-    with pytest.raises(ValueError, match="subgroup_cap"):
-        search_bmw(idx, queries, k=10, subgroup_cap=0)
+    old = BM25Index(spark, v1)
+    assert old.manifest.version == 1
+    assert _res(old.search(queries, k=10)) == want
+    for name, fn in STRATEGIES.items():
+        assert _res(fn(old, queries, k=10)) == want, name
+    old.prepare_serving()
+    assert _res(old.search_serving(qtexts, k=10)) == want
+    local = LocalSearcher.from_index(old).search(qtexts, k=10)
+    assert {
+        (qid, h["doc_id"], round(h["score"], 6))
+        for qid, hits in enumerate(local)
+        for h in hits
+    } == want
+    old.close()
 
 
 def test_sparse_embed_keeps_empty_intersection_candidates(spark):

@@ -122,8 +122,6 @@ def test_tfidf_group_fn_matches_brute_force(seed):
     truth = unnorm / dnorm
     pdf = pd.concat(frames, ignore_index=True)
     pdf["query_id"] = 7
-    pdf["grp"] = 0
-    pdf["n_groups"] = 1
     out = _bmw_group_fn(K, TFIDF_RAW_CFG, gammas=GAMMAS)(pdf)
     assert _finalize([out], dnorm) == _brute_topk(truth), f"seed={seed}"
 
@@ -152,8 +150,6 @@ def test_tfidf_group_fn_skips_blocks_on_skew():
     truth = unnorm / dnorm
     pdf = pd.concat(frames, ignore_index=True)
     pdf["query_id"] = 1
-    pdf["grp"] = 0
-    pdf["n_groups"] = 1
     n_blocks = len(pdf)
     stats: dict = {}
     out = _bmw_group_fn(K, TFIDF_RAW_CFG, _stats=stats, gammas=GAMMAS)(pdf)
