@@ -40,10 +40,10 @@ The group scorer is also the Spark-free serving tier's scorer
 group per query, and it derives raw-storage block bounds itself.
 
 Bucket pruning: the builder spreads (term_id, salt) over parquet
-``bucket=`` partitions by xxhash64; the query side recomputes the
-exact bucket set for its terms IN SPARK (same hash,
-:func:`bucket_set`), so the parquet scan prunes directories and
-row-groups (PushedFilters on bucket + term_id).
+``bucket=`` partitions by xxhash64; :func:`_postings_for` recomputes
+the exact bucket set of the matched terms on the driver with the
+numpy twin of that hash (``codec.salt_bucket``), so the parquet scan
+prunes directories and row-groups (PushedFilters on bucket + term_id).
 """
 
 from __future__ import annotations
@@ -61,6 +61,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from neural_cherche_spark.index.codec import salt_bucket
 from neural_cherche_spark.index.tombmask import keep_mask
 from neural_cherche_spark.query.exact import query_term_counts
 
@@ -131,22 +132,10 @@ def _drop_nonpositive_queries(index, rows: list) -> list:
     return out
 
 
-def bucket_set(n_buckets: int):
-    """Read-side ``buckets`` column: the exact parquet ``bucket=`` set
-    of a (term_id, n_salts) row, by the same xxhash64 as the
-    write-side assignment in ``write_postings``, so partition pruning
-    is exact."""
-    return F.expr(
-        "array_distinct(transform(sequence(0, n_salts - 1), "
-        f"s -> cast(pmod(xxhash64(term_id, cast(s as int)), {n_buckets}) as int)))"
-    )
-
-
 def _matched_terms(index, queries: DataFrame) -> list:
     """ONE driver round-trip per search call: for each matched term —
-    its df, salt count, exact bucket set (same xxhash64 as the builder,
-    so parquet partition pruning is exact), and the (query_id, qtf)
-    fan-out list. The search plan derives its broadcast tables, scan
+    its df, idf, norm, salt count, and the (query_id, qtf) fan-out
+    list. The search plan derives its broadcast tables, scan
     pruning and routing volumes from this single collect (round-1
     VERDICT "what's wrong" #4: 3 collects/call).
 
@@ -160,7 +149,6 @@ def _matched_terms(index, queries: DataFrame) -> list:
         _query_terms(index, queries)
         .groupBy("term_id", "n_salts", "df", "idf", "term_norm")
         .agg(F.collect_list(F.struct("query_id", "qtf")).alias("qs"))
-        .withColumn("buckets", bucket_set(index.manifest.n_buckets))
         .collect()
     )
     rows = _drop_nonpositive_queries(index, rows)
@@ -202,6 +190,7 @@ def serving_match_rows(index, queries: list[str]) -> list:
     expression) and matched against the collected termdict map — no
     Spark job runs until the actual postings scan. This is the
     high-QPS serving path (NOTES r2 carry-over #2)."""
+    from neural_cherche_spark.index.builder import SERVING_FIELDS
     from neural_cherche_spark.text.ngrams import char_wb_ngrams
 
     smap = index._serving
@@ -228,7 +217,9 @@ def serving_match_rows(index, queries: list[str]) -> list:
                         "re-prepare with the extended query set"
                     )
                 continue  # frozen vocabulary: unseen terms drop
-            e = per_term.setdefault(term, dict(info, qs=[]))
+            e = per_term.get(term)
+            if e is None:
+                e = per_term[term] = dict(zip(SERVING_FIELDS, info), qs=[])
             e["qs"].append({"query_id": qid, "qtf": float(qtf)})
     rows = _drop_nonpositive_queries(index, list(per_term.values()))
     if cfg.get("weighting", "bm25") == "tfidf":
@@ -258,9 +249,17 @@ def _tfidf_raw_gammas(index) -> dict | None:
 
 
 def _postings_for(index, rows: list) -> DataFrame:
-    """Bucket- and term-pruned postings scan from collected match rows."""
-    buckets = sorted({int(b) for r in rows for b in r["buckets"]})
-    term_ids = sorted(int(r["term_id"]) for r in rows)
+    """Bucket- and term-pruned postings scan from collected match rows:
+    the bucket set is every (term_id, salt < n_salts) run's
+    ``codec.salt_bucket`` — the writer's own assignment, so partition
+    pruning is exact."""
+    tids = np.array([int(r["term_id"]) for r in rows], dtype=np.int64)
+    ns = np.array([int(r["n_salts"]) for r in rows], dtype=np.int64)
+    salts = np.arange(int(ns.sum())) - np.repeat(np.cumsum(ns) - ns, ns)
+    buckets = np.unique(
+        salt_bucket(np.repeat(tids, ns), salts, index.manifest.n_buckets)
+    ).tolist()
+    term_ids = sorted(tids.tolist())
     return index.postings.filter(
         F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
     )

@@ -3,22 +3,24 @@
 ``BM25Index.search_serving`` removes the per-call termdict job but
 still runs ONE Spark job per call for the pruned postings scan — a
 single query pays job scheduling + Python-worker round-trips, i.e.
-hundreds of ms of fixed cost for milliseconds of scoring (measured:
-p50 ≈ 770 ms at 2k docs, while the 1000-query BATCH amortizes to
-~2 ms/query). That fixed cost is Spark's, not the engine's.
+hundreds of ms of fixed cost for milliseconds of scoring, while a
+large BATCH amortizes it to a few ms per query. That fixed cost is
+Spark's, not the engine's.
 
 :class:`LocalSearcher` is the missing deployment shape: Spark builds
 and refreshes the index (the 100 TB side); serving nodes open the
 SAME parquet artifact directly and answer single queries with no
 cluster in the loop —
 
-* term lookup: the driver-side serving map (the exact structure
-  ``prepare_serving`` builds — term → term_id/idf/buckets/n_salts;
-  ~100 B/term, or workload-filtered for 10^7+-term vocabularies);
-* postings read: a ``pyarrow.dataset`` scan of ``postings/`` with a
-  ``bucket ∈ B ∧ term_id ∈ T`` filter — hive partition pruning picks
-  the bucket directories, parquet row-group ``term_id`` min/max stats
-  prune within them (the builder writes each bucket sorted by term);
+* term lookup: the serving map ``prepare_serving`` builds — term →
+  (term_id, df, idf, term_norm, n_salts), read from the termdict
+  parquet with pyarrow, so opening a searcher runs no Spark job either;
+  ~100 B/term, or workload-filtered for 10^7+-term vocabularies;
+* postings read: a ``pyarrow.dataset`` scan of ``postings/`` restricted
+  to the row groups whose ``term_id`` min/max stats overlap the
+  queried terms (a per-searcher index of the parquet footers; the
+  builder writes each bucket sorted by term), filtered to
+  ``term_id ∈ T``;
 * scoring: the SAME ``_bmw_group_fn`` scorer the cluster path runs
   inside ``applyInPandas`` — identical block bounds, block-max pruning
   and tie-breaks — fed the identical block columns from the pyarrow
@@ -104,10 +106,10 @@ class LocalSearcher:
         """Open a searcher over a ``BM25Index`` handle's artifact.
 
         Uses the handle's serving map if prepared (calling
-        ``prepare_serving(queries)`` otherwise — the one Spark-side
-        bootstrap step); after construction no Spark session is
-        touched. ``queries`` forwards the vocabulary-filtered prepare
-        for huge termdicts."""
+        ``prepare_serving(queries)`` otherwise — a pyarrow read of the
+        termdict); neither the open nor any search runs a Spark job.
+        ``queries`` forwards the vocabulary-filtered prepare for huge
+        termdicts."""
         storage = index.manifest.cfg.get("storage", "weights")
         weighting = index.manifest.cfg.get("weighting", "bm25")
         if storage == "raw" and weighting == "tfidf":
@@ -128,10 +130,10 @@ class LocalSearcher:
 
     # ------------------------------------------------------------------
     def _read_postings(self, rows: list) -> pd.DataFrame:
-        """Pruned pyarrow scan: bucket dirs via hive partition pruning,
-        row groups via term_id stats — the LOCAL twin of
-        query/bmw._postings_for. Hot terms come from the LRU cache;
-        only cache misses touch the dataset."""
+        """Pruned pyarrow scan: row groups via the term_id stats index
+        (:meth:`_rg_index`) — the LOCAL twin of query/bmw._postings_for.
+        Hot terms come from the LRU cache; only cache misses touch the
+        dataset."""
         hits, misses = [], []
         for r in rows:
             t = int(r["term_id"])

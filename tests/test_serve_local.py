@@ -97,21 +97,31 @@ def test_raw_storage_parity(spark, corpus, qtexts, tmp_path_factory):
             assert g[1] == pytest.approx(e[1], rel=1e-9)
 
 
-def test_tombstoned_raw_parity(spark, corpus, qtexts, tmp_path):
-    """Deletes: the in-process tombmask read must hide deleted docs
-    exactly as the cluster path does."""
+DELETED = [i for i in range(400) if i % 5 == 2]
+
+
+@pytest.fixture(scope="module")
+def tomb_index(spark, corpus, tmp_path_factory):
+    """Raw refresh with pending tombstones."""
     from neural_cherche_spark.streaming import CompressedIndexStream
 
-    deleted = [i for i in range(400) if i % 5 == 2]
-    stream = CompressedIndexStream(spark, str(tmp_path / "state"))
-    idx_dir = str(tmp_path / "idx")
+    d = tmp_path_factory.mktemp("srvtomb")
+    stream = CompressedIndexStream(spark, str(d / "state"))
+    idx_dir = str(d / "idx")
     stream.add_batch(corpus, epoch_id=0)
     stream.materialize(idx_dir, n_buckets=8, salt_every=50, storage="raw")
-    stream.delete_batch(deleted, epoch_id=1)
+    stream.delete_batch(DELETED, epoch_id=1)
     idx = stream.materialize(
         idx_dir, n_buckets=8, salt_every=50, storage="raw"
     )
     assert idx.manifest.tombstones_path != ""
+    return idx
+
+
+def test_tombstoned_raw_parity(tomb_index, qtexts):
+    """Deletes: the in-process tombmask read must hide deleted docs
+    exactly as the cluster path does."""
+    idx = tomb_index
     idx.prepare_serving()
     srv = LocalSearcher.from_index(idx)
     k = 10
@@ -124,7 +134,7 @@ def test_tombstoned_raw_parity(spark, corpus, qtexts, tmp_path):
             (int(r["doc_id"]), r["score"])
         )
     local = srv.search(qtexts, k=k)
-    dset = set(deleted)
+    dset = set(DELETED)
     for qid, res in enumerate(local):
         got = [(d["doc_id"], d["score"]) for d in res]
         assert not any(g[0] in dset for g in got)
@@ -146,6 +156,34 @@ def test_no_spark_jobs_during_search(index, qtexts, spark):
         srv.search(q, k=5)
     jobs_after = set(spark.sparkContext.statusTracker().getJobIdsForGroup())
     assert jobs_after == jobs_before
+
+
+def test_open_runs_no_spark_jobs(spark, index, tomb_index, qtexts):
+    """Opening the serving tier is Spark-free too: a fresh handle, the
+    full and the vocabulary-filtered prepare, and the searcher open
+    submit zero Spark jobs (weights index and tombstoned raw refresh)."""
+    from neural_cherche_spark.index.builder import BM25Index
+
+    sc = spark.sparkContext
+    group = "ncs-test-serving-open"
+    sc.setJobGroup(group, "serving open must not run Spark jobs")
+    try:
+        for built in (index, tomb_index):
+            idx = BM25Index(spark, built.cat.index_dir)
+            idx.prepare_serving()
+            assert idx._serving
+            idx.prepare_serving(queries=qtexts)
+            assert idx._serving_prepared
+            fresh = BM25Index(spark, built.cat.index_dir)
+            srv = LocalSearcher.from_index(fresh, queries=qtexts)
+            srv.search(qtexts, k=5)
+            LocalSearcher.from_index(BM25Index(spark, built.cat.index_dir))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        spark.range(3).count()  # the group does see this thread's jobs
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_hot_term_cache(index, qtexts):
