@@ -264,27 +264,21 @@ def _q_bm25_topk_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CORRECTNESS gate for the SERVING path under a VOCABULARY-
     FILTERED prepare (round-5, VERDICT r4 #6): prepare_serving(queries=
     workload) collects only the workload's grams into the driver map
-    (bounded memory at 10^7+-term vocabularies) and search_serving
-    answers with one Spark job per call — results must match the same
-    exact oracle as the batch compressed gates (QUERY_SET ids are the
-    list positions, so query_id lines up with the oracle's). Scored by
-    search_bmw over the serving match rows, as search_serving does for
+    (bounded memory at 10^7+-term vocabularies) and a list search
+    matches against it with one Spark job per call — results must
+    match the same exact oracle as the batch compressed gates
+    (QUERY_SET ids are the list positions, so query_id lines up with
+    the oracle's). Scored by search_bmw, the block-max strategy for
     selective queries."""
-    from neural_cherche_spark.query.bmw import search_bmw, serving_match_rows
+    from neural_cherche_spark.query.bmw import search_bmw
 
     idx = _entry_index(spark, sf_dir)
     texts = [q for _, q in QUERY_SET]
     try:
         idx.prepare_serving(queries=texts)
-        return _rank_on_grid(
-            search_bmw(
-                idx, None, TOP_K, _rows=serving_match_rows(idx, texts)
-            ),
-            _COMPRESSED_DP,
-        )
+        return _rank_on_grid(search_bmw(idx, texts, TOP_K), _COMPRESSED_DP)
     finally:
-        idx._serving = None
-        idx._serving_prepared = None
+        idx.close()
 
 
 def _q_bm25_topk_local(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,8 +306,7 @@ def _q_bm25_topk_local(spark: SparkSession, sf_dir: str) -> DataFrame:
             _COMPRESSED_DP,
         )
     finally:
-        idx._serving = None
-        idx._serving_prepared = None
+        idx.close()
 
 
 def _rank_on_grid(res: DataFrame, dp: int) -> DataFrame:

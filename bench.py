@@ -49,16 +49,6 @@ import sys
 import time
 
 
-def _serve_bmw(index, texts: list[str], k: int = 10):
-    """``search_serving``'s Spark-free match rows, scored by the
-    block-max strategy (what the serving keys have always timed)."""
-    from neural_cherche_spark.query import bmw
-
-    return bmw.search_bmw(
-        index, None, k, _rows=bmw.serving_match_rows(index, texts)
-    )
-
-
 def _median(xs: list[float]) -> float:
     return statistics.median(xs)
 
@@ -135,9 +125,9 @@ def _run_pass(spark, docs, queries, work, cpus, entry_mod) -> dict[str, float]:
         .collect()
     ]
     index.prepare_serving()
-    _serve_bmw(index, serving_queries[:8]).collect()  # warmup
+    bmw.search_bmw(index, serving_queries[:8]).collect()  # warmup
     t0 = time.perf_counter()
-    _serve_bmw(index, serving_queries).collect()
+    bmw.search_bmw(index, serving_queries).collect()
     t["query_serving"] = time.perf_counter() - t0
     index.close()
 
@@ -207,11 +197,11 @@ def _run_large(spark, work, cpus, n_docs_large, rounds) -> dict:
         bmw.search_bmw(index, queries, k=10).collect()
         qwalls.append(time.perf_counter() - t0)
         index.prepare_serving()
-        _serve_bmw(index, serve_texts[:4]).collect()  # warmup
+        bmw.search_bmw(index, serve_texts[:4]).collect()  # warmup
         lat = []
         for qt in serve_texts:
             t0 = time.perf_counter()
-            _serve_bmw(index, [qt]).collect()
+            bmw.search_bmw(index, [qt]).collect()
             lat.append((time.perf_counter() - t0) * 1e3)
         lat.sort()
         p50s.append(lat[len(lat) // 2])

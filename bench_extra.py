@@ -24,16 +24,6 @@ import sys
 import time
 
 
-def _serve_bmw(index, texts: list[str], k: int = 10):
-    """``search_serving``'s Spark-free match rows, scored by the
-    block-max strategy (what the serving keys have always timed)."""
-    from neural_cherche_spark.query import bmw
-
-    return bmw.search_bmw(
-        index, None, k, _rows=bmw.serving_match_rows(index, texts)
-    )
-
-
 def _spark():
     from neural_cherche_spark.session import get_spark
 
@@ -132,7 +122,7 @@ def cmd_plans(tag: str) -> None:
 
     serving_queries = [q for _, q in entry_mod.QUERY_SET]
     index.prepare_serving()
-    cap("query_serving", _serve_bmw(index, serving_queries))
+    cap("query_serving", bmw.search_bmw(index, serving_queries))
     index.close()
 
     from neural_cherche_spark.streaming import CompressedIndexStream
@@ -221,11 +211,11 @@ def cmd_phases() -> None:
         .collect()
     ]
     index.prepare_serving()
-    _serve_bmw(index, serving_queries[:8]).collect()
+    bmw.search_bmw(index, serving_queries[:8]).collect()
     _timed(
         spark,
         "query_serving(1000)",
-        lambda: _serve_bmw(index, serving_queries).collect(),
+        lambda: bmw.search_bmw(index, serving_queries).collect(),
     )
     index.close()
 
@@ -312,11 +302,11 @@ def cmd_serving() -> None:
     bmw.search_bmw(index, queries, k=10).collect()
     print(json.dumps({"large_query_bmw_sec": round(time.perf_counter() - t0, 3)}))
     index.prepare_serving()
-    _serve_bmw(index, serve_texts[:4]).collect()
+    bmw.search_bmw(index, serve_texts[:4]).collect()
     lat = []
     for qt in serve_texts:
         t0 = time.perf_counter()
-        _serve_bmw(index, [qt]).collect()
+        bmw.search_bmw(index, [qt]).collect()
         lat.append((time.perf_counter() - t0) * 1e3)
     lat.sort()
     print(json.dumps({

@@ -1,6 +1,6 @@
 """Spark-free serving tier over a built index artifact.
 
-``BM25Index.search_serving`` removes the per-call termdict job but
+``BM25Index.search`` matches on the driver with no Spark job but
 still runs ONE Spark job per call for the pruned postings scan — a
 single query pays job scheduling + Python-worker round-trips, i.e.
 hundreds of ms of fixed cost for milliseconds of scoring, while a
@@ -24,7 +24,7 @@ cluster in the loop —
 * scoring: the SAME ``_bmw_group_fn`` scorer the cluster path runs
   inside ``applyInPandas`` — identical block bounds, block-max pruning
   and tie-breaks — fed the identical block columns from the pyarrow
-  read, one group per query. Parity with ``search_serving`` is
+  read, one group per query. Parity with ``BM25Index.search`` is
   therefore structural, and pinned end-to-end by
   ``tests/test_serve_local.py``.
 
@@ -33,7 +33,7 @@ are final either way) and RAW-storage bm25 indexes including pending
 tombstones (``index/tombmask.py`` is already pyarrow-only, so the
 delete-set masking runs in-process exactly as it does inside the
 cluster scorer). tfidf+raw indexes raise and point at
-``search_serving`` (their exact cosine needs the post-aggregation
+``BM25Index.search`` (their exact cosine needs the post-aggregation
 docnorm join).
 """
 
@@ -115,7 +115,7 @@ class LocalSearcher:
         if storage == "raw" and weighting == "tfidf":
             raise NotImplementedError(
                 "tfidf+raw needs the post-aggregation docnorm join — "
-                "use index.search_serving()"
+                "use index.search()"
             )
         if index._serving is None:
             index.prepare_serving(queries)

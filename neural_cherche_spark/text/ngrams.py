@@ -6,34 +6,39 @@ empirically pinned in SURVEY.md §2.2 P3 against the doctest goldens at
 retrieve/bm25.py:71-77):
 
 * lowercase the text,
-* split into words on whitespace,
+* split into words on whitespace — Java regex ``\\s``, i.e.
+  ``[ \\t\\n\\x0B\\f\\r]``, not Unicode whitespace (no-break space,
+  U+3000, … stay inside words),
 * for each word ``w`` and each ``n`` in ``[n_min, n_max]`` emit every
   contiguous substring of length ``n`` (words shorter than ``n``
   contribute nothing for that ``n``; no space padding — unlike
   sklearn's ``char_wb``).
 
-Three implementations, all producing identical terms:
+Two implementations, producing identical terms:
 
 1. :func:`ngram_terms_column` — a pure Catalyst expression (JVM-side,
-   whole-stage codegen, zero Python in the hot path). **Primary.**
-2. :func:`tokenize_terms_pandas_udf` — an Arrow-vectorized pandas UDF,
-   kept for benchmarking the two paths against each other.
-3. :func:`char_wb_ngrams` — plain Python, used by the in-memory
-   reference oracle and unit tests.
+   whole-stage codegen, zero Python in the hot path). Indexes documents.
+2. :func:`char_wb_ngrams` — plain Python: tokenizes queries on the
+   driver (``query.bmw.serving_match_rows``) and feeds the in-memory
+   reference oracle.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
+
+# Java's regex \s — what the Catalyst split('\\s+') breaks words on
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def char_wb_ngrams(text: str, n_min: int = 3, n_max: int = 5) -> list[str]:
-    """Pure-Python reference tokenizer (oracle / unit tests)."""
+    """Pure-Python twin of :func:`ngram_terms_column` (query matching,
+    oracle, unit tests)."""
     terms: list[str] = []
-    for word in text.lower().split():
+    for word in _JAVA_WS.split(text.lower()):
         lw = len(word)
         for n in range(n_min, n_max + 1):
             if lw >= n:
@@ -124,18 +129,3 @@ def tokenize_terms(
         F.col(id_col),
         F.explode(ngram_terms_column(text_col, n_min, n_max)).alias("term"),
     )
-
-
-def tokenize_terms_pandas_udf(n_min: int = 3, n_max: int = 5):
-    """Arrow-vectorized pandas UDF variant of the tokenizer.
-
-    Kept as the benchmark counterpart of :func:`ngram_terms_column`
-    (input_hint mandates vectorized UDFs where Python is needed; here
-    the Catalyst expression wins, and bench proves it).
-    """
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _tok(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: char_wb_ngrams(t or "", n_min, n_max))
-
-    return _tok

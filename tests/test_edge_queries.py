@@ -75,7 +75,7 @@ def _search(path, idx, spark, qtexts):
         ]
     if path == "serving":
         idx.prepare_serving()
-        df = idx.search_serving(qtexts, k=K)
+        df = idx.search(qtexts, k=K)
     else:
         qdf = spark.createDataFrame(
             list(enumerate(qtexts)), "query_id long, query string"
@@ -122,5 +122,5 @@ def test_all_docs_deleted_gives_empty_results(spark, docs, tmp_path):
     )
     assert idx.search(qdf, k=10).collect() == []
     idx.prepare_serving()
-    assert idx.search_serving(qtexts, k=10).collect() == []
+    assert idx.search(qtexts, k=10).collect() == []
     assert LocalSearcher.from_index(idx).search(qtexts, k=10) == [[], [], []]

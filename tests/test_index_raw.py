@@ -96,7 +96,7 @@ def test_raw_serving_path_matches_exact(spark, raw_index, queries, exact_topk):
         for r in sorted(queries.collect(), key=lambda r: r["query_id"])
     ]
     raw_index.prepare_serving()
-    got = _collect_topk(raw_index.search_serving(qtexts, k=10))
+    got = _collect_topk(raw_index.search(qtexts, k=10))
     assert set(got) == set(exact_topk)
     for qid in exact_topk:
         assert_rank_identical(got[qid], exact_topk[qid], rtol=1e-9)
@@ -108,9 +108,9 @@ def test_raw_auto_mixed_routing_matches_exact(raw_index, queries, exact_topk):
     selective sides must stay exact on a raw index: the side() carve-out
     has to carry idf/term_norm through to the raw query-time weights
     (round-3 ADVICE high: KeyError('idf') when both sides fired)."""
-    from neural_cherche_spark.query.bmw import _matched_terms, search_auto
+    from neural_cherche_spark.query.bmw import search_auto, serving_match_rows
 
-    rows = _matched_terms(raw_index, queries)
+    rows = serving_match_rows(raw_index, queries)
     vol: dict[int, int] = {}
     for r in rows:
         for q in r["qs"]:
@@ -153,12 +153,12 @@ def test_prepare_serving_vocab_filtered(raw_index, queries, exact_topk):
     try:
         # capped memory: ≤ the workload's grams, not the corpus vocab
         assert len(raw_index._serving) <= len(grams) < full_vocab
-        got = _collect_topk(raw_index.search_serving(qtexts, k=10))
+        got = _collect_topk(raw_index.search(qtexts, k=10))
         assert set(got) == set(exact_topk)
         for qid in exact_topk:
             assert_rank_identical(got[qid], exact_topk[qid], rtol=1e-9)
         with pytest.raises(ValueError, match="not in the"):
-            raw_index.search_serving(["zzzql zzzqm"], k=5)
+            raw_index.search(["zzzql zzzqm"], k=5)
     finally:
         raw_index._serving = None
         raw_index._serving_prepared = None

@@ -104,7 +104,7 @@ def test_tfidf_raw_serving_matches_exact(raw_index, queries, exact_topk):
         for r in sorted(queries.collect(), key=lambda r: r["query_id"])
     ]
     raw_index.prepare_serving()
-    got = _collect_topk(raw_index.search_serving(qtexts, k=10))
+    got = _collect_topk(raw_index.search(qtexts, k=10))
     assert set(got) == set(exact_topk)
     for qid in exact_topk:
         assert_rank_identical(got[qid], exact_topk[qid], rtol=1e-9)

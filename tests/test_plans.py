@@ -50,14 +50,14 @@ def test_postings_scan_prunes_buckets_and_terms(spark, corpus, tmp_path):
     """Query-side postings scan must push term_id filters into parquet
     and prune bucket partition directories."""
     from neural_cherche_spark.index.builder import build_index
-    from neural_cherche_spark.query.bmw import _matched_terms, _postings_for
+    from neural_cherche_spark.query.bmw import _postings_for, serving_match_rows
 
     idx = build_index(
         spark, corpus, str(tmp_path / "idx"), id_col="doc_id",
         n_buckets=8, salt_every=50,
     )
     queries = synth_queries(spark, 3, seed=4)
-    scan = _postings_for(idx, _matched_terms(idx, queries))
+    scan = _postings_for(idx, serving_match_rows(idx, queries))
     plan = _plan(scan)
     assert "PushedFilters: [" in plan and "term_id" in plan
     assert "PartitionFilters" in plan and "bucket" in plan
@@ -150,7 +150,7 @@ def test_auto_mixed_routing_is_single_scan(spark, corpus, tmp_path):
     not two per-side search plans. The executed plan must contain
     exactly one parquet scan and exactly one grouped-Python stage."""
     from neural_cherche_spark.index.builder import build_index
-    from neural_cherche_spark.query.bmw import _matched_terms, search_auto
+    from neural_cherche_spark.query.bmw import search_auto, serving_match_rows
 
     for storage in ("weights", "raw"):
         idx = build_index(
@@ -158,7 +158,7 @@ def test_auto_mixed_routing_is_single_scan(spark, corpus, tmp_path):
             id_col="doc_id", n_buckets=8, salt_every=50, storage=storage,
         )
         queries = synth_queries(spark, 5, seed=4)
-        rows = _matched_terms(idx, queries)
+        rows = serving_match_rows(idx, queries)
         vol: dict[int, int] = {}
         for r in rows:
             for q in r["qs"]:

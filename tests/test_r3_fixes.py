@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from neural_cherche_spark.data import synth_queries, synth_webtext
 from neural_cherche_spark.index.builder import BM25Index, build_index
-from neural_cherche_spark.query.bmw import serving_match_rows
 from neural_cherche_spark.serve import LocalSearcher
 from neural_cherche_spark.streaming import CompressedIndexStream
 from tests.conftest import STRATEGIES
@@ -65,7 +64,7 @@ def test_v1_manifest_routes_bmw_to_distributed(spark, built, tmp_path):
     for name, fn in STRATEGIES.items():
         assert _res(fn(old, queries, k=10)) == want, name
     old.prepare_serving()
-    assert _res(old.search_serving(qtexts, k=10)) == want
+    assert _res(old.search(qtexts, k=10)) == want
     local = LocalSearcher.from_index(old).search(qtexts, k=10)
     assert {
         (qid, h["doc_id"], round(h["score"], 6))
@@ -98,11 +97,10 @@ def test_sparse_embed_keeps_empty_intersection_candidates(spark):
 
 
 def test_serving_path_matches_and_runs_fewer_jobs(spark, built):
-    """prepare_serving + search_serving: identical results to the
-    DataFrame path, with strictly fewer Spark jobs per call (the match
-    rows are built in Python — no qterms⋈termdict job). Checked for
-    the router (search vs search_serving) and for each strategy fed
-    the serving match rows."""
+    """prepare_serving + a list search: identical results to the
+    DataFrame path, with strictly fewer Spark jobs per call (no
+    collect of a query frame). Checked for the router and for each
+    strategy."""
     idx, _ = built
     qrows = synth_queries(spark, 6, seed=7).collect()
     qtexts = [r["query"] for r in sorted(qrows, key=lambda r: r["query_id"])]
@@ -115,15 +113,13 @@ def test_serving_path_matches_and_runs_fewer_jobs(spark, built):
     paths = {
         "router": (
             lambda: idx.search(qdf, k=10),
-            lambda: idx.search_serving(qtexts, k=10),
+            lambda: idx.search(qtexts, k=10),
         )
     }
     for name, fn in STRATEGIES.items():
         paths[name] = (
             lambda fn=fn: fn(idx, qdf, k=10),
-            lambda fn=fn: fn(
-                idx, None, k=10, _rows=serving_match_rows(idx, qtexts)
-            ),
+            lambda fn=fn: fn(idx, qtexts, k=10),
         )
     for name, (df_path, serve_path) in paths.items():
         sc.setJobGroup(f"df-{name}", "df path")

@@ -144,7 +144,7 @@ def test_local_searcher_decoded_cache_parity(spark, tmp_path):
         index.prepare_serving()
         want = {}
         for qt in texts:
-            rows = index.search_serving([qt], k=5).collect()
+            rows = index.search([qt], k=5).collect()
             want[qt] = [
                 (r["doc_id"], round(r["score"], 9), r["rank"]) for r in rows
             ]

@@ -36,11 +36,11 @@ def qtexts(spark):
     return [r["query"] for r in synth_queries(spark, 10, seed=3).collect()]
 
 
-def test_local_matches_search_serving(index, qtexts):
+def test_local_matches_search_list(index, qtexts):
     index.prepare_serving()
     srv = LocalSearcher.from_index(index)
     k = 10
-    spark_rows = index.search_serving(qtexts, k=k).collect()
+    spark_rows = index.search(qtexts, k=k).collect()
     expected: dict[int, list] = {}
     for r in sorted(spark_rows, key=lambda r: (r["query_id"], r["rank"])):
         expected.setdefault(int(r["query_id"]), []).append(
@@ -82,7 +82,7 @@ def test_raw_storage_parity(spark, corpus, qtexts, tmp_path_factory):
     k = 10
     expected: dict[int, list] = {}
     for r in sorted(
-        idx.search_serving(qtexts, k=k).collect(),
+        idx.search(qtexts, k=k).collect(),
         key=lambda r: (r["query_id"], r["rank"]),
     ):
         expected.setdefault(int(r["query_id"]), []).append(
@@ -127,7 +127,7 @@ def test_tombstoned_raw_parity(tomb_index, qtexts):
     k = 10
     expected: dict[int, list] = {}
     for r in sorted(
-        idx.search_serving(qtexts, k=k).collect(),
+        idx.search(qtexts, k=k).collect(),
         key=lambda r: (r["query_id"], r["rank"]),
     ):
         expected.setdefault(int(r["query_id"]), []).append(

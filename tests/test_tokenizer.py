@@ -1,7 +1,8 @@
-"""Tokenizer parity: Python vs Catalyst expression vs pandas UDF.
+"""Tokenizer parity: Python twin vs Catalyst expression.
 
 The tokenizer is the byte-identical hinge of the whole engine
-(SURVEY §7.2) — all three implementations must agree exactly.
+(SURVEY §7.2): documents are tokenized by the Catalyst expression,
+queries by the Python twin, so the two must agree exactly.
 """
 
 from __future__ import annotations
@@ -12,7 +13,6 @@ from pyspark.sql import functions as F
 from neural_cherche_spark.text.ngrams import (
     char_wb_ngrams,
     ngram_terms_column,
-    tokenize_terms_pandas_udf,
     word_tokens_column,
 )
 
@@ -32,6 +32,19 @@ CASES = [
     "café naïve über",   # accents kept as-is (lowercase only)
     "x" * 40,
     "a bb ccc dddd eeeee ffffff",
+    # words split on Java's \s only: Unicode whitespace outside
+    # [ \t\n\x0b\f\r] stays inside the word
+    "foo\xa0barbaz",     # no-break space
+    "foo\u2003bar baz",  # em space
+    "foo\u3000barbaz",   # ideographic space
+    "foo\x1cbar",        # file separator
+    "foo\x85bar",        # next line
+    "foo\x0bbar",        # vertical tab: whitespace in both
+    # lowercasing agrees on special casings
+    "ΣΑΣ σας",
+    "İstanbul",
+    "ǅemal",
+    "ﬃx straße",
 ]
 
 
@@ -60,19 +73,6 @@ def test_sql_expr_matches_python(spark, nrange):
     }
     for i, t in enumerate(CASES):
         assert got[i] == char_wb_ngrams(t, n_min, n_max), f"case {i!r}: {t!r}"
-
-
-def test_pandas_udf_matches_python(spark):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(CASES)], "id int, text string"
-    )
-    tok = tokenize_terms_pandas_udf()
-    got = {
-        r["id"]: list(r["terms"])
-        for r in df.select("id", tok("text").alias("terms")).collect()
-    }
-    for i, t in enumerate(CASES):
-        assert got[i] == char_wb_ngrams(t), f"case {i!r}: {t!r}"
 
 
 def test_word_tokens(spark):
