@@ -38,6 +38,7 @@ into an empty index write identical blocks and termdicts.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor, wait
 
@@ -431,12 +432,25 @@ def doc_norms(src: DataFrame, termdict: DataFrame) -> DataFrame:
     (doc_id, term, tf) rows: raw tfidf blocks store tf, queries score
     unnormalized and divide by ‖d‖ via a doc-keyed join of the
     candidate set. One term-keyed join + one doc-keyed agg; norms are
-    per-doc SCALARS, so a refresh rewrites O(n_docs) bytes."""
+    per-doc SCALARS, so a refresh rewrites O(n_docs) bytes.
+
+    The squares are summed in ascending order, not in shuffle arrival
+    order (``F.sum``), so a doc's norm is bit-identical however the
+    rows are partitioned — and with it the quantized norm each tfidf
+    raw block stores."""
     return (
         src.join(termdict.select("term", "idf"), "term")
         .withColumn("wr", F.col("tf") * F.col("idf"))
         .groupBy("doc_id")
-        .agg(F.sqrt(F.sum(F.col("wr") * F.col("wr"))).alias("dnorm"))
+        .agg(
+            F.sqrt(
+                F.aggregate(
+                    F.array_sort(F.collect_list(F.col("wr") * F.col("wr"))),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                )
+            ).alias("dnorm")
+        )
     )
 
 
@@ -889,6 +903,12 @@ def _finish_build(
             target = cat.path("postings")
             lineage_target = cat.path("lineage")
         if not cat.stage_done(manifest, "postings", fingerprint):
+            # a rebuild writes the whole postings/lineage layout afresh:
+            # raw targets seg=0 below the table, so an old layout of the
+            # other storage (bucket=* beside seg=*) would otherwise stay
+            # and break every later partition discovery
+            for t in ("postings", "lineage"):
+                shutil.rmtree(cat.path(t), ignore_errors=True)
             if storage == "raw" and weighting == "tfidf":
                 src = quantize_norm_dl(
                     tf, spark.read.parquet(cat.path("docnorm"))

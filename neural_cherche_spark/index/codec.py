@@ -375,21 +375,6 @@ def encode_partition_bulk_raw(
     }
 
 
-def decode_block_raw(
-    docs: bytes, tfs: bytes, dls: bytes
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inverse of one encode_partition_bulk_raw block →
-    (doc_ids int64, tf int64, dl int64)."""
-    gaps = varint_decode(docs).astype(np.int64)
-    if gaps.size:
-        gaps[0] -= 1
-    return (
-        np.cumsum(gaps),
-        varint_decode(tfs).astype(np.int64),
-        varint_decode(dls).astype(np.int64),
-    )
-
-
 def _segmented_doc_ids(gaps: np.ndarray, ns: np.ndarray) -> np.ndarray:
     """Concatenated per-block delta-gap streams → absolute doc ids.
 
@@ -414,11 +399,11 @@ def decode_blocks_batched(
     concatenate into a single decode; doc-id cumsums are segmented by
     the per-block posting counts ``ns`` (the metadata ``n`` column).
 
-    This is the hot-path twin of :func:`decode_block`: per-block
-    decode costs ~100 µs of small-array numpy overhead, so a group
-    with 10^4 blocks spent ~1 s/query in per-block calls — batching
-    makes the whole chunk a handful of C passes (round-5 large-corpus
-    QPS work)."""
+    This is the only weights decoder; a single block is ``ns=[n]``.
+    A per-block decode costs ~100 µs of small-array numpy overhead, so
+    a group with 10^4 blocks spent ~1 s/query in per-block calls —
+    batching makes the whole chunk a handful of C passes (round-5
+    large-corpus QPS work)."""
     ns = np.asarray(ns, dtype=np.int64)
     if ns.size == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
@@ -454,13 +439,3 @@ def bm25_w1(
     weights-mode/oracle scores to f64 rounding."""
     tf = tf.astype(np.float64)
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl)) + epsilon
-
-
-def decode_block(docs: bytes, ws: bytes) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of one encode_blocks row → (doc_ids int64, weights f32)."""
-    gaps = varint_decode(docs).astype(np.int64)
-    if gaps.size:
-        gaps[0] -= 1
-    doc_ids = np.cumsum(gaps)
-    weights = np.frombuffer(ws, dtype=np.float32)
-    return doc_ids, weights

@@ -19,14 +19,14 @@ HEAVY (matched-postings volume Σ df above
 exact top-k. A heavy query's terms enter the broadcast table as one
 sentinel ``query_id = -1`` row per term: their blocks land (once) in
 ``m_bulk`` doc-region bulk groups, are decoded once, fanned out to
-every heavy query through a broadcast {term_id: (qids, qtfs[, s_t])}
+every heavy query through a broadcast {term_id: (qids, qtfs)}
 map, and emit per-(query, doc) partial sums that the final groupBy-sum
 completes. :func:`search_bmw` (no query heavy) and
 :func:`search_distributed` (every query heavy) are presets of the same
 builder. All are rank-identical to the exact join+agg path (tests pin
 this).
 
-Block-max pruning (:func:`_bmw_group_fn`): blocks are processed in
+Block-max pruning (:func:`_score_blocks`): blocks are processed in
 descending positive-upper-bound (max(qtf·max_w, 0)) order with
 per-(term, salt)-run suffix bounds: unseen docs are bounded by the
 positive suffix maxima, candidates' finals lower-bounded via the
@@ -39,9 +39,15 @@ the SURVEY §4.2 "block-max WAND" realized as vectorized two-phase
 pruning (a Python pointer-chasing DAAT loop would be slower than numpy
 phase-scoring at batch sizes).
 
-The group scorer is also the Spark-free serving tier's scorer
-(``serve.LocalSearcher``): both hand it the same block columns, one
-group per query, and it derives raw-storage block bounds itself.
+Scoring is a numpy kernel over a dict of block columns
+(:func:`_score_blocks`; bulk groups: :func:`_bulk_partial_scores`),
+with ONE decode-and-weight step shared by both
+(:func:`_decode_weights`). :func:`_bmw_group_fn` is only its
+``applyInPandas`` adapter — one ``to_numpy`` per column in, one
+DataFrame out. The Spark-free serving tier (``serve.LocalSearcher``)
+calls the same kernel on numpy arrays straight from its pyarrow read
+and its hot-term cache, one query at a time; no pandas frame sits
+between them. Raw-storage block bounds are derived in the kernel.
 
 Bucket pruning: the builder spreads (term_id, salt) over parquet
 ``bucket=`` partitions by xxhash64; :func:`_postings_for` recomputes
@@ -327,12 +333,107 @@ _DOC_BITS = 41
 _PAIRS_PER_TASK = 250_000
 
 
-def _bulk_partial_scores(
-    pdf: pd.DataFrame, qmap: dict, raw_cfg, tomb_src
-) -> pd.DataFrame | None:
+def _payload_codec(raw: bool) -> tuple[tuple[str, ...], object]:
+    """(payload column names, batched codec decoder) of a storage. The
+    decoder is looked up on the codec module at call time, so wrappers
+    installed on the module (perfbench ``--trace 1``) see every call."""
+    from neural_cherche_spark.index import codec
+
+    if raw:
+        return ("docs", "tfs", "dls"), codec.decode_blocks_raw_batched
+    return ("docs", "ws"), codec.decode_blocks_batched
+
+
+def _ranges(starts: np.ndarray, ns: np.ndarray) -> np.ndarray:
+    """Concatenation of ``arange(s, s + n)`` over the (start, n) pairs."""
+    return np.repeat(starts - (np.cumsum(ns) - ns), ns) + np.arange(
+        int(ns.sum())
+    )
+
+
+def _block_payload(cols: dict, idx: np.ndarray, raw: bool) -> tuple:
+    """Per-posting payload arrays of blocks ``idx``, in ``idx`` order:
+    (doc_ids, w32) or (doc_ids, tf, dl).
+
+    A block with ``dec_at >= 0`` is already decoded: its postings sit
+    at ``dec_at`` in the flat ``dec_<payload>`` arrays (the serving
+    tier's hot-term cache, serve.LocalSearcher). Every other block goes
+    through ONE batched codec decode. The values are the codec's either
+    way."""
+    names, decode = _payload_codec(raw)
+    ns = np.asarray(cols["n"], dtype=np.int64)[idx]
+    at = cols.get("dec_at")
+    hot = at[idx] >= 0 if at is not None else None
+    if hot is None or not hot.any():
+        return decode(*(cols[c][idx] for c in names), ns)
+    src = _ranges(at[idx][hot], ns[hot])
+    if hot.all():
+        return tuple(cols["dec_" + c][src] for c in names)
+    cold = decode(*(cols[c][idx[~hot]] for c in names), ns[~hot])
+    start = np.cumsum(ns) - ns
+    to_hot = _ranges(start[hot], ns[hot])
+    to_cold = _ranges(start[~hot], ns[~hot])
+    out = []
+    for c, a in zip(names, cold):
+        o = np.empty(int(ns.sum()), dtype=a.dtype)
+        o[to_hot] = cols["dec_" + c][src]
+        o[to_cold] = a
+        out.append(o)
+    return tuple(out)
+
+
+def _decode_weights(cols: dict, idx: np.ndarray, raw_cfg, tomb_src) -> tuple:
+    """The decode-and-weight step of both scorers: blocks ``idx`` →
+    per-posting (doc_id, weight, source block, dl stream), with
+    tombstoned docs dropped.
+
+    Weights blocks give their stored f32 weight. Raw blocks are
+    weighted from CURRENT stats with the query-time per-term scale
+    ``s_t`` (a block column): bm25 ``w1 · s_t``; tfidf the UNNORMALIZED
+    ``tf · s_t`` — the exact cosine divides by the current ‖d‖ after
+    aggregation (docnorm join in :func:`_rank_topk`). The dl stream
+    (raw only, None for weights) is what tfidf's norm bounds read: the
+    quantized encode-time norm ρq.
+
+    Deleted docs are masked here, before any top-k selection; block
+    bounds still include them (sound, just looser until compact()).
+    The per-posting source segment lets the loader read only those
+    segments' delete sets (tombmask.py); blocks without a ``seg``
+    column fall back to the merged set."""
+    from neural_cherche_spark.index.codec import bm25_w1
+
+    arrs = _block_payload(cols, idx, raw_cfg is not None)
+    bi = np.repeat(idx, np.asarray(cols["n"], dtype=np.int64)[idx])
+    d, dlv = arrs[0], None
+    if raw_cfg is None:
+        w = arrs[1].astype(np.float64)
+    else:
+        k1, b, eps, avgdl, weighting = raw_cfg
+        tfv, dlv = arrs[1], arrs[2]
+        s_t = np.asarray(cols["s_t"], dtype=np.float64)[bi]
+        if weighting == "tfidf":
+            w = tfv.astype(np.float64) * s_t
+        else:
+            w = bm25_w1(tfv, dlv, k1, b, avgdl, eps) * s_t
+    if tomb_src is not None and d.size:
+        segs = (
+            np.asarray(cols["seg"], dtype=np.int64)[bi]
+            if "seg" in cols
+            else None
+        )
+        keep = keep_mask(tomb_src, d, segs)
+        if keep is not None:
+            d, w, bi = d[keep], w[keep], bi[keep]
+            if dlv is not None:
+                dlv = dlv[keep]
+    return d, w, bi, dlv
+
+
+def _bulk_partial_scores(cols: dict, qmap: dict, raw_cfg, tomb_src) -> tuple:
     """Decode one bulk group's postings blocks ONCE, fan out to all
-    matching heavy queries via the ``{term_id: (qids[], qtfs[][,
-    s_t])}`` map, and pre-aggregate to per-(query, doc) partial sums.
+    matching heavy queries via the ``{term_id: (qids[], qtfs[])}`` map,
+    and pre-aggregate to per-(query, doc) partial sums →
+    (query_ids, doc_ids, scores).
 
     The (posting × matching-query) expansion — the irreducible work of
     exact scoring — is a handful of C-level numpy ops per TERM
@@ -342,61 +443,22 @@ def _bulk_partial_scores(
     corpora), and the combine is one dense accumulate or one np.unique
     over packed (query_id, doc_id) keys. No per-block Python loops on
     tiny arrays."""
-    from neural_cherche_spark.index.codec import (
-        bm25_w1,
-        decode_blocks_batched,
-        decode_blocks_raw_batched,
-    )
-
     mask = (1 << _DOC_BITS) - 1
-    tid_col = pdf["term_id"].to_numpy(dtype=np.int64)
-    matched = np.array([int(t) in qmap for t in tid_col], dtype=bool)
-    if not matched.any():
-        return None
-    sel = np.flatnonzero(matched)
-    ns = pdf["n"].to_numpy(dtype=np.int64)[sel]
-    docs_bins = [pdf["docs"].iat[i] for i in sel]
-    if raw_cfg is not None:
-        k1, b, eps, avgdl, weighting = raw_cfg
-        tfidf = weighting == "tfidf"
-        d, tfv, dlv = decode_blocks_raw_batched(
-            docs_bins,
-            [pdf["tfs"].iat[i] for i in sel],
-            [pdf["dls"].iat[i] for i in sel],
-            ns,
-        )
-        # per-posting query-side scale s_t, fanned out per block
-        st_b = np.array(
-            [float(qmap[int(tid_col[i])][2]) for i in sel], dtype=np.float64
-        )
-        st_p = np.repeat(st_b, ns)
-        if tfidf:
-            # unnormalized tf·idf — the per-doc L2 norm is divided out
-            # AFTER aggregation (docnorm join in _rank_topk)
-            w = tfv.astype(np.float64) * st_p
-        else:
-            # query-time weight from CURRENT stats: w1 · idf/norm
-            w = bm25_w1(tfv, dlv, k1, b, avgdl, eps) * st_p
-    else:
-        d, w32 = decode_blocks_batched(
-            docs_bins, [pdf["ws"].iat[i] for i in sel], ns
-        )
-        w = w32.astype(np.float64)
-    tid_p = np.repeat(tid_col[sel], ns)
-    if tomb_src is not None and d.size:
-        # per-posting source segment → the loader reads only those
-        # segments' delete sets (tombmask.py); rows without a seg
-        # column fall back to the merged set
-        segs = (
-            np.repeat(pdf["seg"].to_numpy(dtype=np.int64)[sel], ns)
-            if "seg" in pdf.columns
-            else None
-        )
-        keep = keep_mask(tomb_src, d, segs)
-        if keep is not None:
-            d, w, tid_p = d[keep], w[keep], tid_p[keep]
+    empty = (
+        np.empty(0, dtype=np.int64),
+        np.empty(0, dtype=np.int64),
+        np.empty(0, dtype=np.float64),
+    )
+    tid_col = np.asarray(cols["term_id"], dtype=np.int64)
+    sel = np.flatnonzero(
+        np.isin(tid_col, np.fromiter(qmap, dtype=np.int64, count=len(qmap)))
+    )
+    if sel.size == 0:
+        return empty
+    d, w, bi, _ = _decode_weights(cols, sel, raw_cfg, tomb_src)
     if d.size == 0:
-        return None
+        return empty
+    tid_p = tid_col[bi]
     # per-term contiguous slices for the K×n expansion
     order = np.argsort(tid_p, kind="stable")
     d, w, tid_p = d[order], w[order], tid_p[order]
@@ -454,12 +516,10 @@ def _bulk_partial_scores(
         val = np.concatenate(val_parts)
         uk, inv = np.unique(key, return_inverse=True)
         sums = np.bincount(inv, weights=val)
-    return pd.DataFrame(
-        {
-            "query_id": (uk >> _DOC_BITS).astype(np.int64),
-            "doc_id": (uk & mask).astype(np.int64),
-            "score": sums,
-        }
+    return (
+        (uk >> _DOC_BITS).astype(np.int64),
+        (uk & mask).astype(np.int64),
+        sums,
     )
 
 
@@ -580,43 +640,7 @@ def _run_suffix_bounds_signed(
     return pos_bound, neg_bound
 
 
-def _assemble_decoded(idx, ns, dec_cols, decode_uncached):
-    """Per-posting arrays for the blocks in ``idx`` order, taking each
-    block's arrays from the frame's pre-decoded object columns where
-    present (the serving tier's hot-term cache, serve.LocalSearcher
-    ``_decoded``) and ONE batched codec decode for the rest. Values
-    are identical to decoding everything — the cache holds exactly
-    the codec's output per block."""
-    first = dec_cols[0]
-    cached = np.fromiter(
-        (isinstance(first[i], np.ndarray) for i in idx),
-        dtype=bool,
-        count=idx.size,
-    )
-    if cached.all():
-        return tuple(
-            np.concatenate([c[i] for i in idx]) for c in dec_cols
-        )
-    if not cached.any():
-        return decode_uncached(idx)
-    unc = idx[~cached]
-    dec = decode_uncached(unc)
-    splits = np.cumsum(ns[~cached])[:-1]
-    parts = [np.split(a, splits) for a in dec]
-    out = []
-    for k, c in enumerate(dec_cols):
-        pieces, u = [], 0
-        for j, i in enumerate(idx):
-            if cached[j]:
-                pieces.append(c[i])
-            else:
-                pieces.append(parts[k][u])
-                u += 1
-        out.append(np.concatenate(pieces))
-    return tuple(out)
-
-
-def _raw_block_bounds(pdf: pd.DataFrame, raw_cfg: tuple, gammas: dict | None):
+def _raw_block_bounds(cols: dict, raw_cfg: tuple, gammas: dict | None):
     """Per-block score bounds of RAW blocks, from the block's tf/dl
     extrema and the query-time scale ``s_t`` (the ``max_w``/``min_w``
     a weights block stores) → (max_w, min_w, glo, ghi).
@@ -638,12 +662,12 @@ def _raw_block_bounds(pdf: pd.DataFrame, raw_cfg: tuple, gammas: dict | None):
     from neural_cherche_spark.index.codec import DNORM_SCALE, bm25_w1
 
     k1, b, eps, avgdl, weighting = raw_cfg
-    s_t = pdf["s_t"].to_numpy(dtype=np.float64)
-    max_tf = pdf["max_tf"].to_numpy(dtype=np.float64)
-    min_dl = pdf["min_dl"].to_numpy(dtype=np.float64)
+    s_t = np.asarray(cols["s_t"], dtype=np.float64)
+    max_tf = np.asarray(cols["max_tf"], dtype=np.float64)
+    min_dl = np.asarray(cols["min_dl"], dtype=np.float64)
     if weighting == "tfidf":
         segs, inv = np.unique(
-            pdf["seg"].to_numpy(dtype=np.int64), return_inverse=True
+            np.asarray(cols["seg"], dtype=np.int64), return_inverse=True
         )
         g = np.array([gammas[int(s)] for s in segs], dtype=np.float64)
         glo = g[inv, 0] * (1.0 - 1e-9)
@@ -652,8 +676,8 @@ def _raw_block_bounds(pdf: pd.DataFrame, raw_cfg: tuple, gammas: dict | None):
         return max_w, np.zeros_like(max_w), glo / DNORM_SCALE, ghi / DNORM_SCALE
     hi = bm25_w1(max_tf, min_dl, k1, b, avgdl, eps)
     lo = bm25_w1(
-        pdf["min_tf"].to_numpy(dtype=np.float64),
-        pdf["max_dl"].to_numpy(dtype=np.float64),
+        np.asarray(cols["min_tf"], dtype=np.float64),
+        np.asarray(cols["max_dl"], dtype=np.float64),
         k1, b, avgdl, eps,
     )
     w1_hi = np.where(hi >= 0, hi * (1.0 + 1e-9), hi * (1.0 - 1e-9)) + 1e-12
@@ -669,26 +693,24 @@ def _raw_block_bounds(pdf: pd.DataFrame, raw_cfg: tuple, gammas: dict | None):
     )
 
 
-def _bmw_group_fn(
+def _score_blocks(
+    cols: dict,
     k: int,
     raw_cfg: tuple | None = None,
-    _stats: dict | None = None,
     tomb_src: str | None = None,
-    bulk_qmap_bc=None,
     gammas: dict | None = None,
-):
-    """One query's group: block-max pruned exact top-k.
+    _stats: dict | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The block-max scoring kernel: ONE query's blocks → its exact
+    top-k as (doc_ids, scores). Spark's group adapter
+    (:func:`_bmw_group_fn`) and ``serve.LocalSearcher`` both call it.
 
-    Frames carry the blocks' stored columns plus the query side (qtf;
-    ``s_t`` for raw storage). Weights blocks bring their stored
-    ``max_w``/``min_w``; raw blocks bring tf/dl extrema and the bounds
-    come from :func:`_raw_block_bounds` (tfidf raw needs ``gammas``).
-
-    Groups keyed by the sentinel ``query_id == -1`` are bulk groups
-    (``bulk_qmap_bc`` set): they carry the HEAVY queries' blocks, which
-    :func:`_bulk_partial_scores` decodes once and fans out to every
-    heavy query via the broadcast map, emitting per-(query, doc)
-    PARTIAL sums (exactness restored by the downstream groupBy-sum).
+    ``cols`` maps column name → numpy array, one entry per block: the
+    stored block columns plus the query side (``qtf``; ``s_t`` for raw
+    storage). Weights blocks bring their stored ``max_w``/``min_w``;
+    raw blocks bring tf/dl extrema and the bounds come from
+    :func:`_raw_block_bounds` (tfidf raw needs ``gammas``). Blocks may
+    arrive pre-decoded (``dec_at`` + ``dec_*``, :func:`_block_payload`).
 
     Pruning is sound under NEGATIVE weights (sign-split bounds):
     unseen docs are bounded by the per-run positive suffix maxima;
@@ -705,350 +727,265 @@ def _bmw_group_fn(
     of re-running np.unique over the growing accumulator each chunk —
     per-chunk cost is O(chunk log chunk + |acc|) memcpy, not
     O(|acc| log |acc|) sort (round-1 NOTES #1).
+
+    Returns at most k docs (score desc, doc_id asc cut) with score > 0
+    — except tfidf raw, which returns an UNNORMALIZED candidate
+    superset (see below).
     """
+    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+    qtf = np.asarray(cols["qtf"], dtype=np.float64)
+    if raw_cfg is not None:
+        max_w, min_w, glo, ghi = _raw_block_bounds(cols, raw_cfg, gammas)
+    else:
+        max_w = np.asarray(cols["max_w"], dtype=np.float64)
+        min_w = np.asarray(cols["min_w"], dtype=np.float64)
+    ub_pos = np.maximum(qtf * max_w, 0.0)
+    neg = np.minimum(qtf * min_w, 0.0)
+    first_doc = np.asarray(cols["first_doc"], dtype=np.int64)
+    last_doc = np.asarray(cols["last_doc"], dtype=np.int64)
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        from neural_cherche_spark.index.codec import (
-            bm25_w1,
-            decode_blocks_batched,
-            decode_blocks_raw_batched,
+    order = np.argsort(-ub_pos, kind="mergesort")
+    # no block can contribute positively → every final score ≤ 0 →
+    # the positive-score filter empties the result; skip all decode
+    if ub_pos[order[0]] <= 0.0:
+        return empty
+    tfidf = raw_cfg is not None and raw_cfg[4] == "tfidf"
+    # run key: salt < 2^20 (cap 1024), term_id < 2^40 → fits int64
+    run_key = (
+        np.asarray(cols["term_id"], dtype=np.int64) << np.int64(20)
+    ) | np.asarray(cols["salt"], dtype=np.int64)
+    if (neg < 0).any():
+        suffix_pos, suffix_neg = _run_suffix_bounds_signed(
+            run_key[order], ub_pos[order], neg[order]
+        )
+    else:
+        suffix_pos = _run_suffix_bounds(run_key[order], ub_pos[order])
+        suffix_neg = np.zeros_like(suffix_pos)
+
+    acc_d = np.empty(0, dtype=np.int64)
+    acc_s = np.empty(0, dtype=np.float64)
+    # tfidf only: per-candidate norm lower/upper bounds (a doc's ρq
+    # is identical in every block that contains it — one value per
+    # doc, captured at first sight)
+    acc_lo = np.empty(0, dtype=np.float64)
+    acc_hi = np.empty(0, dtype=np.float64)
+
+    def decode_chunk(idx_list, doc_filter=None):
+        """Decode and weight a CHUNK of blocks in one batched pass
+        (:func:`_decode_weights`) — a group with 10^4 blocks
+        previously paid ~100 µs of small-array numpy overhead PER
+        BLOCK here (the dominant large-corpus query cost once bounds
+        can't prune)."""
+        idx = np.asarray(idx_list, dtype=np.int64)
+        if doc_filter is not None and idx.size:
+            # vectorized range skip: keep only blocks whose
+            # [first_doc, last_doc] range can contain a candidate
+            lo = np.searchsorted(doc_filter, first_doc[idx])
+            ok = lo < doc_filter.size
+            ok[ok] = doc_filter[lo[ok]] <= last_doc[idx[ok]]
+            idx = idx[ok]
+        if idx.size == 0:
+            return [], [], [], []
+        if _stats is not None:
+            _stats["decoded"] = _stats.get("decoded", 0) + int(idx.size)
+        d, w, bi, dlv = _decode_weights(cols, idx, raw_cfg, tomb_src)
+        w = w * qtf[bi]
+        nlo = nhi = None
+        if tfidf:
+            nlo = dlv * glo[bi]
+            nhi = (dlv + 1.0) * ghi[bi]
+        if doc_filter is not None and d.size:
+            # exact membership via searchsorted (d has cross-run
+            # duplicates, so isin(assume_unique) would be unsound)
+            p = np.searchsorted(doc_filter, d)
+            m = p < doc_filter.size
+            m[m] = doc_filter[p[m]] == d[m]
+            d, w = d[m], w[m]
+            if nlo is not None:
+                nlo, nhi = nlo[m], nhi[m]
+        if d.size == 0:
+            return [], [], [], []
+        return (
+            [d],
+            [w],
+            [nlo] if nlo is not None else [],
+            [nhi] if nhi is not None else [],
         )
 
-        qid = int(pdf["query_id"].iloc[0])
-        if qid == -1:
-            # bulk group: decode once, broadcast fan-out
-            out = _bulk_partial_scores(
-                pdf, bulk_qmap_bc.value, raw_cfg, tomb_src
-            )
-            if out is None:
-                return pd.DataFrame(columns=["query_id", "doc_id", "score"])
-            return out
-        qtf = pdf["qtf"].to_numpy(dtype=np.float64)
-        if raw_cfg is not None:
-            max_w, min_w, glo, ghi = _raw_block_bounds(pdf, raw_cfg, gammas)
-        else:
-            max_w = pdf["max_w"].to_numpy(dtype=np.float64)
-            min_w = pdf["min_w"].to_numpy(dtype=np.float64)
-        ub_pos = np.maximum(qtf * max_w, 0.0)
-        neg = np.minimum(qtf * min_w, 0.0)
-        first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
-        last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
+    def merge(dl, sl, lol, hil):
+        nonlocal acc_d, acc_s, acc_lo, acc_hi
+        if not dl:
+            return
+        nd = np.concatenate(dl)
+        uniq, inv = np.unique(nd, return_inverse=True)
+        sums = np.bincount(inv, weights=np.concatenate(sl))
+        if tfidf:
+            # scatter (last write wins — per-doc values identical)
+            lo_u = np.empty(uniq.size, dtype=np.float64)
+            hi_u = np.empty(uniq.size, dtype=np.float64)
+            lo_u[inv] = np.concatenate(lol)
+            hi_u[inv] = np.concatenate(hil)
+        if acc_d.size == 0:
+            acc_d, acc_s = uniq, sums
+            if tfidf:
+                acc_lo, acc_hi = lo_u, hi_u
+            return
+        pos = np.searchsorted(acc_d, uniq)
+        hit = np.zeros(uniq.size, dtype=bool)
+        inr = pos < acc_d.size
+        hit[inr] = acc_d[pos[inr]] == uniq[inr]
+        acc_s[pos[hit]] += sums[hit]
+        miss = ~hit
+        if miss.any():
+            acc_d = np.insert(acc_d, pos[miss], uniq[miss])
+            acc_s = np.insert(acc_s, pos[miss], sums[miss])
+            if tfidf:
+                acc_lo = np.insert(acc_lo, pos[miss], lo_u[miss])
+                acc_hi = np.insert(acc_hi, pos[miss], hi_u[miss])
 
-        order = np.argsort(-ub_pos, kind="mergesort")
-        # no block can contribute positively → every final score ≤ 0 →
-        # the positive-score filter empties the result; skip all decode
-        if ub_pos[order[0]] <= 0.0:
-            return pd.DataFrame(columns=["query_id", "doc_id", "score"])
-        docs_col = pdf["docs"].to_numpy()
-        n_col = pdf["n"].to_numpy(dtype=np.int64)
-        seg_col = (
-            pdf["seg"].to_numpy(dtype=np.int64)
-            if "seg" in pdf.columns
-            else None
-        )
-        tfidf = raw_cfg is not None and raw_cfg[4] == "tfidf"
-        if raw_cfg is not None:
-            k1, b, eps, avgdl = raw_cfg[:4]
-            tfs_col = pdf["tfs"].to_numpy()
-            dls_col = pdf["dls"].to_numpy()
-            s_t = pdf["s_t"].to_numpy(dtype=np.float64)
-        else:
-            ws_col = pdf["ws"].to_numpy()
-        # serving hot-term cache: frames from serve.LocalSearcher may
-        # carry pre-decoded per-block arrays (object columns); cluster
-        # frames never do, so dd_col None keeps that path byte-identical
-        dd_col = pdf["__dd"].to_numpy() if "__dd" in pdf.columns else None
-        if dd_col is not None:
-            if raw_cfg is not None:
-                dec_cols = (
-                    dd_col,
-                    pdf["__dtf"].to_numpy(),
-                    pdf["__ddl"].to_numpy(),
-                )
-            else:
-                dec_cols = (dd_col, pdf["__dw"].to_numpy())
-        # run key: salt < 2^20 (cap 1024), term_id < 2^40 → fits int64
-        run_key = (
-            pdf["term_id"].to_numpy(dtype=np.int64) << np.int64(20)
-        ) | pdf["salt"].to_numpy(dtype=np.int64)
-        if (neg < 0).any():
-            suffix_pos, suffix_neg = _run_suffix_bounds_signed(
-                run_key[order], ub_pos[order], neg[order]
-            )
-        else:
-            suffix_pos = _run_suffix_bounds(run_key[order], ub_pos[order])
-            suffix_neg = np.zeros_like(suffix_pos)
+    # adaptive schedule: small early chunks → earlier termination
+    # checks exactly where descending-ub mass is front-loaded
+    # (skewed groups prune after a handful of blocks); geometric
+    # growth caps per-check numpy overhead on uniform groups at a
+    # constant factor of the work that was unavoidable anyway.
+    chunk = max(32, k)
+    pos = 0
+    # dense fast path (non-tfidf, bounded doc range): a flat per-doc
+    # score array replaces the sorted-merge accumulator — one
+    # bincount per chunk, no unique/searchsorted/insert. Same
+    # values summed per doc (f64 addition order differs below
+    # rounding granularity); same bounds, same early termination,
+    # same tie-break cut.
+    use_dense = (
+        not tfidf
+        and last_doc.size > 0
+        and int(last_doc.max()) < _DENSE_ACC_MAX_DOC
+    )
+    if use_dense:
+        size = int(last_doc.max()) + 1
+        dacc = np.zeros(size, dtype=np.float64)
+        dseen = np.zeros(size, dtype=bool)
 
-        acc_d = np.empty(0, dtype=np.int64)
-        acc_s = np.empty(0, dtype=np.float64)
-        # tfidf only: per-candidate norm lower/upper bounds (a doc's ρq
-        # is identical in every block that contains it — one value per
-        # doc, captured at first sight)
-        acc_lo = np.empty(0, dtype=np.float64)
-        acc_hi = np.empty(0, dtype=np.float64)
-
-        def decode_chunk(idx_list, doc_filter=None):
-            """Decode a CHUNK of blocks in one batched pass: varint
-            streams concatenate (self-delimiting), doc-id cumsums are
-            segmented by the metadata ``n`` column, and every
-            per-posting factor fans out via one np.repeat — a group
-            with 10^4 blocks previously paid ~100 µs of small-array
-            numpy overhead PER BLOCK in this loop (the dominant
-            large-corpus query cost once bounds can't prune)."""
-            idx = np.asarray(idx_list, dtype=np.int64)
-            if doc_filter is not None and idx.size:
-                # vectorized range skip: keep only blocks whose
-                # [first_doc, last_doc] range can contain a candidate
-                lo = np.searchsorted(doc_filter, first_doc[idx])
-                ok = lo < doc_filter.size
-                ok[ok] = doc_filter[lo[ok]] <= last_doc[idx[ok]]
-                idx = idx[ok]
-            if idx.size == 0:
-                return [], [], [], []
-            if _stats is not None:
-                _stats["decoded"] = _stats.get("decoded", 0) + int(idx.size)
-            ns = n_col[idx]
-            nlo = nhi = None
-            if raw_cfg is not None:
-                if dd_col is not None:
-                    d, tfv, dlv = _assemble_decoded(
-                        idx,
-                        ns,
-                        dec_cols,
-                        lambda u: decode_blocks_raw_batched(
-                            [docs_col[i] for i in u],
-                            [tfs_col[i] for i in u],
-                            [dls_col[i] for i in u],
-                            n_col[u],
-                        ),
-                    )
-                else:
-                    d, tfv, dlv = decode_blocks_raw_batched(
-                        [docs_col[i] for i in idx],
-                        [tfs_col[i] for i in idx],
-                        [dls_col[i] for i in idx],
-                        ns,
-                    )
-                bi = np.repeat(idx, ns)  # source block per posting
-                if tfidf:
-                    # UNNORMALIZED tf·idf contribution — the exact
-                    # cosine divides by the CURRENT ‖d‖ after the
-                    # grouped stage (docnorm join in _rank_topk);
-                    # dlv is the quantized encode-time norm ρq
-                    w = tfv.astype(np.float64) * s_t[bi]
-                    nlo = dlv * glo[bi]
-                    nhi = (dlv + 1.0) * ghi[bi]
-                else:
-                    # query-time weight from CURRENT stats (raw
-                    # blocks are immutable under collection growth)
-                    w = bm25_w1(tfv, dlv, k1, b, avgdl, eps) * s_t[bi]
-            else:
-                if dd_col is not None:
-                    d, w32 = _assemble_decoded(
-                        idx,
-                        ns,
-                        dec_cols,
-                        lambda u: decode_blocks_batched(
-                            [docs_col[i] for i in u],
-                            [ws_col[i] for i in u],
-                            n_col[u],
-                        ),
-                    )
-                else:
-                    d, w32 = decode_blocks_batched(
-                        [docs_col[i] for i in idx],
-                        [ws_col[i] for i in idx],
-                        ns,
-                    )
-                bi = np.repeat(idx, ns)
-                w = w32.astype(np.float64)
-            w = w * qtf[bi]
-            if tomb_src is not None and d.size:
-                # deleted docs are masked BEFORE top-k selection:
-                # block bounds still include them (sound upper
-                # bounds, just looser until compact()). Per-posting
-                # source seg → the loader reads only those segments'
-                # delete sets (tombmask.py)
-                m = keep_mask(
-                    tomb_src,
-                    d,
-                    seg_col[bi] if seg_col is not None else None,
-                )
-                if m is not None:
-                    d, w = d[m], w[m]
-                    if nlo is not None:
-                        nlo, nhi = nlo[m], nhi[m]
-            if doc_filter is not None and d.size:
-                # exact membership via searchsorted (d has cross-run
-                # duplicates, so isin(assume_unique) would be unsound)
-                p = np.searchsorted(doc_filter, d)
-                m = p < doc_filter.size
-                m[m] = doc_filter[p[m]] == d[m]
-                d, w = d[m], w[m]
-                if nlo is not None:
-                    nlo, nhi = nlo[m], nhi[m]
-            if d.size == 0:
-                return [], [], [], []
-            return (
-                [d],
-                [w],
-                [nlo] if nlo is not None else [],
-                [nhi] if nhi is not None else [],
-            )
-
-        def merge(dl, sl, lol, hil):
-            nonlocal acc_d, acc_s, acc_lo, acc_hi
+        def dmerge(dl, sl, _lol, _hil):
             if not dl:
                 return
             nd = np.concatenate(dl)
-            uniq, inv = np.unique(nd, return_inverse=True)
-            sums = np.bincount(inv, weights=np.concatenate(sl))
-            if tfidf:
-                # scatter (last write wins — per-doc values identical)
-                lo_u = np.empty(uniq.size, dtype=np.float64)
-                hi_u = np.empty(uniq.size, dtype=np.float64)
-                lo_u[inv] = np.concatenate(lol)
-                hi_u[inv] = np.concatenate(hil)
-            if acc_d.size == 0:
-                acc_d, acc_s = uniq, sums
-                if tfidf:
-                    acc_lo, acc_hi = lo_u, hi_u
-                return
-            pos = np.searchsorted(acc_d, uniq)
-            hit = np.zeros(uniq.size, dtype=bool)
-            inr = pos < acc_d.size
-            hit[inr] = acc_d[pos[inr]] == uniq[inr]
-            acc_s[pos[hit]] += sums[hit]
-            miss = ~hit
-            if miss.any():
-                acc_d = np.insert(acc_d, pos[miss], uniq[miss])
-                acc_s = np.insert(acc_s, pos[miss], sums[miss])
-                if tfidf:
-                    acc_lo = np.insert(acc_lo, pos[miss], lo_u[miss])
-                    acc_hi = np.insert(acc_hi, pos[miss], hi_u[miss])
+            np.add(
+                dacc,
+                np.bincount(nd, weights=np.concatenate(sl), minlength=size),
+                out=dacc,
+            )
+            dseen[nd] = True
 
-        # adaptive schedule: small early chunks → earlier termination
-        # checks exactly where descending-ub mass is front-loaded
-        # (skewed groups prune after a handful of blocks); geometric
-        # growth caps per-check numpy overhead on uniform groups at a
-        # constant factor of the work that was unavoidable anyway.
-        chunk = max(32, k)
-        pos = 0
-        # dense fast path (non-tfidf, bounded doc range): a flat per-doc
-        # score array replaces the sorted-merge accumulator — one
-        # bincount per chunk, no unique/searchsorted/insert. Same
-        # values summed per doc (f64 addition order differs below
-        # rounding granularity); same bounds, same early termination,
-        # same tie-break cut.
-        use_dense = (
-            not tfidf
-            and last_doc.size > 0
-            and int(last_doc.max()) < _DENSE_ACC_MAX_DOC
-        )
-        if use_dense:
-            size = int(last_doc.max()) + 1
-            dacc = np.zeros(size, dtype=np.float64)
-            dseen = np.zeros(size, dtype=bool)
-
-            def dmerge(dl, sl, _lol, _hil):
-                if not dl:
-                    return
-                nd = np.concatenate(dl)
-                np.add(
-                    dacc,
-                    np.bincount(
-                        nd, weights=np.concatenate(sl), minlength=size
-                    ),
-                    out=dacc,
+        while pos < order.size:
+            dmerge(*decode_chunk(order[pos : pos + chunk]))
+            pos += chunk
+            chunk = min(chunk * 2, 4096)
+            if pos < order.size:
+                seen_scores = dacc[dseen]
+                if seen_scores.size < k:
+                    continue
+                theta_low = np.partition(seen_scores, -k)[-k] + float(
+                    suffix_neg[pos]
                 )
-                dseen[nd] = True
-
-            while pos < order.size:
-                dmerge(*decode_chunk(order[pos : pos + chunk]))
-                pos += chunk
-                chunk = min(chunk * 2, 4096)
-                if pos < order.size:
-                    seen_scores = dacc[dseen]
-                    if seen_scores.size < k:
-                        continue
-                    theta_low = (
-                        np.partition(seen_scores, -k)[-k]
-                        + float(suffix_neg[pos])
+                remaining_ub = float(suffix_pos[pos])
+                if remaining_ub < theta_low:
+                    cand = np.flatnonzero(
+                        dseen & (dacc + remaining_ub >= theta_low)
                     )
+                    dmerge(*decode_chunk(order[pos:], doc_filter=cand))
+                    break
+        uniq = np.flatnonzero(dseen)
+        sums = dacc[uniq]
+    else:
+        while pos < order.size:
+            merge(*decode_chunk(order[pos : pos + chunk]))
+            pos += chunk
+            chunk = min(chunk * 2, 4096)
+            if acc_d.size >= k and pos < order.size:
+                if tfidf:
+                    # θ_low: k-th best certified NORMALIZED lower
+                    # bound (partial sums only grow — contributions
+                    # are nonnegative — and ‖d‖ ≤ acc_hi); suffix
+                    # bounds are already in normalized score space
+                    theta_low = float(np.partition(acc_s / acc_hi, -k)[-k])
                     remaining_ub = float(suffix_pos[pos])
                     if remaining_ub < theta_low:
-                        cand = np.flatnonzero(
-                            dseen & (dacc + remaining_ub >= theta_low)
-                        )
-                        dmerge(*decode_chunk(order[pos:], doc_filter=cand))
-                        break
-            uniq = np.flatnonzero(dseen)
-            sums = dacc[uniq]
-        else:
-            while pos < order.size:
-                merge(*decode_chunk(order[pos : pos + chunk]))
-                pos += chunk
-                chunk = min(chunk * 2, 4096)
-                if acc_d.size >= k and pos < order.size:
-                    if tfidf:
-                        # θ_low: k-th best certified NORMALIZED lower
-                        # bound (partial sums only grow — contributions
-                        # are nonnegative — and ‖d‖ ≤ acc_hi); suffix
-                        # bounds are already in normalized score space
-                        theta_low = float(
-                            np.partition(acc_s / acc_hi, -k)[-k]
-                        )
-                        remaining_ub = float(suffix_pos[pos])
-                        if remaining_ub < theta_low:
-                            cand = acc_d[
-                                acc_s / acc_lo + remaining_ub >= theta_low
-                            ]
-                            merge(
-                                *decode_chunk(order[pos:], doc_filter=cand)
-                            )
-                            break
-                        continue
-                    # θ_low: ≥ k docs end with final score ≥ θ_low
-                    # (their partials can drop at most suffix_neg from
-                    # here on)
-                    theta_low = (
-                        np.partition(acc_s, -k)[-k] + float(suffix_neg[pos])
-                    )
-                    remaining_ub = float(suffix_pos[pos])
-                    if remaining_ub < theta_low:
-                        # no unseen doc can reach the final top-k;
-                        # finish exact scores for surviving candidates
-                        cand = acc_d[acc_s + remaining_ub >= theta_low]
+                        cand = acc_d[
+                            acc_s / acc_lo + remaining_ub >= theta_low
+                        ]
                         merge(*decode_chunk(order[pos:], doc_filter=cand))
                         break
-            uniq, sums = acc_d, acc_s
-        pos_mask = sums > 0
-        uniq, sums = uniq[pos_mask], sums[pos_mask]
-        if uniq.size == 0:
-            return pd.DataFrame(columns=["query_id", "doc_id", "score"])
-        if tfidf:
-            # emit an UNNORMALIZED candidate superset: every doc whose
-            # upper bound reaches the k-th certified lower bound. Docs
-            # early-termination left with stale partials rank strictly
-            # below the fully-decoded true top-k after the exact
-            # docnorm division in _rank_topk, so the final window never
-            # promotes them — emission inflation, not error.
-            lo_m, hi_m = acc_lo[pos_mask], acc_hi[pos_mask]
-            if uniq.size > k:
-                theta = float(np.partition(sums / hi_m, -k)[-k])
-                keep = sums / lo_m >= theta
-                uniq, sums = uniq[keep], sums[keep]
-            return pd.DataFrame(
-                {"query_id": qid, "doc_id": uniq, "score": sums}
-            )
+                    continue
+                # θ_low: ≥ k docs end with final score ≥ θ_low
+                # (their partials can drop at most suffix_neg from
+                # here on)
+                theta_low = (
+                    np.partition(acc_s, -k)[-k] + float(suffix_neg[pos])
+                )
+                remaining_ub = float(suffix_pos[pos])
+                if remaining_ub < theta_low:
+                    # no unseen doc can reach the final top-k;
+                    # finish exact scores for surviving candidates
+                    cand = acc_d[acc_s + remaining_ub >= theta_low]
+                    merge(*decode_chunk(order[pos:], doc_filter=cand))
+                    break
+        uniq, sums = acc_d, acc_s
+    pos_mask = sums > 0
+    uniq, sums = uniq[pos_mask], sums[pos_mask]
+    if uniq.size == 0:
+        return empty
+    if tfidf:
+        # emit an UNNORMALIZED candidate superset: every doc whose
+        # upper bound reaches the k-th certified lower bound. Docs
+        # early-termination left with stale partials rank strictly
+        # below the fully-decoded true top-k after the exact
+        # docnorm division in _rank_topk, so the final window never
+        # promotes them — emission inflation, not error.
+        lo_m, hi_m = acc_lo[pos_mask], acc_hi[pos_mask]
         if uniq.size > k:
-            # deterministic cut: score desc, doc_id asc — must match the
-            # exact path's tie-break so rank-identity holds under ties
-            cut = np.lexsort((uniq, -sums))[:k]
-            uniq, sums = uniq[cut], sums[cut]
-        return pd.DataFrame(
-            {"query_id": qid, "doc_id": uniq, "score": sums}
-        )
+            theta = float(np.partition(sums / hi_m, -k)[-k])
+            keep = sums / lo_m >= theta
+            uniq, sums = uniq[keep], sums[keep]
+        return uniq, sums
+    if uniq.size > k:
+        # deterministic cut: score desc, doc_id asc — must match the
+        # exact path's tie-break so rank-identity holds under ties
+        cut = np.lexsort((uniq, -sums))[:k]
+        uniq, sums = uniq[cut], sums[cut]
+    return uniq, sums
+
+
+def _bmw_group_fn(
+    k: int,
+    raw_cfg: tuple | None = None,
+    _stats: dict | None = None,
+    tomb_src: str | None = None,
+    bulk_qmap_bc=None,
+    gammas: dict | None = None,
+):
+    """The ``applyInPandas`` adapter of the scorers: one ``to_numpy``
+    per column in, one DataFrame out.
+
+    A group keyed by ``query_id >= 0`` is one query, scored by
+    :func:`_score_blocks`. Groups keyed by the sentinel
+    ``query_id == -1`` are bulk groups (``bulk_qmap_bc`` set): they
+    carry the HEAVY queries' blocks, which :func:`_bulk_partial_scores`
+    decodes once and fans out to every heavy query via the broadcast
+    map, emitting per-(query, doc) PARTIAL sums (exactness restored by
+    the downstream groupBy-sum)."""
+
+    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+        qid = int(cols["query_id"][0])
+        if qid == -1:
+            q, d, s = _bulk_partial_scores(
+                cols, bulk_qmap_bc.value, raw_cfg, tomb_src
+            )
+        else:
+            d, s = _score_blocks(cols, k, raw_cfg, tomb_src, gammas, _stats)
+            q = np.full(d.size, qid, dtype=np.int64)
+        return pd.DataFrame({"query_id": q, "doc_id": d, "score": s})
 
     return score_group
 
@@ -1093,9 +1030,9 @@ def search_auto(
     # broadcast query table: one row per (term, selective query), plus
     # one sentinel row per heavy-matched term that routes its blocks
     # (once) into the bulk groups; raw rows carry the query-time
-    # per-term scale s_t, from which the scorer derives block bounds.
-    # qmap {term_id: (qids[], qtfs[][, s_t])} is the bulk groups'
-    # fan-out to the heavy queries.
+    # per-term scale s_t, from which the scorers derive block bounds
+    # and weights (the sentinel rows too). qmap {term_id: (qids[],
+    # qtfs[])} is the bulk groups' fan-out to the heavy queries.
     qt_rows: list[tuple] = []
     qmap: dict[int, tuple] = {}
     vol_h = 0
@@ -1115,7 +1052,7 @@ def search_auto(
             qmap[tid] = (
                 np.array(qids, dtype=np.int64),
                 np.array(qtfs, dtype=np.float64),
-            ) + st
+            )
             vol_h += int(r["df"]) * len(hq)
     # bulk-group count sized by matched heavy volume: a constant group
     # set as the fleet grows (more groups would only duplicate partial

@@ -21,12 +21,16 @@ cluster in the loop —
   queried terms (a per-searcher index of the parquet footers; the
   builder writes each bucket sorted by term), filtered to
   ``term_id ∈ T``;
-* scoring: the SAME ``_bmw_group_fn`` scorer the cluster path runs
-  inside ``applyInPandas`` — identical block bounds, block-max pruning
-  and tie-breaks — fed the identical block columns from the pyarrow
-  read, one group per query. Parity with ``BM25Index.search`` is
-  therefore structural, and pinned end-to-end by
-  ``tests/test_serve_local.py``.
+* scoring: the SAME numpy block kernel the cluster path runs inside
+  ``applyInPandas`` (``query/bmw._score_blocks``; the Spark adapter
+  only converts the group frame to numpy arrays) — identical block
+  bounds, block-max pruning and tie-breaks — called here directly on
+  numpy block columns, one call per query: the pyarrow read converts
+  to numpy once, the hot-term LRU keeps each term's block columns (and,
+  once hot, its decoded postings) as numpy arrays, and a query's
+  columns are joined with ``np.concatenate``. No pandas frame is built
+  per request. Parity with ``BM25Index.search`` is therefore
+  structural, and pinned end-to-end by ``tests/test_serve_local.py``.
 
 Scope: weights-storage indexes (bm25 and tfidf — the stored weights
 are final either way) and RAW-storage bm25 indexes including pending
@@ -40,7 +44,6 @@ docnorm join).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 
 class LocalSearcher:
@@ -71,9 +74,10 @@ class LocalSearcher:
         self._serving = serving
         self._serving_prepared = prepared
         self._tomb_src = tomb_src
-        # hot-term postings cache: term_id → its block rows (immutable
-        # for this manifest — segments are append-only and the handle
-        # is pinned to one manifest). LRU by payload bytes; serving
+        # hot-term postings cache: term_id → (its block columns as
+        # numpy arrays, bytes, accesses) — immutable for this manifest:
+        # segments are append-only and the handle is pinned to one
+        # manifest. LRU by payload (+ decoded) bytes; serving
         # workloads are zipfian, so the head terms' blocks stay
         # resident and repeat queries skip the dataset scan entirely.
         self._cache: "collections.OrderedDict[int, tuple]" = (
@@ -129,100 +133,81 @@ class LocalSearcher:
         )
 
     # ------------------------------------------------------------------
-    def _read_postings(self, rows: list) -> pd.DataFrame:
-        """Pruned pyarrow scan: row groups via the term_id stats index
-        (:meth:`_rg_index`) — the LOCAL twin of query/bmw._postings_for.
-        Hot terms come from the LRU cache; only cache misses touch the
-        dataset."""
+    def _read_postings(self, tids: list[int]) -> tuple[list, dict | None]:
+        """Block columns of terms ``tids`` → ((term_id, cached entry) of
+        the hits, in ``tids`` order; this request's scan of the misses,
+        or None). Hot terms come from the LRU cache; only cache misses
+        touch the dataset, in ONE pruned scan (:meth:`_scan_postings`),
+        whose rows then enter the cache one entry per term."""
         hits, misses = [], []
-        for r in rows:
-            t = int(r["term_id"])
+        for t in tids:
             if t in self._cache:
                 self._cache.move_to_end(t)
-                hits.append(self._decoded(t))
+                hits.append((t, self._decoded(t)))
             else:
-                misses.append(r)
-        parts = list(hits)
-        if misses:
-            fresh = self._scan_postings(misses)
-            parts.append(fresh)
-            if self._cache_cap > 0 and len(fresh):
-                payload = fresh["docs"].map(len)
-                if "ws" in fresh.columns:
-                    payload = payload + fresh["ws"].map(len)
-                else:
-                    payload = (
-                        payload
-                        + fresh["tfs"].map(len)
-                        + fresh["dls"].map(len)
-                    )
-                for t, sub in fresh.groupby("term_id", sort=False):
-                    nb = int(payload[sub.index].sum()) + 512
-                    # this scan is the term's first access; decoded
-                    # arrays attach on its fourth (see _decoded)
-                    self._cache[int(t)] = (sub, nb, 0)
-                    self._cache_bytes += nb
-                while self._cache_bytes > self._cache_cap and self._cache:
-                    _, (_, nb, _) = self._cache.popitem(last=False)
-                    self._cache_bytes -= nb
-        if not parts:
-            return pd.DataFrame()
-        return (
-            parts[0]
-            if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
-        )
+                misses.append(t)
+        if not misses:
+            return hits, None
+        fresh, nbytes = self._scan_postings(misses)
+        if self._cache_cap > 0 and nbytes.size:
+            u, first, inv = np.unique(
+                fresh["term_id"], return_index=True, return_inverse=True
+            )
+            by_term = np.split(
+                np.argsort(inv, kind="stable"), np.cumsum(np.bincount(inv))[:-1]
+            )
+            # one entry per term, inserted in scan order; the scan is
+            # the term's first access — decoded arrays attach on its
+            # fourth (see _decoded)
+            for g in np.argsort(first):
+                rows = by_term[g]
+                nb = int(nbytes[rows].sum()) + 512
+                self._cache[int(u[g])] = (
+                    {c: a[rows] for c, a in fresh.items()}, nb, 0
+                )
+                self._cache_bytes += nb
+            self._evict()
+        return hits, fresh
 
-    def _decoded(self, t: int) -> pd.DataFrame:
-        """Cached rows of term ``t``, with pre-decoded posting arrays
-        attached on the term's FOURTH access — the scan that cached it
-        is the first, so the third cache hit decodes (two repeat hits
-        mark the term hot; decoding lazily keeps cold and lukewarm
-        accesses exactly as cheap as before — a benchmark whose terms
-        repeat only once pays nothing — and never pre-decodes blocks a
+    def _evict(self) -> None:
+        while self._cache_bytes > self._cache_cap and self._cache:
+            _, (_, nb, _) = self._cache.popitem(last=False)
+            self._cache_bytes -= nb
+
+    def _decoded(self, t: int) -> dict:
+        """Cached block columns of term ``t``, with its postings decoded
+        on the term's FOURTH access — the scan that cached it is the
+        first, so the third cache hit decodes (two repeat hits mark the
+        term hot; decoding lazily keeps cold and lukewarm accesses
+        exactly as cheap as before — a benchmark whose terms repeat
+        only once pays nothing — and never pre-decodes blocks a
         rarely-seen term's queries may skip).
 
-        The decoded payload rides the cached frame as object columns
-        (``__dd`` + ``__dw`` | ``__dtf``/``__ddl``) — one numpy array
-        per block row; the group scorer's decode_chunk concatenates
-        them instead of re-running the varint decode (profiled at ~18%
-        of serving wall on repeat-heavy workloads). LRU accounting
+        The decoded postings join the entry as flat arrays
+        ``dec_docs`` + ``dec_ws`` | ``dec_tfs``/``dec_dls`` with
+        per-block offsets ``dec_at``; the scorer gathers from them
+        instead of re-running the varint decode (profiled at ~18% of
+        serving wall on repeat-heavy workloads). LRU accounting
         includes the decoded bytes."""
-        import numpy as np
+        from neural_cherche_spark.query.bmw import _payload_codec
 
-        from neural_cherche_spark.index.codec import (
-            decode_blocks_batched,
-            decode_blocks_raw_batched,
-        )
-
-        sub, nb, hits = self._cache[t]
-        if hits >= 2 and "__dd" not in sub.columns:
-            ns = sub["n"].to_numpy(dtype=np.int64)
-            splits = np.cumsum(ns)[:-1]
-            if self.storage == "raw":
-                d, tf, dl = decode_blocks_raw_batched(
-                    list(sub["docs"]), list(sub["tfs"]),
-                    list(sub["dls"]), ns,
-                )
-                sub = sub.copy()
-                sub["__dd"] = np.split(d, splits)
-                sub["__dtf"] = np.split(tf, splits)
-                sub["__ddl"] = np.split(dl, splits)
-                extra = d.nbytes + tf.nbytes + dl.nbytes
-            else:
-                d, w = decode_blocks_batched(list(sub["docs"]), list(sub["ws"]), ns)
-                sub = sub.copy()
-                sub["__dd"] = np.split(d, splits)
-                sub["__dw"] = np.split(w, splits)
-                extra = d.nbytes + w.nbytes
-            self._cache[t] = (sub, nb + extra, hits + 1)
+        e, nb, hits = self._cache[t]
+        if hits >= 2 and "dec_at" not in e:
+            names, decode = _payload_codec(self.storage == "raw")
+            ns = e["n"]
+            dec = {
+                "dec_" + c: a
+                for c, a in zip(names, decode(*(e[c] for c in names), ns))
+            }
+            dec["dec_at"] = np.cumsum(ns) - ns
+            e = {**e, **dec}
+            extra = sum(a.nbytes for a in dec.values())
+            self._cache[t] = (e, nb + extra, hits + 1)
             self._cache_bytes += extra
-            while self._cache_bytes > self._cache_cap and self._cache:
-                _, (_, nbe, _) = self._cache.popitem(last=False)
-                self._cache_bytes -= nbe
+            self._evict()
         else:
-            self._cache[t] = (sub, nb, hits + 1)
-        return sub
+            self._cache[t] = (e, nb, hits + 1)
+        return e
 
     def _rg_index(self):
         """(fragments, seg-per-fragment, per-row-group term_id min/max
@@ -271,25 +256,26 @@ class LocalSearcher:
             )
         return self._rgmap
 
-    def _scan_postings(self, rows: list) -> pd.DataFrame:
+    def _scan_postings(self, tids: list[int]) -> tuple[dict, np.ndarray]:
+        """One batched pyarrow scan of terms ``tids`` → (block columns as
+        numpy arrays, payload bytes per block)."""
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.dataset as ds
+
+        from neural_cherche_spark.query.bmw import _payload_codec
 
         self.cache_misses += 1
         frags, fsegs, tmins, tmaxs, fidx, rgids = self._rg_index()
-        tids = np.asarray(
-            sorted(int(r["term_id"]) for r in rows), dtype=np.int64
+        tids = np.asarray(sorted(tids), dtype=np.int64)
+        payload = _payload_codec(self.storage == "raw")[0]
+        bounds = (
+            ["max_tf", "min_tf", "min_dl", "max_dl"]
+            if self.storage == "raw"
+            else ["max_w", "min_w"]
         )
-        if self.storage == "raw":
-            cols = [
-                "term_id", "salt", "n", "first_doc", "last_doc",
-                "max_tf", "min_tf", "min_dl", "max_dl", "docs", "tfs", "dls",
-            ]
-        else:
-            cols = [
-                "term_id", "salt", "n", "first_doc", "last_doc",
-                "max_w", "min_w", "docs", "ws",
-            ]
+        cols = ["term_id", "salt", "n", "first_doc", "last_doc"] + bounds
+        cols += payload
         # row groups whose [min, max] term range contains a queried
         # term — smallest queried tid ≥ min must be ≤ max
         pos = np.searchsorted(tids, tmins)
@@ -307,38 +293,37 @@ class LocalSearcher:
                 frags[int(fi)].subset(row_group_ids=[int(i) for i in sel])
             )
         out_cols = cols + (["seg"] if "seg" in self._fields else [])
-        if not sel_frags:
-            return pd.DataFrame({c: pd.Series(dtype="object") for c in out_cols})
-        sub_ds = ds.FileSystemDataset(
-            sel_frags,
-            schema=self._ds.schema,
-            format=self._ds.format,
-            filesystem=self._ds.filesystem,
+        if sel_frags:
+            tbl = ds.FileSystemDataset(
+                sel_frags,
+                schema=self._ds.schema,
+                format=self._ds.format,
+                filesystem=self._ds.filesystem,
+            ).to_table(columns=out_cols, filter=filt)
+        else:
+            tbl = self._ds.schema.empty_table().select(out_cols)
+        nbytes = sum(
+            pc.binary_length(tbl[c]).to_numpy().astype(np.int64)
+            for c in payload
         )
-        return sub_ds.to_table(columns=out_cols, filter=filt).to_pandas()
+        return {c: tbl[c].to_numpy() for c in out_cols}, nbytes
 
     def search(self, queries: list[str] | str, k: int = 10) -> list:
         """Top-k per query → ``[[{"doc_id", "score", "rank"}, ...], ...]``
         (a single string returns the inner list directly).
 
-        One pyarrow read covers the batch's term union; each query is
-        then scored in-process as ONE group of the cluster scorer, as
-        the Spark path scores each selective query."""
-        from neural_cherche_spark.query.bmw import (
-            _bmw_group_fn,
-            _s_t,
-            serving_match_rows,
-        )
+        One pyarrow read covers the batch's term union; each query's
+        block columns are then concatenated from it and from the cache
+        and scored in-process by the cluster's block-max kernel, as the
+        Spark path scores each selective query."""
+        from neural_cherche_spark.query.bmw import _s_t, serving_match_rows
 
         single = isinstance(queries, str)
         qlist = [queries] if single else list(queries)
         rows = serving_match_rows(self, qlist)
         out: list[list[dict]] = [[] for _ in qlist]
         if rows:
-            pdf = self._read_postings(rows)
-            score_group = _bmw_group_fn(
-                k, self._raw_cfg, tomb_src=self._tomb_src
-            )
+            hits, fresh = self._read_postings([int(r["term_id"]) for r in rows])
             # per-query term info: (qtf, s_t) keyed by term_id — s_t,
             # the raw blocks' query-time scale, is unused for weights
             per_q: list[dict[int, tuple[float, float]]] = [
@@ -353,40 +338,59 @@ class LocalSearcher:
                     )
             for qid, terms in enumerate(per_q):
                 if terms:
-                    out[qid] = self._score_one(pdf, terms, k, score_group)
+                    out[qid] = self._score_one(hits, fresh, terms, k)
         return out[0] if single else out
 
     # ------------------------------------------------------------------
     def _score_one(
         self,
-        pdf: pd.DataFrame,
+        hits: list,
+        fresh: dict | None,
         terms: dict[int, tuple[float, float]],
         k: int,
-        score_group,
     ) -> list:
-        sub = pdf[pdf["term_id"].isin(list(terms))]
-        if len(sub) == 0:
+        """One query as one kernel call: its terms' cached entries (in
+        match order), then its rows of this request's scan, joined per
+        column with ``np.concatenate``; the final cut uses the cluster
+        window's tie rule (score desc, doc_id asc)."""
+        from neural_cherche_spark.query.bmw import _score_blocks
+
+        keys = np.fromiter(terms, dtype=np.int64, count=len(terms))
+        parts = [e for t, e in hits if t in terms]
+        if fresh is not None:
+            sel = np.flatnonzero(np.isin(fresh["term_id"], keys))
+            if sel.size:
+                parts.append({c: a[sel] for c, a in fresh.items()})
+        if not parts:
             return []
-        tid = sub["term_id"].to_numpy(dtype=np.int64)
-        group = sub.reset_index(drop=True)
-        group["query_id"] = 0
-        group["qtf"] = np.array([terms[t][0] for t in tid], dtype=np.float64)
+        names = [c for c in parts[0] if not c.startswith("dec_")]
+        cols = {c: np.concatenate([p[c] for p in parts]) for c in names}
+        if any("dec_at" in p for p in parts):
+            # pre-decoded postings: flat arrays joined, per-block
+            # offsets shifted to match; -1 marks blocks still encoded
+            ats, flat, base = [], {}, 0
+            for p in parts:
+                if "dec_at" not in p:
+                    ats.append(np.full(p["n"].size, -1, dtype=np.int64))
+                    continue
+                ats.append(p["dec_at"] + base)
+                base += p["dec_docs"].size
+                for c in p:
+                    if c.startswith("dec_") and c != "dec_at":
+                        flat.setdefault(c, []).append(p[c])
+            cols["dec_at"] = np.concatenate(ats)
+            cols.update({c: np.concatenate(a) for c, a in flat.items()})
+        order = np.argsort(keys)
+        at = order[np.searchsorted(keys, cols["term_id"], sorter=order)]
+        info = np.array(list(terms.values()), dtype=np.float64)
+        cols["qtf"] = info[at, 0]
         if self._raw_cfg is not None:
-            group["s_t"] = np.array(
-                [terms[t][1] for t in tid], dtype=np.float64
-            )
-        res = score_group(group)
-        if not len(res):
-            return []
-        # final rank: same tie-break as the cluster window
-        order = np.lexsort(
-            (res["doc_id"].to_numpy(), -res["score"].to_numpy())
-        )[:k]
+            cols["s_t"] = info[at, 1]
+        d, s = _score_blocks(cols, k, self._raw_cfg, tomb_src=self._tomb_src)
+        order = np.lexsort((d, -s))[:k]
         return [
-            {
-                "doc_id": int(res["doc_id"].iloc[i]),
-                "score": float(res["score"].iloc[i]),
-                "rank": rank + 1,
-            }
-            for rank, i in enumerate(order)
+            {"doc_id": doc, "score": score, "rank": rank}
+            for rank, (doc, score) in enumerate(
+                zip(d[order].tolist(), s[order].tolist()), 1
+            )
         ]

@@ -148,3 +148,60 @@ def test_adaptive_chunks_prune_skewed_groups():
     assert got_topk == want
     # the tail term alone is ~2000 blocks; the schedule must stop early
     assert stats["decoded"] < 0.25 * n_blocks, (stats, n_blocks)
+
+
+def test_block_payload_mixes_decoded_and_encoded_blocks():
+    """Blocks arriving pre-decoded (``dec_at`` + flat ``dec_*`` arrays,
+    the serving cache's form) and still-encoded blocks, in any mix and
+    order, give exactly the codec's arrays in the requested order."""
+    from neural_cherche_spark.index.codec import (
+        decode_blocks_batched,
+        decode_blocks_raw_batched,
+        encode_partition_bulk_raw,
+    )
+    from neural_cherche_spark.query.bmw import _block_payload
+
+    rng = np.random.default_rng(5)
+    n = 300
+    docs = np.sort(rng.choice(5000, size=n, replace=False)).astype(np.int64)
+    tf = rng.integers(1, 30, n).astype(np.int64)
+    dl = rng.integers(1, 900, n).astype(np.int64)
+    enc = encode_partition_bulk_raw(
+        np.zeros(n, np.int64), np.zeros(n, np.int64), docs, tf, dl,
+        np.ones(n, np.int64), block_size=16,
+    )
+    ws = rng.random(n).astype(np.float32)
+    ns = np.asarray(enc["n"], dtype=np.int64)
+    starts = np.cumsum(ns) - ns
+    wbins = [ws[s : s + c].tobytes() for s, c in zip(starts, ns)]
+    cols = {
+        "n": ns,
+        "docs": np.array(enc["docs"], dtype=object),
+        "tfs": np.array(enc["tfs"], dtype=object),
+        "dls": np.array(enc["dls"], dtype=object),
+        "ws": np.array(wbins, dtype=object),
+    }
+    # decoded copies of every other block, stored in reverse block order
+    hot = np.arange(ns.size)[::-2]
+    at = np.full(ns.size, -1, dtype=np.int64)
+    at[hot] = np.cumsum(ns[hot]) - ns[hot]
+    flat_d, flat_tf, flat_dl = decode_blocks_raw_batched(
+        cols["docs"][hot], cols["tfs"][hot], cols["dls"][hot], ns[hot]
+    )
+    _, flat_w = decode_blocks_batched(cols["docs"][hot], cols["ws"][hot], ns[hot])
+    cols.update(
+        dec_at=at, dec_docs=flat_d, dec_tfs=flat_tf, dec_dls=flat_dl,
+        dec_ws=flat_w,
+    )
+    for idx in (rng.permutation(ns.size), hot, hot[::-1], np.array([0, 1])):
+        want_raw = decode_blocks_raw_batched(
+            cols["docs"][idx], cols["tfs"][idx], cols["dls"][idx], ns[idx]
+        )
+        want_w = decode_blocks_batched(cols["docs"][idx], cols["ws"][idx], ns[idx])
+        for got, want in (
+            (_block_payload(cols, idx, True), want_raw),
+            (_block_payload(cols, idx, False), want_w),
+        ):
+            for g, w in zip(got, want):
+                assert g.dtype == w.dtype
+                np.testing.assert_array_equal(g, w)

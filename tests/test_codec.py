@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from neural_cherche_spark.index.codec import (
-    decode_block,
+    decode_blocks_batched,
     encode_blocks,
     varint_decode,
     varint_encode,
@@ -35,7 +35,7 @@ def test_block_roundtrip(doc_set, block_size):
     rows = encode_blocks(doc_ids, ws, block_size)
     got_d, got_w = [], []
     for bi, n, first, last, max_w, docs, wbytes in rows:
-        d, w = decode_block(docs, wbytes)
+        d, w = decode_blocks_batched([docs], [wbytes], [n])
         assert d.size == n == w.size
         assert d[0] == first and d[-1] == last
         assert np.isclose(max_w, w.max())
@@ -116,12 +116,13 @@ def test_compression_is_compact():
 
 
 def test_raw_bulk_roundtrip_random_runs():
-    """encode_partition_bulk_raw ↔ decode_block_raw roundtrip across
-    random multi-run partitions (the raw-storage codec)."""
+    """encode_partition_bulk_raw ↔ decode_blocks_raw_batched roundtrip
+    across random multi-run partitions (the raw-storage codec), one
+    block per call and all blocks in one batched call."""
     import numpy as np
 
     from neural_cherche_spark.index.codec import (
-        decode_block_raw,
+        decode_blocks_raw_batched,
         encode_partition_bulk_raw,
     )
 
@@ -149,8 +150,8 @@ def test_raw_bulk_roundtrip_random_runs():
         # every block decodes back to its slice; metadata is exact
         got_d, got_tf, got_dl = [], [], []
         for i in range(len(enc["n"])):
-            bd, btf, bdl = decode_block_raw(
-                enc["docs"][i], enc["tfs"][i], enc["dls"][i]
+            bd, btf, bdl = decode_blocks_raw_batched(
+                [enc["docs"][i]], [enc["tfs"][i]], [enc["dls"][i]], [enc["n"][i]]
             )
             assert bd.size == enc["n"][i]
             assert bd[0] == enc["first_doc"][i] and bd[-1] == enc["last_doc"][i]
@@ -165,3 +166,9 @@ def test_raw_bulk_roundtrip_random_runs():
         np.testing.assert_array_equal(np.concatenate(got_d), d[order])
         np.testing.assert_array_equal(np.concatenate(got_tf), tf[order])
         np.testing.assert_array_equal(np.concatenate(got_dl), dl[order])
+        bd, btf, bdl = decode_blocks_raw_batched(
+            enc["docs"], enc["tfs"], enc["dls"], enc["n"]
+        )
+        np.testing.assert_array_equal(bd, d[order])
+        np.testing.assert_array_equal(btf, tf[order])
+        np.testing.assert_array_equal(bdl, dl[order])

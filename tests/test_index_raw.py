@@ -5,6 +5,8 @@ never stores f32 weights."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -210,3 +212,24 @@ def test_raw_negative_epsilon_matches_reference(spark, tmp_path):
         assert_rank_identical(got_bmw.get(qid, []), want, rtol=1e-3)
         got_local = [(d["doc_id"], d["score"]) for d in local[qid]]
         assert_rank_identical(got_local, want, rtol=1e-3)
+
+
+def test_rebuild_into_weights_dir_with_raw_storage(
+    spark, corpus, queries, raw_index, tmp_path
+):
+    """A raw build into a directory that holds a weights index replaces
+    the weights postings layout (postings/bucket=*) instead of writing
+    postings/seg=0 beside it: the rebuilt index answers exactly as a
+    fresh raw build of the same corpus."""
+    d = str(tmp_path / "switch")
+    kw = dict(id_col="doc_id", n_buckets=8, salt_every=50)
+    build_index(spark, corpus, d, **kw).close()
+    idx = build_index(spark, corpus, d, storage="raw", resume=False, **kw)
+    assert sorted(os.listdir(os.path.join(d, "postings"))) == ["seg=0"]
+    got = idx.search(queries, k=10).collect()
+    want = raw_index.search(queries, k=10).collect()
+    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+    assert [tuple(r) for r in sorted(got, key=key)] == [
+        tuple(r) for r in sorted(want, key=key)
+    ]
+    idx.close()

@@ -145,3 +145,34 @@ def test_tfidf_delta_matches_fresh_raw(
     )
     assert_same_artifacts(one_idx, raw_index)
     one_idx.close()
+
+
+def test_doc_norms_independent_of_partitioning(spark):
+    """``doc_norms`` sums each doc's squared weights in a fixed order,
+    so the norms — and the quantized norm every tfidf raw block stores
+    — are bit-identical however the tf rows are partitioned."""
+    import numpy as np
+
+    from neural_cherche_spark.index.builder import doc_norms
+
+    rng = np.random.default_rng(11)
+    n_docs, n_terms = 60, 400
+    tf_rows = [
+        (d, f"t{t}", int(rng.integers(1, 40)))
+        for d in range(n_docs)
+        for t in rng.choice(n_terms, size=80, replace=False)
+    ]
+    tf = spark.createDataFrame(tf_rows, "doc_id long, term string, tf long")
+    termdict = spark.createDataFrame(
+        [(f"t{t}", float(rng.uniform(0.01, 9.0))) for t in range(n_terms)],
+        "term string, idf double",
+    )
+    one, seven = (
+        {
+            r["doc_id"]: r["dnorm"]
+            for r in doc_norms(tf.repartition(n), termdict).collect()
+        }
+        for n in (1, 7)
+    )
+    assert len(one) == n_docs
+    assert one == seven

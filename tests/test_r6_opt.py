@@ -123,7 +123,7 @@ def test_drop_nonpositive_queries():
 
 def test_local_searcher_decoded_cache_parity(spark, tmp_path):
     """The hot-term decoded-array cache (serve.LocalSearcher._decoded +
-    bmw._assemble_decoded) must return byte-identical results on the
+    bmw._block_payload) must return byte-identical results on the
     1st (raw bytes), 2nd (marks hot), and 3rd+ (pre-decoded) access,
     for weights AND raw storage, and match the Spark serving path."""
     from neural_cherche_spark.data import synth_webtext
@@ -161,9 +161,7 @@ def test_local_searcher_decoded_cache_parity(spark, tmp_path):
             passes.append(got)
         assert passes[0] == passes[1] == passes[2] == want, storage
         # the third pass actually exercised the decoded path
-        assert any(
-            "__dd" in e[0].columns for e in srv._cache.values()
-        ), storage
+        assert any("dec_at" in e[0] for e in srv._cache.values()), storage
         index.close()
 
 

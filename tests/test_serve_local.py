@@ -198,18 +198,19 @@ def test_hot_term_cache(index, qtexts):
     srv.search(qtexts[1], k=5)
     assert srv.cache_misses >= misses_after_first
 
-    # a cached term's pre-decoded arrays (``__dd``) attach on its
-    # FOURTH access: the scan that caches it is the first, and the
-    # third cache hit decodes; answers never change along the way
+    # a cached term's decoded postings (the ``dec_at`` + ``dec_*``
+    # arrays of its cache entry) attach on its FOURTH access: the scan
+    # that caches it is the first, and the third cache hit decodes;
+    # answers never change along the way
     srv = LocalSearcher.from_index(index)
     assert srv.search(qtexts[0], k=5) == first
     terms = list(srv._cache)
     assert terms
     for access in (2, 3, 4):
-        decoded = ["__dd" in srv._cache[t][0].columns for t in terms]
+        decoded = ["dec_at" in srv._cache[t][0] for t in terms]
         assert not any(decoded), access
         assert srv.search(qtexts[0], k=5) == first
-    assert all("__dd" in srv._cache[t][0].columns for t in terms)
+    assert all("dec_at" in srv._cache[t][0] for t in terms)
     assert srv.cache_misses == 1
 
 
@@ -227,3 +228,40 @@ def test_cache_disabled_and_eviction(index, qtexts):
     r2 = srv1.search(qtexts[0], k=5)
     assert srv1.cache_misses == 2
     assert r1 == r2
+
+
+def test_search_builds_no_pandas_frames(monkeypatch, index, tomb_index, qtexts):
+    """The serving path has one data representation — numpy arrays: no
+    cold (scan) or warm (cached, then pre-decoded) search constructs a
+    pandas DataFrame or calls ``pd.concat``, for weights or raw (here
+    tombstoned) storage."""
+    import pandas as pd
+
+    calls = {"DataFrame": 0, "concat": 0}
+    init, concat = pd.DataFrame.__init__, pd.concat
+
+    def counting_init(self, *a, **kw):
+        calls["DataFrame"] += 1
+        init(self, *a, **kw)
+
+    def counting_concat(*a, **kw):
+        calls["concat"] += 1
+        return concat(*a, **kw)
+
+    for idx in (index, tomb_index):
+        srv = LocalSearcher.from_index(idx)
+        monkeypatch.setattr(pd.DataFrame, "__init__", counting_init)
+        monkeypatch.setattr(pd, "concat", counting_concat)
+        got = [srv.search(qtexts, k=5) for _ in range(5)]
+        monkeypatch.undo()
+        assert calls == {"DataFrame": 0, "concat": 0}
+        for g in got[1:]:
+            # cached passes may sum a doc's terms in another block order
+            assert [[(x["doc_id"], x["rank"]) for x in q] for q in g] == [
+                [(x["doc_id"], x["rank"]) for x in q] for q in got[0]
+            ]
+            assert [x["score"] for q in g for x in q] == pytest.approx(
+                [x["score"] for q in got[0] for x in q], rel=1e-12
+            )
+        assert srv.cache_misses == 1
+        assert all("dec_at" in e[0] for e in srv._cache.values())
