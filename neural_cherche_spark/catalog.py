@@ -2,8 +2,8 @@
 
 No Iceberg runtime jar ships in this sandbox (no network), so the
 index is stored as a directory of parquet tables plus a JSON manifest
-that plays the role of an Iceberg snapshot: table locations, build
-fingerprints, per-stage completion markers. Swapping in real Iceberg
+that plays the role of an Iceberg snapshot: table locations, the
+input fingerprint, per-stage walls. Swapping in real Iceberg
 (``df.writeTo(...)``, ``MERGE INTO``) is a config change at the call
 sites in index/builder.py — the layout below mirrors an Iceberg
 table's data/metadata split on purpose (SURVEY §7 environment note).
@@ -11,17 +11,30 @@ table's data/metadata split on purpose (SURVEY §7 environment note).
 Layout of one index:
 
     <index_dir>/
-      manifest.json     — snapshot: cfg, fingerprints, stage status
-      docmap/           — (doc_id, url, dl)
-      termdict/         — (term, term_id, tf_total, df, idf, n_salts, max_w)
-      postings/         — bucket=*/...: compressed blocks (index/codec.py)
-      lineage/          — per-bucket build metrics (checkpoint-resume)
+      manifest.json        — the committed snapshot: cfg, input
+                             fingerprint, stats, stage walls, segment
+                             list and the table revisions it reads
+      manifest-NNNNN.json  — every committed snapshot (time travel)
+      next_snapshot_id     — after a rewrite: the first unused id
+      tf/                  — build_index only: (doc_id, term, tf)
+      docmap/              — (doc_id, url, dl); raw: seg=K/ per segment
+      termdict/            — (term, tf_total, df, idf, term_norm,
+                             n_salts, term_id); a refresh writes
+                             termdict_rK/
+      docnorm/             — tfidf + raw only: (doc_id, dnorm);
+                             refreshes write docnorm_rK/
+      tombstones_rK/       — raw refreshes with deletions: (doc_id),
+                             partitioned by seg
+      postings/            — compressed blocks (index/codec.py):
+                             weights bucket=*/, raw seg=K/bucket=*/
+      lineage/             — per-bucket build metrics (raw: seg=K/)
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import asdict, dataclass, field
 
@@ -34,6 +47,11 @@ from dataclasses import asdict, dataclass, field
 #       optional "raw" storage mode (per-posting tf+dl, query-time
 #       weights) for O(new-batch) incremental refresh.
 MANIFEST_VERSION = 3
+
+# table dirs an index writes (revision dirs carry an _rK suffix)
+TABLE_PREFIXES = (
+    "tf", "docmap", "termdict", "docnorm", "postings", "lineage", "tombstones",
+)
 
 
 @dataclass
@@ -106,8 +124,6 @@ class Manifest:
 class IndexCatalog:
     """Path resolution + manifest persistence for one index dir."""
 
-    TABLES = ("tf", "docmap", "termdict", "postings", "lineage")
-
     def __init__(self, index_dir: str) -> None:
         self.index_dir = index_dir
 
@@ -147,7 +163,9 @@ class IndexCatalog:
         os.makedirs(self.index_dir, exist_ok=True)
         m.created_unix = m.created_unix or time.time()
         prev = self.load_manifest()
-        m.snapshot_id = (prev.snapshot_id + 1) if prev is not None else 0
+        m.snapshot_id = (
+            prev.snapshot_id + 1 if prev is not None else self._next_snapshot_id()
+        )
         blob = json.dumps(asdict(m), indent=2)
         # history copy first, then the atomic current-pointer flip
         with open(
@@ -162,10 +180,43 @@ class IndexCatalog:
             f.write(blob)
         os.replace(tmp, self.manifest_path)
 
-    def stage_done(self, m: Manifest | None, stage: str, fingerprint: str) -> bool:
-        """A stage is resumable-skippable iff the manifest records it
-        complete for the SAME input fingerprint and its table exists."""
-        if m is None or m.input_fingerprint != fingerprint:
-            return False
-        info = m.stages.get(stage)
-        return bool(info and info.get("done")) and os.path.exists(self.path(stage))
+    @property
+    def _next_id_path(self) -> str:
+        return os.path.join(self.index_dir, "next_snapshot_id")
+
+    def _next_snapshot_id(self) -> int:
+        """First snapshot id after a reset: ids never repeat, so an
+        expired snapshot id cannot open a later rewrite's data."""
+        if not os.path.exists(self._next_id_path):
+            return 0
+        with open(self._next_id_path) as f:
+            return int(f.read())
+
+    def reset(self) -> None:
+        """Empty the index dir before a full rewrite: the manifest goes
+        first, then its snapshot history, then every table — so no
+        manifest outlives the tables it describes, even when the
+        rewrite fails part-way. Earlier snapshots expire; their ids are
+        not reused."""
+        if not os.path.isdir(self.index_dir):
+            return
+        prev = self.load_manifest()
+        nxt = max(
+            [self._next_snapshot_id()]
+            + [s + 1 for s in self.snapshots()]
+            + ([prev.snapshot_id + 1] if prev is not None else [])
+        )
+        if nxt:
+            tmp = self._next_id_path + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(str(nxt))
+            os.replace(tmp, self._next_id_path)
+        if prev is not None:
+            os.remove(self.manifest_path)
+        names = sorted(os.listdir(self.index_dir))
+        for name in names:
+            if name.startswith("manifest-") and name.endswith(".json"):
+                os.remove(os.path.join(self.index_dir, name))
+        for name in names:
+            if name.startswith(TABLE_PREFIXES):
+                shutil.rmtree(self.path(name), ignore_errors=True)

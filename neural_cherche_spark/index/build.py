@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from neural_cherche_spark.text.ngrams import term_tf_pairs_column, tokenize_terms
@@ -65,6 +65,7 @@ def term_frequencies(
     id_col: str = "doc_id",
     n_min: int = 3,
     n_max: int = 5,
+    stats: Observation | None = None,
 ) -> DataFrame:
     """(doc_id, term, tf) — reference A1 (tfidf.py:114-120).
 
@@ -74,11 +75,25 @@ def term_frequencies(
     plan has no (doc, term) hash aggregation or exchange and the
     explode emits ~n_postings rows instead of ~token occurrences
     (guide §2.3/§2.4 — measured 2× on the 100k-doc tf stage; parity
-    pinned by anti-joins both ways in tests)."""
-    return docs.select(
-        F.col(id_col),
-        F.explode(term_tf_pairs_column(text_col, n_min, n_max)).alias("__p"),
-    ).select(id_col, F.col("__p.term").alias("term"), F.col("__p.tf").alias("tf"))
+    pinned by anti-joins both ways in tests).
+
+    ``stats`` observes the collection statistics on the way, at no
+    extra job: ``n`` docs with at least one n-gram and their Σdl ``s``
+    (the docs and lengths :func:`doc_lengths` gives)."""
+    pairs = docs.select(
+        F.col(id_col), term_tf_pairs_column(text_col, n_min, n_max).alias("__ps")
+    )
+    if stats is not None:
+        pairs = pairs.observe(
+            stats,
+            F.sum((F.size("__ps") > 0).cast("long")).alias("n"),
+            F.sum(
+                F.aggregate("__ps", F.lit(0).cast("long"), lambda a, p: a + p["tf"])
+            ).alias("s"),
+        )
+    return pairs.select(F.col(id_col), F.explode("__ps").alias("__p")).select(
+        id_col, F.col("__p.term").alias("term"), F.col("__p.tf").alias("tf")
+    )
 
 
 def doc_lengths(tf: DataFrame, id_col: str = "doc_id") -> DataFrame:

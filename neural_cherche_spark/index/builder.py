@@ -1,26 +1,37 @@
 """Distributed inverted-index builder: doc-partitioned weight
 computation → term-partitioned shuffle-merge → compressed posting
 blocks, with salted head-term skew handling, per-bucket lineage, and
-checkpoint-resume.
+whole-index resume.
 
 The scalable re-expression of the reference's ``add()`` accumulator
 (retrieve/bm25.py:146-197): where the reference hstacks CSR columns in
 RAM, this writes an on-disk index an executor fleet can build and
 query at 10^12-doc scale.
 
-Pipeline (stage names = resumable checkpoints in manifest.json):
+One writer, :func:`write_index`, runs every stage of a build and of a
+delta refresh (streaming/compressed.py) — a build is a refresh into an
+empty index:
 
-  docmap    docs → (doc_id, url, dl); doc_id taken from the input when
-            present, else assigned deterministically (zipWithIndex over
-            a url range-sort — reproducible for resume/rank-identity).
-  termdict  term → dense term_id (zipWithIndex over term sort), stats
-            (tf_total, df, idf), salt count for head terms.
-  postings  BM25 weights → repartition by (term_id, salt) hash bucket
-            → applyInPandas per bucket: sort, delta-gap, varint, f32
-            weights, per-block max/min score (index/codec.py) →
-            parquet partitioned by bucket (query-side pruning).
+  docmap    the new segment's (doc_id, url, dl) rows; build_index takes
+            doc_id from the input when present, else assigns it
+            deterministically (zipWithIndex over a url range-sort).
+  termdict  term → dense term_id (zipWithIndex over term sort; a
+            refresh keeps old ids and extends the id space), stats
+            (tf_total, df, idf, term_norm), salt count for head terms.
+  docnorm   tfidf + raw only: per-doc L2 norms under the current idf.
+  postings  weights (or raw tf/dl) → repartition by (term_id, salt)
+            hash bucket → applyInPandas per bucket: sort, delta-gap,
+            varint, per-block bounds (index/codec.py) → parquet
+            partitioned by bucket (query-side pruning).
   lineage   per-bucket metrics (terms, blocks, postings, bytes,
             encode ms) — the "metrics table" of the north_rule.
+
+The manifest save is the commit point. Resume is whole-index: a caller
+whose input fingerprint equals the committed manifest's returns that
+index. Otherwise a raw refresh appends a segment to a compatible base,
+and every other write is a full rewrite that first removes the
+manifest and its history (IndexCatalog.reset), so no manifest ever
+describes tables it did not write.
 
 Skew: a zipfian head gram's posting list is split across
 ``n_salts = next_pow2(ceil(df / salt_every))`` sub-lists (power of
@@ -28,17 +39,11 @@ two, the on-disk layout since manifest version 2), each a doc-sorted
 run, so no single reducer/group sees a whole stopword list. Salt
 assignment is ``codec.doc_salt`` (numpy-reproducible); salt runs
 spread across buckets via xxhash64(term_id, salt).
-
-The delta refresh (streaming/compressed.py) runs the same stage rules
-— term_table, doc_norms, quantize_norm_dl, write_postings,
-write_lineage, check_doc_ids — so a raw build and a one-batch refresh
-into an empty index write identical blocks and termdicts.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor, wait
 
@@ -60,7 +65,6 @@ from neural_cherche_spark.catalog import IndexCatalog, Manifest
 from neural_cherche_spark.index.codec import DNORM_SCALE
 from neural_cherche_spark.index.build import (
     BM25Config,
-    collection_stats,
     doc_lengths,
     term_frequencies,
 )
@@ -339,15 +343,7 @@ def _fingerprint(docs: DataFrame, id_col: str, text_col: str, cfg_sig: str) -> s
 # ---- stage rules shared by build_index and the delta refresh ------------
 
 
-def corpus_stats(dl: DataFrame) -> tuple[int, float]:
-    """(n_docs, avgdl) over (doc_id, dl) rows; an empty corpus has no
-    avgdl (and no index), so it fails here, before any stage writes."""
-    row = collection_stats(dl).collect()[0]
-    if not row["n_docs"]:
-        raise ValueError(
-            "empty corpus: no document has any n-gram — nothing to index"
-        )
-    return int(row["n_docs"]), float(row["avgdl"])
+EMPTY_CORPUS = "empty corpus: no document has any n-gram — nothing to index"
 
 
 def bm25_w1(cfg: BM25Config, avgdl: float) -> Column:
@@ -475,22 +471,20 @@ def quantize_norm_dl(src: DataFrame, docnorm: DataFrame) -> DataFrame:
 
 def weights_from_tf(
     tf: DataFrame,
-    dl: DataFrame,
     termdict: DataFrame,
     avgdl: float,
     cfg: BM25Config,
 ) -> DataFrame:
-    """(term_id, doc_id, w, n_salts) normalized BM25 weights.
+    """(term_id, doc_id, w, n_salts) normalized BM25 weights over
+    (doc_id, term, tf, dl) rows.
 
     Same math as index.build.bm25_weights (SURVEY §2.9 steps 1-5) but
     idf AND the per-term L2 norm come from the termdict (term_table),
-    so this plan touches the full posting set exactly once: tf ⋈ dl
-    (doc-keyed) ⋈ broadcast(termdict) → project. No term-keyed shuffle
-    of postings."""
+    so this plan touches the full posting set exactly once: rows ⋈
+    broadcast(termdict) → project. No term-keyed shuffle of postings."""
     td = termdict.select("term", "term_id", "idf", "term_norm", "n_salts")
     return (
-        tf.join(dl, "doc_id")
-        .join(F.broadcast(td), "term")
+        tf.join(F.broadcast(td), "term")
         # float32 before the encode shuffle — identical stored values
         # (the codec's .astype(np.float32) was the rounding point
         # anyway; IEEE round-to-nearest either side), half the weight
@@ -664,6 +658,373 @@ def write_lineage(postings: DataFrame, fingerprint: str, target: str) -> int:
     return int(obs.get["np"] or 0)
 
 
+def index_settings(
+    cfg: BM25Config,
+    block_size: int,
+    salt_every: int,
+    weighting: str,
+    storage: str,
+) -> dict:
+    """The manifest's ``cfg``: every setting an index's bytes depend on
+    (``n_buckets`` is recorded beside it)."""
+    if weighting not in ("bm25", "tfidf"):
+        raise ValueError(f"unknown weighting {weighting!r}")
+    if storage not in ("weights", "raw"):
+        raise ValueError(f"unknown storage {storage!r}")
+    return {
+        "k1": cfg.k1, "b": cfg.b, "epsilon": cfg.epsilon,
+        "n_min": cfg.n_min, "n_max": cfg.n_max,
+        "block_size": block_size, "salt_every": salt_every,
+        "weighting": weighting, "storage": storage,
+    }
+
+
+def write_index(
+    spark: SparkSession,
+    index_dir: str,
+    tf: DataFrame,
+    docs: DataFrame,
+    n_docs: int,
+    avgdl: float,
+    tombstones: DataFrame | None,
+    fingerprint: str,
+    base: Manifest | None,
+    *,
+    cfg: BM25Config,
+    weighting: str,
+    storage: str,
+    n_buckets: int,
+    block_size: int,
+    salt_every: int,
+    seg_tf: DataFrame | None = None,
+    seg_size: tuple[int, int] = (0, 0),
+    batches: list[int] | None = None,
+    deletes: int = 0,
+    freeze_stats: bool = False,
+    stages: tuple[str, ...] = (),
+    walls: dict | None = None,
+    pending: list | None = None,
+) -> "BM25Index":
+    """Write one index snapshot: termdict, docnorm, postings, lineage,
+    docmap and the manifest that commits them. The only writer of those
+    tables — ``build_index`` is a refresh into an empty index.
+
+    ``tf``: the (doc_id, term, tf[, dl]) rows the term statistics (and
+    tfidf doc norms) cover; bm25 needs ``dl``. ``seg_tf`` (default
+    ``tf``): the rows encoded into the new postings segment. ``docs``:
+    the new segment's (doc_id, url, dl) rows. ``n_docs``/``avgdl``
+    cover the live corpus. ``tombstones``: (doc_id) rows deleted from
+    the corpus — they reach no statistic and no new segment.
+
+    ``base``: the committed manifest a raw refresh appends a segment to
+    (its terms keep their ids; ``seg_size`` gives the new segment's
+    (docs with dl > 0, Σdl) before tombstones); ``None`` is a full
+    rewrite into a directory its caller has reset. ``freeze_stats``
+    (with a base) keeps every old term's stats and every old doc's norm
+    and computes the new ones over ``seg_tf`` only.
+
+    Provenance: ``fingerprint`` is the resume key (a caller returns the
+    committed index when it matches); ``batches`` (stream only) the
+    batches the new segment covers; ``deletes`` the delete batches the
+    snapshot reflects. ``stages`` names the manifest's stage walls
+    (``walls`` may carry the caller's own); ``pending`` holds caller
+    jobs that must succeed before the commit."""
+    if storage == "weights" and not n_docs:
+        raise ValueError(EMPTY_CORPUS)
+    cat = IndexCatalog(index_dir)
+    walls = {} if walls is None else walls
+    pending = list(pending or ())
+    seg_tf = tf if seg_tf is None else seg_tf
+    frozen = bool(freeze_stats and base is not None)
+    if frozen:
+        tf = seg_tf
+    if tombstones is not None:
+        # docs added-then-deleted never reach a segment; docs deleted
+        # from RETAINED segments stay as query-masked tombstones until
+        # a full rewrite drops them
+        tf, seg_tf, docs = (
+            t.join(tombstones, "doc_id", "left_anti") for t in (tf, seg_tf, docs)
+        )
+    # revision dirs: a refresh derives its termdict from the committed
+    # one, so it cannot overwrite it in place — the manifest flip
+    # publishes the new revision (and keeps the old snapshot readable)
+    rev = 0
+    if base is not None and "_r" in base.termdict_path:
+        rev = int(base.termdict_path.split("_r")[-1])
+    if base is not None:
+        rev += 1
+    suffix = f"_r{rev}" if rev else ""
+    termdict_path = "termdict" + suffix
+    seg = 0 if base is None else max(s["seg"] for s in base.segments) + 1
+    targets = {
+        t: os.path.join(cat.path(t), f"seg={seg}") if storage == "raw"
+        else cat.path(t)
+        for t in ("docmap", "postings", "lineage")
+    }
+    if base is None:
+        # the segment is the whole live corpus
+        has_postings, est_dl = n_docs > 0, n_docs * avgdl
+    else:
+        # an all-empty new-batch set (replayed/empty micro-batches, or
+        # batches whose every doc was deleted before this refresh) has
+        # nothing to encode: its batches are recorded as covered and no
+        # segment dir is written — a data-file-less parquet dir would
+        # poison later whole-dir reads
+        has_postings = seg_size[0] > 0 and (
+            tombstones is None
+            or docs.filter(F.col("dl") > 0).limit(1).count() > 0
+        )
+        est_dl = seg_size[1]
+
+    pool = ThreadPoolExecutor(max_workers=2)
+    persisted = None
+    ids: dict = {}  # _zip_with_index counter: n + the pinned keys
+    try:
+        docmap_write = None
+        if has_postings:
+            # nothing downstream reads the docmap: its write back-fills
+            # executors during the termdict/postings stages
+            def _write_docmap():
+                t0 = time.perf_counter()
+                docs.write.mode("overwrite").parquet(targets["docmap"])
+                walls["docmap"] = time.perf_counter() - t0
+
+            docmap_write = pool.submit(_write_docmap)
+
+        # ---- termdict ----------------------------------------------------
+        # the one O(corpus) pass a refresh keeps: idf and term_norm are
+        # global statistics. The term agg is persisted: the id
+        # assignment checkpoint and the termdict write would otherwise
+        # each re-run it; n_terms-sized rows, bounded at any corpus.
+        t0 = time.perf_counter()
+        ts = term_table(tf, n_docs, avgdl, cfg, weighting, salt_every)
+        if base is None:
+            persisted = ts = ts.persist(StorageLevel.MEMORY_AND_DISK)
+            termdict = _zip_with_index(ts, "term", "term_id", counter=ids)
+            n_terms = int(ids["n"])
+        else:
+            # STABLE term ids: old segments reference them on disk; new
+            # terms extend the id space
+            old_td = spark.read.parquet(cat.path(base.termdict_path))
+            if frozen:
+                # old rows verbatim; only genuinely-new terms appended
+                persisted = ts = ts.persist(StorageLevel.MEMORY_AND_DISK)
+                known = old_td
+                fresh = ts.join(old_td.select("term"), "term", "left_anti")
+            else:
+                persisted = joined = ts.join(
+                    old_td.select("term", "term_id"), "term", "left"
+                ).persist(StorageLevel.MEMORY_AND_DISK)
+                known = joined.filter(F.col("term_id").isNotNull())
+                fresh = joined.filter(F.col("term_id").isNull()).drop("term_id")
+            # a routine delta usually brings NO new vocabulary: probing
+            # the persisted subtree is one cheap job and skips the id
+            # assignment's checkpoint + offset jobs when empty
+            termdict, n_fresh = known, 0
+            if fresh.select("term").take(1):
+                new_ids = _zip_with_index(
+                    fresh.select("term"), "term", "__nid", counter=ids
+                )
+                termdict = known.unionByName(
+                    fresh.join(new_ids, "term")
+                    .withColumn(
+                        "term_id", F.col("__nid") + F.lit(int(base.n_terms))
+                    )
+                    .select(*known.columns)
+                )
+                n_fresh = int(ids["n"])
+            n_terms = n_fresh + (
+                int(base.n_terms) if frozen else known.count()
+            )
+        # downstream stages need only the termdict CONTENT (re-derived
+        # from the persisted agg) and n_terms — the parquet write runs
+        # as a concurrent job, joined before the commit
+        pending.append(
+            pool.submit(
+                termdict.write.mode("overwrite").parquet,
+                cat.path(termdict_path),
+            )
+        )
+        walls["termdict"] = time.perf_counter() - t0
+
+        # ---- docnorm (tfidf + raw only) ----------------------------------
+        # idf moved ⇒ every doc's norm moved: O(n_docs) scalars, rewritten
+        # whole into a revision dir. Computed BEFORE the postings: a tfidf
+        # raw block stamps each posting with the quantized norm.
+        docnorm_path, gammas = "", {}
+        if storage == "raw" and weighting == "tfidf":
+            t0 = time.perf_counter()
+            docnorm_path = "docnorm" + suffix
+            norms = doc_norms(tf, termdict)
+            if frozen:
+                # old docs keep their norms verbatim; doc sets are disjoint
+                if not base.docnorm_path:
+                    raise ValueError(
+                        "freeze_stats refresh needs a prior docnorm table "
+                        "(index was not built with tfidf raw)"
+                    )
+                norms = spark.read.parquet(
+                    cat.path(base.docnorm_path)
+                ).unionByName(norms)
+            norms.write.mode("overwrite").parquet(cat.path(docnorm_path))
+            walls["docnorm"] = time.perf_counter() - t0
+            if base is not None:
+                gammas = _drift_gammas(spark, cat, base, docnorm_path, frozen)
+
+        # ---- postings: the new segment (the whole index on a rewrite) ----
+        t0 = time.perf_counter()
+        if has_postings:
+            if storage == "weights" and weighting == "bm25":
+                src = weights_from_tf(seg_tf, termdict, avgdl, cfg)
+            elif storage == "weights":
+                src = tfidf_weights_from_tf(seg_tf, termdict)
+            elif weighting == "tfidf":
+                src = quantize_norm_dl(
+                    seg_tf, spark.read.parquet(cat.path(docnorm_path))
+                )
+            else:
+                src = seg_tf
+            write_postings(
+                src, termdict, n_terms, n_buckets, est_dl, block_size,
+                storage, targets["postings"],
+            )
+        walls["postings"] = time.perf_counter() - t0
+
+        # ---- lineage (per-bucket metrics table) --------------------------
+        t0 = time.perf_counter()
+        seg_postings = 0
+        if has_postings:
+            seg_postings = write_lineage(
+                spark.read.parquet(targets["postings"]),
+                fingerprint if batches is None else f"batches={batches}",
+                targets["lineage"],
+            )
+            docmap_write.result()
+        walls["lineage"] = time.perf_counter() - t0
+
+        # ---- tombstones: deleted ids whose postings sit in RETAINED
+        # segments (a rewrite encoded none of them, so publishes none).
+        # Partitioned by the segment holding each doc's postings
+        # (index/tombmask.py): decode tasks load only the delete sets of
+        # segments they touch. Ids without a docmap row (deleted before
+        # ever materialized) have no postings and park under seg=-1.
+        tombstones_path = ""
+        if base is not None and tombstones is not None:
+            tombstones_path = "tombstones" + suffix
+            (
+                tombstones.join(
+                    spark.read.parquet(cat.path("docmap")).select("doc_id", "seg"),
+                    "doc_id",
+                    "left",
+                )
+                .na.fill({"seg": -1})
+                .repartition("seg")
+                .write.partitionBy("seg")
+                .mode("overwrite")
+                .parquet(cat.path(tombstones_path))
+            )
+        # commit gate: every concurrent write and caller job must have
+        # succeeded — .result() re-raises — before the manifest save
+        for f in pending:
+            f.result()
+    finally:
+        # on failure too, no job of this write outlives the call and no
+        # persist outlives its jobs
+        wait(pending)
+        pool.shutdown(wait=True, cancel_futures=True)
+        if persisted is not None:
+            persisted.unpersist()
+        _unpin(ids.get("keys"))
+
+    segments = list(base.segments) if base is not None else []
+    covered = list(base.covered_batches) if base is not None else []
+    if storage == "raw" and has_postings:
+        entry = {"seg": seg}
+        if batches is not None:
+            entry["batches"] = batches
+        segments.append({**entry, "n_postings": seg_postings})
+        if docnorm_path:
+            # quantized against THIS docnorm: exact
+            gammas[str(seg)] = [1.0, 1.0]
+    elif storage == "raw":
+        covered += batches or []
+    cat.save_manifest(
+        Manifest(
+            cfg=index_settings(cfg, block_size, salt_every, weighting, storage),
+            input_fingerprint=fingerprint,
+            n_docs=n_docs,
+            avgdl=avgdl,
+            n_terms=n_terms,
+            n_postings=(
+                sum(s["n_postings"] for s in segments)
+                if storage == "raw"
+                else seg_postings
+            ),
+            n_buckets=n_buckets,
+            stages={
+                s: {"done": True, "wall_s": round(walls.get(s, 0.0), 3)}
+                for s in stages + (("docnorm",) if docnorm_path else ())
+            },
+            segments=segments,
+            termdict_path=termdict_path,
+            docnorm_path=docnorm_path,
+            dnorm_gammas=gammas,
+            stats_frozen=frozen,
+            tombstones_path=tombstones_path,
+            applied_delete_batches=deletes,
+            covered_batches=covered,
+        )
+    )
+    return BM25Index(spark, index_dir)
+
+
+def _drift_gammas(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    base: Manifest,
+    docnorm_path: str,
+    frozen: bool,
+) -> dict:
+    """Block-max drift factors of the retained tfidf raw segments.
+
+    Their blocks were quantized against an OLDER docnorm revision;
+    bounds stay sound by scaling with the global min/max of
+    dnorm_new/dnorm_prev over surviving docs (one O(n_docs) scalar-join
+    job, only on non-frozen refreshes — frozen ones keep old norms
+    verbatim, ratio exactly 1). Factors COMPOUND per refresh: the
+    product of per-step mins lower-bounds the true ratio (sound,
+    monotonically looser; a rewrite re-quantizes and resets to [1, 1]).
+    Segments without an entry (pre-quantization layout: their dls
+    stream holds dl, not ρq) stay uncovered — the query router keeps
+    the index on the bulk path."""
+    prev_g = dict(base.dnorm_gammas or {})
+    lo = hi = 1.0
+    if not frozen and base.docnorm_path and prev_g:
+        r = (
+            spark.read.parquet(cat.path(docnorm_path))
+            .withColumnRenamed("dnorm", "dn_new")
+            .join(
+                spark.read.parquet(cat.path(base.docnorm_path))
+                .withColumnRenamed("dnorm", "dn_old"),
+                "doc_id",
+            )
+            .agg(
+                F.min(F.col("dn_new") / F.col("dn_old")).alias("lo"),
+                F.max(F.col("dn_new") / F.col("dn_old")).alias("hi"),
+            )
+            .collect()[0]
+        )
+        # empty join (no doc survived) ⇒ old segments are fully
+        # tombstoned; any factor is vacuously sound
+        lo = float(r["lo"]) if r["lo"] is not None else 1.0
+        hi = float(r["hi"]) if r["hi"] is not None else 1.0
+    return {
+        key: [float(prev_g[key][0]) * lo, float(prev_g[key][1]) * hi]
+        for key in (str(int(s["seg"])) for s in base.segments)
+        if key in prev_g
+    }
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -679,7 +1040,9 @@ def build_index(
     weighting: str = "bm25",
     storage: str = "weights",
 ) -> "BM25Index":
-    """Build (or resume building) a compressed index on disk.
+    """Build a compressed index on disk — or, with ``resume`` and a
+    committed manifest whose fingerprint (content hash + config) equals
+    this input's, return that index untouched.
 
     ``weighting="bm25"`` (default) — reference retrieve.BM25 weights;
     ``weighting="tfidf"`` — reference retrieve.TfIdf weights (smoothed
@@ -703,16 +1066,11 @@ def build_index(
     bulk decode-score path (block-max bounds would need per-block
     norm minima that go stale on every refresh).
     """
-    if weighting not in ("bm25", "tfidf"):
-        raise ValueError(f"unknown weighting {weighting!r}")
-    if storage not in ("weights", "raw"):
-        raise ValueError(f"unknown storage {storage!r}")
+    index_settings(cfg, block_size, salt_every, weighting, storage)
     cat = IndexCatalog(index_dir)
-    walls: dict[str, float] = {}
     if n_buckets is None:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    # ---- docmap ---------------------------------------------------------
     url_ids: dict = {}
     if id_col is None:
         # ids assigned from a NARROW (url-only) checkpoint; text joins
@@ -735,251 +1093,78 @@ def build_index(
         f"st={storage}"
     )
     manifest = cat.load_manifest() if resume else None
-    # The fingerprint is a full corpus pass of its own. With a prior
-    # manifest it gates stage resumption, so it must be computed up
-    # front; on a FRESH build it is only recorded (and validates ids),
-    # so it runs as a concurrent job overlapping the tf stage (guide
-    # §2.6 — one corpus-scan's wall saved), resolved before any stage
-    # needs the value. An id-range error still aborts before the
+    # The fingerprint is a full corpus pass of its own. Against a
+    # committed manifest it decides resumption, so it runs up front;
+    # otherwise it is only recorded (and validates ids), so it runs as a
+    # concurrent job overlapping the tf stage (guide §2.6), resolved
+    # before the write — an id-range error still aborts before the
     # manifest commit.
-    pool = ThreadPoolExecutor(max_workers=2)
-    pending = []
+    pool = ThreadPoolExecutor(max_workers=1)
+    dl = None
     try:
-        fp_future = None
-        if manifest is None:
+        if manifest is not None:
+            fingerprint = _fingerprint(docs_keyed, "doc_id", text_col, cfg_sig)
+            if manifest.input_fingerprint == fingerprint:
+                return BM25Index(spark, index_dir)
+        else:
             fp_future = pool.submit(
                 _fingerprint, docs_keyed, "doc_id", text_col, cfg_sig
             )
-            fingerprint = None
-        else:
-            fingerprint = _fingerprint(docs_keyed, "doc_id", text_col, cfg_sig)
+        cat.reset()
 
         # ---- tf: tokenize exactly ONCE, materialize, derive the rest ----
         # Without this stage every downstream aggregation (dl, stats,
         # termdict, weights) re-runs the tokenizer over the whole corpus
         # — at 100 TB that is 4+ extra full-corpus passes.
+        # The collection stats ride the tf write as an Observation (no
+        # job of their own). Docs with no n-grams do not count toward
+        # n_docs/avgdl (matches the exact path + oracle) but keep their
+        # docmap row (dl = 0); an empty corpus has no avgdl and fails
+        # here, before any manifest.
+        stats = Observation()
         t0 = time.perf_counter()
-        if not cat.stage_done(manifest, "tf", fingerprint):
-            term_frequencies(
-                docs_keyed, text_col, "doc_id", cfg.n_min, cfg.n_max
-            ).write.mode("overwrite").parquet(cat.path("tf"))
-        walls["tf"] = time.perf_counter() - t0
+        term_frequencies(
+            docs_keyed, text_col, "doc_id", cfg.n_min, cfg.n_max, stats
+        ).write.mode("overwrite").parquet(cat.path("tf"))
+        walls = {"tf": time.perf_counter() - t0}
+        n_docs = int(stats.get["n"] or 0)
+        if not n_docs:
+            raise ValueError(EMPTY_CORPUS)
+        avgdl = int(stats.get["s"]) / n_docs
         tf = spark.read.parquet(cat.path("tf"))
-
-        if not cat.stage_done(manifest, "docmap", fingerprint):
-            # nothing downstream of the build reads docmap (dl derives
-            # from the materialized tf) — the write runs as a concurrent
-            # job back-filling executors during termdict/postings;
-            # _finish_build joins it before the manifest commit.
-            # Collection stats come from a narrow agg over tf instead.
-            def _write_docmap():
-                t0 = time.perf_counter()
-                (
-                    docs_keyed.select("doc_id", key_out)
-                    .join(doc_lengths(tf), "doc_id", "left")
-                    .na.fill({"dl": 0})
-                    .write.mode("overwrite")
-                    .parquet(cat.path("docmap"))
-                )
-                walls["docmap"] = time.perf_counter() - t0
-
-            pending.append(pool.submit(_write_docmap))
-        if fingerprint is None:
+        # doc lengths, persisted: the agg over tf runs ONCE for the
+        # docmap and (bm25) the termdict w1 and postings weights — n_docs
+        # scalar rows, bounded at any corpus
+        dl = doc_lengths(tf).persist(StorageLevel.MEMORY_AND_DISK)
+        if manifest is None:
             fingerprint = fp_future.result()
-        return _finish_build(
-            spark, cat, tf, fingerprint, cfg, n_buckets, block_size,
-            salt_every, manifest, walls, index_dir, weighting, storage,
-            pending=pending,
+        return write_index(
+            spark,
+            index_dir,
+            tf.join(dl, "doc_id") if weighting == "bm25" else tf,
+            docs_keyed.select("doc_id", key_out)
+            .join(dl, "doc_id", "left")
+            .na.fill({"dl": 0}),
+            n_docs,
+            avgdl,
+            None,
+            fingerprint,
+            None,
+            cfg=cfg,
+            weighting=weighting,
+            storage=storage,
+            n_buckets=n_buckets,
+            block_size=block_size,
+            salt_every=salt_every,
+            stages=("tf", "docmap", "termdict", "postings", "lineage"),
+            walls=walls,
         )
     finally:
         # on failure too, no job of this build outlives the call
         pool.shutdown(wait=True, cancel_futures=True)
         _unpin(url_ids.get("keys"))
-
-
-def _finish_build(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    tf: DataFrame,
-    fingerprint: str,
-    cfg: BM25Config,
-    n_buckets: int,
-    block_size: int,
-    salt_every: int,
-    manifest,
-    walls: dict,
-    index_dir: str,
-    weighting: str = "bm25",
-    storage: str = "weights",
-    pending: list | None = None,
-) -> "BM25Index":
-    """Stages downstream of the materialized tf table — shared by
-    ``build_index`` and the stream's full (storage="weights")
-    materialize (streaming/compressed.py), so a stream-accumulated tf
-    produces the IDENTICAL index artifact as a from-scratch build.
-
-    ``pending``: concurrent caller-side jobs (e.g. the docmap write,
-    guide §2.6) joined — and their failures re-raised — before the
-    manifest commit."""
-    # doc lengths from the materialized tf, persisted: identical rows
-    # to the old docmap dl>0 projection (docs with no n-grams don't
-    # count toward n_docs/avgdl — matches the exact path + oracle),
-    # which frees the docmap write to run off the critical path, and
-    # the agg over tf runs ONCE for its three consumers (stats,
-    # termdict w1, postings weights) instead of once each — n_docs
-    # scalar rows, bounded at any corpus.
-    dl = doc_lengths(tf).persist(StorageLevel.MEMORY_AND_DISK)
-    pending = list(pending or ())
-    ts = None
-    tcount: dict = {}
-    td_pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        # ---- stats + termdict -------------------------------------------
-        t0 = time.perf_counter()
-        if cat.stage_done(manifest, "termdict", fingerprint) and cat.stage_done(
-            manifest, "postings", fingerprint
-        ):
-            # fully-resumed statistics: manifest values are authoritative
-            # for this fingerprint — skip the stats job
-            n_docs, avgdl = int(manifest.n_docs), float(manifest.avgdl)
-        else:
-            n_docs, avgdl = corpus_stats(dl)
-        if not cat.stage_done(manifest, "termdict", fingerprint):
-            # persist the aggregated term table: _zip_with_index
-            # materializes it once for the key checkpoint and the
-            # payload join re-derives it at the write — without the
-            # persist the full term agg over tf ran TWICE per build
-            # (plan audit; ~2× the termdict stage on the 100k corpus).
-            # n_terms-sized rows — bounded at any corpus.
-            src = tf.join(dl, "doc_id") if weighting == "bm25" else tf
-            ts = term_table(
-                src, n_docs, avgdl, cfg, weighting, salt_every
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            termdict = _zip_with_index(ts, "term", "term_id", counter=tcount)
-            # the downstream stages need only the termdict CONTENT
-            # (cheap to re-derive from the persisted agg + checkpointed
-            # ids) and n_terms (already known from the id-assignment
-            # offsets) — the parquet write itself runs as a concurrent
-            # job back-filling executors during docnorm/postings, joined
-            # before the manifest commit. ts stays
-            # persisted until the postings stage has consumed it.
-            pending.append(
-                td_pool.submit(
-                    termdict.write.mode("overwrite").parquet,
-                    cat.path("termdict"),
-                )
-            )
-            n_terms = int(tcount["n"])
-        else:
-            # stage resumed for the same fingerprint: the manifest's
-            # total is authoritative — no count job over the termdict
-            n_terms = int(manifest.n_terms)
-            termdict = spark.read.parquet(cat.path("termdict"))
-        walls["termdict"] = time.perf_counter() - t0
-
-        # ---- docnorm (tfidf + raw only) ---------------------------------
-        # recomputed whole on every refresh because idf moves. Computed
-        # BEFORE the postings stage: the tfidf raw encode stamps each
-        # posting with the quantized norm (quantize_norm_dl).
-        docnorm_path = ""
-        if storage == "raw" and weighting == "tfidf":
-            t0 = time.perf_counter()
-            docnorm_path = "docnorm"
-            if not cat.stage_done(manifest, "docnorm", fingerprint):
-                doc_norms(tf, termdict).write.mode("overwrite").parquet(
-                    cat.path("docnorm")
-                )
-            walls["docnorm"] = time.perf_counter() - t0
-
-        # ---- postings ---------------------------------------------------
-        t0 = time.perf_counter()
-        if storage == "raw":
-            # raw layout: per-posting (tf, dl); weights computed at
-            # query time. Written as segment 0 of a segmented index —
-            # the same layout CompressedIndexStream appends deltas to.
-            target = os.path.join(cat.path("postings"), "seg=0")
-            lineage_target = os.path.join(cat.path("lineage"), "seg=0")
-        else:
-            target = cat.path("postings")
-            lineage_target = cat.path("lineage")
-        if not cat.stage_done(manifest, "postings", fingerprint):
-            # a rebuild writes the whole postings/lineage layout afresh:
-            # raw targets seg=0 below the table, so an old layout of the
-            # other storage (bucket=* beside seg=*) would otherwise stay
-            # and break every later partition discovery
-            for t in ("postings", "lineage"):
-                shutil.rmtree(cat.path(t), ignore_errors=True)
-            if storage == "raw" and weighting == "tfidf":
-                src = quantize_norm_dl(
-                    tf, spark.read.parquet(cat.path("docnorm"))
-                )
-            elif storage == "raw":
-                src = tf.join(dl, "doc_id")
-            elif weighting == "bm25":
-                src = weights_from_tf(tf, dl, termdict, avgdl, cfg)
-            else:
-                src = tfidf_weights_from_tf(tf, termdict)
-            write_postings(
-                src, termdict, n_terms, n_buckets, n_docs * avgdl,
-                block_size, storage, target,
-            )
-        walls["postings"] = time.perf_counter() - t0
-
-        # ---- lineage (per-bucket metrics table) -------------------------
-        t0 = time.perf_counter()
-        if not cat.stage_done(manifest, "lineage", fingerprint):
-            n_postings = write_lineage(
-                spark.read.parquet(cat.path("postings")),
-                fingerprint,
-                lineage_target,
-            )
-        else:
-            # fully resumed build: the manifest total is authoritative
-            n_postings = int(manifest.n_postings)
-        walls["lineage"] = time.perf_counter() - t0
-        for f in pending:
-            # concurrent jobs (docmap + termdict writes) must land — and
-            # their failures surface — before the manifest commit
-            f.result()
-    finally:
-        # on failure too, no write of this build outlives the call
-        wait(pending)
-        td_pool.shutdown(wait=False)
-        dl.unpersist()
-        if ts is not None:
-            ts.unpersist()
-        _unpin(tcount.get("keys"))
-    m = Manifest(
-        cfg={
-            "k1": cfg.k1, "b": cfg.b, "epsilon": cfg.epsilon,
-            "n_min": cfg.n_min, "n_max": cfg.n_max,
-            "block_size": block_size, "salt_every": salt_every,
-            "weighting": weighting, "storage": storage,
-        },
-        input_fingerprint=fingerprint,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        n_terms=n_terms,
-        n_postings=n_postings,
-        n_buckets=n_buckets,
-        stages={
-            s: {"done": True, "wall_s": round(walls.get(s, 0.0), 3)}
-            for s in ("tf", "docmap", "termdict", "postings", "lineage")
-            + (("docnorm",) if docnorm_path else ())
-        },
-        segments=(
-            [{"seg": 0, "n_postings": n_postings}]
-            if storage == "raw"
-            else []
-        ),
-        docnorm_path=docnorm_path,
-        # fresh build: blocks were quantized against THIS docnorm, so
-        # the drift factor is exactly 1 (block-max is as tight as
-        # weights-mode BMW until the first non-frozen refresh)
-        dnorm_gammas=({"0": [1.0, 1.0]} if docnorm_path else {}),
-    )
-    cat.save_manifest(m)
-    return BM25Index(spark, index_dir)
+        if dl is not None:
+            dl.unpersist()
 
 
 class BM25Index:

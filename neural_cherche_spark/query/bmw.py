@@ -744,7 +744,14 @@ def _score_blocks(
     first_doc = np.asarray(cols["first_doc"], dtype=np.int64)
     last_doc = np.asarray(cols["last_doc"], dtype=np.int64)
 
-    order = np.argsort(-ub_pos, kind="mergesort")
+    # blocks by descending bound, equal bounds in (term_id, salt,
+    # first_doc) order — one order whatever the arrival order (scan
+    # order, the serving cache's match-row order, Spark's shuffle
+    # order), so a doc's terms are always summed in the same order and
+    # a repeated request scores bit-identically
+    order = np.lexsort(
+        (first_doc, np.asarray(cols["salt"]), np.asarray(cols["term_id"]), -ub_pos)
+    )
     # no block can contribute positively → every final score ≤ 0 →
     # the positive-score filter empties the result; skip all decode
     if ub_pos[order[0]] <= 0.0:

@@ -205,3 +205,37 @@ def test_block_payload_mixes_decoded_and_encoded_blocks():
             for g, w in zip(got, want):
                 assert g.dtype == w.dtype
                 np.testing.assert_array_equal(g, w)
+
+
+def test_score_blocks_is_independent_of_block_order():
+    """A query's blocks reach the kernel in scan order, cache order or
+    shuffle order. Every block here has the same upper bound, so only
+    the kernel's own block order decides in which order a doc's terms
+    are summed — and the query weight is not dyadic and the stored
+    weights span four decades, so their f64 sum depends on that order. Any permutation must give
+    bit-identical (doc_ids, scores)."""
+    from neural_cherche_spark.query.bmw import _score_blocks
+
+    rng = np.random.default_rng(17)
+    n_docs, n_terms, bs = 64, 6, 16
+    docs = np.arange(n_docs, dtype=np.int64)
+    parts = []
+    for t in range(n_terms):
+        w = (10.0 ** rng.uniform(-2, 2, n_docs)).astype(np.float32)
+        w[::bs] = 500.0  # one shared block maximum: equal bounds
+        enc = encode_partition_bulk(
+            np.full(n_docs, t, dtype=np.int64), np.zeros(n_docs, dtype=np.int64),
+            docs, w, block_size=bs,
+        )
+        enc["qtf"] = np.full(len(enc["n"]), 1.3)
+        parts.append(enc)
+    names = ("term_id", "salt", "n", "qtf", "max_w", "min_w",
+             "first_doc", "last_doc", "docs", "ws")
+    cols = {c: np.concatenate([np.asarray(p[c]) for p in parts]) for c in names}
+    want_d, want_s = _score_blocks(cols, k=n_docs)
+    assert want_d.size == n_docs
+    for _ in range(5):
+        p = rng.permutation(cols["n"].size)
+        got_d, got_s = _score_blocks({c: a[p] for c, a in cols.items()}, k=n_docs)
+        assert np.array_equal(got_d, want_d)
+        assert np.array_equal(got_s.view(np.int64), want_s.view(np.int64))

@@ -101,3 +101,86 @@ def test_empty_corpus_weights_materialize_fails(spark, tmp_path):
     with pytest.raises(ValueError, match="empty corpus"):
         stream.materialize(d, n_buckets=2)
     assert not os.path.exists(os.path.join(d, "manifest.json"))
+
+
+CORPUS_A = ["quick brown fox", "lazy dogs sleep", "brown bears"]
+CORPUS_B = ["polar bears swim", "polar night falls", "polar ice melts"]
+
+
+def _hits(idx, text: str) -> set:
+    q = idx.spark.createDataFrame([(0, text)], "query_id long, query string")
+    return {r["doc_id"] for r in STRATEGIES["distributed"](idx, q, k=5).collect()}
+
+
+def _rewrite_fails_then_resumes(spark, monkeypatch, d, success, write_a, write_b):
+    """Write corpus A; rewrite the dir from corpus B with the lineage
+    stage failing; then resume from A. The failed rewrite must leave no
+    manifest — the old one would describe B's tables as A's — and the
+    resume must rewrite the index instead of trusting it."""
+    from neural_cherche_spark.index import builder
+
+    write_a().close()
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("lineage write failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(builder, "write_lineage", fail)
+        with pytest.raises(RuntimeError, match="lineage write failed"):
+            write_b()
+    with pytest.raises(FileNotFoundError):
+        builder.BM25Index(spark, d)
+    t1 = os.path.getmtime(success)
+    idx = write_a()
+    assert os.path.getmtime(success) > t1
+    assert _hits(idx, "brown") == {0, 2}
+    assert _hits(idx, "polar") == set()
+
+
+def test_failed_rebuild_leaves_no_stale_manifest(spark, tmp_path, monkeypatch):
+    d = str(tmp_path / "idx")
+    _rewrite_fails_then_resumes(
+        spark, monkeypatch, d, os.path.join(d, "postings", "_SUCCESS"),
+        lambda: build_index(
+            spark, _corpus(spark, CORPUS_A), d, id_col="doc_id", n_buckets=2,
+            resume=True,
+        ),
+        lambda: build_index(
+            spark, _corpus(spark, CORPUS_B), d, id_col="doc_id", n_buckets=2,
+            resume=True,
+        ),
+    )
+
+
+def _streams(spark, tmp_path):
+    from neural_cherche_spark.streaming import CompressedIndexStream
+
+    out = []
+    for name, texts in (("a", CORPUS_A), ("b", CORPUS_B)):
+        s = CompressedIndexStream(spark, str(tmp_path / f"state_{name}"))
+        s.add_batch(_corpus(spark, texts), epoch_id=0)
+        out.append(s)
+    return out
+
+
+def test_failed_weights_materialize_leaves_no_stale_manifest(
+    spark, tmp_path, monkeypatch
+):
+    d = str(tmp_path / "idx")
+    a, b = _streams(spark, tmp_path)
+    _rewrite_fails_then_resumes(
+        spark, monkeypatch, d, os.path.join(d, "postings", "_SUCCESS"),
+        lambda: a.materialize(d, n_buckets=2),
+        lambda: b.materialize(d, n_buckets=2),
+    )
+
+
+def test_failed_compact_leaves_no_stale_manifest(spark, tmp_path, monkeypatch):
+    d = str(tmp_path / "idx")
+    a, b = _streams(spark, tmp_path)
+    _rewrite_fails_then_resumes(
+        spark, monkeypatch, d,
+        os.path.join(d, "postings", "seg=0", "_SUCCESS"),
+        lambda: a.materialize(d, n_buckets=2, storage="raw"),
+        lambda: b.compact(d, n_buckets=2),
+    )

@@ -144,6 +144,20 @@ def test_tombstoned_raw_parity(tomb_index, qtexts):
             assert g[1] == pytest.approx(e[1], rel=1e-9)
 
 
+def test_repeated_requests_score_bit_identically(tomb_index, qtexts):
+    """One searcher answering the same batch again — first from its
+    scans, then from its block cache, then from decoded cache entries —
+    returns bit-identical scores every time."""
+    tomb_index.prepare_serving()
+    srv = LocalSearcher.from_index(tomb_index)
+    passes = [
+        [[(d["doc_id"], d["score"].hex()) for d in res] for res in srv.search(qtexts, k=10)]
+        for _ in range(5)
+    ]
+    assert any(passes[0])
+    assert all(p == passes[0] for p in passes[1:])
+
+
 def test_no_spark_jobs_during_search(index, qtexts, spark):
     """The whole point: after construction, a search must run ZERO
     Spark jobs (tracked via the status API's job counter)."""

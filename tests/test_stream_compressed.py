@@ -14,7 +14,7 @@ from neural_cherche_spark.streaming import (
     CompressedIndexStream,
     stream_build_compressed,
 )
-from tests.conftest import STRATEGIES
+from tests.conftest import STRATEGIES, assert_same_artifacts
 
 
 @pytest.fixture(scope="module")
@@ -41,23 +41,24 @@ def test_materialized_stream_matches_fresh_build(spark, corpus, tmp_path):
     stream.add_batch(b1, epoch_id=0).add_batch(b2, epoch_id=1)
     stream.add_batch(b2, epoch_id=1)  # replayed epoch: must be a no-op
     stream.add_batch(b3, epoch_id=2)
-    inc = stream.materialize(
-        str(tmp_path / "inc_idx"), n_buckets=8, salt_every=50
-    )
-
-    fresh = build_index(
-        spark, corpus, str(tmp_path / "fresh_idx"),
-        id_col="doc_id", n_buckets=8, salt_every=50,
-    )
-    assert inc.manifest.n_docs == fresh.manifest.n_docs == 300
-    assert inc.manifest.n_postings == fresh.manifest.n_postings
-    assert inc.manifest.n_terms == fresh.manifest.n_terms
-
     queries = synth_queries(spark, 10, seed=21)
-    for strategy in ("bmw", "distributed"):
-        assert _results(inc, queries, strategy) == _results(
-            fresh, queries, strategy
+    for weighting in ("bm25", "tfidf"):
+        kw = dict(n_buckets=8, salt_every=50, weighting=weighting)
+        inc = stream.materialize(str(tmp_path / f"inc_{weighting}"), **kw)
+        fresh = build_index(
+            spark, corpus, str(tmp_path / f"fresh_{weighting}"),
+            id_col="doc_id", **kw,
         )
+        assert inc.manifest.n_docs == fresh.manifest.n_docs == 300
+        assert inc.manifest.n_postings == fresh.manifest.n_postings
+        assert inc.manifest.n_terms == fresh.manifest.n_terms
+        # a weights materialize is a build over the stream's union: the
+        # same blocks, byte for byte, and the same termdict
+        assert_same_artifacts(inc, fresh)
+        for strategy in ("bmw", "distributed"):
+            assert _results(inc, queries, strategy) == _results(
+                fresh, queries, strategy
+            )
 
 
 def test_materialize_resume_skips_when_state_unchanged(spark, corpus, tmp_path):
@@ -78,6 +79,29 @@ def test_materialize_resume_skips_when_state_unchanged(spark, corpus, tmp_path):
     idx = stream.materialize(d, n_buckets=4)
     assert os.path.getmtime(os.path.join(d, "postings", "_SUCCESS")) > t1
     assert idx.manifest.n_docs == 80
+
+
+def test_weights_materialize_rebuilds_on_a_new_delete(spark, corpus, tmp_path):
+    """A delete batch is new input: the weights index is rebuilt
+    without the deleted doc even though no doc batch was added."""
+    import os
+
+    stream = CompressedIndexStream(spark, str(tmp_path / "state"))
+    stream.add_batch(corpus.filter(F.col("doc_id") < 60), epoch_id=0)
+    d = str(tmp_path / "idx")
+    idx = stream.materialize(d, n_buckets=4)
+    t1 = os.path.getmtime(os.path.join(d, "postings", "_SUCCESS"))
+    q = corpus.filter(F.col("doc_id") == 7).select(
+        F.lit(0).cast("long").alias("query_id"), F.col("text").alias("query")
+    )
+    assert 7 in {r["doc_id"] for r in idx.search(q, k=5).collect()}
+
+    stream.delete_batch([7], epoch_id=0)
+    idx = stream.materialize(d, n_buckets=4)
+    assert os.path.getmtime(os.path.join(d, "postings", "_SUCCESS")) > t1
+    assert idx.manifest.n_docs == 59
+    assert idx.docmap.filter(F.col("doc_id") == 7).count() == 0
+    assert 7 not in {r["doc_id"] for r in idx.search(q, k=5).collect()}
 
 
 def test_stream_wire_accumulates_batches(spark, corpus, tmp_path):
@@ -115,7 +139,7 @@ def test_delta_materialize_appends_segments_and_matches_fresh_raw(
     statistics, no stale-idf quirk (round-2 VERDICT next-steps #1)."""
     import os
 
-    from tests.conftest import assert_rank_identical, assert_same_artifacts
+    from tests.conftest import assert_rank_identical
 
     b1 = corpus.filter(F.col("doc_id") < 120)
     b2 = corpus.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 220))
