@@ -15,9 +15,11 @@ empty index:
   docmap    the new segment's (doc_id, url, dl) rows; build_index takes
             doc_id from the input when present, else assigns it
             deterministically (zipWithIndex over a url range-sort).
-  termdict  term → dense term_id (zipWithIndex over term sort; a
-            refresh keeps old ids and extends the id space), stats
-            (tf_total, df, idf, term_norm), salt count for head terms.
+  termdict  term → dense term_id, stats (tf_total, df, idf,
+            term_norm), salt count for head terms. The term table is
+            collected once as Arrow and ids are assigned on the driver
+            (term byte order; a refresh keeps old ids and extends the
+            id space); pyarrow writes it.
   docnorm   tfidf + raw only: per-doc L2 norms under the current idf.
   postings  weights (or raw tf/dl) → repartition by (term_id, salt)
             hash bucket → applyInPandas per bucket: sort, delta-gap,
@@ -44,14 +46,20 @@ spread across buckets via xxhash64(term_id, salt).
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor, wait
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -128,33 +136,41 @@ def postings_read_schema(storage: str) -> StructType:
     return StructType(fields + [StructField("bucket", IntegerType())])
 
 
+# the termdict's columns: the driver writes it with this schema and
+# every reader (the Spark joins of write_index, BM25Index.termdict and
+# the serving map) reads it with it — no inference job, and a dir
+# without data files reads as an empty table
+TERMDICT_SCHEMA = pa.schema(
+    [("term", pa.string()), ("tf_total", pa.int64()), ("df", pa.int64()),
+     ("idf", pa.float64()), ("term_norm", pa.float64()),
+     ("n_salts", pa.int32()), ("term_id", pa.int64())]
+)
+TERMDICT_SPARK_SCHEMA = from_arrow_schema(TERMDICT_SCHEMA)
+
 # value order of a serving-map entry (BM25Index._termdict_map)
 SERVING_FIELDS = ("term_id", "df", "idf", "term_norm", "n_salts")
 
 
 def _zip_with_index(
-    df: DataFrame,
-    order_col: str,
-    id_name: str,
-    check_unique: bool = False,
-    counter: dict | None = None,
+    df: DataFrame, order_col: str, id_name: str, counter: dict | None = None
 ) -> DataFrame:
-    """Deterministic dense int64 ids: range-sort by ``order_col``, then
-    zipWithIndex semantics implemented JVM-only (no Python row serde,
-    no single-reducer window): ``monotonically_increasing_id`` is
-    ``pid·2^33 + offset-within-partition`` and the rows are sorted
+    """Deterministic dense int64 doc ids (build_index without an id
+    column, retrieve.py's delta backend): range-sort by ``order_col``,
+    then zipWithIndex semantics implemented JVM-only (no Python row
+    serde, no single-reducer window): ``monotonically_increasing_id``
+    is ``pid·2^33 + offset-within-partition`` and the rows are sorted
     within range partitions, so dense id = per-partition cumulative
-    offset + (mono − pid·2^33).
+    offset + (mono − pid·2^33). The offsets ride the plan as one array
+    literal indexed by ``__pid`` (dense over every pid up to the last
+    non-empty one, so empty range partitions index a valid slot).
 
     Only the KEY column is checkpointed — ``(order_col, __mono, __pid)``
     — and payload columns are joined back by key, so pinning id
     stability never materializes wide columns into executor storage
     (round-2 VERDICT: the old version localCheckpoint-ed the full
     (url, text) corpus — at 100 TB that pins ~everything). The join
-    back by key requires ``order_col`` to be UNIQUE; pass
-    ``check_unique=True`` for user-supplied keys (one narrow agg over
-    the checkpointed keys), leave False where uniqueness holds by
-    construction (groupBy outputs).
+    back by key requires ``order_col`` to be UNIQUE and non-null,
+    checked by the same narrow agg that counts each partition.
 
     ``counter`` receives ``n`` (the row count) and ``keys`` (the
     checkpointed key frame — release it with :func:`_unpin` once the
@@ -173,49 +189,39 @@ def _zip_with_index(
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint()  # pin one NARROW materialization: stable ids
     )
-    if check_unique:
-        r = keys.agg(
+    # one job: per-partition counts give the offsets, and equal keys
+    # share a range partition, so the distinct counts add up too
+    per_pid = {
+        r["__pid"]: r
+        for r in keys.groupBy("__pid").agg(
             F.count(F.lit(1)).alias("n"),
             F.count(order_col).alias("nn"),  # non-null rows
             F.countDistinct(order_col).alias("nd"),
-        ).collect()[0]
-        if r["nn"] != r["n"]:
-            # a NULL key would silently vanish in the payload equi-join
-            # below (NULL never equi-matches) — fail loudly instead
-            raise ValueError(
-                f"{order_col!r} contains {r['n'] - r['nn']} null key(s); "
-                f"keys must be non-null for deterministic id assignment"
-            )
-        if r["n"] != r["nd"]:
-            raise ValueError(
-                f"{order_col!r} must be unique for deterministic id "
-                f"assignment: {r['n']} rows, {r['nd']} distinct values"
-            )
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in keys.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        ).collect()
     }
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    if counter is not None:
-        # total row count falls out of the offset collect — callers
-        # (termdict n_terms) need it and must not run a second count job
-        counter["n"] = acc
-        counter["keys"] = keys
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
-    ids = (
-        keys.join(F.broadcast(off_df), "__pid")
-        .withColumn(
-            id_name,
-            F.col("__off")
-            + (F.col("__mono") - F.expr("shiftleft(cast(__pid as bigint), 33)")),
+    n, nn, nd = (sum(r[c] for r in per_pid.values()) for c in ("n", "nn", "nd"))
+    if nn != n:
+        # a NULL key would silently vanish in the payload equi-join
+        # below (NULL never equi-matches) — fail loudly instead
+        raise ValueError(
+            f"{order_col!r} contains {n - nn} null key(s); "
+            f"keys must be non-null for deterministic id assignment"
         )
-        .drop("__mono", "__pid", "__off")
-    )
-    if len(df.columns) == 1:
-        return ids
+    if n != nd:
+        raise ValueError(
+            f"{order_col!r} must be unique for deterministic id "
+            f"assignment: {n} rows, {nd} distinct values"
+        )
+    if counter is not None:
+        counter["n"] = n
+        counter["keys"] = keys
+    sizes = [per_pid[p]["n"] if p in per_pid else 0 for p in range(max(per_pid or [0]))]
+    offsets = np.cumsum([0, *sizes])
+    ids = keys.withColumn(
+        id_name,
+        F.lit(offsets).cast("array<bigint>")[F.col("__pid")]
+        + (F.col("__mono") - F.expr("shiftleft(cast(__pid as bigint), 33)")),
+    ).drop("__mono", "__pid")
     return df.join(ids, order_col)
 
 
@@ -421,6 +427,48 @@ def term_table(
         .withColumn("n_salts", n_salts)
         .drop("sw1sq")
     )
+
+
+def write_termdict(
+    ts: DataFrame, target: str, base_path: str | None, n_base: int, frozen: bool
+) -> int:
+    """Assign term ids to ``ts`` (term_table rows) and write the
+    termdict to ``target``; return n_terms. Runs on the driver: one
+    Arrow collect of ``ts`` (the termdict's every consumer broadcasts
+    it whole anyway), ids by a pyarrow sort, one pyarrow parquet file.
+
+    Ids are the rank in term byte order (UTF-8 — Spark's binary string
+    order). With a base termdict (``base_path`` holding ``n_base`` ids)
+    old terms keep their ids and new terms get ``n_base`` + their rank;
+    ``frozen`` keeps every old row verbatim and takes only the new
+    terms' rows from ``ts``."""
+    new = ts.toArrow().cast(pa.schema(list(TERMDICT_SCHEMA)[:-1]))
+    parts, fresh = [], new
+    if base_path is not None:
+        old = pq.read_table(base_path, schema=TERMDICT_SCHEMA)
+        pos = pc.index_in(new["term"], old["term"])
+        hit = pc.is_valid(pos)
+        fresh = new.filter(pc.invert(hit))
+        parts.append(
+            old if frozen else new.filter(hit).append_column(
+                "term_id", pc.take(old["term_id"], pos.filter(hit))
+            )
+        )
+    fresh = fresh.take(pc.sort_indices(fresh["term"]))
+    parts.append(
+        fresh.append_column(
+            "term_id", pa.array(np.arange(n_base, n_base + len(fresh)))
+        )
+    )
+    out = pa.concat_tables(parts)
+    shutil.rmtree(target, ignore_errors=True)
+    os.makedirs(target)
+    # the term column is unique: dictionary pages only add bytes
+    pq.write_table(
+        out, os.path.join(target, "part-00000.parquet"),
+        compression="zstd", use_dictionary=False,
+    )
+    return len(out)
 
 
 def doc_norms(src: DataFrame, termdict: DataFrame) -> DataFrame:
@@ -776,9 +824,7 @@ def write_index(
         )
         est_dl = seg_size[1]
 
-    pool = ThreadPoolExecutor(max_workers=2)
-    persisted = None
-    ids: dict = {}  # _zip_with_index counter: n + the pinned keys
+    pool = ThreadPoolExecutor(max_workers=1)
     try:
         docmap_write = None
         if has_postings:
@@ -793,57 +839,18 @@ def write_index(
 
         # ---- termdict ----------------------------------------------------
         # the one O(corpus) pass a refresh keeps: idf and term_norm are
-        # global statistics. The term agg is persisted: the id
-        # assignment checkpoint and the termdict write would otherwise
-        # each re-run it; n_terms-sized rows, bounded at any corpus.
+        # global statistics. Ids are assigned on the driver; a refresh
+        # keeps the ids old segments reference on disk.
         t0 = time.perf_counter()
-        ts = term_table(tf, n_docs, avgdl, cfg, weighting, salt_every)
-        if base is None:
-            persisted = ts = ts.persist(StorageLevel.MEMORY_AND_DISK)
-            termdict = _zip_with_index(ts, "term", "term_id", counter=ids)
-            n_terms = int(ids["n"])
-        else:
-            # STABLE term ids: old segments reference them on disk; new
-            # terms extend the id space
-            old_td = spark.read.parquet(cat.path(base.termdict_path))
-            if frozen:
-                # old rows verbatim; only genuinely-new terms appended
-                persisted = ts = ts.persist(StorageLevel.MEMORY_AND_DISK)
-                known = old_td
-                fresh = ts.join(old_td.select("term"), "term", "left_anti")
-            else:
-                persisted = joined = ts.join(
-                    old_td.select("term", "term_id"), "term", "left"
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                known = joined.filter(F.col("term_id").isNotNull())
-                fresh = joined.filter(F.col("term_id").isNull()).drop("term_id")
-            # a routine delta usually brings NO new vocabulary: probing
-            # the persisted subtree is one cheap job and skips the id
-            # assignment's checkpoint + offset jobs when empty
-            termdict, n_fresh = known, 0
-            if fresh.select("term").take(1):
-                new_ids = _zip_with_index(
-                    fresh.select("term"), "term", "__nid", counter=ids
-                )
-                termdict = known.unionByName(
-                    fresh.join(new_ids, "term")
-                    .withColumn(
-                        "term_id", F.col("__nid") + F.lit(int(base.n_terms))
-                    )
-                    .select(*known.columns)
-                )
-                n_fresh = int(ids["n"])
-            n_terms = n_fresh + (
-                int(base.n_terms) if frozen else known.count()
-            )
-        # downstream stages need only the termdict CONTENT (re-derived
-        # from the persisted agg) and n_terms — the parquet write runs
-        # as a concurrent job, joined before the commit
-        pending.append(
-            pool.submit(
-                termdict.write.mode("overwrite").parquet,
-                cat.path(termdict_path),
-            )
+        n_terms = write_termdict(
+            term_table(tf, n_docs, avgdl, cfg, weighting, salt_every),
+            cat.path(termdict_path),
+            None if base is None else cat.path(base.termdict_path),
+            0 if base is None else int(base.n_terms),
+            frozen,
+        )
+        termdict = spark.read.schema(TERMDICT_SPARK_SCHEMA).parquet(
+            cat.path(termdict_path)
         )
         walls["termdict"] = time.perf_counter() - t0
 
@@ -895,7 +902,12 @@ def write_index(
         seg_postings = 0
         if has_postings:
             seg_postings = write_lineage(
-                spark.read.parquet(targets["postings"]),
+                # one segment dir: the read schema without ``seg``
+                spark.read.schema(
+                    StructType(
+                        [f for f in postings_read_schema(storage) if f.name != "seg"]
+                    )
+                ).parquet(targets["postings"]),
                 fingerprint if batches is None else f"batches={batches}",
                 targets["lineage"],
             )
@@ -928,13 +940,9 @@ def write_index(
         for f in pending:
             f.result()
     finally:
-        # on failure too, no job of this write outlives the call and no
-        # persist outlives its jobs
+        # on failure too, no job of this write outlives the call
         wait(pending)
         pool.shutdown(wait=True, cancel_futures=True)
-        if persisted is not None:
-            persisted.unpersist()
-        _unpin(ids.get("keys"))
 
     segments = list(base.segments) if base is not None else []
     covered = list(base.covered_batches) if base is not None else []
@@ -1076,8 +1084,7 @@ def build_index(
         # ids assigned from a NARROW (url-only) checkpoint; text joins
         # back by url — url uniqueness is enforced (it is the doc key)
         docs_keyed = _zip_with_index(
-            docs.select(url_col, text_col), url_col, "doc_id",
-            check_unique=True, counter=url_ids,
+            docs.select(url_col, text_col), url_col, "doc_id", counter=url_ids
         )
         key_out = url_col
     else:
@@ -1131,7 +1138,9 @@ def build_index(
         if not n_docs:
             raise ValueError(EMPTY_CORPUS)
         avgdl = int(stats.get["s"]) / n_docs
-        tf = spark.read.parquet(cat.path("tf"))
+        tf = spark.read.schema("doc_id bigint, term string, tf bigint").parquet(
+            cat.path("tf")
+        )
         # doc lengths, persisted: the agg over tf runs ONCE for the
         # docmap and (bm25) the termdict w1 and postings weights — n_docs
         # scalar rows, bounded at any corpus
@@ -1248,7 +1257,9 @@ class BM25Index:
 
     @property
     def termdict(self) -> DataFrame:
-        return self.spark.read.parquet(self.cat.path(self._termdict_path))
+        return self.spark.read.schema(TERMDICT_SPARK_SCHEMA).parquet(
+            self.cat.path(self._termdict_path)
+        )
 
     @property
     def _termdict_path(self) -> str:
@@ -1333,28 +1344,14 @@ class BM25Index:
         of this handle's termdict revision (so snapshot handles see
         their own terms and idf) — no Spark job. ``grams`` restricts
         the read to those terms (a ``term ∈ grams`` scan filter)."""
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
         filt = None
         if grams is not None:
             filt = ds.field("term").isin(pa.array(sorted(grams), pa.string()))
-        # explicit schema (the termdict writer's types): a termdict dir
-        # without data files reads as an empty map instead of failing
-        # schema inference
-        schema = pa.schema(
-            [
-                ("term", pa.string()),
-                ("term_id", pa.int64()),
-                ("df", pa.int64()),
-                ("idf", pa.float64()),
-                ("term_norm", pa.float64()),
-                ("n_salts", pa.int32()),
-            ]
-        )
         tbl = ds.dataset(
-            self.cat.path(self._termdict_path), schema=schema, format="parquet"
-        ).to_table(filter=filt)
+            self.cat.path(self._termdict_path),
+            schema=TERMDICT_SCHEMA,
+            format="parquet",
+        ).to_table(columns=["term", *SERVING_FIELDS], filter=filt)
         # numpy's tolist: ~20× faster than arrow's per-value to_pylist
         cols = [
             tbl.column(c).to_numpy().tolist() for c in ("term", *SERVING_FIELDS)

@@ -109,8 +109,7 @@ class BM25:
 
             counter: dict = {}
             batch = _zip_with_index(
-                documents_embeddings, "doc_key", "__bid",
-                check_unique=True, counter=counter,
+                documents_embeddings, "doc_key", "__bid", counter=counter
             ).select(
                 (F.col("__bid") + F.lit(self._n_docs)).alias("doc_id"),
                 "doc_key", "text",
@@ -495,8 +494,7 @@ class TfIdf:
 
             counter: dict = {}
             batch = _zip_with_index(
-                documents_embeddings, "doc_key", "__bid",
-                check_unique=True, counter=counter,
+                documents_embeddings, "doc_key", "__bid", counter=counter
             ).select(
                 (F.col("__bid") + F.lit(self._n_docs)).alias("doc_id"),
                 "doc_key", "text",

@@ -308,8 +308,8 @@ class CompressedIndexStream:
         results equal a fresh raw build over the union corpus. This is
         the scalable analogue of the reference's O(new batch) ``add()``
         (bm25.py:146-197), without its stale-statistics quirk. A raw
-        index with other settings is rewritten whole, and one whose
-        segments lack batch provenance (another writer's) is refused.
+        index with other settings is rewritten whole, and one another
+        writer committed (build_index, another stream) is refused.
 
         ``freeze_stats=True`` (raw only) makes the refresh FULLY
         O(new batch): existing terms keep their previous idf/term_norm
@@ -365,9 +365,9 @@ class CompressedIndexStream:
         n_del_batches = meta.get("n_delete_batches", 0)
         # the input: this stream's batches and delete batches (both
         # append-only ledgers) under these settings
+        owner = f"stream:{os.path.abspath(self.state_dir)}:"
         fingerprint = (
-            f"stream:{os.path.abspath(self.state_dir)}:batches:{n_batches}:"
-            f"deletes:{n_del_batches}:nb={n_buckets},"
+            f"{owner}batches:{n_batches}:deletes:{n_del_batches}:nb={n_buckets},"
             + ",".join(f"{k}={v}" for k, v in settings.items())
         )
         cat = IndexCatalog(index_dir)
@@ -382,17 +382,16 @@ class CompressedIndexStream:
             and manifest.n_buckets == n_buckets
             and manifest.segments
         ):
-            if any("batches" not in s for s in manifest.segments):
-                # A segment without batch provenance was not produced by
-                # this stream (e.g. build_index's raw seg=0 over another
-                # corpus). A delta on top would rebuild the termdict from
-                # stream tf only — base-corpus terms would vanish and
-                # n_docs/avgdl would cover the stream alone.
+            if not manifest.input_fingerprint.startswith(owner):
+                # Segments this stream did not write (build_index's raw
+                # seg=0, another stream's batches) are not its batches:
+                # a delta on top would count them as covered and rebuild
+                # the termdict and n_docs/avgdl from this stream alone.
                 raise ValueError(
-                    f"index at {index_dir!r} has segments without batch "
-                    "provenance (not produced by this stream's "
-                    "materialize) — delta refresh cannot resume it; pass "
-                    "a fresh index_dir, or resume=False to rebuild it "
+                    f"index at {index_dir!r} was not written by this "
+                    "stream's materialize (segments without this stream's "
+                    "batch provenance) — delta refresh cannot resume it; "
+                    "pass a fresh index_dir, or resume=False to rebuild it "
                     "from the stream's batches (destroys the existing "
                     "index)"
                 )

@@ -5,6 +5,8 @@ build_index over the union corpus (round-1 VERDICT next-steps #9)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -261,3 +263,29 @@ def test_delta_refuses_foreign_raw_segment(spark, corpus, tmp_path):
         stream.materialize(
             idx_dir, n_buckets=8, salt_every=50, storage="raw",
         )
+
+
+def test_delta_refuses_another_streams_raw_index(spark, corpus, tmp_path):
+    """A raw index committed by stream A is not a base for stream B:
+    B's batch 0 would count as covered by A's seg=0. B must refuse
+    before writing anything, leaving A's index as it was."""
+    from neural_cherche_spark.index.builder import BM25Index
+
+    d = str(tmp_path / "idx")
+    a = CompressedIndexStream(spark, str(tmp_path / "a"))
+    a.add_batch(corpus.filter(F.col("doc_id") < 100), epoch_id=0)
+    a.materialize(d, n_buckets=4, storage="raw").close()
+    manifest = os.path.join(d, "manifest.json")
+    with open(manifest) as f:
+        committed = f.read()
+
+    b = CompressedIndexStream(spark, str(tmp_path / "b"))
+    b.add_batch(corpus.filter(F.col("doc_id") >= 200), epoch_id=0)
+    with pytest.raises(ValueError, match="provenance"):
+        b.materialize(d, n_buckets=4, storage="raw")
+    with open(manifest) as f:
+        assert f.read() == committed
+    text = corpus.filter(F.col("doc_id") == 7).first()["text"]
+    with BM25Index(spark, d) as idx:
+        hits = [r["doc_id"] for r in idx.search([text], k=3).collect()]
+    assert 7 in hits
