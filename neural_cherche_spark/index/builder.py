@@ -265,7 +265,7 @@ POSTINGS_ROW_GROUP_BYTES = 256 << 10
 ENCODE_DL_PER_TASK = 1_500_000
 
 
-def encode_layout(spark, n_terms: int, n_buckets: int, est_dl: float):
+def encode_layout(spark, id_span: int, n_buckets: int, est_dl: float):
     """(shard column, partition count) for the postings-encode stage.
 
     Keying the stage by ``bucket`` alone hash-partitioned n_buckets
@@ -296,11 +296,11 @@ def encode_layout(spark, n_terms: int, n_buckets: int, est_dl: float):
         min(max(parts, -(-int(est_dl) // ENCODE_DL_PER_TASK)), 8 * parts)
     )
     s = max(1, -(-8 * n_tasks // max(n_buckets, 1)))
-    if s <= 1 or n_terms <= 0:
+    if s <= 1 or id_span <= 0:
         return F.lit(0).cast("int"), n_tasks
     col = F.least(
         F.lit(s - 1),
-        F.floor(F.col("term_id") * F.lit(s) / F.lit(int(n_terms))),
+        F.floor(F.col("term_id") * F.lit(s) / F.lit(int(id_span))),
     ).cast("int")
     return col, n_tasks
 
@@ -430,22 +430,28 @@ def term_table(
 
 
 def write_termdict(
-    ts: DataFrame, target: str, base_path: str | None, n_base: int, frozen: bool
-) -> int:
+    ts: DataFrame, target: str, base_path: str | None, frozen: bool
+) -> tuple[int, int]:
     """Assign term ids to ``ts`` (term_table rows) and write the
-    termdict to ``target``; return n_terms. Runs on the driver: one
-    Arrow collect of ``ts`` (the termdict's every consumer broadcasts
-    it whole anyway), ids by a pyarrow sort, one pyarrow parquet file.
+    termdict to ``target``; return (n_terms, id span: the largest id
+    + 1). Runs on the driver: one Arrow collect of ``ts`` (the
+    termdict's every consumer broadcasts it whole anyway), ids by a
+    pyarrow sort, one pyarrow parquet file.
 
     Ids are the rank in term byte order (UTF-8 — Spark's binary string
-    order). With a base termdict (``base_path`` holding ``n_base`` ids)
-    old terms keep their ids and new terms get ``n_base`` + their rank;
-    ``frozen`` keeps every old row verbatim and takes only the new
-    terms' rows from ``ts``."""
+    order). With a base termdict at ``base_path``, old terms keep their
+    ids and new terms get the base's largest id + 1 + their rank: an
+    exact refresh with deletions drops terms, so the base's row count
+    can fall below its id span, and counting from it would hand out
+    ids still in use. (Only a dropped term's id can come back, when it
+    was the largest; its old postings hold deleted docs alone, which
+    the tombstones mask.) ``frozen`` keeps every old row verbatim and
+    takes only the new terms' rows from ``ts``."""
     new = ts.toArrow().cast(pa.schema(list(TERMDICT_SCHEMA)[:-1]))
-    parts, fresh = [], new
+    parts, fresh, n_base = [], new, 0
     if base_path is not None:
         old = pq.read_table(base_path, schema=TERMDICT_SCHEMA)
+        n_base = _id_span(old)
         pos = pc.index_in(new["term"], old["term"])
         hit = pc.is_valid(pos)
         fresh = new.filter(pc.invert(hit))
@@ -468,7 +474,13 @@ def write_termdict(
         out, os.path.join(target, "part-00000.parquet"),
         compression="zstd", use_dictionary=False,
     )
-    return len(out)
+    return len(out), _id_span(out)
+
+
+def _id_span(termdict: pa.Table) -> int:
+    """Largest term id + 1 (0 for an empty termdict)."""
+    top = pc.max(termdict["term_id"]).as_py()
+    return 0 if top is None else int(top) + 1
 
 
 def doc_norms(src: DataFrame, termdict: DataFrame) -> DataFrame:
@@ -618,7 +630,7 @@ def _encode_group_fn(block_size: int, storage: str):
 def write_postings(
     src: DataFrame,
     termdict: DataFrame,
-    n_terms: int,
+    id_span: int,
     n_buckets: int,
     est_dl: float,
     block_size: int,
@@ -631,7 +643,8 @@ def write_postings(
     the termdict's (term_id, n_salts); weights storage — (term_id,
     doc_id, w, n_salts) from weights_from_tf / tfidf_weights_from_tf
     (``termdict`` unused). ``est_dl`` (token occurrences) sizes the
-    encode stage (encode_layout)."""
+    encode stage and ``id_span`` (term ids lie in [0, id_span)) splits
+    it into term ranges (encode_layout)."""
     if storage == "raw":
         src = src.join(
             F.broadcast(termdict.select("term", "term_id", "n_salts")), "term"
@@ -661,7 +674,7 @@ def write_postings(
         .select("bucket", "term_id", "salt", *payload)
     )
     shard_col, n_parts = encode_layout(
-        src.sparkSession, n_terms, n_buckets, est_dl
+        src.sparkSession, id_span, n_buckets, est_dl
     )
     (
         salted.withColumn("__shard", shard_col)
@@ -842,11 +855,10 @@ def write_index(
         # global statistics. Ids are assigned on the driver; a refresh
         # keeps the ids old segments reference on disk.
         t0 = time.perf_counter()
-        n_terms = write_termdict(
+        n_terms, id_span = write_termdict(
             term_table(tf, n_docs, avgdl, cfg, weighting, salt_every),
             cat.path(termdict_path),
             None if base is None else cat.path(base.termdict_path),
-            0 if base is None else int(base.n_terms),
             frozen,
         )
         termdict = spark.read.schema(TERMDICT_SPARK_SCHEMA).parquet(
@@ -892,7 +904,7 @@ def write_index(
             else:
                 src = seg_tf
             write_postings(
-                src, termdict, n_terms, n_buckets, est_dl, block_size,
+                src, termdict, id_span, n_buckets, est_dl, block_size,
                 storage, targets["postings"],
             )
         walls["postings"] = time.perf_counter() - t0

@@ -46,7 +46,7 @@ with ONE decode-and-weight step shared by both
 ``applyInPandas`` adapter — one ``to_numpy`` per column in, one
 DataFrame out. The Spark-free serving tier (``serve.LocalSearcher``)
 calls the same kernel on numpy arrays straight from its pyarrow read
-and its hot-term cache, one query at a time; no pandas frame sits
+and its hot-term cache, one query at a time; no pandas object sits
 between them. Raw-storage block bounds are derived in the kernel.
 
 Bucket pruning: the builder spreads (term_id, salt) over parquet
@@ -559,7 +559,18 @@ def _local_topk_fn(k: int):
 _DENSE_ACC_MAX_DOC = 1 << 22
 
 
-def _run_suffix_bounds(run_key: np.ndarray, ub: np.ndarray) -> np.ndarray:
+def _run_links(run_key: np.ndarray) -> tuple:
+    """(by_run, sorted keys, same): ONE stable argsort groups blocks by
+    run, positions ascending inside a run; ``same[j]`` says sorted
+    slots j and j+1 hold the same run. Both suffix bounds read it."""
+    by_run = np.argsort(run_key, kind="stable")
+    rk = run_key[by_run]
+    return by_run, rk, rk[1:] == rk[:-1]
+
+
+def _run_suffix_bounds(
+    run_key: np.ndarray, ub: np.ndarray, links: tuple | None = None
+) -> np.ndarray:
     """Tight unseen-doc upper bounds for every suffix of a block order.
 
     Blocks are given in descending-ub processing order; ``run_key[i]``
@@ -572,22 +583,24 @@ def _run_suffix_bounds(run_key: np.ndarray, ub: np.ndarray) -> np.ndarray:
     Returns ``bound`` of length n+1 with ``bound[i]`` = that per-run
     suffix-max sum for blocks i..end (``bound[n] == 0``). Vectorized:
     each block contributes its ub exactly on the suffix positions where
-    it is the first remaining block of its run — the interval
-    (prev_same_run_pos, own_pos] — accumulated via a difference array.
+    it is the first remaining block of its run, so a difference array
+    holds Σ of the runs' first ubs at 0 and ``ub[next(j)] − ub[j]`` at
+    j + 1 (``next``: the run's next block, 0 past its last) — one
+    cumsum. ``links``: :func:`_run_links` of ``run_key``, if at hand.
     """
     n = run_key.size
     bound = np.zeros(n + 1, dtype=np.float64)
     if n == 0:
         return bound
-    # prev[i] = position of the previous block of the same run (or -1)
-    by_run = np.lexsort((np.arange(n), run_key))
-    prev = np.full(n, -1, dtype=np.int64)
-    same = run_key[by_run][1:] == run_key[by_run][:-1]
-    prev[by_run[1:][same]] = by_run[:-1][same]
-    diff = np.zeros(n + 1, dtype=np.float64)
-    np.add.at(diff, prev + 1, ub)
-    np.add.at(diff, np.arange(1, n + 1), -ub)
-    np.cumsum(diff[:-1], out=bound[:-1])
+    by_run, _, same = links or _run_links(run_key)
+    nxt = np.full(n, -1, dtype=np.int64)
+    nxt[by_run[:-1][same]] = by_run[1:][same]
+    first = np.ones(n, dtype=bool)
+    first[by_run[1:][same]] = False
+    diff = np.empty(n, dtype=np.float64)
+    diff[0] = np.cumsum(ub[first])[-1]  # in order (np.sum is pairwise)
+    diff[1:] = np.where(nxt[:-1] >= 0, ub[nxt[:-1]], 0.0) - ub[:-1]
+    np.cumsum(diff, out=bound[:-1])
     return bound
 
 
@@ -603,39 +616,40 @@ def _run_suffix_bounds_signed(
     and loses at most ``neg_bound[i]`` = Σ over runs of
     min(0, worst remaining block lb).
 
-    Vectorized (the per-block Python loop here was ~7% of serving-tier
-    query wall at ~12k blocks/query): the positive side is exactly
-    :func:`_run_suffix_bounds` (ub_pos ≥ 0 and within-run
-    non-increasing along the descending-ub processing order, so "best
-    remaining" = "first remaining"); the negative side telescopes the
-    per-run suffix minima — ``neg_bound[i] = Σ_{j≥i} (m_j − m_next(j))``
-    where ``m_j = min(0, per-run suffix min at j)`` and ``m_next(j)``
-    is the same at the run's next block (0 past the last) — one
-    groupwise reversed cummin (pandas, C-level) + one cumsum.
+    One numpy pass over one stable argsort (:func:`_run_links`): the
+    positive side is :func:`_run_suffix_bounds` (ub_pos ≥ 0 and
+    within-run non-increasing along the descending-ub processing order,
+    so "best remaining" = "first remaining"); the negative side
+    telescopes the per-run suffix minima — ``neg_bound[i] =
+    Σ_{j≥i} (m_j − m_next(j))`` where ``m_j = min(0, per-run suffix min
+    at j)`` and ``m_next(j)`` is the same at the run's next block (0
+    past the last). The suffix minima are a doubling scan of the
+    run-grouped order: ``np.minimum`` at shifts 1, 2, 4, … up to the
+    longest run, masked to equal run keys (``min`` is exact).
     """
     n = run_key.size
-    pos_bound = _run_suffix_bounds(run_key, ub_pos)
+    links = _run_links(run_key)
+    pos_bound = _run_suffix_bounds(run_key, ub_pos, links)
     neg_bound = np.zeros(n + 1, dtype=np.float64)
     if n == 0:
         return pos_bound, neg_bound
-    idx = np.arange(n)
-    by_desc = np.lexsort((-idx, run_key))  # runs grouped, position desc
-    sufmin = np.empty(n, dtype=np.float64)
-    sufmin[by_desc] = (
-        pd.Series(neg[by_desc])
-        .groupby(pd.Series(run_key[by_desc]), sort=False)
-        .cummin()
-        .to_numpy()
-    )
-    by_asc = np.lexsort((idx, run_key))
-    nxt = np.full(n, -1, dtype=np.int64)
-    same = run_key[by_asc][1:] == run_key[by_asc][:-1]
-    nxt[by_asc[:-1][same]] = by_asc[1:][same]
-    m_here = np.minimum(sufmin, 0.0)
-    m_next = np.where(
-        nxt >= 0, np.minimum(sufmin[np.maximum(nxt, 0)], 0.0), 0.0
-    )
-    delta = m_here - m_next
+    by_run, rk, same = links
+    sufmin = neg[by_run]
+    shift = 1
+    while shift < n:
+        # in place: numpy computes overlapping operands as if copied
+        within = rk[:-shift] == rk[shift:]
+        if not within.any():
+            break
+        np.minimum(
+            sufmin[:-shift], sufmin[shift:], out=sufmin[:-shift], where=within
+        )
+        shift *= 2
+    m = np.minimum(sufmin, 0.0)
+    m_next = np.zeros(n, dtype=np.float64)
+    m_next[:-1][same] = m[1:][same]
+    delta = np.empty(n, dtype=np.float64)
+    delta[by_run] = m - m_next
     neg_bound[:-1] = np.cumsum(delta[::-1])[::-1]
     return pos_bound, neg_bound
 
@@ -777,13 +791,13 @@ def _score_blocks(
     acc_lo = np.empty(0, dtype=np.float64)
     acc_hi = np.empty(0, dtype=np.float64)
 
-    def decode_chunk(idx_list, doc_filter=None):
+    def decode_chunk(idx, doc_filter=None):
         """Decode and weight a CHUNK of blocks in one batched pass
-        (:func:`_decode_weights`) — a group with 10^4 blocks
+        (:func:`_decode_weights`) → (docs, weights, norm lo, norm hi),
+        or None when no posting survives — a group with 10^4 blocks
         previously paid ~100 µs of small-array numpy overhead PER
         BLOCK here (the dominant large-corpus query cost once bounds
         can't prune)."""
-        idx = np.asarray(idx_list, dtype=np.int64)
         if doc_filter is not None and idx.size:
             # vectorized range skip: keep only blocks whose
             # [first_doc, last_doc] range can contain a candidate
@@ -792,7 +806,7 @@ def _score_blocks(
             ok[ok] = doc_filter[lo[ok]] <= last_doc[idx[ok]]
             idx = idx[ok]
         if idx.size == 0:
-            return [], [], [], []
+            return None
         if _stats is not None:
             _stats["decoded"] = _stats.get("decoded", 0) + int(idx.size)
         d, w, bi, dlv = _decode_weights(cols, idx, raw_cfg, tomb_src)
@@ -810,28 +824,21 @@ def _score_blocks(
             d, w = d[m], w[m]
             if nlo is not None:
                 nlo, nhi = nlo[m], nhi[m]
-        if d.size == 0:
-            return [], [], [], []
-        return (
-            [d],
-            [w],
-            [nlo] if nlo is not None else [],
-            [nhi] if nhi is not None else [],
-        )
+        return (d, w, nlo, nhi) if d.size else None
 
-    def merge(dl, sl, lol, hil):
+    def merge(chunk_out):
         nonlocal acc_d, acc_s, acc_lo, acc_hi
-        if not dl:
+        if chunk_out is None:
             return
-        nd = np.concatenate(dl)
+        nd, sv, lov, hiv = chunk_out
         uniq, inv = np.unique(nd, return_inverse=True)
-        sums = np.bincount(inv, weights=np.concatenate(sl))
+        sums = np.bincount(inv, weights=sv)
         if tfidf:
             # scatter (last write wins — per-doc values identical)
             lo_u = np.empty(uniq.size, dtype=np.float64)
             hi_u = np.empty(uniq.size, dtype=np.float64)
-            lo_u[inv] = np.concatenate(lol)
-            hi_u[inv] = np.concatenate(hil)
+            lo_u[inv] = lov
+            hi_u[inv] = hiv
         if acc_d.size == 0:
             acc_d, acc_s = uniq, sums
             if tfidf:
@@ -873,19 +880,15 @@ def _score_blocks(
         dacc = np.zeros(size, dtype=np.float64)
         dseen = np.zeros(size, dtype=bool)
 
-        def dmerge(dl, sl, _lol, _hil):
-            if not dl:
+        def dmerge(chunk_out):
+            if chunk_out is None:
                 return
-            nd = np.concatenate(dl)
-            np.add(
-                dacc,
-                np.bincount(nd, weights=np.concatenate(sl), minlength=size),
-                out=dacc,
-            )
+            nd, sv = chunk_out[:2]
+            np.add(dacc, np.bincount(nd, weights=sv, minlength=size), out=dacc)
             dseen[nd] = True
 
         while pos < order.size:
-            dmerge(*decode_chunk(order[pos : pos + chunk]))
+            dmerge(decode_chunk(order[pos : pos + chunk]))
             pos += chunk
             chunk = min(chunk * 2, 4096)
             if pos < order.size:
@@ -900,13 +903,13 @@ def _score_blocks(
                     cand = np.flatnonzero(
                         dseen & (dacc + remaining_ub >= theta_low)
                     )
-                    dmerge(*decode_chunk(order[pos:], doc_filter=cand))
+                    dmerge(decode_chunk(order[pos:], doc_filter=cand))
                     break
         uniq = np.flatnonzero(dseen)
         sums = dacc[uniq]
     else:
         while pos < order.size:
-            merge(*decode_chunk(order[pos : pos + chunk]))
+            merge(decode_chunk(order[pos : pos + chunk]))
             pos += chunk
             chunk = min(chunk * 2, 4096)
             if acc_d.size >= k and pos < order.size:
@@ -921,7 +924,7 @@ def _score_blocks(
                         cand = acc_d[
                             acc_s / acc_lo + remaining_ub >= theta_low
                         ]
-                        merge(*decode_chunk(order[pos:], doc_filter=cand))
+                        merge(decode_chunk(order[pos:], doc_filter=cand))
                         break
                     continue
                 # θ_low: ≥ k docs end with final score ≥ θ_low
@@ -935,7 +938,7 @@ def _score_blocks(
                     # no unseen doc can reach the final top-k;
                     # finish exact scores for surviving candidates
                     cand = acc_d[acc_s + remaining_ub >= theta_low]
-                    merge(*decode_chunk(order[pos:], doc_filter=cand))
+                    merge(decode_chunk(order[pos:], doc_filter=cand))
                     break
         uniq, sums = acc_d, acc_s
     pos_mask = sums > 0

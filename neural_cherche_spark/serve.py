@@ -28,7 +28,7 @@ cluster in the loop —
   numpy block columns, one call per query: the pyarrow read converts
   to numpy once, the hot-term LRU keeps each term's block columns (and,
   once hot, its decoded postings) as numpy arrays, and a query's
-  columns are joined with ``np.concatenate``. No pandas frame is built
+  columns are joined with ``np.concatenate``. No pandas object is built
   per request. Parity with ``BM25Index.search`` is therefore
   structural, and pinned end-to-end by ``tests/test_serve_local.py``.
 
@@ -68,7 +68,7 @@ class LocalSearcher:
 
         import pyarrow.dataset as ds
 
-        from neural_cherche_spark.query.bmw import _raw_cfg
+        from neural_cherche_spark.query.bmw import _payload_codec, _raw_cfg
 
         self.manifest = manifest
         self._serving = serving
@@ -92,6 +92,13 @@ class LocalSearcher:
         # discovery are per-searcher, not per-query
         self._ds = ds.dataset(postings_dir, format="parquet", partitioning="hive")
         self._fields = set(self._ds.schema.names)
+        # the block columns a scan reads and a query's cached entries
+        # join: fixed per storage, plus ``seg`` for a segmented index
+        raw = self.storage == "raw"
+        self._payload = _payload_codec(raw)[0]
+        bounds = ("max_tf", "min_tf", "min_dl", "max_dl") if raw else ("max_w", "min_w")
+        self._cols = ["term_id", "salt", "n", "first_doc", "last_doc", *bounds]
+        self._cols += [*self._payload] + (["seg"] if "seg" in self._fields else [])
         # per-searcher parquet row-group index (built lazily on first
         # miss): footer metadata parsing was ~2/3 of every cache-miss
         # scan wall — with it cached, a query reads ONLY the row groups
@@ -188,25 +195,26 @@ class LocalSearcher:
         per-block offsets ``dec_at``; the scorer gathers from them
         instead of re-running the varint decode (profiled at ~18% of
         serving wall on repeat-heavy workloads). LRU accounting
-        includes the decoded bytes."""
+        includes the decoded bytes. A decoded entry is returned as it
+        is: its access count no longer matters."""
         from neural_cherche_spark.query.bmw import _payload_codec
 
         e, nb, hits = self._cache[t]
-        if hits >= 2 and "dec_at" not in e:
-            names, decode = _payload_codec(self.storage == "raw")
-            ns = e["n"]
-            dec = {
-                "dec_" + c: a
-                for c, a in zip(names, decode(*(e[c] for c in names), ns))
-            }
-            dec["dec_at"] = np.cumsum(ns) - ns
-            e = {**e, **dec}
-            extra = sum(a.nbytes for a in dec.values())
-            self._cache[t] = (e, nb + extra, hits + 1)
-            self._cache_bytes += extra
-            self._evict()
-        else:
+        if "dec_at" in e:
+            return e
+        if hits < 2:
             self._cache[t] = (e, nb, hits + 1)
+            return e
+        decode = _payload_codec(self.storage == "raw")[1]
+        ns = e["n"]
+        arrs = decode(*(e[c] for c in self._payload), ns)
+        dec = {"dec_" + c: a for c, a in zip(self._payload, arrs)}
+        dec["dec_at"] = np.cumsum(ns) - ns
+        e = {**e, **dec}
+        extra = sum(a.nbytes for a in dec.values())
+        self._cache[t] = (e, nb + extra, hits + 1)
+        self._cache_bytes += extra
+        self._evict()
         return e
 
     def _rg_index(self):
@@ -263,19 +271,9 @@ class LocalSearcher:
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
-        from neural_cherche_spark.query.bmw import _payload_codec
-
         self.cache_misses += 1
         frags, fsegs, tmins, tmaxs, fidx, rgids = self._rg_index()
         tids = np.asarray(sorted(tids), dtype=np.int64)
-        payload = _payload_codec(self.storage == "raw")[0]
-        bounds = (
-            ["max_tf", "min_tf", "min_dl", "max_dl"]
-            if self.storage == "raw"
-            else ["max_w", "min_w"]
-        )
-        cols = ["term_id", "salt", "n", "first_doc", "last_doc"] + bounds
-        cols += payload
         # row groups whose [min, max] term range contains a queried
         # term — smallest queried tid ≥ min must be ≤ max
         pos = np.searchsorted(tids, tmins)
@@ -292,21 +290,20 @@ class LocalSearcher:
             sel_frags.append(
                 frags[int(fi)].subset(row_group_ids=[int(i) for i in sel])
             )
-        out_cols = cols + (["seg"] if "seg" in self._fields else [])
         if sel_frags:
             tbl = ds.FileSystemDataset(
                 sel_frags,
                 schema=self._ds.schema,
                 format=self._ds.format,
                 filesystem=self._ds.filesystem,
-            ).to_table(columns=out_cols, filter=filt)
+            ).to_table(columns=self._cols, filter=filt)
         else:
-            tbl = self._ds.schema.empty_table().select(out_cols)
+            tbl = self._ds.schema.empty_table().select(self._cols)
         nbytes = sum(
             pc.binary_length(tbl[c]).to_numpy().astype(np.int64)
-            for c in payload
+            for c in self._payload
         )
-        return {c: tbl[c].to_numpy() for c in out_cols}, nbytes
+        return {c: tbl[c].to_numpy() for c in self._cols}, nbytes
 
     def search(self, queries: list[str] | str, k: int = 10) -> list:
         """Top-k per query → ``[[{"doc_id", "score", "rank"}, ...], ...]``
@@ -363,23 +360,21 @@ class LocalSearcher:
                 parts.append({c: a[sel] for c, a in fresh.items()})
         if not parts:
             return []
-        names = [c for c in parts[0] if not c.startswith("dec_")]
-        cols = {c: np.concatenate([p[c] for p in parts]) for c in names}
-        if any("dec_at" in p for p in parts):
+        cols = {c: np.concatenate([p[c] for p in parts]) for c in self._cols}
+        dec = [p for p in parts if "dec_at" in p]
+        if dec:
             # pre-decoded postings: flat arrays joined, per-block
             # offsets shifted to match; -1 marks blocks still encoded
-            ats, flat, base = [], {}, 0
+            ats, base = [], 0
             for p in parts:
-                if "dec_at" not in p:
+                if "dec_at" in p:
+                    ats.append(p["dec_at"] + base)
+                    base += p["dec_docs"].size
+                else:
                     ats.append(np.full(p["n"].size, -1, dtype=np.int64))
-                    continue
-                ats.append(p["dec_at"] + base)
-                base += p["dec_docs"].size
-                for c in p:
-                    if c.startswith("dec_") and c != "dec_at":
-                        flat.setdefault(c, []).append(p[c])
             cols["dec_at"] = np.concatenate(ats)
-            cols.update({c: np.concatenate(a) for c, a in flat.items()})
+            for c in self._payload:
+                cols["dec_" + c] = np.concatenate([p["dec_" + c] for p in dec])
         order = np.argsort(keys)
         at = order[np.searchsorted(keys, cols["term_id"], sorter=order)]
         info = np.array(list(terms.values()), dtype=np.float64)

@@ -1,5 +1,6 @@
-"""Index-artifact parity matrix: dump the canonical rows of 17 indexes
-written by one source tree, then diff two dumps.
+"""Index-artifact parity matrix: dump the canonical rows and top-k
+answers of 19 index handles written by one source tree, then diff two
+dumps.
 
     PYTHONPATH=<tree> python scripts/index_parity.py dump OUT.json [--work DIR]
     python scripts/index_parity.py diff A.json B.json
@@ -13,7 +14,8 @@ synthetic corpus at 4 buckets and ``salt_every=50`` (head terms salt):
 * ``build_index`` with url-assigned ids (weights, bm25);
 * weights ``materialize`` of two batches with one delete, bm25 and tfidf;
 * per weighting (bm25, tfidf), a raw stream: add → add + delete →
-  add with ``freeze_stats`` → ``compact``, each step dumped;
+  add with ``freeze_stats`` → ``compact``, each step dumped, plus a
+  ``snapshot=0`` handle opened after the add + delete step;
 * one-batch raw refreshes of the whole corpus, bm25 and tfidf.
 
 Canonical rows: postings blocks sorted by (seg, bucket, term_id, salt,
@@ -21,12 +23,17 @@ block_id) without the ``enc_ms`` timing column, binaries as hex; the
 termdict by term; the live docmap as (doc_id, url, dl) (its ``seg``
 partition column is layout, not content); docnorm; tombstones; lineage
 without ``enc_ms``; the manifest without stage walls, timestamps or the
-snapshot id. Input fingerprints are resume keys, not index content:
-they are dumped under ``provenance`` and ``diff`` lists them apart.
+snapshot id; ``topk``, the top-k rows of the fixed ``QUERIES`` through
+``search()`` and ``serve.LocalSearcher`` (``search()`` only for
+tfidf + raw, which LocalSearcher refuses), scores as ``float.hex``.
+Input fingerprints are resume keys, not index content: they are dumped
+under ``provenance`` and ``diff`` lists them apart.
 
 ``diff`` compares termdict floats to 1e-12 relative (``term_norm`` is
 an f64 sum whose order follows the input's file layout) and every
-other value exactly; it exits 1 when any content differs.
+other value exactly — top-k scores bit for bit, so raw bm25 scores,
+which divide by ``term_norm`` at query time, can differ in the last
+bits wherever ``term_norm`` does; it exits 1 when any content differs.
 """
 
 from __future__ import annotations
@@ -42,6 +49,13 @@ import tempfile
 N_DOCS = 300
 KW = dict(n_buckets=4, salt_every=50)
 DELETED = [3, 17, 150, 151, 199]
+# head words (negative idf on this corpus) mixed with tail words
+QUERIES = [
+    "the search term120", "world news term45 term900", "music",
+    "term3 term3 of", "cinema food sports", "term2500 health",
+    "page home about contact", "term77 term78 term79", "zzzz",
+]
+K = 10
 
 
 def _rows(df, order: list[str]) -> list[dict]:
@@ -53,6 +67,26 @@ def _rows(df, order: list[str]) -> list[dict]:
                 d[k] = bytes(v).hex()
         out.append(d)
     return sorted(out, key=lambda d: tuple(d[c] for c in order))
+
+
+def _topk(idx) -> list[dict]:
+    """Top-K rows of QUERIES through ``search()`` and LocalSearcher."""
+    from neural_cherche_spark.serve import LocalSearcher
+
+    rows = [
+        {"via": "search", "query_id": r["query_id"], "doc_id": r["doc_id"],
+         "score": float(r["score"]).hex(), "rank": r["rank"]}
+        for r in idx.search(QUERIES, k=K).collect()
+    ]
+    cfg = idx.manifest.cfg
+    if (cfg.get("storage"), cfg.get("weighting")) != ("raw", "tfidf"):
+        for qid, res in enumerate(LocalSearcher.from_index(idx).search(QUERIES, k=K)):
+            rows += [
+                {"via": "local", "query_id": qid, "doc_id": x["doc_id"],
+                 "score": x["score"].hex(), "rank": x["rank"]}
+                for x in res
+            ]
+    return sorted(rows, key=lambda d: (d["via"], d["query_id"], d["rank"]))
 
 
 def _canonical(idx) -> dict:
@@ -80,6 +114,7 @@ def _canonical(idx) -> dict:
         "termdict": _rows(idx.termdict, ["term"]),
         "docmap": _rows(idx.docmap.select("doc_id", "url", "dl"), ["doc_id"]),
         "lineage": _rows(lineage.drop("input_fingerprint"), ["seg", "bucket"]),
+        "topk": _topk(idx),
         "provenance": prov,
     }
     if m.get("docnorm_path"):
@@ -93,7 +128,7 @@ def dump(out_path: str, work: str) -> None:
     from pyspark.sql import functions as F
 
     from neural_cherche_spark.data import synth_webtext
-    from neural_cherche_spark.index.builder import build_index
+    from neural_cherche_spark.index.builder import BM25Index, build_index
     from neural_cherche_spark.session import get_spark
     from neural_cherche_spark.streaming import CompressedIndexStream
 
@@ -151,6 +186,7 @@ def dump(out_path: str, work: str) -> None:
         keep(f"raw-{w}-add", s.materialize(d, **raw))
         s.add_batch(parts[1], epoch_id=1).delete_batch(DELETED, epoch_id=0)
         keep(f"raw-{w}-add-delete", s.materialize(d, **raw))
+        keep(f"raw-{w}-snapshot0", BM25Index(spark, d, snapshot=0))
         s.add_batch(parts[2], epoch_id=2)
         keep(f"raw-{w}-freeze", s.materialize(d, freeze_stats=True, **raw))
         keep(f"raw-{w}-compact", s.compact(d, weighting=w, **KW))
@@ -240,7 +276,7 @@ def diff(a_path: str, b_path: str) -> int:
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     sub = ap.add_subparsers(dest="cmd", required=True)
-    d = sub.add_parser("dump", help="build the 17 cases and dump their rows")
+    d = sub.add_parser("dump", help="build the 19 cases and dump their rows")
     d.add_argument("out")
     d.add_argument("--work", default=None, help="index dir (default: a temp dir)")
     f = sub.add_parser("diff", help="compare two dumps")

@@ -4,12 +4,16 @@ The round-1 bound summed ub over ALL remaining blocks; the correct
 unseen-doc bound is Σ over distinct remaining (term,salt) runs of the
 max remaining block ub (a doc occurs at most once per run). Brute
 force here is the spec; the vectorized `_run_suffix_bounds` must match
-it exactly, and must never exceed the loose sum (tightness).
+it exactly, and must never exceed the loose sum (tightness). The
+one-argsort numpy kernel must also be bit-identical to the earlier
+lexsort + ``np.add.at`` + pandas ``groupby().cummin()`` formulas, kept
+below as test-local references.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from neural_cherche_spark.index.codec import doc_salt
@@ -89,6 +93,93 @@ def test_signed_suffix_bounds_match_bruteforce(seed):
     np.testing.assert_allclose(
         gp, _run_suffix_bounds(rk, u), rtol=1e-12, atol=1e-9
     )
+
+
+def _ref_suffix_bounds(run_key, ub):
+    """The earlier positive-side formula: lexsort + two np.add.at."""
+    n = run_key.size
+    bound = np.zeros(n + 1, dtype=np.float64)
+    if n == 0:
+        return bound
+    by_run = np.lexsort((np.arange(n), run_key))
+    prev = np.full(n, -1, dtype=np.int64)
+    same = run_key[by_run][1:] == run_key[by_run][:-1]
+    prev[by_run[1:][same]] = by_run[:-1][same]
+    diff = np.zeros(n + 1, dtype=np.float64)
+    np.add.at(diff, prev + 1, ub)
+    np.add.at(diff, np.arange(1, n + 1), -ub)
+    np.cumsum(diff[:-1], out=bound[:-1])
+    return bound
+
+
+def _ref_suffix_bounds_signed(run_key, ub_pos, neg):
+    """The earlier signed formula: two more lexsorts and a pandas
+    groupwise reversed cummin."""
+    n = run_key.size
+    pos_bound = _ref_suffix_bounds(run_key, ub_pos)
+    neg_bound = np.zeros(n + 1, dtype=np.float64)
+    if n == 0:
+        return pos_bound, neg_bound
+    idx = np.arange(n)
+    by_desc = np.lexsort((-idx, run_key))
+    sufmin = np.empty(n, dtype=np.float64)
+    sufmin[by_desc] = (
+        pd.Series(neg[by_desc])
+        .groupby(pd.Series(run_key[by_desc]), sort=False)
+        .cummin()
+        .to_numpy()
+    )
+    by_asc = np.lexsort((idx, run_key))
+    nxt = np.full(n, -1, dtype=np.int64)
+    same = run_key[by_asc][1:] == run_key[by_asc][:-1]
+    nxt[by_asc[:-1][same]] = by_asc[1:][same]
+    m_here = np.minimum(sufmin, 0.0)
+    m_next = np.where(
+        nxt >= 0, np.minimum(sufmin[np.maximum(nxt, 0)], 0.0), 0.0
+    )
+    neg_bound[:-1] = np.cumsum((m_here - m_next)[::-1])[::-1]
+    return pos_bound, neg_bound
+
+
+def _sweep_case(rng, case: int):
+    """One random block order: n from 0 to ~5000; runs all in one, all
+    distinct, or mixed; neg tied (rounded), all zero, or continuous."""
+    n = int(rng.integers(1, 5000)) if case % 10 == 0 else int(rng.integers(1, 300))
+    if case % 97 == 0:
+        n = 0
+    shape = case % 4
+    if shape == 0:
+        run_key = np.zeros(n, dtype=np.int64)
+    elif shape == 1:
+        run_key = rng.permutation(n).astype(np.int64)
+    else:
+        n_runs = max(1, n // int(rng.integers(1, 40)))
+        run_key = (rng.integers(0, n_runs, size=n) << 20) | rng.integers(0, 4, size=n)
+    ub_pos = np.maximum(rng.standard_normal(n), 0.0)
+    kind = case % 3
+    if kind == 0:
+        neg = np.minimum(np.round(rng.standard_normal(n), 1), 0.0)
+    elif kind == 1 and case % 2:
+        neg = np.zeros(n)
+    else:
+        neg = np.minimum(rng.standard_normal(n), 0.0)
+    # processing order: descending ub, ties in arrival order
+    order = np.argsort(-ub_pos, kind="stable")
+    return run_key[order], ub_pos[order], neg[order]
+
+
+def test_suffix_bounds_bit_identical_to_reference_formulas():
+    rng = np.random.default_rng(2025)
+    for case in range(600):
+        rk, u, v = _sweep_case(rng, case)
+        gp, gn = _run_suffix_bounds_signed(rk, u, v)
+        wp, wn = _ref_suffix_bounds_signed(rk, u, v)
+        assert np.array_equal(gp, wp) and np.array_equal(gn, wn), case
+        assert np.array_equal(_run_suffix_bounds(rk, u), _ref_suffix_bounds(rk, u))
+    # the empty block order, signed
+    e = np.empty(0, dtype=np.int64)
+    gp, gn = _run_suffix_bounds_signed(e, np.empty(0), np.empty(0))
+    assert gp.tolist() == gn.tolist() == [0.0]
 
 
 def test_suffix_bounds_empty():

@@ -23,6 +23,7 @@ from neural_cherche_spark.query.bmw import (
     _run_suffix_bounds_signed,
 )
 from neural_cherche_spark.text.ngrams import tokenize_terms
+from test_bmw_bounds import _brute_signed
 
 
 def test_term_frequencies_matches_explode_groupby(spark):
@@ -163,20 +164,6 @@ def test_local_searcher_decoded_cache_parity(spark, tmp_path):
         # the third pass actually exercised the decoded path
         assert any("dec_at" in e[0] for e in srv._cache.values()), storage
         index.close()
-
-
-def _brute_signed(run_key, ub_pos, neg):
-    n = run_key.size
-    pb, nb = np.zeros(n + 1), np.zeros(n + 1)
-    for i in range(n):
-        best: dict[int, float] = {}
-        worst: dict[int, float] = {}
-        for j in range(i, n):
-            best[run_key[j]] = max(best.get(run_key[j], 0.0), ub_pos[j])
-            worst[run_key[j]] = min(worst.get(run_key[j], 0.0), neg[j])
-        pb[i] = sum(best.values())
-        nb[i] = sum(worst.values())
-    return pb, nb
 
 
 @pytest.mark.parametrize("seed", range(8))

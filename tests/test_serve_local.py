@@ -247,28 +247,43 @@ def test_cache_disabled_and_eviction(index, qtexts):
 def test_search_builds_no_pandas_frames(monkeypatch, index, tomb_index, qtexts):
     """The serving path has one data representation — numpy arrays: no
     cold (scan) or warm (cached, then pre-decoded) search constructs a
-    pandas DataFrame or calls ``pd.concat``, for weights or raw (here
-    tombstoned) storage."""
+    pandas object (a DataFrame or a Series) or calls ``pd.concat``, for
+    weights or raw (here tombstoned) storage. The queries reach the
+    kernel's signed-bound path: their head grams have idf < 0."""
     import pandas as pd
 
-    calls = {"DataFrame": 0, "concat": 0}
-    init, concat = pd.DataFrame.__init__, pd.concat
+    from neural_cherche_spark.query import bmw
 
-    def counting_init(self, *a, **kw):
-        calls["DataFrame"] += 1
-        init(self, *a, **kw)
+    calls = {"DataFrame": 0, "Series": 0, "concat": 0, "signed": 0}
+    init = {c: c.__init__ for c in (pd.DataFrame, pd.Series)}
+    concat, signed = pd.concat, bmw._run_suffix_bounds_signed
+
+    def counting(cls):
+        def counting_init(self, *a, **kw):
+            calls[cls.__name__] += 1
+            init[cls](self, *a, **kw)
+
+        return counting_init
 
     def counting_concat(*a, **kw):
         calls["concat"] += 1
         return concat(*a, **kw)
 
+    def counting_signed(*a, **kw):
+        calls["signed"] += 1
+        return signed(*a, **kw)
+
     for idx in (index, tomb_index):
         srv = LocalSearcher.from_index(idx)
-        monkeypatch.setattr(pd.DataFrame, "__init__", counting_init)
+        for cls in init:
+            monkeypatch.setattr(cls, "__init__", counting(cls))
         monkeypatch.setattr(pd, "concat", counting_concat)
+        monkeypatch.setattr(bmw, "_run_suffix_bounds_signed", counting_signed)
         got = [srv.search(qtexts, k=5) for _ in range(5)]
         monkeypatch.undo()
-        assert calls == {"DataFrame": 0, "concat": 0}
+        assert calls["signed"] > 0
+        calls["signed"] = 0
+        assert calls == {"DataFrame": 0, "Series": 0, "concat": 0, "signed": 0}
         for g in got[1:]:
             # cached passes may sum a doc's terms in another block order
             assert [[(x["doc_id"], x["rank"]) for x in q] for q in g] == [

@@ -1,15 +1,18 @@
 """Id assignment: term ids are the rank in Spark's term order (the
 driver assigns them from one Arrow collect of the term table), a
-refresh extends the id space in the same order, url-assigned doc ids
+refresh extends the id space in the same order past the base's largest
+id (so a refresh after deletes reuses none), url-assigned doc ids
 stay dense whatever the range split, and a warm build stays within its
 Spark job budget."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from neural_cherche_spark.data import synth_webtext
 from neural_cherche_spark.index.builder import _unpin, _zip_with_index, build_index
+from neural_cherche_spark.serve import LocalSearcher
 from neural_cherche_spark.streaming import CompressedIndexStream
 
 # grams of every UTF-8 width: Latin-1 (é, ß), CJK, fullwidth/halfwidth
@@ -61,8 +64,9 @@ def test_build_term_ids_are_spark_term_order(spark, tmp_path):
 
 
 def test_refresh_term_ids_extend_in_term_order(spark, tmp_path):
-    """New terms get base.n_terms + their rank in Spark term order, on
-    an exact and on a frozen-stats refresh; old ids never move."""
+    """New terms get the base's id span + their rank in Spark term
+    order, on an exact and on a frozen-stats refresh; old ids never
+    move. (No deletes here, so the span equals base.n_terms.)"""
     stream = CompressedIndexStream(spark, str(tmp_path / "state"))
     d = str(tmp_path / "idx")
     stream.add_batch(_docs(spark, [0, 5]), epoch_id=0)
@@ -87,6 +91,74 @@ def test_refresh_term_ids_extend_in_term_order(spark, tmp_path):
         prev.close()
         prev = idx
     prev.close()
+
+
+# a stream whose second refresh deletes doc 1 — the only doc holding
+# its grams — so the exact refresh drops terms and the termdict's row
+# count falls below its id span; the third refresh then adds new terms
+STREAM = [
+    {0: "apple banana cherry", 1: "kiwi lychee mango",
+     2: "apple cherry grape", 3: "banana grape melon"},
+    {4: "zucchini yam xigua", 5: "apple zebra yak"},
+    {6: "papaya quince", 7: "quince raspberry apple"},
+]
+FRUIT = ["quince", "raspberry", "papaya", "zucchini", "zebra", "yak",
+         "xigua", "yam", "apple", "grape"]
+
+
+def _fruit(spark, docs: dict):
+    return spark.createDataFrame(
+        sorted(docs.items()), "doc_id long, text string"
+    )
+
+
+def test_refresh_after_deletes_never_reuses_term_ids(spark, tmp_path):
+    """New terms are numbered past the base termdict's largest id, not
+    from its row count: after add → add + delete → add (three exact raw
+    refreshes) every term id is unique, and every query answers as a
+    fresh raw build over the live docs does."""
+    stream = CompressedIndexStream(spark, str(tmp_path / "state"))
+    d = str(tmp_path / "idx")
+    kw = dict(n_buckets=4, storage="raw")
+    stream.add_batch(_fruit(spark, STREAM[0]), epoch_id=0)
+    stream.materialize(d, **kw).close()
+    stream.add_batch(_fruit(spark, STREAM[1]), epoch_id=1)
+    stream.delete_batch([1], epoch_id=0)
+    mid = stream.materialize(d, **kw)
+    ids = [r["term_id"] for r in mid.termdict.collect()]
+    assert mid.manifest.n_terms == len(ids) < max(ids) + 1, "terms dropped"
+    mid.close()
+    stream.add_batch(_fruit(spark, STREAM[2]), epoch_id=2)
+    idx = stream.materialize(d, **kw)
+    ids = [r["term_id"] for r in idx.termdict.collect()]
+    assert len(set(ids)) == len(ids) == idx.manifest.n_terms
+
+    live = {k: v for b in STREAM for k, v in b.items() if k != 1}
+    fresh = build_index(
+        spark, _fruit(spark, live), str(tmp_path / "fresh"),
+        id_col="doc_id", **kw,
+    )
+
+    def spark_topk(index):
+        out = [[] for _ in FRUIT]
+        rows = index.search(FRUIT, k=5).collect()
+        for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+            out[r["query_id"]].append((r["doc_id"], r["score"]))
+        return out
+
+    def local_topk(index):
+        srv = LocalSearcher.from_index(index)
+        return [[(x["doc_id"], x["score"]) for x in q] for q in srv.search(FRUIT, k=5)]
+
+    for topk in (spark_topk, local_topk):
+        got, want = topk(idx), topk(fresh)
+        assert [[doc for doc, _ in q] for q in got] == [
+            [doc for doc, _ in q] for q in want
+        ], topk.__name__
+        for g, w in zip(got, want):
+            assert [s for _, s in g] == pytest.approx([s for _, s in w], rel=1e-9)
+    idx.close()
+    fresh.close()
 
 
 def test_zip_with_index_dense_with_empty_range_partitions(spark):
